@@ -238,7 +238,7 @@ def boilerplate_lines(
         for stale in [
             k for k in _BOILERPLATE_PERSISTED if k[0] != key[0]
         ]:
-            evicted = _BOILERPLATE_PERSISTED.pop(stale)
+            evicted = _BOILERPLATE_PERSISTED.pop(stale, None)
             try:
                 # best-effort, mirroring session_memo: usually the
                 # evicted entry's session is already dead (nothing to

@@ -1748,12 +1748,16 @@ def _pack_list_files(
 
 def _ivf_rows_per_file(spark: SparkSession, sf_dir: str) -> int:
     """128 MB target / measured average source row width (on-disk
-    parquet bytes per embedding row)."""
+    parquet bytes per embedding row). The source may be one file or a
+    Spark-written directory of part files; either way its bytes are the
+    total under the path."""
     import os as _os
+
+    from multichannel_commerce_data_pipeline_spark.streaming.jobs import dir_bytes
 
     src = _os.path.join(sf_dir, "embeddings.parquet")
     n = load(spark, sf_dir, "embeddings").count()
-    row_bytes = max(1, _os.path.getsize(src) // max(1, n))
+    row_bytes = max(1, dir_bytes(spark, src) // max(1, n))
     return max(1, _LIST_TARGET_FILE_BYTES // row_bytes)
 
 

@@ -84,7 +84,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for stale in [
         k for k in _LOAD_CACHE if k[2:] == key[2:] and k[0] != key[0]
     ]:
-        _LOAD_CACHE.pop(stale)
+        _LOAD_CACHE.pop(stale, None)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
@@ -104,7 +104,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         for stale in [
             k for k in _LOAD_CACHE if k[0] == key[0] and k[1] == sid
         ]:
-            _LOAD_CACHE.pop(stale)
+            _LOAD_CACHE.pop(stale, None)
     return df
 
 
@@ -232,7 +232,7 @@ def session_memo(spark: SparkSession, cache: dict, sf_dir: str, build):
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in cache:
         for stale in [k for k in cache if k[1] == sf_dir and k != key]:
-            evicted = cache.pop(stale)
+            evicted = cache.pop(stale, None)
             # Best-effort release of the evicted artifact's cached
             # blocks: in the common harness case its session is already
             # dead (unpersist raises, nothing to free), but a live

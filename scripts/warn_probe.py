@@ -21,10 +21,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def run() -> None:
     from bench import HEADLINE
     from multichannel_commerce_data_pipeline_spark.queries import load_registry
-    from multichannel_commerce_data_pipeline_spark.session import get_spark
+    from multichannel_commerce_data_pipeline_spark.session import (
+        WINDOW_EXEC_LOGGER,
+        get_spark,
+    )
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("mcdp-warn-probe")
+    # get_spark silences this logger; the probe counts its warnings
+    jvm = spark._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        WINDOW_EXEC_LOGGER, jvm.org.apache.logging.log4j.Level.WARN
+    )
     registry = load_registry()
     err = spark._jvm.System.err
     err.println("===MARKER=== setup")

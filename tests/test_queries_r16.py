@@ -350,3 +350,28 @@ def test_ivf_list_layout_packs_files_by_data_size(spark, sf_dir):
             assert n_files == math.ceil(rows[cell] / rpf), (
                 f"{d} cell={cell}: {n_files} files for {rows[cell]} rows"
             )
+
+
+def test_ivf_rows_per_file_sizes_a_spark_written_directory(spark, sf_dir, tmp_path):
+    """The embeddings source may be a directory of part files (what a
+    Spark write leaves), not one file: its row width must come from the
+    bytes of the files under it, not from the directory entry's size."""
+    from multichannel_commerce_data_pipeline_spark.queries.similarity import (
+        _LIST_TARGET_FILE_BYTES,
+        _ivf_rows_per_file,
+    )
+    from multichannel_commerce_data_pipeline_spark.tables import load
+
+    src = tmp_path / "embeddings.parquet"
+    emb = load(spark, sf_dir, "embeddings")
+    emb.repartition(3).write.parquet(str(src))
+    assert src.is_dir()
+    # the data files a scan reads: not the hidden .crc checksums or the
+    # _SUCCESS marker
+    file_bytes = sum(
+        f.stat().st_size for f in src.rglob("*") if not f.name.startswith((".", "_"))
+    )
+    n = emb.count()
+    assert _ivf_rows_per_file(spark, str(tmp_path)) == _LIST_TARGET_FILE_BYTES // (
+        file_bytes // n
+    )
