@@ -199,7 +199,7 @@ def boilerplate_lines(
     then computed exactly once (values identical either way, asserted
     in tests/test_operators.py). The persisted frame is MEMOIZED per
     (applicationId, input semanticHash, split args) like the
-    session_memo-backed indexes — repeated persist=True calls over the
+    artifact-store indexes — repeated persist=True calls over the
     same input reuse one cached frame instead of accumulating a new
     MEMORY_AND_DISK entry per invocation; entries from dead
     applications are evicted on the next call.
@@ -240,7 +240,7 @@ def boilerplate_lines(
         ]:
             evicted = _BOILERPLATE_PERSISTED.pop(stale, None)
             try:
-                # best-effort, mirroring session_memo: usually the
+                # best-effort, mirroring the artifact store: usually the
                 # evicted entry's session is already dead (nothing to
                 # free), but a live concurrent session's frame would
                 # otherwise stay pinned until that session exits

@@ -32,6 +32,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multichannel_commerce_data_pipeline_spark.artifacts import artifact
 from multichannel_commerce_data_pipeline_spark.functions import (
     dround,
     oracle_dround,
@@ -119,20 +120,8 @@ def _signal_oracle() -> str:
 # execution still scans the parquet) removes the rebuild the same way
 # parquet_memo reuses a scan node (r16 optimization round, guide §1.2:
 # per-task work includes the driver's own expression construction).
-_SIGNALS_PLANS: dict[tuple[str, str], DataFrame] = {}
-
-
+@artifact
 def _signals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from multichannel_commerce_data_pipeline_spark.tables import (
-        session_memo,
-    )
-
-    return session_memo(
-        spark, _SIGNALS_PLANS, sf_dir, lambda: _signals_plan(spark, sf_dir)
-    )
-
-
-def _signals_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The map-side half of the mart (everything except the
     contamination count): one projection chain over the train slice.
     Shared by the mart and the keep-decision query — the decision's
@@ -183,11 +172,7 @@ def _signals_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # independent jobs" — the wave-8 threaded-materialization idiom
     # applied to the mart's cold build). Warm calls hit both caches
     # and never enter the pool.
-    from multichannel_commerce_data_pipeline_spark.queries.importance import (
-        _MODEL_CACHE,
-    )
-
-    if ("lm", sf_dir) in _MODEL_CACHE and ("nb", sf_dir) in _MODEL_CACHE:
+    if lm_model.is_built(spark, sf_dir) and nb_model.is_built(spark, sf_dir):
         lmm = lm_model(spark, sf_dir)
         sizes, (priors, lls) = nb_model(spark, sf_dir)
     else:
@@ -308,9 +293,7 @@ def _decision_oracle() -> str:
 # once per (session, sf_dir), shared by the decision query and the
 # rule-attribution report — the storage-investment rule the shared
 # gram/term indexes follow.
-_DECISION_FRAMES: dict[tuple[str, str], DataFrame] = {}
-
-
+@artifact
 def _decision_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full decision frame (doc_id, n_words, ppl_bucket, per-rule
     keep booleans, keep) shared by the decision query and the rule-
@@ -323,18 +306,11 @@ def _decision_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     same ``_signals`` frame, but a curator computing cut points from a
     SAMPLE must see a cutless language pass as 'unknown', not vanish
     through an inner join."""
-    from multichannel_commerce_data_pipeline_spark.tables import (
-        session_memo,
+    from pyspark import StorageLevel
+
+    return _decision_frame_plan(spark, sf_dir).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-
-    def build() -> DataFrame:
-        from pyspark import StorageLevel
-
-        return _decision_frame_plan(spark, sf_dir).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-
-    return session_memo(spark, _DECISION_FRAMES, sf_dir, build)
 
 
 def _decision_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

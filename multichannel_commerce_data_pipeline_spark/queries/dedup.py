@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multichannel_commerce_data_pipeline_spark.artifacts import artifact
 from multichannel_commerce_data_pipeline_spark.functions import (
     dround,
     oracle_dround,
@@ -22,7 +23,6 @@ from multichannel_commerce_data_pipeline_spark.queries import query
 from multichannel_commerce_data_pipeline_spark.tables import (
     load,
     parallelize_small_scan,
-    session_memo,
 )
 
 # Shared DuckDB fragments reproducing shingles()/doc_shingles():
@@ -109,21 +109,16 @@ def _jaccard_oracle(threshold: float, df_cap: int | None) -> str:
 # n_sh expression into scan filters on top). Persisted per corpus
 # version, hash-partitioned on the join key so neither join side
 # re-shuffles.
-_CAPPED_SH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@artifact
 def _capped_shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
-        sh = D._capped_shingles(d, "doc_id", "text", 3, 400).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        sh.count()
-        return sh
-
-    return session_memo(spark, _CAPPED_SH_CACHE, sf_dir, build)
+    d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
+    sh = D._capped_shingles(d, "doc_id", "text", 3, 400).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    sh.count()
+    return sh
 
 
 @query("jaccard_near_dupes", oracle=_jaccard_oracle(_THRESHOLD, df_cap=400))
@@ -304,9 +299,7 @@ def incremental_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.minhash_lsh_probe(idx, new_sig, k=16, bands=8, threshold=_THRESHOLD)
 
 
-_LSH_SIG_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+@artifact
 def _lsh_signature_frames(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -318,21 +311,18 @@ def _lsh_signature_frames(
     plan-matching) also skips rebuilding the signature expression trees
     per call (~1 s of plan-construction time)."""
 
-    def build() -> tuple[DataFrame, DataFrame]:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
-        corpus = d.filter(F.col("doc_id") % 2 == 0)
-        batch = d.filter(F.col("doc_id") % 2 == 1)
-        idx = D.minhash_lsh_index(corpus, "doc_id", "text", k=16, n=3).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        new_sig = D.minhash_lsh_index(batch, "doc_id", "text", k=16, n=3).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        return (idx, new_sig)
-
-    return session_memo(spark, _LSH_SIG_CACHE, sf_dir, build)
+    d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
+    corpus = d.filter(F.col("doc_id") % 2 == 0)
+    batch = d.filter(F.col("doc_id") % 2 == 1)
+    idx = D.minhash_lsh_index(corpus, "doc_id", "text", k=16, n=3).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    new_sig = D.minhash_lsh_index(batch, "doc_id", "text", k=16, n=3).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    return (idx, new_sig)
 
 
 def _simhash_oracle(bits: int) -> str:
@@ -768,28 +758,23 @@ def _golden_oracle() -> str:
     """
 
 
-_IDENTITY_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@artifact
 def _identity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc, cluster_id) over the blocked-Levenshtein customer match
     graph — the identity map, built once per sf_dir and persisted
     repartitioned on ``doc`` so the serving join needs no re-exchange
     of the cached side."""
 
-    def build() -> DataFrame:
-        c = load(spark, sf_dir, "customer").select(
-            "c_custkey", "c_name", "c_nationkey"
-        )
-        pairs = D.blocked_levenshtein_pairs(
-            c, "c_custkey", "c_name", ["c_nationkey"],
-            prefix_len=_FUZZY_PREFIX, max_dist=_FUZZY_DIST,
-        ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
-        labels = D.dedup_clusters(pairs).repartition(32, "doc").persist()
-        labels.count()
-        return labels
-
-    return session_memo(spark, _IDENTITY_CACHE, sf_dir, build)
+    c = load(spark, sf_dir, "customer").select(
+        "c_custkey", "c_name", "c_nationkey"
+    )
+    pairs = D.blocked_levenshtein_pairs(
+        c, "c_custkey", "c_name", ["c_nationkey"],
+        prefix_len=_FUZZY_PREFIX, max_dist=_FUZZY_DIST,
+    ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
+    labels = D.dedup_clusters(pairs).repartition(32, "doc").persist()
+    labels.count()
+    return labels
 
 
 @query("entity_golden_record", oracle=_golden_oracle())
@@ -909,59 +894,51 @@ def _fs_sides(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
 # The fitted (m, u, p) model is a per-corpus-version artifact like the
 # k-means centroids: the pattern reduction + 2 EM rounds run once per
 # (session, sf_dir); scoring reads the persisted 1-row frame.
-_FS_MODEL_CACHE: dict[tuple[str, str], DataFrame] = {}
-_FS_CONST_CACHE: dict[tuple[str, str], tuple[list, list, float]] = {}
-
-
+@artifact
 def _fs_model(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        from multichannel_commerce_data_pipeline_spark.operators.linkage import (
-            fs_em_fit,
+    from multichannel_commerce_data_pipeline_spark.operators.linkage import (
+        fs_em_fit,
+    )
+
+    cust, supp = _fs_sides(spark, sf_dir)
+    pairs = cust.join(F.broadcast(supp), "nk")
+    patterns = (
+        pairs.select(
+            F.array(
+                (F.col("regno") == F.col("s_regno")).cast("int"),
+                (F.col("band") == F.col("s_band")).cast("int"),
+                (F.col("sign") == F.col("s_sign")).cast("int"),
+            ).alias("a")
         )
-
-        cust, supp = _fs_sides(spark, sf_dir)
-        pairs = cust.join(F.broadcast(supp), "nk")
-        patterns = (
-            pairs.select(
-                F.array(
-                    (F.col("regno") == F.col("s_regno")).cast("int"),
-                    (F.col("band") == F.col("s_band")).cast("int"),
-                    (F.col("sign") == F.col("s_sign")).cast("int"),
-                ).alias("a")
-            )
-            .groupBy("a")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            # ≤2^3 rows; persisted because the unrolled EM plan reads
-            # the pattern frame several times per round and Spark has
-            # no DataFrame-level CSE.
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        patterns.count()
-        params = fs_em_fit(
-            patterns,
-            n_fields=len(_FS_FIELD_NAMES),
-            n_iters=_FS_EM_ITERS,
-            m0=_FS_EM_M0,
-            u0=_FS_EM_U0,
-            p0=_FS_EM_P0,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        params.count()
-        patterns.unpersist()
-        return params
-
-    return session_memo(spark, _FS_MODEL_CACHE, sf_dir, build)
+        .groupBy("a")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        # ≤2^3 rows; persisted because the unrolled EM plan reads
+        # the pattern frame several times per round and Spark has
+        # no DataFrame-level CSE.
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    patterns.count()
+    params = fs_em_fit(
+        patterns,
+        n_fields=len(_FS_FIELD_NAMES),
+        n_iters=_FS_EM_ITERS,
+        m0=_FS_EM_M0,
+        u0=_FS_EM_U0,
+        p0=_FS_EM_P0,
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    params.count()
+    patterns.unpersist()
+    return params
 
 
+@artifact
 def _fs_fitted(spark: SparkSession, sf_dir: str) -> tuple[list, list, float]:
     """Collected fitted constants (bounded model collect: 2 arrays of 3
     doubles + a prior) for driver-side weight folding."""
-    def build() -> tuple[list, list, float]:
-        row = _fs_model(spark, sf_dir).collect()[0]
-        return (list(row["m"]), list(row["u"]), float(row["p"]))
-
-    return session_memo(spark, _FS_CONST_CACHE, sf_dir, build)
+    row = _fs_model(spark, sf_dir).collect()[0]
+    return (list(row["m"]), list(row["u"]), float(row["p"]))
 
 
 def _fs_em_chain() -> str:
@@ -1134,32 +1111,29 @@ def fs_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_SUBSTR_MIN_WORDS = 8
+
+
 # Substring-dedup gram index, persisted per corpus version and
 # hash-partitioned on the window digest (the storage-investment rule):
 # the survivor aggregate and the non-survivor mark join both consume it
 # on that key, so neither pays an exchange, and the tokenize→hash
 # subtree executes once instead of once per consumer (Spark has no
 # DataFrame-level CSE).
-_SUBSTR_GRAM_CACHE: dict[tuple[str, str], DataFrame] = {}
-_SUBSTR_MIN_WORDS = 8
-
-
+@artifact
 def _substring_gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
-        g = D.substring_grams(
-            D.doc_words(d, "doc_id", "text"), _SUBSTR_MIN_WORDS
-        )
-        n_parts = spark.sparkContext.defaultParallelism
-        g = g.repartition(n_parts, "pdigest").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        g.count()
-        return g
-
-    return session_memo(spark, _SUBSTR_GRAM_CACHE, sf_dir, build)
+    d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
+    g = D.substring_grams(
+        D.doc_words(d, "doc_id", "text"), _SUBSTR_MIN_WORDS
+    )
+    n_parts = spark.sparkContext.defaultParallelism
+    g = g.repartition(n_parts, "pdigest").persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    g.count()
+    return g
 
 
 # The spans pipeline as shared SQL fragments: every substring query
@@ -1299,47 +1273,42 @@ def substring_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # One drain of the streaming decontaminate-on-ingest job per
 # (session, sf_dir) — same side-effecting-run rationale as below.
-_STREAM_DECON_DIRS: dict[tuple[str, str], str] = {}
-
-
+@artifact
 def _stream_decon_run(spark: SparkSession, sf_dir: str) -> str:
-    def build() -> str:
-        import hashlib
+    import hashlib
 
-        from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-            fresh_stream_dir,
-            stream_decontaminate,
-        )
+    from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
+        fresh_stream_dir,
+        stream_decontaminate,
+    )
 
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        tmp = fresh_stream_dir(f"mcdp_sdecon_{tag}_")
-        src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
-        d = load(spark, sf_dir, "documents").select("doc_id", "text")
-        train = d.filter(F.col("doc_id") >= _BENCH_CUT)
-        # two arrival chunks (even/odd doc_id): the cut must come out
-        # right per-micro-batch, not because everything shared a batch
-        train.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b0")
-        train.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b1")
-        # eval grams from the shared persisted index (fifth consumer)
-        eval_grams = _substring_gram_index(spark, sf_dir).filter(
-            F.col("doc") < _BENCH_CUT
-        )
-        stream_decontaminate(
-            spark,
-            f"{src}/b*",
-            "doc_id bigint, text string",
-            out,
-            ckpt,
-            eval_grams,
-            _SUBSTR_MIN_WORDS,
-        )
-        return out
-
-    return session_memo(spark, _STREAM_DECON_DIRS, sf_dir, build)
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tmp = fresh_stream_dir(f"mcdp_sdecon_{tag}_")
+    src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
+    d = load(spark, sf_dir, "documents").select("doc_id", "text")
+    train = d.filter(F.col("doc_id") >= _BENCH_CUT)
+    # two arrival chunks (even/odd doc_id): the cut must come out
+    # right per-micro-batch, not because everything shared a batch
+    train.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{src}/b0")
+    train.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{src}/b1")
+    # eval grams from the shared persisted index (fifth consumer)
+    eval_grams = _substring_gram_index(spark, sf_dir).filter(
+        F.col("doc") < _BENCH_CUT
+    )
+    stream_decontaminate(
+        spark,
+        f"{src}/b*",
+        "doc_id bigint, text string",
+        out,
+        ckpt,
+        eval_grams,
+        _SUBSTR_MIN_WORDS,
+    )
+    return out
 
 
 @query(
@@ -1397,49 +1366,46 @@ def stream_decontaminate_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# One drain of the streaming line-df sketch per (session, sf_dir): the
-# checkpointed stream is a side-effecting run; re-draining per
-# DataFrame build would only re-prove what the first drain landed
-# (same rationale as the stream_ann_assign run).
-_STREAM_LINEDF_DIRS: dict[tuple[str, str], str] = {}
 _LINEDF_W, _LINEDF_D, _LINEDF_SEED = 64, 3, 131
 _LINEDF_PROBE_CUT = 20  # probe the distinct lines of docs 0..19
 
 
+# One drain of the streaming line-df sketch per (session, sf_dir): the
+# checkpointed stream is a side-effecting run; re-draining per
+# DataFrame build would only re-prove what the first drain landed
+# (same rationale as the stream_ann_assign run).
+@artifact
 def _stream_linedf_run(spark: SparkSession, sf_dir: str) -> str:
-    def build() -> str:
-        import hashlib
+    import hashlib
 
-        from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-            fresh_stream_dir,
-            stream_line_df_sketch,
-        )
+    from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
+        fresh_stream_dir,
+        stream_line_df_sketch,
+    )
 
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        tmp = fresh_stream_dir(f"mcdp_linedf_{tag}_")
-        src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
-        d = load(spark, sf_dir, "documents").select("doc_id", "text")
-        # two arrival chunks (even/odd doc_id) -> two micro-batches:
-        # the cumulative grid must come out right INCREMENTALLY
-        d.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b0")
-        d.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b1")
-        stream_line_df_sketch(
-            spark,
-            f"{src}/b*",
-            "doc_id bigint, text string",
-            out,
-            ckpt,
-            w=_LINEDF_W,
-            d=_LINEDF_D,
-            seed=_LINEDF_SEED,
-        )
-        return out
-
-    return session_memo(spark, _STREAM_LINEDF_DIRS, sf_dir, build)
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tmp = fresh_stream_dir(f"mcdp_linedf_{tag}_")
+    src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
+    d = load(spark, sf_dir, "documents").select("doc_id", "text")
+    # two arrival chunks (even/odd doc_id) -> two micro-batches:
+    # the cumulative grid must come out right INCREMENTALLY
+    d.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{src}/b0")
+    d.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{src}/b1")
+    stream_line_df_sketch(
+        spark,
+        f"{src}/b*",
+        "doc_id bigint, text string",
+        out,
+        ckpt,
+        w=_LINEDF_W,
+        d=_LINEDF_D,
+        seed=_LINEDF_SEED,
+    )
+    return out
 
 
 def _linedf_oracle() -> str:
@@ -1557,54 +1523,49 @@ def stream_boilerplate_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # One drain of the cut-on-ingest stream per (session, sf_dir); the
 # maintain half is the memoized line-df sketch drain above.
-_STREAM_BPCUT_DIRS: dict[tuple[str, str], str] = {}
-
-
+@artifact
 def _stream_bpcut_run(spark: SparkSession, sf_dir: str) -> str:
-    def build() -> str:
-        import hashlib
+    import hashlib
 
-        from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-            fresh_stream_dir,
-            read_latest_cm_sketch,
-            stream_boilerplate_cut,
-        )
+    from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
+        fresh_stream_dir,
+        read_latest_cm_sketch,
+        stream_boilerplate_cut,
+    )
 
-        # maintain half: the landed cumulative grid (memoized drain)
-        grid_rows = read_latest_cm_sketch(
-            spark, _stream_linedf_run(spark, sf_dir)
-        ).collect()
-        cells = [0] * (_LINEDF_D * _LINEDF_W)
-        for r in grid_rows:
-            cells[r.j * _LINEDF_W + r.bucket] = int(r.cell)
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        tmp = fresh_stream_dir(f"mcdp_bpcut_{tag}_")
-        src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
-        d = load(spark, sf_dir, "documents").select("doc_id", "text")
-        # two arrival chunks -> two micro-batches: the cut must come
-        # out right per-micro-batch against the fixed landed grid
-        d.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b0")
-        d.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b1")
-        stream_boilerplate_cut(
-            spark,
-            f"{src}/b*",
-            "doc_id bigint, text string",
-            out,
-            ckpt,
-            cells,
-            line_words=10,
-            df_threshold=2,
-            w=_LINEDF_W,
-            d=_LINEDF_D,
-            seed=_LINEDF_SEED,
-        )
-        return out
-
-    return session_memo(spark, _STREAM_BPCUT_DIRS, sf_dir, build)
+    # maintain half: the landed cumulative grid (memoized drain)
+    grid_rows = read_latest_cm_sketch(
+        spark, _stream_linedf_run(spark, sf_dir)
+    ).collect()
+    cells = [0] * (_LINEDF_D * _LINEDF_W)
+    for r in grid_rows:
+        cells[r.j * _LINEDF_W + r.bucket] = int(r.cell)
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tmp = fresh_stream_dir(f"mcdp_bpcut_{tag}_")
+    src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
+    d = load(spark, sf_dir, "documents").select("doc_id", "text")
+    # two arrival chunks -> two micro-batches: the cut must come
+    # out right per-micro-batch against the fixed landed grid
+    d.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{src}/b0")
+    d.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{src}/b1")
+    stream_boilerplate_cut(
+        spark,
+        f"{src}/b*",
+        "doc_id bigint, text string",
+        out,
+        ckpt,
+        cells,
+        line_words=10,
+        df_threshold=2,
+        w=_LINEDF_W,
+        d=_LINEDF_D,
+        seed=_LINEDF_SEED,
+    )
+    return out
 
 
 def _bpcut_oracle() -> str:

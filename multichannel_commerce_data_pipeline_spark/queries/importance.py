@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multichannel_commerce_data_pipeline_spark.artifacts import artifact
 from multichannel_commerce_data_pipeline_spark.functions import (
     dround,
     oracle_dround,
@@ -36,19 +37,10 @@ _D = I.N_BUCKETS
 _SEED = I.HASH_SEED
 _TARGET_LANG = "en"
 
-# Fitted models cached per sf_dir (training state, like the PQ codebook
-# and the bucketed warehouse tables): bench builds each query 4x and
-# the profile aggregate + collect is the dominant build cost.
-_MODEL_CACHE: dict[tuple[str, str], object] = {}
-
-
-def _cached(kind: str, sf_dir: str, fit):
-    key = (kind, sf_dir)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = fit()
-    return _MODEL_CACHE[key]
-
-
+# The fitted models below are artifacts (training state, like the PQ
+# codebook and the bucketed warehouse tables): bench builds each query
+# 4x and the profile aggregate + collect is the dominant build cost.
+@artifact
 def lm_model(spark: SparkSession, sf_dir: str):
     """The fitted hashed-bigram log-prob map (cached per sf_dir) —
     shared by lm_perplexity_score and the curation signal mart so both
@@ -70,18 +62,16 @@ def lm_model(spark: SparkSession, sf_dir: str):
     with_k = hashed.select(
         I.bigram_keys_from_hashes(F.col("hb"), _LM_D).alias("ks")
     )
-    return _cached(
-        "lm", sf_dir,
-        lambda: I.lm_log_probs(
-            with_k.select(F.explode("ks").alias("key"))
-            .groupBy("key")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect(),
-            _LM_D,
-        ),
+    return I.lm_log_probs(
+        with_k.select(F.explode("ks").alias("key"))
+        .groupBy("key")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .collect(),
+        _LM_D,
     )
 
 
+@artifact
 def nb_model(spark: SparkSession, sf_dir: str):
     """(sizes, (priors, lls)): the fitted hashed naive-Bayes language
     model (cached per sf_dir) — shared for the same single-fit reason
@@ -92,18 +82,27 @@ def nb_model(spark: SparkSession, sf_dir: str):
     with_b = d.select(
         "doc_id", "lang", I.feature_buckets(F.col("text")).alias("bs")
     )
+    prof = I.bucket_class_profile(with_b, "bs", "lang").collect()
+    sizes = {
+        r["lang"]: r["n"]
+        for r in d.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    return sizes, I.nb_log_model(prof, sizes)
 
-    def _fit():
-        prof = I.bucket_class_profile(with_b, "bs", "lang").collect()
-        sizes = {
-            r["lang"]: r["n"]
-            for r in d.groupBy("lang")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        return sizes, I.nb_log_model(prof, sizes)
 
-    return _cached("nb", sf_dir, _fit)
+@artifact
+def dsir_ratios(spark: SparkSession, sf_dir: str):
+    """The fitted DSIR bucket log-ratio map (cached per sf_dir) —
+    shared by dsir_importance_weights and corpus_prepare_curated."""
+    d = parallelize_small_scan(
+        spark, load(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+    )
+    with_b = d.select(
+        "doc_id", "lang", I.feature_buckets(F.col("text")).alias("bs")
+    )
+    return I.dsir_log_ratios(
+        I.bucket_class_profile(with_b, "bs", "lang").collect(), _TARGET_LANG
+    )
 
 
 def nb_best_struct(bs_col, sizes, priors, lls):
@@ -206,13 +205,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_b = d.select(
         "doc_id", "lang", I.feature_buckets(F.col("text")).alias("bs")
     )
-    ratios = _cached(
-        "dsir", sf_dir,
-        lambda: I.dsir_log_ratios(
-            I.bucket_class_profile(with_b, "bs", "lang").collect(),
-            _TARGET_LANG,
-        ),
-    )
+    ratios = dsir_ratios(spark, sf_dir)
     return with_b.select(
         "doc_id",
         "lang",
@@ -491,18 +484,7 @@ def nb_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_b = d.select(
         "doc_id", "lang", I.feature_buckets(F.col("text")).alias("bs")
     )
-
-    def _fit():
-        prof = I.bucket_class_profile(with_b, "bs", "lang").collect()
-        sizes = {
-            r["lang"]: r["n"]
-            for r in d.groupBy("lang")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        return sizes, I.nb_log_model(prof, sizes)
-
-    sizes, (priors, lls) = _cached("nb", sf_dir, _fit)
+    sizes, (priors, lls) = nb_model(spark, sf_dir)
     per_class = F.array(
         *[
             F.struct(

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multichannel_commerce_data_pipeline_spark.artifacts import artifact
 from multichannel_commerce_data_pipeline_spark.functions import (
     dround,
     oracle_dround,
@@ -22,7 +23,6 @@ from multichannel_commerce_data_pipeline_spark.tables import (
     load,
     parallelize_small_scan,
     parquet_memo,
-    session_memo,
 )
 
 _STOP_IN = ", ".join(f"'{w}'" for w in T.STOPWORDS)
@@ -45,28 +45,23 @@ _STOP_IN = ", ".join(f"'{w}'" for w in T.STOPWORDS)
 # pre-aggregation repartition on token would funnel every occurrence
 # of a hot token through one reducer. The serving layout makes the
 # df-aggregate and the token join exchange-free.
-_TF_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@artifact
 def _doc_term_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
-        tok = d.select(
-            "doc_id", F.explode(T.tokens(F.col("text"))).alias("token")
-        )
-        n_parts = spark.sparkContext.defaultParallelism
-        tf = (
-            tok.groupBy("doc_id", "token")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .repartition(n_parts, "token")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        tf.count()
-        return tf
-
-    return session_memo(spark, _TF_INDEX_CACHE, sf_dir, build)
+    d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
+    tok = d.select(
+        "doc_id", F.explode(T.tokens(F.col("text"))).alias("token")
+    )
+    n_parts = spark.sparkContext.defaultParallelism
+    tf = (
+        tok.groupBy("doc_id", "token")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .repartition(n_parts, "token")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    tf.count()
+    return tf
 
 
 @query(
@@ -808,7 +803,37 @@ def dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BM25_TERMS = ("spark", "query", "join")
 _BM25_K1 = 1.2
 _BM25_B = 0.75
-_BM25_STATS_CACHE: dict[str, object] = {}
+
+
+def _bm25_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # doc length and per-term tf fold out of the persisted doc-term
+    # index (sum of tf == token count): the corpus is not re-tokenized
+    # per call, and the shuffle to doc_id carries tf-sized rows
+    return _doc_term_index(spark, sf_dir).groupBy("doc_id").agg(
+        F.sum("tf").cast("long").alias("dl"),
+        *[
+            F.sum(F.when(F.col("token") == t, F.col("tf")).otherwise(0)).alias(
+                f"tf_{i}"
+            )
+            for i, t in enumerate(_BM25_TERMS)
+        ],
+    )
+
+
+# corpus model (N, avgdl, df) fitted once per sf_dir — training state
+# like the PQ codebooks, not per-query state
+@artifact
+def _bm25_stats(spark: SparkSession, sf_dir: str):
+    return _bm25_per_doc(spark, sf_dir).agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("dl").cast("double").alias("dl_sum"),
+        *[
+            F.sum(F.when(F.col(f"tf_{i}") > 0, 1).otherwise(0)).alias(
+                f"df_{i}"
+            )
+            for i in range(len(_BM25_TERMS))
+        ],
+    ).collect()[0]
 
 
 def _bm25_oracle() -> str:
@@ -872,33 +897,8 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the decayed_popularity convention); ln() itself agrees
     cross-engine per the tfidf_top_terms precedent (the oracle fits
     the same model relationally — same values, different plan)."""
-    # doc length and per-term tf fold out of the persisted doc-term
-    # index (sum of tf == token count): the corpus is not re-tokenized
-    # per call, and the shuffle to doc_id carries tf-sized rows
-    tf_idx = _doc_term_index(spark, sf_dir)
-    per_doc = tf_idx.groupBy("doc_id").agg(
-        F.sum("tf").cast("long").alias("dl"),
-        *[
-            F.sum(F.when(F.col("token") == t, F.col("tf")).otherwise(0)).alias(
-                f"tf_{i}"
-            )
-            for i, t in enumerate(_BM25_TERMS)
-        ],
-    )
-    # corpus model (N, avgdl, df) fitted once per sf_dir — training
-    # state like the PQ codebooks, not per-query state
-    if sf_dir not in _BM25_STATS_CACHE:
-        _BM25_STATS_CACHE[sf_dir] = per_doc.agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("dl").cast("double").alias("dl_sum"),
-            *[
-                F.sum(F.when(F.col(f"tf_{i}") > 0, 1).otherwise(0)).alias(
-                    f"df_{i}"
-                )
-                for i in range(len(_BM25_TERMS))
-            ],
-        ).collect()[0]
-    stats = _BM25_STATS_CACHE[sf_dir]
+    per_doc = _bm25_per_doc(spark, sf_dir)
+    stats = _bm25_stats(spark, sf_dir)
     avgdl = stats.dl_sum / stats.n_docs
     score = F.lit(None).cast("decimal(28,6)")
     contribs = []
@@ -1111,30 +1111,27 @@ def keyword_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every phrase probe's term filter lands on the cached layout. At
 # 100 TB this is the inverted index you persist bucketed by token;
 # a phrase probe then reads ONLY the phrase terms' postings.
-_POS_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
 _PHRASE = ("hash", "join")
 
 
+@artifact
 def _doc_pos_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
-        toks = d.select("doc_id", T.tokens(F.col("text")).alias("toks"))
-        # posexplode_outer + null filter: a bare generator would make
-        # InferFiltersFromGenerate push the whole tokenizer into the
-        # scan filter (the shingle lesson)
-        post = toks.select(
-            "doc_id", F.posexplode_outer("toks").alias("pos", "token")
-        ).filter(F.col("token").isNotNull())
-        n_parts = spark.sparkContext.defaultParallelism
-        idx = post.repartition(n_parts, "token").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        idx.count()
-        return idx
-
-    return session_memo(spark, _POS_INDEX_CACHE, sf_dir, build)
+    d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
+    toks = d.select("doc_id", T.tokens(F.col("text")).alias("toks"))
+    # posexplode_outer + null filter: a bare generator would make
+    # InferFiltersFromGenerate push the whole tokenizer into the
+    # scan filter (the shingle lesson)
+    post = toks.select(
+        "doc_id", F.posexplode_outer("toks").alias("pos", "token")
+    ).filter(F.col("token").isNotNull())
+    n_parts = spark.sparkContext.defaultParallelism
+    idx = post.repartition(n_parts, "token").persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    idx.count()
+    return idx
 
 
 def phrase_probe(idx, terms: tuple[str, ...]):

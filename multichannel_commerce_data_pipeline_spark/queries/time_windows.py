@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from multichannel_commerce_data_pipeline_spark.artifacts import artifact
 from multichannel_commerce_data_pipeline_spark.functions import (
     dround,
     oracle_dround,
@@ -1292,7 +1293,6 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # checkpoint-state) boundary.
 _CUSUM_REF_END = "1999-01-01"
 _CUSUM_SPLIT = "2000-06-01"
-_STREAM_CUSUM_DIRS: dict[tuple[str, str], str] = {}
 
 
 def _daily_series(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1306,81 +1306,77 @@ def _daily_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@artifact
 def _stream_cusum_run(spark: SparkSession, sf_dir: str) -> str:
-    def build() -> str:
-        import hashlib
-        import os
-        from decimal import Decimal
+    import hashlib
+    import os
+    from decimal import Decimal
 
-        from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-            fresh_stream_dir,
-            stream_cusum_monitor,
-        )
+    from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
+        fresh_stream_dir,
+        stream_cusum_monitor,
+    )
 
-        daily = _daily_series(spark, sf_dir)
-        ref = daily.filter(F.col("day") < F.lit(_CUSUM_REF_END).cast("date"))
-        med = ref.groupBy("series").agg(
-            dround(F.percentile("x", 0.5), 3).alias("med")
+    daily = _daily_series(spark, sf_dir)
+    ref = daily.filter(F.col("day") < F.lit(_CUSUM_REF_END).cast("date"))
+    med = ref.groupBy("series").agg(
+        dround(F.percentile("x", 0.5), 3).alias("med")
+    )
+    h = (
+        ref.join(F.broadcast(med), "series")
+        .groupBy("series", "med")
+        .agg(
+            dround(
+                F.lit(_CUSUM_MAD_MULT)
+                * F.percentile(F.abs(F.col("x") - F.col("med")), 0.5),
+                3,
+            ).alias("hh")
         )
-        h = (
-            ref.join(F.broadcast(med), "series")
-            .groupBy("series", "med")
-            .agg(
-                dround(
-                    F.lit(_CUSUM_MAD_MULT)
-                    * F.percentile(F.abs(F.col("x") - F.col("med")), 0.5),
-                    3,
-                ).alias("hh")
-            )
-            .collect()
+        .collect()
+    )
+    consts = {
+        r.series: (
+            int(Decimal(str(r.med)) * 1000),
+            int(Decimal(str(r.hh)) * 1000),
         )
-        consts = {
-            r.series: (
-                int(Decimal(str(r.med)) * 1000),
-                int(Decimal(str(r.hh)) * 1000),
-            )
-            for r in h
-        }
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        tmp = fresh_stream_dir(f"mcdp_cusum_{tag}_")
-        src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
-        mon = daily.filter(
-            F.col("day") >= F.lit(_CUSUM_REF_END).cast("date")
-        ).select(
-            "series",
-            F.date_format("day", "yyyy-MM-dd").alias("day"),
-            (F.col("x").cast("decimal(18,2)") * 1000)
-            .cast("long")
-            .alias("x_milli"),
-        )
-        split = F.lit(_CUSUM_SPLIT)
-        mon.filter(F.col("day") < split).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b0")
-        mon.filter(F.col("day") >= split).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b1")
-        # pinned mtimes: the file source drains oldest-first, so the
-        # day-partitioned chunks arrive in day order by construction
-        # (the stream_domain_admit contract)
-        now = os.stat(f"{src}/b1").st_mtime
-        for sub, t in (("b0", now - 60), ("b1", now - 30)):
-            root = f"{src}/{sub}"
-            for name in os.listdir(root):
-                os.utime(os.path.join(root, name), (t, t))
-        stream_cusum_monitor(
-            spark,
-            f"{src}/b*",
-            "series string, day string, x_milli bigint",
-            out,
-            ckpt,
-            consts,
-        )
-        return out
-
-    from multichannel_commerce_data_pipeline_spark.tables import session_memo
-
-    return session_memo(spark, _STREAM_CUSUM_DIRS, sf_dir, build)
+        for r in h
+    }
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tmp = fresh_stream_dir(f"mcdp_cusum_{tag}_")
+    src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
+    mon = daily.filter(
+        F.col("day") >= F.lit(_CUSUM_REF_END).cast("date")
+    ).select(
+        "series",
+        F.date_format("day", "yyyy-MM-dd").alias("day"),
+        (F.col("x").cast("decimal(18,2)") * 1000)
+        .cast("long")
+        .alias("x_milli"),
+    )
+    split = F.lit(_CUSUM_SPLIT)
+    mon.filter(F.col("day") < split).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{src}/b0")
+    mon.filter(F.col("day") >= split).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{src}/b1")
+    # pinned mtimes: the file source drains oldest-first, so the
+    # day-partitioned chunks arrive in day order by construction
+    # (the stream_domain_admit contract)
+    now = os.stat(f"{src}/b1").st_mtime
+    for sub, t in (("b0", now - 60), ("b1", now - 30)):
+        root = f"{src}/{sub}"
+        for name in os.listdir(root):
+            os.utime(os.path.join(root, name), (t, t))
+    stream_cusum_monitor(
+        spark,
+        f"{src}/b*",
+        "series string, day string, x_milli bigint",
+        out,
+        ckpt,
+        consts,
+    )
+    return out
 
 
 def _stream_cusum_oracle() -> str:

@@ -11,6 +11,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multichannel_commerce_data_pipeline_spark.artifacts import artifact
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -27,8 +29,8 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# Catalog-style memo of the lazy table frames, keyed like session_memo
-# by (applicationId, sf_dir, table). spark.read.parquet costs ~110 ms
+# Catalog-style memo of the lazy table frames, keyed like the artifact
+# store by (applicationId, sf_dir, table). spark.read.parquet costs ~110 ms
 # of py4j reader setup + footer schema read PER CALL, and every one of
 # the 215 registered queries re-pays it for each table it touches
 # (profiled: 0.56 s of exec_daily_kpi's 1.3 s plan build was five
@@ -214,54 +216,9 @@ def _estimate_scan_partitions(spark: SparkSession, df: DataFrame) -> int:
     return max(1, -(-total // max(split, 1)))
 
 
-def session_memo(spark: SparkSession, cache: dict, sf_dir: str, build):
-    """Memoize a per-``sf_dir`` DataFrame artifact (persisted LSH index,
-    cluster labels, co-purchase edges, trained centroids, ...), keyed
-    ADDITIONALLY by the owning SparkSession's applicationId.
-
-    A cached/persisted DataFrame is bound to the session that built it:
-    if that session is stopped and a new one created in-process
-    (multi-session test suites, driver restarts), a plain
-    ``dict[sf_dir]`` hands back a frame whose SparkContext is dead and
-    every later use fails. Keying by (applicationId, sf_dir) makes a
-    fresh session rebuild the artifact; entries from other application
-    ids for the same sf_dir are evicted (their session is gone in the
-    one-active-session harness, and eviction keeps the dict bounded —
-    worst case a live concurrent session rebuilds, costing time, never
-    correctness)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in cache:
-        for stale in [k for k in cache if k[1] == sf_dir and k != key]:
-            evicted = cache.pop(stale, None)
-            # Best-effort release of the evicted artifact's cached
-            # blocks: in the common harness case its session is already
-            # dead (unpersist raises, nothing to free), but a live
-            # concurrent session's artifact would otherwise leak its
-            # storage until that session exits. Artifacts are either a
-            # DataFrame or a tuple/list that may CONTAIN DataFrames
-            # (e.g. (centroids_df, assignments_df)) — unwrap and
-            # unpersist each frame explicitly; scalar members
-            # (collected constants) have nothing to free.
-            members = (
-                evicted if isinstance(evicted, (tuple, list)) else (evicted,)
-            )
-            for member in members:
-                if isinstance(member, DataFrame):
-                    try:
-                        member.unpersist()
-                    except Exception:
-                        pass  # dead session: nothing to free
-        cache[key] = build()
-    return cache[key]
-
-
-# (applicationId, path) -> scan DataFrame for immutable published
-# artifacts — see parquet_memo.
-_PARQUET_SCANS: dict[tuple[str, str], DataFrame] = {}
-
-
+@artifact
 def parquet_memo(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` memoized per (session, path) for
+    """``spark.read.parquet(path)`` memoized per (application, path) for
     IMMUTABLE-once-published artifact directories (the fingerprinted
     ``ensure_*`` layouts: their path embeds the source digest and they
     publish by atomic rename, so path identity == content identity).
@@ -274,12 +231,9 @@ def parquet_memo(spark: SparkSession, path: str) -> DataFrame:
     of rebuilding it on every query construction. Only the UNEXECUTED
     scan plan is cached — every execution still reads the parquet
     files. Never use this for per-run temp dirs (a fresh path per call
-    would just grow the dict) or for dirs rewritten in place (the
+    would just grow the store) or for dirs rewritten in place (the
     snapshot would go stale)."""
-    key = (spark.sparkContext.applicationId, path)
-    if key not in _PARQUET_SCANS:
-        _PARQUET_SCANS[key] = spark.read.parquet(path)
-    return _PARQUET_SCANS[key]
+    return spark.read.parquet(path)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -1,0 +1,109 @@
+"""The artifact store (artifacts.py) with fake sessions: no JVM.
+
+Three properties the engine's thread pools rely on: concurrent callers
+of one key share one build, a failed build leaves nothing behind, and
+builds of different keys are not serialized behind each other.
+"""
+
+from __future__ import annotations
+
+import sys
+import threading
+from types import SimpleNamespace
+
+from multichannel_commerce_data_pipeline_spark.artifacts import artifact
+
+THREADS = 8
+
+
+def _session(app: str) -> SimpleNamespace:
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app))
+
+
+def _run_threads(n: int, fn) -> list:
+    results: list = [None] * n
+    errors: list[Exception] = []
+
+    def call(i: int) -> None:
+        try:
+            results[i] = fn()
+        except Exception as e:  # collected, asserted by the caller
+            errors.append(e)
+
+    threads = [threading.Thread(target=call, args=(i,)) for i in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=30)
+        assert not t.is_alive()
+    assert errors == []
+    return results
+
+
+def test_concurrent_callers_share_one_build():
+    builds = []
+    barrier = threading.Barrier(THREADS)
+
+    @artifact
+    def index(spark, sf_dir):
+        builds.append(sf_dir)
+        threading.Event().wait(0.2)  # hold the build open for the others
+        return object()
+
+    spark = _session("app-single-flight")
+
+    def call():
+        barrier.wait(timeout=10)
+        return index(spark, "/sf")
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        results = _run_threads(THREADS, call)
+    finally:
+        sys.setswitchinterval(interval)
+    assert builds == ["/sf"]
+    assert all(r is results[0] for r in results)
+
+
+def test_failed_build_stores_nothing():
+    attempts = []
+
+    @artifact
+    def model(spark, sf_dir):
+        attempts.append(sf_dir)
+        if len(attempts) == 1:
+            raise RuntimeError("fit failed")
+        return "fitted"
+
+    spark = _session("app-failure")
+    try:
+        model(spark, "/sf")
+    except RuntimeError:
+        pass
+    else:
+        raise AssertionError("the first build should have raised")
+    assert not model.is_built(spark, "/sf")
+    assert model(spark, "/sf") == "fitted"
+    assert attempts == ["/sf", "/sf"]
+    assert model.is_built(spark, "/sf")
+
+
+def test_builds_of_different_keys_overlap():
+    started = {"a": threading.Event(), "b": threading.Event()}
+    saw_other = {}
+
+    @artifact
+    def fit(spark, sf_dir):
+        other = "b" if sf_dir == "a" else "a"
+        started[sf_dir].set()
+        # a store that serialized all builds would never let the other
+        # key's build start while this one is running
+        saw_other[sf_dir] = started[other].wait(timeout=5)
+        return sf_dir
+
+    spark = _session("app-overlap")
+    keys = ["a", "b"]
+    results = _run_threads(2, lambda: fit(spark, keys.pop()))
+    assert sorted(results) == ["a", "b"]
+    assert saw_other == {"a": True, "b": True}

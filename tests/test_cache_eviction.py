@@ -2,17 +2,22 @@
 
 The engine builds independent artifacts on thread pools, so two callers
 can both list a dead application's entry as stale and both evict it.
-Each cache below is swapped for a dict that holds every caller at its
-first scan of the keys until all callers have scanned, so both evict
-the same key; the second eviction must be a no-op, not a KeyError.
+The unlocked caches below are swapped for a dict that holds every
+caller at its first scan of the keys until all callers have scanned,
+so both evict the same key; the second eviction must be a no-op, not a
+KeyError. The artifact store evicts under its lock, so its callers
+just arrive together.
 """
 
 from __future__ import annotations
 
 import threading
 from types import SimpleNamespace
+from unittest.mock import MagicMock
 
-from multichannel_commerce_data_pipeline_spark import tables
+from pyspark.sql import DataFrame
+
+from multichannel_commerce_data_pipeline_spark import artifacts, tables
 from multichannel_commerce_data_pipeline_spark.operators import dedup
 
 CALLERS = 2
@@ -53,12 +58,30 @@ def _race(fn) -> list[Exception]:
     return errors
 
 
-def test_session_memo_concurrent_eviction():
+def test_artifact_concurrent_eviction(monkeypatch):
+    """The artifact store evicts under its own lock, so two callers that
+    both find a dead application's entry cannot both pop it; the race
+    here is the two callers arriving together."""
     fake = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="live"))
-    cache = _RacingDict({("dead", "sf"): "stale artifact"})
-    errors = _race(lambda: tables.session_memo(fake, cache, "sf", lambda: "new"))
+    dead_frame = MagicMock(spec=DataFrame)
+    barrier = threading.Barrier(CALLERS)
+
+    def index(spark, sf_dir):
+        return "new"
+
+    stale = ("dead", index, ("sf",))
+    store = {stale: ("stale artifact", dead_frame)}
+    monkeypatch.setattr(artifacts, "_STORE", store)
+    memo = artifacts.artifact(index)
+
+    def call() -> None:
+        barrier.wait(timeout=30)
+        memo(fake, "sf")
+
+    errors = _race(call)
     assert errors == []
-    assert dict(cache) == {("live", "sf"): "new"}
+    assert dict(store) == {("live", index, ("sf",)): "new"}
+    dead_frame.unpersist.assert_called_once_with()
 
 
 def test_load_concurrent_eviction(spark, sf_dir, monkeypatch):

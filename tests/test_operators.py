@@ -1327,28 +1327,42 @@ def test_bloom_no_false_negatives_and_low_fp(spark):
     assert fp / 2000 < 0.05, fp  # (1-e^(-4*500/65536))^4 ~ 7e-7
 
 
-def test_session_memo_rebuilds_for_new_session():
+def test_artifact_rebuilds_for_new_session():
     """Cached per-sf_dir DataFrames are bound to the session that built
     them: after a stop/recreate, a plain dict[sf_dir] cache hands back
-    a frame on a dead SparkContext. session_memo keys by applicationId
-    too — same session hits the cache, a NEW session rebuilds and
-    evicts the dead entry (bounded dict, no stale frames)."""
+    a frame on a dead SparkContext. The artifact store keys by
+    applicationId too — same session hits the store, a NEW session
+    rebuilds and evicts the dead entry, releasing its frames (bounded
+    store, no stale frames)."""
     from types import SimpleNamespace
+    from unittest.mock import MagicMock
 
-    from multichannel_commerce_data_pipeline_spark.tables import session_memo
+    from pyspark.sql import DataFrame
+
+    from multichannel_commerce_data_pipeline_spark import artifacts
 
     mk = lambda app: SimpleNamespace(  # noqa: E731
         sparkContext=SimpleNamespace(applicationId=app)
     )
-    cache, builds = {}, []
-    build = lambda tag: lambda: builds.append(tag) or tag  # noqa: E731
+    builds, frame, tag = [], MagicMock(spec=DataFrame), {}
+
+    @artifacts.artifact
+    def index(spark, sf_dir):
+        builds.append(tag["next"])
+        return tag["next"], frame
+
     s1 = mk("app-1")
-    assert session_memo(s1, cache, "/sf", build("a")) == "a"
-    assert session_memo(s1, cache, "/sf", build("b")) == "a"  # cache hit
+    tag["next"] = "a"
+    assert index(s1, "/sf")[0] == "a"
+    tag["next"] = "b"
+    assert index(s1, "/sf")[0] == "a"  # cache hit
     assert builds == ["a"]
     s2 = mk("app-2")
-    assert session_memo(s2, cache, "/sf", build("c")) == "c"  # rebuilt
-    assert list(cache) == [("app-2", "/sf")]  # dead entry evicted
+    tag["next"] = "c"
+    assert index(s2, "/sf")[0] == "c"  # rebuilt
+    entries = [k for k in artifacts._STORE if k[1] is index.__wrapped__]
+    assert entries == [("app-2", index.__wrapped__, ("/sf",))]  # dead evicted
+    frame.unpersist.assert_called_once_with()  # evicted frame released
 
 
 def test_bloom_km_split_exact_at_word_boundary(spark):
