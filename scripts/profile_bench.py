@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    from bench import HEADLINE
+    from bench import HEADLINE, prepare
     from multichannel_commerce_data_pipeline_spark.queries import load_registry
     from multichannel_commerce_data_pipeline_spark.session import get_spark
 
@@ -31,21 +31,7 @@ def main() -> None:
     sc = spark.sparkContext
     registry = load_registry()
 
-    warm_dir = "/root/testdata/sf0.001"
-    for wq in ("pricing_summary", "broadcast_dim_join", "window_rank_in_segment"):
-        registry[wq].fn(spark, warm_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    from multichannel_commerce_data_pipeline_spark.queries.similarity import (
-        _ivfpq_index,
-    )
-    from multichannel_commerce_data_pipeline_spark.queries.warehouse_queries import (
-        ensure_bucketed,
-    )
-
-    ensure_bucketed(spark, sf_dir)
-    _ivfpq_index(spark, sf_dir)
+    prepare(spark, registry, sf_dir)
 
     tracker = sc.statusTracker()
     names = only or HEADLINE

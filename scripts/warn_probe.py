@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def run() -> None:
-    from bench import HEADLINE
+    from bench import HEADLINE, prepare
     from multichannel_commerce_data_pipeline_spark.queries import load_registry
     from multichannel_commerce_data_pipeline_spark.session import (
         WINDOW_EXEC_LOGGER,
@@ -36,15 +36,7 @@ def run() -> None:
     registry = load_registry()
     err = spark._jvm.System.err
     err.println("===MARKER=== setup")
-    from multichannel_commerce_data_pipeline_spark.queries.similarity import (
-        _ivfpq_index,
-    )
-    from multichannel_commerce_data_pipeline_spark.queries.warehouse_queries import (
-        ensure_bucketed,
-    )
-
-    ensure_bucketed(spark, sf_dir)
-    _ivfpq_index(spark, sf_dir)
+    prepare(spark, registry, sf_dir)
     for name in HEADLINE:
         err.println(f"===MARKER=== {name}")
         spark.sparkContext.setJobDescription(name)
