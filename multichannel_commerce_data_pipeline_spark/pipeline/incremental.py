@@ -59,9 +59,11 @@ def refresh_gold_kpi_partitions(
         if not keys:
             return
         kpi = kpi.filter(F.col("date_key").isin(keys))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        kpi.write.mode("overwrite").partitionBy("date_key").parquet(dest)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # the writer option, not the session-wide conf: a concurrent writer
+    # on the same session keeps its own overwrite mode
+    (
+        kpi.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("date_key")
+        .parquet(dest)
+    )

@@ -266,9 +266,11 @@ def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     star schema exists to serve. The per-customer frame is NOT bounded
     (one row per customer — billions at 100 TB), so the quartiles are
     computed the equi_depth_histogram way: ONE percentile aggregate
-    yields the 3 cut points per measure (a bounded 9-double collect),
-    and scores are map-side bucket arithmetic — no global NTILE sort,
-    no single-partition window anywhere. Scores are value-threshold
+    yields the 3 cut points per measure as a one-row frame, broadcast
+    and cross-joined like ``anchor`` (no collect, so constructing the
+    query runs no Spark job), and scores are map-side bucket
+    arithmetic against its columns — no global NTILE sort, no
+    single-partition window anywhere. Scores are value-threshold
     quartiles (score = 1 + #cuts below the value; recency inverted so
     the stalest quartile scores 1), which differ from NTILE's
     equal-count split only at exact-tie boundaries; the oracle applies
@@ -288,7 +290,7 @@ def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one array-percentile per measure (sort once each) instead of
     # 3x3 full-column buffers — the _hqe_exact_fit lesson; values
     # bit-identical
-    row = (
+    cuts = (
         base.agg(
             *[
                 F.percentile(m, F.lit(list(_RFM_QS))).alias(f"__{m[0]}")
@@ -304,16 +306,15 @@ def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for i in range(len(_RFM_QS))
             ]
         )
-        .collect()[0]
     )
 
     def bucket(m: str):
         return 1 + sum(
-            F.when(F.col(m) > F.lit(row[f"{m[0]}{i}"]), 1).otherwise(0)
+            F.when(F.col(m) > F.col(f"{m[0]}{i}"), 1).otherwise(0)
             for i in range(len(_RFM_QS))
         )
 
-    return base.select(
+    return base.join(F.broadcast(cuts)).select(
         "custkey", "recency_days", "frequency", "monetary",
         (5 - bucket("recency_days")).cast("int").alias("r_quartile"),
         bucket("frequency").cast("int").alias("f_quartile"),

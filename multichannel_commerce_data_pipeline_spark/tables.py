@@ -6,10 +6,12 @@ documents embeddings — one parquet file per table under an sf dir.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType, TimestampType
 
 from multichannel_commerce_data_pipeline_spark.artifacts import artifact
 
@@ -28,18 +30,22 @@ TABLE_NAMES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# footer key under which Spark stores the schema of a file it wrote
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
 
 # Catalog-style memo of the lazy table frames, keyed like the artifact
-# store by (applicationId, sf_dir, table). spark.read.parquet costs ~110 ms
-# of py4j reader setup + footer schema read PER CALL, and every one of
-# the 215 registered queries re-pays it for each table it touches
-# (profiled: 0.56 s of exec_daily_kpi's 1.3 s plan build was five
-# load() calls). The driver tables are immutable for a session's
-# lifetime, and a DataFrame is an immutable lazy plan — serving the
-# same handle is exactly what a catalog's resolved-relation cache
-# does. Entries from other sessions/applications are evicted on the
-# next call for the same (sf_dir, table); nothing is persisted, so
-# eviction is just a dict pop.
+# store by (applicationId, sf_dir, table). Opening a table still costs
+# 20-56 ms of py4j reader setup and a driver-side footer read with the
+# schema declared (_declared_schema; a bare spark.read.parquet ran one
+# schema-inference Spark job on top, 0.12-0.17 s warm), and every
+# registered query would re-pay it for each table it touches. The
+# driver tables are immutable for a session's lifetime, and a
+# DataFrame is an immutable lazy plan — serving the same handle is
+# exactly what a catalog's resolved-relation cache does. Entries from
+# other sessions/applications are evicted on the next call for the
+# same (sf_dir, table); nothing is persisted, so eviction is just a
+# dict pop.
 #
 # Keyed by the SESSION, not just the application (r9 advice #2): both
 # the cached DataFrame and the events nanosAsLong conf are
@@ -61,16 +67,81 @@ _LOAD_CACHE: dict[tuple[str, int, str, str], tuple[SparkSession, DataFrame]] = {
 _SAME_APP_SESSION_CAP = 4
 
 
+def _declared_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema Spark would infer for a local parquet FILE, converted
+    on the driver from its footer (metadata only). Spark's own
+    inference runs a Spark job that reads the footer inside a task;
+    declaring the schema opens the table with no job at all.
+
+    Spark's inference rules: a file Spark wrote carries its schema in
+    the footer and that wins; otherwise a timestamp that is not
+    UTC-adjusted is ``timestamp_ntz`` under
+    ``spark.sql.parquet.inferTimestampNTZ.enabled`` (default true),
+    INT96 is ``timestamp``, TIMESTAMP(NANOS) is ``bigint`` under
+    ``spark.sql.legacy.parquet.nanosAsLong``, and every other type maps
+    as ``from_arrow_schema`` maps it (``pyarrow`` reads the parquet
+    types without the file's stored Arrow schema, as Spark does).
+    Returns None — Spark infers — for a directory or non-local path
+    (the ``_estimate_scan_partitions`` rule), and for a type the
+    conversion does not cover (unsigned ints, nested nanos)."""
+    import pyarrow.parquet as pq
+    import pyarrow.types as pa_types
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    if not os.path.isfile(path):
+        return None
+    footer = pq.read_metadata(path)
+    stored = (footer.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if stored:
+        return StructType.fromJson(json.loads(stored))
+
+    def flag(key: str, default: str) -> bool:
+        return spark.conf.get(key, default).lower() == "true"
+
+    ntz = flag("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    nanos = flag("spark.sql.legacy.parquet.nanosAsLong", "false")
+    physical = {c.path: c.physical_type for c in footer.schema}
+    fields = []
+    for f in footer.schema.to_arrow_schema():
+        t = f.type
+        if pa_types.is_timestamp(t) and t.unit == "ns":
+            if physical.get(f.name) == "INT96":
+                dtype = TimestampType()
+            elif nanos:
+                dtype = LongType()
+            else:
+                return None  # Spark raises PARQUET_TYPE_ILLEGAL itself
+        elif "timestamp[ns" in str(t):
+            return None  # nanos nested in a list/struct/map
+        else:
+            try:
+                dtype = from_arrow_type(t, prefer_timestamp_ntz=ntz)
+            except TypeError:
+                return None
+        fields.append(StructField(f.name, dtype, f.nullable))
+    return StructType(fields)
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    schema = _declared_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan of one table (memoized per session — see
-    _LOAD_CACHE). Filters/projections applied by callers are pushed
-    into this scan by Catalyst (PushedFilters / ReadSchema).
+    _LOAD_CACHE). The schema is declared from the file's footer
+    (_declared_schema), so opening a table runs no Spark job.
+    Filters/projections applied by callers are pushed into this scan
+    by Catalyst (PushedFilters / ReadSchema).
 
-    ``events.parquet`` stores ``ts`` as parquet TIMESTAMP(NANOS), which
-    Spark 4.x rejects by default (PARQUET_TYPE_ILLEGAL). We read nanos
-    as a long and convert to a microsecond timestamp — same truncation
-    DuckDB applies when it coerces TIMESTAMP_NS to its microsecond
-    TIMESTAMP, so both engines see identical values.
+    ``events.parquet`` may store ``ts`` as parquet TIMESTAMP(NANOS),
+    which Spark 4.x rejects by default (PARQUET_TYPE_ILLEGAL); the
+    testdata and generated dirs store microseconds, and both units
+    load. Nanos are read as a long and converted to a microsecond
+    timestamp — same truncation DuckDB applies when it coerces
+    TIMESTAMP_NS to its microsecond TIMESTAMP, so both engines see
+    identical values.
     """
     key = (spark.sparkContext.applicationId, id(spark), sf_dir, name)
     cached = _LOAD_CACHE.get(key)
@@ -89,11 +160,11 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         _LOAD_CACHE.pop(stale, None)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        df = _read(spark, os.path.join(sf_dir, "events.parquet"))
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     else:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        df = _read(spark, os.path.join(sf_dir, f"{name}.parquet"))
     _LOAD_CACHE[key] = (spark, df)
     # bound same-app sibling sessions (oldest-session eviction, never
     # the session that just inserted)

@@ -150,6 +150,40 @@ def test_incremental_gold_refresh_equals_full_rebuild(spark, sf_dir, tmp_path):
     assert canon(incr_dir) == canon(full_dir)
 
 
+def test_gold_refresh_leaves_session_overwrite_mode_alone(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The refresh asks the WRITER for dynamic partition overwrite and
+    never sets the session-wide conf, so a concurrent writer on the
+    same session keeps its own mode; with the session at its static
+    default the refresh still replaces only the partitions it wrote."""
+    from multichannel_commerce_data_pipeline_spark.pipeline.incremental import (
+        refresh_gold_kpi_partitions,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    assert spark.conf.get(key).lower() == "static"
+    touched: list[str] = []
+    real_set = spark.conf.set
+
+    def recording_set(k, v):
+        touched.append(k)
+        return real_set(k, v)
+
+    monkeypatch.setattr(spark.conf, "set", recording_set)
+    dest = str(tmp_path / "gold")
+    refresh_gold_kpi_partitions(spark, sf_dir, dest)
+    date_keys = lambda: sorted(  # noqa: E731
+        r.date_key
+        for r in spark.read.parquet(dest).select("date_key").distinct().collect()
+    )
+    keys = date_keys()
+    refresh_gold_kpi_partitions(spark, sf_dir, dest, keys[-1:])
+    assert key not in touched
+    assert spark.conf.get(key).lower() == "static"
+    assert date_keys() == keys  # the other partitions survived
+
+
 def test_quarantine_router_planted_violations(spark):
     """Every rule fires on its planted row with the right name, a
     multi-violation row lists ALL its failures in declaration order,
