@@ -12,8 +12,8 @@ per query.
   stop/recreate in the same process the new application rebuilds
   instead of being handed a frame on a dead context.
 - Single-flight: one build per key at a time, however many threads ask
-  (the curation and warehouse fits run on thread pools). Builds of
-  different keys run concurrently.
+  (the curation and warehouse fits fan out through ``concurrently``).
+  Builds of different keys run concurrently.
 - A build that raises stores nothing; the next call builds again.
 - Storing an entry evicts the entries of other applications for the
   same ``(fn, args)`` and unpersists their DataFrame members (best
@@ -23,13 +23,23 @@ per query.
 Arguments after ``spark`` are part of the key, so they must be
 hashable and must identify the corpus (an sf dir, a published path) —
 never a DataFrame.
+
+``concurrently(spark, *thunks)`` is the engine's one fan-out: it runs
+independent driver-blocking jobs (artifact builds, eager checkpoints,
+writes) on threads so one job's stage tail back-fills the cores the
+other leaves idle. Each thunk runs under the caller's Spark local
+properties (``pyspark.inheritable_thread_target``): a plain pool
+thread starts with none, so its jobs would drop the caller's job
+group, job description and scheduler pool.
 """
 
 from __future__ import annotations
 
 import functools
 import threading
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 
 _LOCK = threading.Lock()
@@ -52,15 +62,11 @@ def _release(value) -> None:
 
 def artifact(fn):
     """Memoize ``fn(spark, *args)`` in the store (see the module
-    docstring). The wrapper gains ``is_built(spark, *args)``, which
-    says whether a call would be served without building."""
-
-    def key_of(spark, args) -> tuple:
-        return (spark.sparkContext.applicationId, fn, args)
+    docstring)."""
 
     @functools.wraps(fn)
     def wrapper(spark, *args):
-        key = key_of(spark, args)
+        key = (spark.sparkContext.applicationId, fn, args)
         with _LOCK:
             if key in _STORE:
                 return _STORE[key]
@@ -79,5 +85,19 @@ def artifact(fn):
             _release(old)
         return value
 
-    wrapper.is_built = lambda spark, *args: key_of(spark, args) in _STORE
     return wrapper
+
+
+def concurrently(spark, *thunks) -> list:
+    """Run the thunks on one thread each, under the caller's job group,
+    job description and scheduler pool, and return their results in
+    order. Every thunk finishes before any error is raised (the first
+    in argument order); a single thunk runs inline."""
+    if len(thunks) == 1:
+        return [thunks[0]()]
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(thunk))
+            for thunk in thunks
+        ]
+    return [f.result() for f in futures]

@@ -128,19 +128,12 @@ def passage_dedup(
     )
 
 
-# persist=True frames, memoized per (applicationId, input semanticHash,
-# split args) so repeated calls share one cached frame (ADVICE r12);
-# stale-application entries are evicted at the next persisting call.
-_BOILERPLATE_PERSISTED: dict[tuple, DataFrame] = {}
-
-
 def boilerplate_lines(
     df: DataFrame,
     id_col: str,
     text_col: str,
     line_words: int = 10,
     df_threshold: int = 2,
-    persist: bool = False,
 ) -> DataFrame:
     """Corpus-frequency line-level boilerplate removal — the C4 /
     CCNet-style curation pass (Raffel et al. 2020 §2.2; Wenzek et al.
@@ -188,21 +181,11 @@ def boilerplate_lines(
 
     The split+md5 subtree feeds THREE consumers (the index frame, the
     df votes, the final text rebuild) in separate lineages, and Spark
-    has no DataFrame-level CSE — by default that is an accepted 2x
-    map-side digest recompute plus one extra scan: every repeat stays
-    inside its own scan stage and never shuffles, and at corpus scale
-    caching the text-plus-word-arrays frame usually costs more memory
-    than the repeated narrow scan costs CPU. ``persist=True`` flips
-    the trade — the same storage-investment call
-    corpus_prepare_decontaminated makes for ITS shared words frame —
-    for callers whose memory budget allows it: the digest arrays are
-    then computed exactly once (values identical either way, asserted
-    in tests/test_operators.py). The persisted frame is MEMOIZED per
-    (applicationId, input semanticHash, split args) like the
-    artifact-store indexes — repeated persist=True calls over the
-    same input reuse one cached frame instead of accumulating a new
-    MEMORY_AND_DISK entry per invocation; entries from dead
-    applications are evicted on the next call.
+    has no DataFrame-level CSE — that is an accepted 2x map-side
+    digest recompute plus one extra scan: every repeat stays inside
+    its own scan stage and never shuffles, and at corpus scale caching
+    the text-plus-word-arrays frame usually costs more memory than the
+    repeated narrow scan costs CPU.
     """
     base = df.select(
         F.col(id_col).alias("doc"), F.split(F.col(text_col), " ").alias("__ws")
@@ -224,45 +207,6 @@ def boilerplate_lines(
             ),
         ),
     )
-    if persist:
-        from pyspark import StorageLevel
-
-        spark = df.sparkSession
-        key = (
-            spark.sparkContext.applicationId,
-            df.semanticHash(),
-            id_col,
-            text_col,
-            line_words,
-        )
-        for stale in [
-            k for k in _BOILERPLATE_PERSISTED if k[0] != key[0]
-        ]:
-            evicted = _BOILERPLATE_PERSISTED.pop(stale, None)
-            try:
-                # best-effort, mirroring the artifact store: usually the
-                # evicted entry's session is already dead (nothing to
-                # free), but a live concurrent session's frame would
-                # otherwise stay pinned until that session exits
-                evicted.unpersist()
-            except Exception:
-                pass
-        entry = _BOILERPLATE_PERSISTED.get(key)
-        if entry is not None and not base.sameSemantics(entry):
-            # semanticHash() is a 32-bit best-effort hash: a collision
-            # between two DIFFERENT inputs would silently serve the
-            # other input's digests. Confirm with the full-plan
-            # sameSemantics check before reuse; on mismatch, evict and
-            # rebuild (correctness over cache hit — ADVICE r13).
-            try:
-                entry.unpersist()
-            except Exception:
-                pass
-            entry = None
-        if entry is None:
-            entry = base.persist(StorageLevel.MEMORY_AND_DISK)
-            _BOILERPLATE_PERSISTED[key] = entry
-        base = entry
     narrow = (
         base.select(
             "doc", F.posexplode_outer("__digs").alias("lidx", "ldigest")

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multichannel_commerce_data_pipeline_spark.artifacts import concurrently
 from multichannel_commerce_data_pipeline_spark.functions import dround
 from multichannel_commerce_data_pipeline_spark.queries import query
 from multichannel_commerce_data_pipeline_spark.tables import load
@@ -1045,20 +1046,15 @@ def join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (guide §2.6 "overlap independent jobs"): one job's stage tail
     # back-fills the idle cores the other leaves free, halving the
     # serial wall the two eager checkpoints otherwise pay.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fa = pool.submit(
-            lambda: ev.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("__na"))
-            .localCheckpoint(eager=True)
-        )
-        fb = pool.submit(
-            lambda: orders.groupBy("o_custkey")
-            .agg(F.count(F.lit(1)).alias("__nb"))
-            .localCheckpoint(eager=True)
-        )
-        ca, cb = fa.result(), fb.result()
+    ca, cb = concurrently(
+        spark,
+        lambda: ev.groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("__na"))
+        .localCheckpoint(eager=True),
+        lambda: orders.groupBy("o_custkey")
+        .agg(F.count(F.lit(1)).alias("__nb"))
+        .localCheckpoint(eager=True),
+    )
     sa = cm_sketch(
         ca,
         F.col("user_id"),

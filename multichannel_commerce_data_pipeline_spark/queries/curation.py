@@ -32,7 +32,10 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from multichannel_commerce_data_pipeline_spark.artifacts import artifact
+from multichannel_commerce_data_pipeline_spark.artifacts import (
+    artifact,
+    concurrently,
+)
 from multichannel_commerce_data_pipeline_spark.functions import (
     dround,
     oracle_dround,
@@ -170,19 +173,10 @@ def _signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # concurrently so the second's map stage back-fills the first's
     # stage tail instead of idling 32 cores (r17, guide §2.6 "overlap
     # independent jobs" — the wave-8 threaded-materialization idiom
-    # applied to the mart's cold build). Warm calls hit both caches
-    # and never enter the pool.
-    if lm_model.is_built(spark, sf_dir) and nb_model.is_built(spark, sf_dir):
-        lmm = lm_model(spark, sf_dir)
-        sizes, (priors, lls) = nb_model(spark, sf_dir)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_lm = pool.submit(lm_model, spark, sf_dir)
-            f_nb = pool.submit(nb_model, spark, sf_dir)
-            lmm = f_lm.result()
-            sizes, (priors, lls) = f_nb.result()
+    # applied to the mart's cold build).
+    lmm, (sizes, (priors, lls)) = concurrently(
+        spark, lambda: lm_model(spark, sf_dir), lambda: nb_model(spark, sf_dir)
+    )
     best = nb_best_struct(F.col("bs"), sizes, priors, lls)
     lm_avg = I.score_buckets(F.col("ks"), lmm).cast("double") / F.size("ks")
     return grammed.select(

@@ -11,7 +11,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from multichannel_commerce_data_pipeline_spark.artifacts import artifact
+from multichannel_commerce_data_pipeline_spark.artifacts import (
+    artifact,
+    concurrently,
+)
 from multichannel_commerce_data_pipeline_spark.functions import (
     dround,
     oracle_dround,
@@ -1639,11 +1642,8 @@ def _rec_model(
     # basket index — run the two persist-filling jobs concurrently
     # so the second back-fills the first's stage tail (r17, guide
     # §2.6; the wave-8 idiom). user_recs below consumes both, so
-    # it waits on the pool.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        list(pool.map(lambda df: df.count(), (recs, profile)))
+    # it waits on both.
+    concurrently(spark, recs.count, profile.count)
     # each user's servable rec set is part of the trained artifact
     # too (companions of the train profile minus already-bought):
     # persisting it keeps the per-evaluation cost at the scoring

@@ -19,7 +19,10 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from multichannel_commerce_data_pipeline_spark.artifacts import artifact
+from multichannel_commerce_data_pipeline_spark.artifacts import (
+    artifact,
+    concurrently,
+)
 from multichannel_commerce_data_pipeline_spark.functions import (
     dround,
     oracle_dround,
@@ -1971,23 +1974,19 @@ def ensure_erased_tables(spark: SparkSession, sf_dir: str) -> str:
             "left_anti",
         )
         # the three erased-table writes are independent jobs; running
-        # them from a small pool lets one write's stage tail back-fill
+        # them concurrently lets one write's stage tail back-fill
         # cores the others leave idle (guide §2.6 — the
         # join_size_estimate threaded-materialization idiom). One-time
         # cold-path cost per corpus version.
-        from concurrent.futures import ThreadPoolExecutor
+        def writer(df: DataFrame, sub: str):
+            return lambda: df.write.mode("overwrite").parquet(f"{path}/{sub}")
 
-        def _write(pair) -> None:
-            df, sub = pair
-            df.write.mode("overwrite").parquet(f"{path}/{sub}")
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            list(
-                pool.map(
-                    _write,
-                    [(cust, "customer"), (orders, "orders"), (li, "lineitem")],
-                )
-            )
+        concurrently(
+            spark,
+            writer(cust, "customer"),
+            writer(orders, "orders"),
+            writer(li, "lineitem"),
+        )
 
     return _materialize_atomic(base, build)
 
@@ -2211,20 +2210,23 @@ def _merged_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-cutover state + the delta binned against the STORED boundaries,
     accumulators merged (cnt+cnt, min/max) — the shared input of the
     delta-merge report and the quantile-serving consumer. History is
-    never rescanned; the state read is a bounded <= 8-row collect."""
+    never rescanned, and the stored boundaries stay in the plan: every
+    state row carries them, so one row of them is broadcast onto the
+    delta (the customer_rfm cut-point shape) and building the frame
+    runs no Spark job."""
     state = parquet_memo(spark, ensure_histogram_state(spark, sf_dir))
-    srows = state.collect()  # bounded: <= 8 bucket rows
     n_b = len(
         [c for c in state.columns if c[0] == "b" and c[1:].isdigit()]
     )
-    bounds = [float(srows[0][f"b{i}"]) for i in range(n_b)]
+    bounds = state.select(*[f"b{i}" for i in range(n_b)]).limit(1)
     bucket = sum(
-        F.when(F.col("l_extendedprice") > F.lit(b), 1).otherwise(0)
-        for b in bounds
+        F.when(F.col("l_extendedprice") > F.col(f"b{i}"), 1).otherwise(0)
+        for i in range(n_b)
     ).cast("long")
     delta = (
         load(spark, sf_dir, "lineitem")
         .filter(F.col("l_shipdate") >= F.lit(_HDM_CUT).cast("timestamp"))
+        .join(F.broadcast(bounds))
         .select(F.col("l_extendedprice").alias("p"), bucket.alias("bucket"))
         .groupBy("bucket")
         .agg(
@@ -2291,8 +2293,8 @@ def histogram_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-bucket accumulators (count, lo, hi) over all pre-cutover rows,
     binned against the old slice's exact octile boundaries, with the
     boundary VALUES carried on the state rows; a refresh bins ONLY the
-    delta slice against those stored boundaries (read back as a
-    bounded <= 8-row collect — no percentile recompute, no history
+    delta slice against those stored boundaries (one state row,
+    broadcast into the plan — no percentile recompute, no history
     scan) and merges accumulators (cnt+cnt, min(lo), max(hi)) — the
     ``mv_incremental_merge`` idiom applied to statistics. The output
     doubles as the re-ANALYZE trigger: per-bucket share against the
@@ -2630,8 +2632,8 @@ def histogram_quantile_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile can sit at most one bucket-width from the estimate.
 
     Plan: the merged histogram is the shared _merged_histogram frame
-    (delta scan + bounded state read); the cumulative walk is a window
-    over the <= 8 bucket rows (single-partition by construction —
+    (delta scan + broadcast state boundaries); the cumulative walk is a
+    window over the <= 8 bucket rows (single-partition by construction —
     bounded state, not data); quantile targets explode from a literal
     array and join on the INTEGER index (a double join key would
     invite cross-engine representation trouble); the exact
@@ -2640,21 +2642,15 @@ def histogram_quantile_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical inputs."""
     from pyspark.sql import Window as W
 
-    # The merged-histogram state read (+ its once-per-corpus artifact
-    # build) and the exact-percentile accuracy fit are independent
-    # driver-blocking jobs; overlap them on the cold call (r17, guide
-    # §2.6 — the wave-8 threaded-materialization idiom). Warm calls
-    # hit the fit cache and never enter the pool.
-    if _hqe_exact_fit.is_built(spark, sf_dir):
-        m = _merged_histogram(spark, sf_dir)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_m = pool.submit(_merged_histogram, spark, sf_dir)
-            f_fit = pool.submit(_hqe_exact_fit, spark, sf_dir)
-            m = f_m.result()
-            f_fit.result()
+    # The histogram-state build and the exact-percentile accuracy fit
+    # are independent once-per-corpus jobs; overlap them on the cold
+    # call (r17, guide §2.6 — the wave-8 threaded-materialization
+    # idiom). Warm calls find both built and run no job.
+    m, exact = concurrently(
+        spark,
+        lambda: _merged_histogram(spark, sf_dir),
+        lambda: _hqe_exact_fit(spark, sf_dir),
+    )
     w = W.orderBy("bucket").rowsBetween(W.unboundedPreceding, W.currentRow)
     cum = m.select(
         "bucket", "n_rows", "lo", "hi", F.sum("n_rows").over(w).alias("c")
@@ -2677,7 +2673,6 @@ def histogram_quantile_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     est = F.col("lo") + (F.col("hi") - F.col("lo")) * (tgt - cb) / F.col(
         "n_rows"
     )
-    exact = _hqe_exact_fit(spark, sf_dir)
     e_pick = sum(
         F.when(F.col("qi") == qi, F.lit(exact[i])).otherwise(F.lit(0.0))
         for i, (qi, _) in enumerate(_HQE_QS)

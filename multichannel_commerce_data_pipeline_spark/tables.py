@@ -34,39 +34,6 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-# Catalog-style memo of the lazy table frames, keyed like the artifact
-# store by (applicationId, sf_dir, table). Opening a table still costs
-# 20-56 ms of py4j reader setup and a driver-side footer read with the
-# schema declared (_declared_schema; a bare spark.read.parquet ran one
-# schema-inference Spark job on top, 0.12-0.17 s warm), and every
-# registered query would re-pay it for each table it touches. The
-# driver tables are immutable for a session's lifetime, and a
-# DataFrame is an immutable lazy plan — serving the same handle is
-# exactly what a catalog's resolved-relation cache does. Entries from
-# other sessions/applications are evicted on the next call for the
-# same (sf_dir, table); nothing is persisted, so eviction is just a
-# dict pop.
-#
-# Keyed by the SESSION, not just the application (r9 advice #2): both
-# the cached DataFrame and the events nanosAsLong conf are
-# SparkSession-scoped, so a spark.newSession() sibling (same appId)
-# must miss the cache and set its own conf. The cache value holds the
-# owning session object, which (a) lets the lookup verify identity and
-# (b) pins the id() from reuse while the entry lives.
-#
-# Same-app entries are bounded (r10 advice #3): a weakref on the
-# session cannot work here — every cached DataFrame strongly
-# references its owning session internally, so the weakref would never
-# die while the entry lives. Instead the cache keeps entries for at
-# most _SAME_APP_SESSION_CAP sibling sessions per application,
-# evicting the OLDEST sibling's entries (dict insertion order) when a
-# newer session pushes past the cap — a caller that churns
-# spark.newSession() in a loop now pins at most cap x tables lazy
-# frames instead of growing without bound.
-_LOAD_CACHE: dict[tuple[str, int, str, str], tuple[SparkSession, DataFrame]] = {}
-_SAME_APP_SESSION_CAP = 4
-
-
 def _declared_schema(spark: SparkSession, path: str) -> StructType | None:
     """The schema Spark would infer for a local parquet FILE, converted
     on the driver from its footer (metadata only). Spark's own
@@ -129,11 +96,14 @@ def _read(spark: SparkSession, path: str) -> DataFrame:
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan of one table (memoized per session — see
-    _LOAD_CACHE). The schema is declared from the file's footer
-    (_declared_schema), so opening a table runs no Spark job.
-    Filters/projections applied by callers are pushed into this scan
-    by Catalyst (PushedFilters / ReadSchema).
+    """Parquet scan of one table, memoized on ``spark`` per
+    (sf_dir, table): a catalog-style resolved-relation cache, since the
+    driver tables are immutable and a DataFrame is an immutable lazy
+    plan. A sibling ``spark.newSession()`` gets frames of its own.
+    The schema is declared from the file's footer (_declared_schema),
+    so opening a table runs no Spark job. Filters/projections applied
+    by callers are pushed into this scan by Catalyst (PushedFilters /
+    ReadSchema).
 
     ``events.parquet`` may store ``ts`` as parquet TIMESTAMP(NANOS),
     which Spark 4.x rejects by default (PARQUET_TYPE_ILLEGAL); the
@@ -143,21 +113,13 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     TIMESTAMP_NS to its microsecond TIMESTAMP, so both engines see
     identical values.
     """
-    key = (spark.sparkContext.applicationId, id(spark), sf_dir, name)
-    cached = _LOAD_CACHE.get(key)
-    if cached is not None and cached[0] is spark:
-        return cached[1]
-    # Evict only entries from OTHER applications (their context is
-    # gone in the one-active-context harness). Same-app sibling
-    # sessions keep their own entries: evicting them would make two
-    # live sessions thrash the memo on every alternating load, and a
-    # sibling's entry dies with the shared context anyway (sessions
-    # have no independent stop), so same-app entries stay bounded by
-    # live-sessions x tables.
-    for stale in [
-        k for k in _LOAD_CACHE if k[2:] == key[2:] and k[0] != key[0]
-    ]:
-        _LOAD_CACHE.pop(stale, None)
+    # on the session, not in the artifact store (keyed by application):
+    # register_views makes temp views in the frame's own session, and
+    # the events nanosAsLong conf is per session
+    memo = vars(spark).setdefault("_mcdp_table_frames", {})
+    df = memo.get((sf_dir, name))
+    if df is not None:
+        return df
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = _read(spark, os.path.join(sf_dir, "events.parquet"))
@@ -165,20 +127,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     else:
         df = _read(spark, os.path.join(sf_dir, f"{name}.parquet"))
-    _LOAD_CACHE[key] = (spark, df)
-    # bound same-app sibling sessions (oldest-session eviction, never
-    # the session that just inserted)
-    sessions = list(
-        dict.fromkeys(k[1] for k in _LOAD_CACHE if k[0] == key[0])
-    )
-    for sid in sessions[: max(0, len(sessions) - _SAME_APP_SESSION_CAP)]:
-        if sid == key[1]:
-            continue
-        for stale in [
-            k for k in _LOAD_CACHE if k[0] == key[0] and k[1] == sid
-        ]:
-            _LOAD_CACHE.pop(stale, None)
-    return df
+    # racing first loads keep the frame stored first
+    return memo.setdefault((sf_dir, name), df)
 
 
 # Fan-out key preference for parallelize_small_scan (r16 optimization

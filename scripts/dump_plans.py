@@ -659,14 +659,16 @@ COMMENTARY = {
         "(per-bucket count/lo/hi binned against the old slice's "
         "octile boundaries, boundary VALUES carried on the <=8 state "
         "rows) absorbs a delta by binning ONLY the post-cutover rows "
-        "against the stored boundaries — the l_shipdate cutover is "
+        "against the stored boundaries, one state row broadcast onto "
+        "the delta (no collect at construction) — the l_shipdate cutover is "
         "pushed into the parquet scan, history is never rescanned, "
         "and the merge is the mv_incremental_merge accumulator fold "
         "(cnt+cnt, min/max) over <=16 rows. Per-bucket share vs the "
         "equi-depth target 1/8 doubles as the re-ANALYZE trigger: "
         "drifted buckets say when re-fitting boundaries is worth its "
         "full scan. One keyed exchange (bucket), one broadcast of "
-        "the 1-row total (asserted in tests/test_plans.py)."
+        "the boundary row and one of the 1-row total (asserted in "
+        "tests/test_plans.py)."
     ),
     "stream_cusum_rollup": (
         "The ARRIVAL-TIME twin of cusum_changepoint: per-series "
@@ -697,7 +699,9 @@ COMMENTARY = {
         "and enters as literals (the bm25/kmeans fit-then-broadcast "
         "shape): with it inline the probe grew 7.1x across the 10x "
         "step (percentile is the one full-column read); cached, the "
-        "warm path is the 8-row walk + delta scan and probes 1.0x. "
+        "warm path is the 8-row walk + delta scan and probes 1.0x; "
+        "the stored boundaries enter as a broadcast state row, so a "
+        "warm construction runs no Spark job. "
         "The delta filter stays pushed into the parquet scan "
         "(asserted in tests/test_plans.py)."
     ),

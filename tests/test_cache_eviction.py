@@ -1,16 +1,16 @@
-"""Concurrent eviction of the same stale cache key.
+"""Concurrent callers of the engine's two memos.
 
-The engine builds independent artifacts on thread pools, so two callers
-can both list a dead application's entry as stale and both evict it.
-The unlocked caches below are swapped for a dict that holds every
-caller at its first scan of the keys until all callers have scanned,
-so both evict the same key; the second eviction must be a no-op, not a
-KeyError. The artifact store evicts under its lock, so its callers
-just arrive together.
+The engine fans independent builds out to threads, so two callers can
+both find a dead application's artifact and both evict it: the store
+evicts under its lock, so its callers just arrive together. load()
+keeps its frames on the session; many threads racing the first load
+of one table must all get a frame of that session, and one frame wins.
 """
 
 from __future__ import annotations
 
+import os
+import sys
 import threading
 from types import SimpleNamespace
 from unittest.mock import MagicMock
@@ -18,26 +18,8 @@ from unittest.mock import MagicMock
 from pyspark.sql import DataFrame
 
 from multichannel_commerce_data_pipeline_spark import artifacts, tables
-from multichannel_commerce_data_pipeline_spark.operators import dedup
 
 CALLERS = 2
-
-
-class _RacingDict(dict):
-    """A dict whose first iteration in each thread waits at a barrier
-    for the other callers' first iteration."""
-
-    def __init__(self, *args) -> None:
-        super().__init__(*args)
-        self._barrier = threading.Barrier(CALLERS)
-        self._seen = threading.local()
-
-    def __iter__(self):
-        keys = list(super().__iter__())
-        if not getattr(self._seen, "done", False):
-            self._seen.done = True
-            self._barrier.wait(timeout=30)
-        return iter(keys)
 
 
 def _race(fn) -> list[Exception]:
@@ -84,32 +66,36 @@ def test_artifact_concurrent_eviction(monkeypatch):
     dead_frame.unpersist.assert_called_once_with()
 
 
-def test_load_concurrent_eviction(spark, sf_dir, monkeypatch):
-    stale = ("dead-app", id(spark), sf_dir, "nation")
-    cache = _RacingDict({stale: (None, None)})
-    monkeypatch.setattr(tables, "_LOAD_CACHE", cache)
-    errors = _race(lambda: tables.load(spark, sf_dir, "nation"))
-    assert errors == []
-    assert stale not in cache
-    assert [k[0] for k in cache.keys()] == [spark.sparkContext.applicationId]
+def test_load_concurrent_eviction(spark, sf_dir):
+    """More threads than cores, switching every microsecond, all make
+    the first load() of one table on a fresh session at once: none
+    fails, every frame belongs to that session, and every caller,
+    racing or later, is served the one frame stored first."""
+    session = spark.newSession()
+    n = 4 * (os.cpu_count() or 1)
+    barrier = threading.Barrier(n)
+    results: list = [None] * n
+    errors: list[Exception] = []
 
+    def call(i: int) -> None:
+        try:
+            barrier.wait(timeout=30)
+            results[i] = tables.load(session, sf_dir, "nation")
+        except Exception as e:  # collected, asserted below
+            errors.append(e)
 
-def test_boilerplate_persist_concurrent_eviction(spark, monkeypatch):
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
-        "doc long, text string",
-    )
-    released = []
-    stale = ("dead-app", 0, "doc", "text", 10)
-    cache = _RacingDict({stale: SimpleNamespace(unpersist=lambda: released.append(1))})
-    monkeypatch.setattr(dedup, "_BOILERPLATE_PERSISTED", cache)
-    errors = _race(
-        lambda: dedup.boilerplate_lines(df, "doc", "text", persist=True).collect()
-    )
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
     try:
-        assert errors == []
-        assert stale not in cache
-        assert released == [1]
+        threads = [threading.Thread(target=call, args=(i,)) for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+            assert not t.is_alive()
     finally:
-        for frame in cache.values():
-            frame.unpersist()
+        sys.setswitchinterval(interval)
+    assert errors == []
+    assert all(df.sparkSession is session for df in results)
+    stable = tables.load(session, sf_dir, "nation")
+    assert all(df is stable for df in results)

@@ -1,10 +1,15 @@
-"""Guard: per-corpus artifacts live in the one store (artifacts.py).
+"""Guard: per-corpus artifacts live in the one store (artifacts.py),
+and work fans out only through ``artifacts.concurrently``.
 
 A module-private name bound to an empty ``{}`` or ``dict()`` at module
 level is how a hand-rolled memo starts: unlocked, not single-flight,
 keyed its own way. New per-corpus indexes, models and layout reads are
 ``@artifact`` functions of ``(spark, sf_dir)`` instead. Public module
 dicts (the query ``REGISTRY``) are API, not memos, and are not checked.
+
+A hand-built thread pool or thread starts its Spark jobs without the
+caller's job group, description and scheduler pool; ``concurrently``
+carries them over. Locks are not fan-outs and stay allowed.
 """
 
 from __future__ import annotations
@@ -18,15 +23,13 @@ PACKAGE = Path(__file__).resolve().parent.parent / (
 STORE = PACKAGE / "artifacts.py"
 
 ALLOWED = {
-    # per SparkSession, capped same-app siblings; pinned by test_sources
-    "tables._LOAD_CACHE",
     # process-wide unresolved Column trees that hold no Spark data
     "functions._COL_MEMO",
     # scratch-dir cleanup registry, not a memo
     "streaming.jobs._STREAM_DIRS",
-    # keyed by a caller frame's semanticHash, guarded by sameSemantics
-    "operators.dedup._BOILERPLATE_PERSISTED",
 }
+# names whose construction starts a thread
+THREAD_MAKERS = {"ThreadPoolExecutor", "Thread"}
 
 
 def _module_name(path: Path) -> str:
@@ -94,3 +97,35 @@ def test_no_module_reads_another_modules_cache():
                 if n in owners and owners[n] != here
             ]
     assert peeks == []
+
+
+def _fan_outs(path: Path) -> list[str]:
+    found = []
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            mods = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            mods = [f"{node.module}.{a.name}" for a in node.names]
+        else:
+            mods = []
+        if any(m.startswith("concurrent.futures") for m in mods):
+            found.append(f"imports concurrent.futures (line {node.lineno})")
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+            if name in THREAD_MAKERS:
+                found.append(f"builds {name} (line {node.lineno})")
+    return found
+
+
+def test_fan_out_only_through_concurrently():
+    offenders = {
+        _module_name(path): hits
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path != STORE and (hits := _fan_outs(path))
+    }
+    assert offenders == {}, (
+        f"{len(offenders)} modules fan out by hand; use "
+        "artifacts.concurrently(spark, *thunks): "
+        + "; ".join(f"{m}: {', '.join(h)}" for m, h in offenders.items())
+    )

@@ -730,14 +730,6 @@ def test_boilerplate_lines_planted_navbar(spark):
     assert out[3].clean_text == "" and out[3].n_kept == 0
     assert out[3].n_lines == 2 and out[3].n_removed == 2
     assert set(out) == {0, 1, 2, 3}
-    # persist=True is an evaluation-strategy knob only: identical rows
-    persisted = D.boilerplate_lines(
-        df, "doc_id", "text", line_words=10, df_threshold=2, persist=True
-    )
-    got_p = {r.doc_id: r for r in persisted.collect()}
-    assert {k: (v.n_lines, v.n_kept, v.clean_text) for k, v in got_p.items()} == {
-        k: (v.n_lines, v.n_kept, v.clean_text) for k, v in out.items()
-    }
 
 
 def test_boilerplate_cut_with_sketch_matches_exact_on_wide_grid(spark):
@@ -2675,44 +2667,6 @@ def test_sampled_cuts_degrade_planted(spark, tmp_path):
     assert en.n_sampled == len(en_in) and en.c33_sampled is not None
     assert en.c33_sampled <= en.c66_sampled
     assert en.n_unknown_sampled == 0
-
-
-def test_boilerplate_persist_collision_guard(spark):
-    """A 32-bit semanticHash collision must not serve another input's
-    persisted digest frame: poison the cache with a DIFFERENT corpus
-    under df1's key and assert the call detects the plan mismatch
-    (sameSemantics), rebuilds, and returns df1's own lines."""
-    from multichannel_commerce_data_pipeline_spark.operators import dedup as D
-
-    df1 = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
-        "doc long, text string",
-    )
-    df2 = spark.createDataFrame(
-        [(9, "one two three four five six seven eight nine ten")],
-        "doc long, text string",
-    )
-    want = {
-        (r.doc, r.clean_text)
-        for r in D.boilerplate_lines(df1, "doc", "text").collect()
-    }
-    D._BOILERPLATE_PERSISTED.clear()
-    D.boilerplate_lines(df1, "doc", "text", persist=True).collect()
-    (key1,) = list(D._BOILERPLATE_PERSISTED)
-    D.boilerplate_lines(df2, "doc", "text", persist=True).collect()
-    poison = [
-        v for k, v in D._BOILERPLATE_PERSISTED.items() if k != key1
-    ][0]
-    D._BOILERPLATE_PERSISTED[key1] = poison  # simulated hash collision
-    got = {
-        (r.doc, r.clean_text)
-        for r in D.boilerplate_lines(
-            df1, "doc", "text", persist=True
-        ).collect()
-    }
-    assert got == want
-    assert not D._BOILERPLATE_PERSISTED[key1].sameSemantics(poison)
-    D._BOILERPLATE_PERSISTED.clear()
 
 
 # --- r15 query behavior tests ----------------------------------------
