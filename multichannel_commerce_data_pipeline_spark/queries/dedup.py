@@ -1275,40 +1275,32 @@ def substring_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (session, sf_dir) — same side-effecting-run rationale as below.
 @artifact
 def _stream_decon_run(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
-
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        fresh_stream_dir,
+        Feed,
         stream_decontaminate,
     )
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    tmp = fresh_stream_dir(f"mcdp_sdecon_{tag}_")
-    src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
+    feed = Feed("mcdp_sdecon_", sf_dir)
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     train = d.filter(F.col("doc_id") >= _BENCH_CUT)
     # two arrival chunks (even/odd doc_id): the cut must come out
     # right per-micro-batch, not because everything shared a batch
-    train.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b0")
-    train.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b1")
+    feed.push(train.filter(F.col("doc_id") % 2 == 0))
+    feed.push(train.filter(F.col("doc_id") % 2 == 1))
     # eval grams from the shared persisted index (fifth consumer)
     eval_grams = _substring_gram_index(spark, sf_dir).filter(
         F.col("doc") < _BENCH_CUT
     )
     stream_decontaminate(
         spark,
-        f"{src}/b*",
+        feed.glob,
         "doc_id bigint, text string",
-        out,
-        ckpt,
+        feed.out,
+        feed.ckpt,
         eval_grams,
         _SUBSTR_MIN_WORDS,
     )
-    return out
+    return feed.out
 
 
 @query(
@@ -1357,11 +1349,11 @@ def stream_decontaminate_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_ann_assign pattern applied to the curation path
     (streaming/jobs.stream_decontaminate)."""
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_stream_assignments,
+        read_landed,
     )
 
     out = _stream_decon_run(spark, sf_dir)
-    return read_stream_assignments(spark, out).select(
+    return read_landed(spark, out).select(
         F.col("doc").alias("doc_id"), "n_words", "n_removed", "clean_text"
     )
 
@@ -1376,36 +1368,28 @@ _LINEDF_PROBE_CUT = 20  # probe the distinct lines of docs 0..19
 # (same rationale as the stream_ann_assign run).
 @artifact
 def _stream_linedf_run(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
-
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        fresh_stream_dir,
+        Feed,
         stream_line_df_sketch,
     )
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    tmp = fresh_stream_dir(f"mcdp_linedf_{tag}_")
-    src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
+    feed = Feed("mcdp_linedf_", sf_dir)
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     # two arrival chunks (even/odd doc_id) -> two micro-batches:
     # the cumulative grid must come out right INCREMENTALLY
-    d.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b0")
-    d.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b1")
+    feed.push(d.filter(F.col("doc_id") % 2 == 0))
+    feed.push(d.filter(F.col("doc_id") % 2 == 1))
     stream_line_df_sketch(
         spark,
-        f"{src}/b*",
+        feed.glob,
         "doc_id bigint, text string",
-        out,
-        ckpt,
+        feed.out,
+        feed.ckpt,
         w=_LINEDF_W,
         d=_LINEDF_D,
         seed=_LINEDF_SEED,
     )
-    return out
+    return feed.out
 
 
 def _linedf_oracle() -> str:
@@ -1481,11 +1465,11 @@ def stream_boilerplate_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         cm_estimate,
     )
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_latest_cm_sketch,
+        read_latest,
     )
 
     out = _stream_linedf_run(spark, sf_dir)
-    grid = read_latest_cm_sketch(spark, out)
+    grid = read_latest(spark, out)
     docs = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
     ws = F.split(F.col("text"), " ")
     n_lines = F.ceil(F.size(ws) / F.lit(10)).cast("int")
@@ -1525,39 +1509,29 @@ def stream_boilerplate_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # maintain half is the memoized line-df sketch drain above.
 @artifact
 def _stream_bpcut_run(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
-
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        fresh_stream_dir,
-        read_latest_cm_sketch,
+        Feed,
+        read_latest,
         stream_boilerplate_cut,
     )
 
     # maintain half: the landed cumulative grid (memoized drain)
-    grid_rows = read_latest_cm_sketch(
-        spark, _stream_linedf_run(spark, sf_dir)
-    ).collect()
+    grid_rows = read_latest(spark, _stream_linedf_run(spark, sf_dir)).collect()
     cells = [0] * (_LINEDF_D * _LINEDF_W)
     for r in grid_rows:
         cells[r.j * _LINEDF_W + r.bucket] = int(r.cell)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    tmp = fresh_stream_dir(f"mcdp_bpcut_{tag}_")
-    src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
+    feed = Feed("mcdp_bpcut_", sf_dir)
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     # two arrival chunks -> two micro-batches: the cut must come
     # out right per-micro-batch against the fixed landed grid
-    d.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b0")
-    d.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b1")
+    feed.push(d.filter(F.col("doc_id") % 2 == 0))
+    feed.push(d.filter(F.col("doc_id") % 2 == 1))
     stream_boilerplate_cut(
         spark,
-        f"{src}/b*",
+        feed.glob,
         "doc_id bigint, text string",
-        out,
-        ckpt,
+        feed.out,
+        feed.ckpt,
         cells,
         line_words=10,
         df_threshold=2,
@@ -1565,7 +1539,7 @@ def _stream_bpcut_run(spark: SparkSession, sf_dir: str) -> str:
         d=_LINEDF_D,
         seed=_LINEDF_SEED,
     )
-    return out
+    return feed.out
 
 
 def _bpcut_oracle() -> str:
@@ -1646,11 +1620,11 @@ def stream_boilerplate_cut_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
     kill a few extra cold lines, never spare a hot one
     (streaming/jobs.stream_boilerplate_cut)."""
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_stream_assignments,
+        read_landed,
     )
 
     out = _stream_bpcut_run(spark, sf_dir)
-    return read_stream_assignments(spark, out).select(
+    return read_landed(spark, out).select(
         "doc_id", "n_lines", "n_kept", "n_removed", "clean_text"
     )
 

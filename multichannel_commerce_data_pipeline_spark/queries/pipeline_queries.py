@@ -395,18 +395,19 @@ def stream_sessionize_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         BRONZE_ROOT,
     )
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        fresh_stream_dir,
+        Feed,
         stream_sessionize,
     )
 
-    tmp = fresh_stream_dir("mcdp_stream_sess_")
-    bronze = Path(tmp) / "bronze"
-    shutil.copytree(Path(BRONZE_ROOT) / "joor", bronze / "joor")
+    # the feed is a bronze copy: chunk 0 the fixtures, chunk 1 the
+    # sentinel day, arriving after the first drain
+    feed = Feed("mcdp_stream_sess_", sf_dir)
+    joor = Path(feed.src) / "joor"
+    shutil.copytree(Path(BRONZE_ROOT) / "joor", joor)
+    feed.arrived(str(joor))
 
     def drain() -> None:
-        stream_sessionize(
-            spark, "joor", str(bronze), f"{tmp}/sess", f"{tmp}/ckpt"
-        )
+        stream_sessionize(spark, "joor", feed.src, feed.out, feed.ckpt)
 
     drain()  # real data; tail sessions stay open in state
     sentinel = {
@@ -427,13 +428,14 @@ def stream_sessionize_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bronze_timestamp": "2025-07-15T00:00:01",
         },
     }
-    late = bronze / "joor" / "2025" / "07" / "15"
+    late = joor / "2025" / "07" / "15"
     late.mkdir(parents=True)
     (late / "batch.json").write_text(_json.dumps(sentinel) + "\n")
+    feed.arrived(str(late))
     drain()  # watermark jumps past every real session -> all emit
 
     return (
-        spark.read.parquet(f"{tmp}/sess")
+        spark.read.parquet(feed.out)
         .filter(F.col("key") != "ZZ-SENTINEL")
         .select(
             "key",
@@ -610,7 +612,7 @@ def stream_psi_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
         fresh_stream_dir,
-        read_latest_binned_profile,
+        read_latest,
         stream_binned_profile,
     )
 
@@ -618,7 +620,7 @@ def stream_psi_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_binned_profile(
         spark, "joor", BRONZE_ROOT, f"{tmp}/prof", f"{tmp}/ckpt"
     )
-    prof = read_latest_binned_profile(spark, f"{tmp}/prof")
+    prof = read_latest(spark, f"{tmp}/prof")
     cells = prof.groupBy("bin").agg(
         F.sum(F.when(F.col("is_ref") == 1, F.col("n")).otherwise(F.lit(0)))
         .cast("double")

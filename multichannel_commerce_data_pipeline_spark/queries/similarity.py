@@ -1508,27 +1508,19 @@ def _rfm_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # chain in warehouse_queries).
 @artifact
 def _stream_assign_run(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
-
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        fresh_stream_dir,
+        Feed,
         stream_ivf_assign,
     )
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    tmp = fresh_stream_dir(f"mcdp_stream_ann_{tag}_")
-    src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
+    feed = Feed("mcdp_stream_ann_", sf_dir)
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # two arrival chunks (even/odd vec_id) -> two micro-batches
     # under maxFilesPerTrigger=1: the assignment must come out
     # right INCREMENTALLY, not because the whole corpus happened
     # to share one batch
-    e.filter(F.col("vec_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b0")
-    e.filter(F.col("vec_id") % 2 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b1")
+    feed.push(e.filter(F.col("vec_id") % 2 == 0))
+    feed.push(e.filter(F.col("vec_id") % 2 == 1))
     cents = (
         load(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") % _IVF_STRIDE == 0)
@@ -1539,13 +1531,13 @@ def _stream_assign_run(spark: SparkSession, sf_dir: str) -> str:
     )
     stream_ivf_assign(
         spark,
-        f"{src}/b*",
+        feed.glob,
         "vec_id bigint, embedding array<float>",
-        out,
-        ckpt,
+        feed.out,
+        feed.ckpt,
         cents,
     )
-    return out
+    return feed.out
 
 
 @query(
@@ -1583,11 +1575,11 @@ def stream_ann_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs the same partial-aggregated broadcast-argmax as the batch
     operator inside foreachBatch)."""
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_stream_assignments,
+        read_landed,
     )
 
     out = _stream_assign_run(spark, sf_dir)
-    return read_stream_assignments(spark, out).select(
+    return read_landed(spark, out).select(
         F.col("vid").alias("vec_id"), "cell", "ccos"
     )
 

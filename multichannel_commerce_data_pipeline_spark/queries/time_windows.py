@@ -1308,12 +1308,10 @@ def _daily_series(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @artifact
 def _stream_cusum_run(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
-    import os
     from decimal import Decimal
 
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        fresh_stream_dir,
+        Feed,
         stream_cusum_monitor,
     )
 
@@ -1341,9 +1339,7 @@ def _stream_cusum_run(spark: SparkSession, sf_dir: str) -> str:
         )
         for r in h
     }
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    tmp = fresh_stream_dir(f"mcdp_cusum_{tag}_")
-    src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
+    feed = Feed("mcdp_cusum_", sf_dir)
     mon = daily.filter(
         F.col("day") >= F.lit(_CUSUM_REF_END).cast("date")
     ).select(
@@ -1353,30 +1349,19 @@ def _stream_cusum_run(spark: SparkSession, sf_dir: str) -> str:
         .cast("long")
         .alias("x_milli"),
     )
+    # day-split chunks: the feed's pinned arrival order is day order
     split = F.lit(_CUSUM_SPLIT)
-    mon.filter(F.col("day") < split).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b0")
-    mon.filter(F.col("day") >= split).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b1")
-    # pinned mtimes: the file source drains oldest-first, so the
-    # day-partitioned chunks arrive in day order by construction
-    # (the stream_domain_admit contract)
-    now = os.stat(f"{src}/b1").st_mtime
-    for sub, t in (("b0", now - 60), ("b1", now - 30)):
-        root = f"{src}/{sub}"
-        for name in os.listdir(root):
-            os.utime(os.path.join(root, name), (t, t))
+    feed.push(mon.filter(F.col("day") < split))
+    feed.push(mon.filter(F.col("day") >= split))
     stream_cusum_monitor(
         spark,
-        f"{src}/b*",
+        feed.glob,
         "series string, day string, x_milli bigint",
-        out,
-        ckpt,
+        feed.out,
+        feed.ckpt,
         consts,
     )
-    return out
+    return feed.out
 
 
 def _stream_cusum_oracle() -> str:
@@ -1484,11 +1469,11 @@ def stream_cusum_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch≡stream in the compared values themselves (the
     stream_domain_admit convention)."""
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_latest_cusum_summary,
+        read_latest,
     )
 
     out = _stream_cusum_run(spark, sf_dir)
-    cur = read_latest_cusum_summary(spark, out)
+    cur = read_latest(spark, out, "series")
 
     def day_or_null(col: str):
         return (

@@ -1871,17 +1871,12 @@ _ADMIT_CAP = 18
 # the stream_decontaminate / stream_ivf_assign drains).
 @artifact
 def _stream_admit_run(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
-    import os
-
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        fresh_stream_dir,
+        Feed,
         stream_domain_admit,
     )
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    tmp = fresh_stream_dir(f"mcdp_admit_{tag}_")
-    src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
+    feed = Feed("mcdp_admit_", sf_dir)
     d = load(spark, sf_dir, "documents").select("doc_id", "source")
     # two arrival chunks split on the id midpoint, so the feed's
     # global arrival order is doc_id order (chunk boundaries
@@ -1889,30 +1884,17 @@ def _stream_admit_run(spark: SparkSession, sf_dir: str) -> str:
     # — the cap must come out right across the state boundary, not
     # because everything shared a batch
     mid = d.agg((F.max("doc_id") / 2).cast("long")).collect()[0][0]
-    d.filter(F.col("doc_id") <= mid).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b0")
-    d.filter(F.col("doc_id") > mid).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b1")
-    # The file source drains oldest-modification-time first
-    # (latestFirst defaults false); pin mtimes explicitly so the
-    # two chunks can never tie inside the source's ms granularity
-    # and arrival order is deterministic by construction.
-    now = os.stat(f"{src}/b1").st_mtime
-    for sub, t in (("b0", now - 60), ("b1", now - 30)):
-        root = f"{src}/{sub}"
-        for name in os.listdir(root):
-            os.utime(os.path.join(root, name), (t, t))
+    feed.push(d.filter(F.col("doc_id") <= mid))
+    feed.push(d.filter(F.col("doc_id") > mid))
     stream_domain_admit(
         spark,
-        f"{src}/b*",
+        feed.glob,
         "doc_id bigint, source string",
-        out,
-        ckpt,
+        feed.out,
+        feed.ckpt,
         cap=_ADMIT_CAP,
     )
-    return out
+    return feed.out
 
 
 @query(
@@ -1945,11 +1927,11 @@ def stream_domain_admit_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the compared values, not just in tests (restart itself is
     asserted in tests/test_streaming.py)."""
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_stream_assignments,
+        read_landed,
     )
 
     out = _stream_admit_run(spark, sf_dir)
-    return read_stream_assignments(spark, out).select(
+    return read_landed(spark, out).select(
         "doc_id", "source", "admit_seq"
     )
 

@@ -502,15 +502,11 @@ def _merge_snapshot_chain(spark: SparkSession, sf_dir: str) -> str:
     latest-order updates with deletes) and return the snapshot dir
     containing snap-0, snap-1, and _LATEST."""
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
+        Feed,
         stream_merge_snapshot,
     )
 
-    # Prefix keyed by sf_dir: the snapshot chain is memoized per
-    # sf_dir, so a same-prefix call for ANOTHER sf_dir must not evict
-    # this one's still-referenced snapshot dir.
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    tmp = fresh_stream_dir(f"mcdp_stream_merge_{tag}_")
-    upd, snap, ckpt = f"{tmp}/updates", f"{tmp}/snap", f"{tmp}/ckpt"
+    feed = Feed("mcdp_stream_merge_", sf_dir)
     schema = (
         "c_custkey long, c_mktsegment string, c_acctbal double,"
         " is_delete boolean"
@@ -520,9 +516,9 @@ def _merge_snapshot_chain(spark: SparkSession, sf_dir: str) -> str:
         "c_custkey", "c_mktsegment", "c_acctbal",
         F.lit(False).alias("is_delete"),
     )
-    base.coalesce(1).write.mode("overwrite").json(f"{upd}/b0")
+    feed.push(base, "json")
     stream_merge_snapshot(
-        spark, f"{upd}/*", schema, snap, ckpt,
+        spark, feed.glob, schema, feed.out, feed.ckpt,
         ["c_custkey"], "c_custkey", delete_col="is_delete",
     )
 
@@ -546,12 +542,12 @@ def _merge_snapshot_chain(spark: SparkSession, sf_dir: str) -> str:
             (F.col("o_orderstatus") == "F").alias("is_delete"),
         )
     )
-    latest.coalesce(1).write.mode("overwrite").json(f"{upd}/b1")
+    feed.push(latest, "json")
     stream_merge_snapshot(
-        spark, f"{upd}/*", schema, snap, ckpt,
+        spark, feed.glob, schema, feed.out, feed.ckpt,
         ["c_custkey"], "c_custkey", delete_col="is_delete",
     )
-    return snap
+    return feed.out
 
 
 @query("stream_merge_rollup", oracle=_MERGE_ORACLE)
@@ -1289,13 +1285,11 @@ def ensure_mvj_stream_state(spark: SparkSession, sf_dir: str) -> str:
 @artifact
 def _stream_mvj_run(spark: SparkSession, sf_dir: str) -> str:
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        fresh_stream_dir,
+        Feed,
         stream_view_delta_refresh,
     )
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    tmp = fresh_stream_dir(f"mcdp_mvj_{tag}_")
-    src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
+    feed = Feed("mcdp_mvj_", sf_dir)
     l_new = (
         load(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_extendedprice", "l_discount")
@@ -1304,13 +1298,10 @@ def _stream_mvj_run(spark: SparkSession, sf_dir: str) -> str:
         )
     )
     # two arrival chunks (orderkey parity → two micro-batches): the
-    # fold must come out right INCREMENTALLY, and since the merge is
-    # algebraic the arrival order is immaterial — no mtime pinning
-    # needed, unlike the admission quota
-    for k, rem in (("b0", 0), ("b1", 1)):
-        l_new.filter(F.col("l_orderkey") % 2 == rem).coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{src}/{k}")
+    # fold must come out right INCREMENTALLY (the merge is algebraic,
+    # so arrival order only fixes which state-<bid> dir holds what)
+    for rem in (0, 1):
+        feed.push(l_new.filter(F.col("l_orderkey") % 2 == rem))
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     init = spark.read.parquet(ensure_mvj_stream_state(spark, sf_dir))
 
@@ -1327,15 +1318,15 @@ def _stream_mvj_run(spark: SparkSession, sf_dir: str) -> str:
 
     stream_view_delta_refresh(
         spark,
-        f"{src}/b*",
+        feed.glob,
         "l_orderkey bigint, l_extendedprice double, l_discount double",
-        out,
-        ckpt,
+        feed.out,
+        feed.ckpt,
         delta_agg,
         init,
         merge,
     )
-    return out
+    return feed.out
 
 
 @query(
@@ -2987,43 +2978,28 @@ def ndv_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cross-batch cascade converged to the backfill result.
 @artifact
 def _stream_erasure_run(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        fresh_stream_dir,
+        Feed,
         stream_erasure_apply,
     )
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    tmp = fresh_stream_dir(f"mcdp_serase_{tag}_")
-    src, snap, ckpt = f"{tmp}/src", f"{tmp}/snap", f"{tmp}/ckpt"
+    feed = Feed("mcdp_serase_", sf_dir)
     tomb = _erase_tombstones(spark, sf_dir).select(
         "c_custkey", F.lit("delete").alias("op")
     )
     # two deterministic request batches (even keys arrive first,
     # then odd) — both non-empty at every driver sf
-    tomb.filter(F.col("c_custkey") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).json(f"{src}/b0")
-    tomb.filter(F.col("c_custkey") % 2 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).json(f"{src}/b1")
-    # pinned mtimes: the file source drains oldest-first, so the
-    # request batches arrive in declared order by construction
-    now = os.stat(f"{src}/b1").st_mtime
-    for sub, t in (("b0", now - 60), ("b1", now - 30)):
-        root = f"{src}/{sub}"
-        for name in os.listdir(root):
-            os.utime(os.path.join(root, name), (t, t))
+    feed.push(tomb.filter(F.col("c_custkey") % 2 == 0), "json")
+    feed.push(tomb.filter(F.col("c_custkey") % 2 == 1), "json")
     stream_erasure_apply(
         spark,
-        f"{src}/b*",
+        feed.glob,
         "c_custkey bigint, op string",
         sf_dir,
-        snap,
-        ckpt,
+        feed.out,
+        feed.ckpt,
     )
-    return snap
+    return feed.out
 
 
 def _stream_erasure_oracle() -> str:
@@ -3177,8 +3153,6 @@ _SNDV_SPLIT = "2001-07-01 00:00:00"  # two-batch split of the delta feed
 
 @artifact
 def _stream_ndv_run(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
     from multichannel_commerce_data_pipeline_spark.operators.frequency import (
         minhash_distinct_sketch,
     )
@@ -3187,38 +3161,27 @@ def _stream_ndv_run(spark: SparkSession, sf_dir: str) -> str:
         _MH_SEED,
     )
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        fresh_stream_dir,
+        Feed,
         stream_view_delta_refresh,
     )
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    tmp = fresh_stream_dir(f"mcdp_sndv_{tag}_")
-    src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
+    feed = Feed("mcdp_sndv_", sf_dir)
     delta = load(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") >= F.lit(_HDM_CUT).cast("timestamp")
     )
+    # two chunks split on ship date (register MIN-folding commutes;
+    # the feed's pinned order keeps the landed state dirs reproducible)
     split = F.lit(_SNDV_SPLIT).cast("timestamp")
-    delta.filter(F.col("l_shipdate") < split).select(
-        F.col("l_partkey").alias("pk")
-    ).coalesce(1).write.mode("overwrite").parquet(f"{src}/b0")
-    delta.filter(F.col("l_shipdate") >= split).select(
-        F.col("l_partkey").alias("pk")
-    ).coalesce(1).write.mode("overwrite").parquet(f"{src}/b1")
-    # pinned mtimes: deterministic two-batch drain order (register
-    # MIN-folding commutes, but deterministic batch ids keep the
-    # landed state dirs reproducible)
-    now = os.stat(f"{src}/b1").st_mtime
-    for sub, t in (("b0", now - 60), ("b1", now - 30)):
-        root = f"{src}/{sub}"
-        for name in os.listdir(root):
-            os.utime(os.path.join(root, name), (t, t))
+    pk = F.col("l_partkey").alias("pk")
+    feed.push(delta.filter(F.col("l_shipdate") < split).select(pk))
+    feed.push(delta.filter(F.col("l_shipdate") >= split).select(pk))
     init_state = spark.read.parquet(ensure_ndv_state(spark, sf_dir))
     stream_view_delta_refresh(
         spark,
-        f"{src}/b*",
+        feed.glob,
         "pk bigint",
-        out,
-        ckpt,
+        feed.out,
+        feed.ckpt,
         delta_agg=lambda b: minhash_distinct_sketch(
             b, F.col("pk"), m=_MH_M, seed=_MH_SEED
         ),
@@ -3227,7 +3190,7 @@ def _stream_ndv_run(spark: SparkSession, sf_dir: str) -> str:
             F.min("min_h").alias("min_h")
         ),
     )
-    return out
+    return feed.out
 
 
 def _stream_ndv_oracle() -> str:

@@ -13,6 +13,9 @@ import os
 from pyspark.sql import SparkSession
 
 WINDOW_EXEC_LOGGER = "org.apache.spark.sql.execution.window.WindowExec"
+FILE_STREAM_SINK_LOGGER = (
+    "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink"
+)
 
 
 def get_spark(
@@ -105,12 +108,18 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # The seven unpartitioned windows left in the engine are audited
-    # bounded (tests/test_window_audit.py pins each one), so WindowExec's
-    # "No Partition Defined" WARN is noise: about 20 lines per cold run
-    # that bury real warnings. Raise only that logger to ERROR.
+    # Two WARNs are noise that buries real warnings; raise only their
+    # loggers to ERROR. The seven unpartitioned windows left in the
+    # engine are audited bounded (tests/test_window_audit.py pins each
+    # one), so WindowExec's "No Partition Defined" is about 20 lines per
+    # cold run. A batch read of a glob path (the bronze layout,
+    # pipeline.schemas.bronze_glob) first asks FileStreamSink whether
+    # the path is a streaming sink's output, which logs "Assume no
+    # metadata directory" with a full FileNotFoundException stack trace
+    # per read.
     jvm = spark._jvm
-    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-        WINDOW_EXEC_LOGGER, jvm.org.apache.logging.log4j.Level.ERROR
-    )
+    for logger in (WINDOW_EXEC_LOGGER, FILE_STREAM_SINK_LOGGER):
+        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+            logger, jvm.org.apache.logging.log4j.Level.ERROR
+        )
     return spark

@@ -12,9 +12,8 @@ Streaming:
   that missed a poll window (T3);
 * ``dropDuplicatesWithinWatermark`` deduplicates re-delivered messages
   (Kafka at-least-once redelivery) inside the watermark (T5);
-* ``Trigger.AvailableNow`` drains everything available then stops —
-  the reference's 60 s loop cadence becomes
-  ``trigger(processingTime="60 seconds")`` on a real deployment (T1);
+* ``Trigger.AvailableNow`` drains everything available then stops (T1;
+  :func:`drain`, the one place a job starts);
 * the sink partitions by source/date (T6/S9) so downstream readers get
   partition pruning instead of a 4-level wildcard listing.
 
@@ -23,16 +22,26 @@ At scale the same code runs unchanged against a Kafka source
 ``maxFilesPerTrigger`` bounds micro-batch size, and state (dedup keys
 inside the watermark) lives in the state store, sized by key cardinality
 per watermark window — not by stream length.
+
+Every job here is built from the same shared pieces: a feed reader
+(:func:`read_bronze_stream` for the bronze drop, :func:`read_feed` for a
+chunked file feed), :func:`land_batch` for an idempotent per-batch
+landing, :func:`drain` to run the writer, and :func:`read_latest` /
+:func:`read_landed` to read a landing back. A driver-checkable stream
+query builds its scratch dirs and arrival feed with :class:`Feed`.
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
+import time
 from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from multichannel_commerce_data_pipeline_spark.pipeline import silver as silver_mod
 from multichannel_commerce_data_pipeline_spark.pipeline.bronze import flatten_envelope
@@ -71,7 +80,6 @@ def fresh_stream_dir(prefix: str) -> str:
     across TWO newer invocations of the same query — is reclaimed
     eagerly."""
     import atexit
-    import os
     import shutil
     import tempfile
 
@@ -98,8 +106,6 @@ def fresh_stream_dir(prefix: str) -> str:
         # the sweep skips any aged dir whose recorded pid is still
         # alive. Dirs with no marker predate this scheme and are known
         # dead (previous rounds' processes).
-        import time
-
         horizon = time.time() - 12 * 3600
         tmp_root = tempfile.gettempdir()
         try:
@@ -132,8 +138,6 @@ def _owner_alive(pidfile: str) -> bool:
     READ (permissions on a shared temp dir) -> alive: the sweep must
     never rmtree a dir whose owner it could not actually check (r10
     advice #4)."""
-    import os
-
     try:
         with open(pidfile) as f:
             pid = int(f.read().strip())
@@ -152,18 +156,139 @@ def _owner_alive(pidfile: str) -> bool:
         return True  # EPERM etc.: the pid exists
 
 
-def read_bronze_stream(
-    spark: SparkSession,
-    source: str,
-    root: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+class Feed:
+    """The scratch dirs and arrival feed of one driver-checkable stream
+    run: ``src`` (the feed, matched by ``glob``), ``out`` (the landing)
+    and ``ckpt`` (the checkpoint) under one :func:`fresh_stream_dir`.
+    The dir prefix carries an md5 tag of the corpus dir, so memoized
+    runs over two corpora never evict each other's live dirs.
+
+    The file source drains oldest modification time first
+    (``latestFirst`` defaults false), so arrival order is mtime order.
+    :meth:`push` lands chunk *i* as one file under ``src/b{i}`` and
+    :meth:`arrived` pins every file of a chunk one second after the
+    previous chunk's: under :func:`read_feed`'s one-file triggers chunk
+    *i* is micro-batch *i* by construction, not by the luck of
+    file-system timestamp granularity, also when the stream drains
+    between chunks."""
+
+    def __init__(self, prefix: str, sf_dir: str) -> None:
+        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+        root = fresh_stream_dir(f"{prefix}{tag}_")
+        self.src, self.out, self.ckpt = f"{root}/src", f"{root}/out", f"{root}/ckpt"
+        self.glob = f"{self.src}/b*"
+        self._chunks = 0
+        self._mtime = 0.0
+
+    def push(self, df: DataFrame, fmt: str = "parquet") -> None:
+        """Land ``df`` as the next chunk: one ``fmt`` file, pinned."""
+        path = f"{self.src}/b{self._chunks}"
+        df.coalesce(1).write.mode("overwrite").format(fmt).save(path)
+        self.arrived(path)
+
+    def arrived(self, path: str) -> None:
+        """Pin every file under ``path`` (a chunk written by hand) one
+        second after the previous chunk's files."""
+        self._mtime = max(float(int(time.time())), self._mtime + 1)
+        for root, _, names in os.walk(path):
+            for name in names:
+                os.utime(os.path.join(root, name), (self._mtime, self._mtime))
+        self._chunks += 1
+
+
+def read_bronze_stream(spark: SparkSession, source: str, root: str) -> DataFrame:
     """Streaming S1: the same explicit-schema JSON scan as the batch
-    path, as an incremental file source."""
-    reader = spark.readStream.schema(spark_envelope_ddl(source))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(bronze_glob(source, root))
+    path, as an incremental file source. A bronze drop is drained
+    whole: one micro-batch per trigger."""
+    return spark.readStream.schema(spark_envelope_ddl(source)).json(
+        bronze_glob(source, root)
+    )
+
+
+def read_feed(
+    spark: SparkSession, schema_ddl: str, glob: str, fmt: str = "parquet"
+) -> DataFrame:
+    """A chunked file feed (:class:`Feed`) as a stream, one file per
+    micro-batch (``maxFilesPerTrigger`` 1): each arriving chunk is its
+    own batch, so a job proves its incremental path instead of
+    draining everything in one gulp."""
+    return (
+        spark.readStream.schema(schema_ddl)
+        .option("maxFilesPerTrigger", 1)
+        .format(fmt)
+        .load(glob)
+    )
+
+
+def drain(writer: DataStreamWriter, checkpoint_dir: str) -> StreamingQuery:
+    """Start ``writer`` checkpointed under ``checkpoint_dir`` with
+    ``Trigger.AvailableNow``, which drains everything available then
+    stops, and wait for it. Every stream job starts here. On a real
+    deployment the trigger becomes the reference's loop cadence,
+    ``trigger(processingTime="60 seconds")`` (300 s for the gold
+    refresh), and the caller keeps the returned query running instead
+    of waiting for it."""
+    query = (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    return query
+
+
+def land_batch(
+    batch_df: DataFrame, out_dir: str, batch_id: int, complete: bool = False
+) -> None:
+    """Idempotent foreachBatch landing. foreachBatch is at-least-once:
+    a crash after the sink write but before the checkpoint commit
+    replays the whole micro-batch with the SAME batch_id. Appending
+    would duplicate those rows forever; writing each micro-batch with
+    a ``__bid`` column to its own ``batch-<id>`` subdirectory with
+    overwrite makes the replay converge to the same files instead.
+
+    A ``complete``-mode sink re-emits the WHOLE (bounded) state each
+    trigger, so every older ``batch-<id>`` directory is dead the moment
+    this one commits: they are pruned here, keeping a long-lived
+    cumulative sink's storage and read-side listing O(state), not
+    O(triggers). Hadoop FS API, so the same prune works on an object
+    store. Read the landing back with :func:`read_landed` or
+    :func:`read_latest`."""
+    batch_df.withColumn("__bid", F.lit(batch_id)).write.mode("overwrite").parquet(
+        f"{out_dir}/batch-{batch_id}"
+    )
+    if complete:
+        sess = batch_df.sparkSession
+        root = sess._jvm.org.apache.hadoop.fs.Path(out_dir)
+        fs = root.getFileSystem(sess._jsc.hadoopConfiguration())
+        for st in fs.listStatus(root):
+            name = st.getPath().getName()
+            if name.startswith("batch-") and name != f"batch-{batch_id}":
+                fs.delete(st.getPath(), True)
+
+
+def read_landed(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Every row :func:`land_batch` landed under ``out_dir``, across
+    batches, with its ``__bid``. When each input row arrives once, this
+    is the whole result."""
+    return spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
+
+
+def read_latest(spark: SparkSession, out_dir: str, *keys: str) -> DataFrame:
+    """The current state of a landing: per (non-null) key, the rows of
+    the newest batch that emitted the key, ``__bid`` dropped. An
+    update-mode stream re-emits a key only in batches that bring it
+    data, so the newest batch dir alone can miss quiet keys; with no
+    keys (complete mode re-emits everything) it is the newest batch.
+
+    The landed rows grow with TRIGGER COUNT, so the latest-batch filter
+    is never a window (an unpartitioned one moves every batch's rows to
+    ONE task): max(__bid) partial-aggregates map-side and joins back as
+    a broadcast of one row per key, which the stream's bounded state
+    keeps small (r17 window audit, guide §2.4)."""
+    rows = read_landed(spark, out_dir)
+    newest = rows.groupBy(*keys).agg(F.max("__bid").alias("__bid"))
+    return rows.join(F.broadcast(newest), [*keys, "__bid"]).drop("__bid")
 
 
 def conform_stream(
@@ -195,30 +320,20 @@ def stream_bronze_to_silver(
     checkpoint_dir: str,
     watermark: str = "1 day",
     dedup_keys: tuple[str, ...] | None = None,
-    partition_by_date: bool = True,
-    await_termination: bool = True,
 ) -> StreamingQuery:
     """One incremental bronze→silver drain (Trigger.AvailableNow):
     restart-idempotent via the checkpoint, deduplicated within the
     watermark, landed as date-partitioned parquet."""
     stream = conform_stream(
         read_bronze_stream(spark, source, bronze_root), source, watermark, dedup_keys
-    )
-    if partition_by_date:
-        stream = stream.withColumn("p_date", F.to_date("bronze_ts"))
-    writer = (
+    ).withColumn("p_date", F.to_date("bronze_ts"))
+    return drain(
         stream.writeStream.format("parquet")
         .option("path", silver_dir)
-        .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .trigger(availableNow=True)
+        .partitionBy("p_date"),
+        checkpoint_dir,
     )
-    if partition_by_date:
-        writer = writer.partitionBy("p_date")
-    query = writer.start()
-    if await_termination:
-        query.awaitTermination()
-    return query
 
 
 def stream_stateful_running_totals(
@@ -274,17 +389,12 @@ def stream_stateful_running_totals(
             GroupStateTimeout.NoTimeout,
         )
     )
-    query = (
+    return drain(
         totals.writeStream.foreachBatch(
             lambda df, _bid: df.write.mode("append").parquet(out_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+        ).outputMode("update"),
+        checkpoint_dir,
     )
-    query.awaitTermination()
-    return query
 
 
 def stream_bronze_to_silver_jdbc(
@@ -315,17 +425,12 @@ def stream_bronze_to_silver_jdbc(
     stream = conform_stream(
         read_bronze_stream(spark, source, bronze_root), source, watermark, dedup_keys
     ).drop("bronze_ts")
-    query = (
+    return drain(
         stream.writeStream.foreachBatch(
             lambda df, bid: write_jdbc_idempotent(df, jdbc_url, table, bid)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        ).outputMode("append"),
+        checkpoint_dir,
     )
-    query.awaitTermination()
-    return query
 
 
 def stream_orders_with_freight(
@@ -389,16 +494,12 @@ def stream_orders_with_freight(
         "order_id", "buyer_name", "unit_price", "quantity",
         "shipment_id", "cost", "carrier",
     )
-    query = (
+    return drain(
         joined.writeStream.format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
     )
-    query.awaitTermination()
-    return query
 
 
 def stream_windowed_counts(
@@ -425,32 +526,11 @@ def stream_windowed_counts(
             "n_rows",
         )
     )
-    query = (
+    return drain(
         agg.writeStream.format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
-
-
-def land_micro_batch(
-    batch_df: DataFrame, silver_dir: str, batch_id: int
-) -> DataFrame:
-    """Idempotent foreachBatch landing. foreachBatch is at-least-once:
-    a crash after the sink write but before the checkpoint commit
-    replays the whole micro-batch with the SAME batch_id. Appending
-    would duplicate those rows forever; writing each micro-batch to its
-    own ``batch-<id>`` subdirectory with overwrite makes the replay
-    converge to the same files instead. Returns the full accumulated
-    silver store (recursive read across the batch subdirectories)."""
-    batch_df.write.mode("overwrite").parquet(f"{silver_dir}/batch-{batch_id}")
-    return (
-        batch_df.sparkSession.read.option("recursiveFileLookup", "true")
-        .parquet(silver_dir)
+        .outputMode("append"),
+        checkpoint_dir,
     )
 
 
@@ -467,14 +547,11 @@ def stream_gold_cm2_refresh(
     each micro-batch (a) lands the new conformed wholesale silver rows
     idempotently — foreachBatch is at-least-once, so a crash between
     the sink write and the checkpoint commit replays the batch; the
-    landing absorbs the replay by writing each micro-batch to its own
-    ``batch-<id>`` subdirectory with overwrite, making the replayed
-    write a no-op-equivalent instead of a permanent duplicate — then
-    (b) rebuilds the CM2 order-margin gold table from the FULL
-    accumulated silver store and atomically overwrites the gold view.
-    Deploying swaps
-    Trigger.AvailableNow for ``processingTime="300 seconds"`` and the
-    semantics match the reference's cycle exactly, minus its
+    landing absorbs the replay (:func:`land_batch`) — then (b) rebuilds
+    the CM2 order-margin gold table from the FULL accumulated silver
+    store and atomically overwrites the gold view. Deployed on a
+    300 s trigger (:func:`drain`) the semantics match the reference's
+    cycle exactly, minus its
     recompute-everything-from-Postgres read amplification: silver is an
     append-only parquet log here, so each refresh reads one columnar
     store, not a JDBC roundtrip.
@@ -498,21 +575,19 @@ def stream_gold_cm2_refresh(
     )
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        silver_all = land_micro_batch(batch_df, silver_dir, batch_id)
+        land_batch(batch_df, silver_dir, batch_id)
+        silver_all = read_landed(batch_df.sparkSession, silver_dir).drop(
+            "__bid"
+        )
         cm1_df = gold.cm1(
             silver_all, "wholesale", F.col("unit_price") * F.col("quantity")
         )
         gold.cm2(cm1_df, freight).write.mode("overwrite").parquet(gold_dir)
 
-    query = (
-        conformed.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return drain(
+        conformed.writeStream.foreachBatch(refresh).outputMode("append"),
+        checkpoint_dir,
     )
-    query.awaitTermination()
-    return query
 
 
 def dir_bytes(spark: SparkSession, path: str) -> int:
@@ -615,19 +690,8 @@ def stream_merge_snapshot(
         latest.parent.mkdir(parents=True, exist_ok=True)
         latest.write_text(f"snap-{batch_id}")
 
-    stream = (
-        spark.readStream.schema(update_schema)
-        .option("maxFilesPerTrigger", "1")
-        .json(updates_dir)
-    )
-    query = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    stream = read_feed(spark, update_schema, updates_dir, "json")
+    return drain(stream.writeStream.foreachBatch(apply_batch), checkpoint_dir)
 
 
 def read_merge_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame:
@@ -698,10 +762,10 @@ def stream_heavy_hitters(
     tracks hot SKUs or abusive clients over an unbounded feed without
     an unbounded streaming aggregation.
 
-    Each micro-batch emits the bucket's full current summary; the sink
-    lands per batch_id with overwrite (idempotent under foreachBatch
-    replay, the land_micro_batch rationale) so the LATEST batch
-    directory always holds the current summary.
+    Each micro-batch emits the bucket's full current summary, landed
+    per batch_id (idempotent under foreachBatch replay,
+    :func:`land_batch`); the current summary is each bucket's newest
+    emission, ``read_latest(spark, out_dir, "bucket")``.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -752,36 +816,11 @@ def stream_heavy_hitters(
             GroupStateTimeout.NoTimeout,
         )
     )
-    query = (
+    return drain(
         summary.writeStream.foreachBatch(
-            lambda df, bid: df.withColumn("__bid", F.lit(bid))
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/batch-{bid}")
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
-
-
-def read_latest_heavy_hitters(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The current summary: each bucket's LATEST emission. A bucket
-    only re-emits in batches that bring it data, so the newest batch
-    directory alone can miss quiet buckets — take the max-batch rows
-    per bucket across the landing."""
-    from pyspark.sql import Window
-
-    all_rows = (
-        spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
-    )
-    w = Window.partitionBy("bucket")
-    return (
-        all_rows.withColumn("__mx", F.max("__bid").over(w))
-        .filter(F.col("__bid") == F.col("__mx"))
-        .select("bucket", "key", "est")
+            lambda df, bid: land_batch(df, out_dir, bid)
+        ).outputMode("update"),
+        checkpoint_dir,
     )
 
 
@@ -806,7 +845,8 @@ def stream_cm_sketch(
     from the checkpoint across restarts, so estimates are CUMULATIVE
     over the whole feed. Each trigger emits the full current grid
     (complete mode — at most d·w rows, so re-emission is free) landed
-    per batch_id, idempotent under foreachBatch replay; probe the
+    per batch_id, idempotent under foreachBatch replay, older grids
+    pruned (:func:`land_batch`); probe the
     landed grid with the batch ``operators.frequency.cm_estimate``.
     The per-row work is the same map-side d-increment explode as the
     batch build — one md5, k Kirsch-Mitzenmacher positions."""
@@ -834,19 +874,12 @@ def stream_cm_sketch(
     grid = inc.groupBy(
         F.col("c.j").alias("j"), F.col("c.bucket").alias("bucket")
     ).agg(F.count(F.lit(1)).alias("cell"))
-    query = (
+    return drain(
         grid.writeStream.foreachBatch(
-            lambda df, bid: df.withColumn("__bid", F.lit(bid))
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/batch-{bid}")
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+            lambda df, bid: land_batch(df, out_dir, bid, complete=True)
+        ).outputMode("complete"),
+        checkpoint_dir,
     )
-    query.awaitTermination()
-    return query
 
 
 def stream_line_df_sketch(
@@ -860,7 +893,6 @@ def stream_line_df_sketch(
     w: int = 64,
     d: int = 3,
     seed: int = 131,
-    max_files_per_trigger: int | None = 1,
 ) -> StreamingQuery:
     """Streaming boilerplate document-frequency maintenance (X1 x T5 x
     X12): as a crawl STREAMS in, keep the per-line df signal that
@@ -884,10 +916,7 @@ def stream_line_df_sketch(
         _positions,
     )
 
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(src_glob)
+    stream = read_feed(spark, schema_ddl, src_glob)
 
     ws = F.split(F.col(text_col), " ")
     n_lines = F.ceil(F.size(ws) / F.lit(line_words)).cast("int")
@@ -919,19 +948,12 @@ def stream_line_df_sketch(
     grid = inc.groupBy(
         F.col("c.j").alias("j"), F.col("c.bucket").alias("bucket")
     ).agg(F.count(F.lit(1)).alias("cell"))
-    query = (
+    return drain(
         grid.writeStream.foreachBatch(
-            lambda df, bid: df.withColumn("__bid", F.lit(bid))
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/batch-{bid}")
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+            lambda df, bid: land_batch(df, out_dir, bid, complete=True)
+        ).outputMode("complete"),
+        checkpoint_dir,
     )
-    query.awaitTermination()
-    return query
 
 
 def stream_boilerplate_cut(
@@ -948,7 +970,6 @@ def stream_boilerplate_cut(
     seed: int = 131,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_files_per_trigger: int | None = 1,
 ) -> StreamingQuery:
     """Boilerplate-cut-on-ingest (X1 x T5 x X12) — the APPLY side
     composing with ``stream_line_df_sketch``'s MAINTAIN side, closing
@@ -960,7 +981,7 @@ def stream_boilerplate_cut(
     here the stats pass is the streaming sketch and the strip pass is
     this job, so neither ever holds per-distinct-line state.
 
-    ``cells`` is the LANDED grid (read_latest_cm_sketch, flattened
+    ``cells`` is the LANDED grid (:func:`read_latest`, flattened
     j*w+bucket — a fixed, d*w-bounded reference exactly like
     ``stream_decontaminate``'s eval digest set). Each micro-batch runs
     the batch operator ``operators.dedup.boilerplate_cut_with_sketch``
@@ -975,53 +996,23 @@ def stream_boilerplate_cut(
         boilerplate_cut_with_sketch,
     )
 
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(src_glob)
+    stream = read_feed(spark, schema_ddl, src_glob)
 
     def cut_batch(batch_df: DataFrame, bid: int) -> None:
-        (
-            boilerplate_cut_with_sketch(
-                batch_df,
-                id_col,
-                text_col,
-                cells,
-                line_words=line_words,
-                df_threshold=df_threshold,
-                w=w,
-                d=d,
-                seed=seed,
-            )
-            .withColumn("__bid", F.lit(bid))
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/batch-{bid}")
+        cut = boilerplate_cut_with_sketch(
+            batch_df,
+            id_col,
+            text_col,
+            cells,
+            line_words=line_words,
+            df_threshold=df_threshold,
+            w=w,
+            d=d,
+            seed=seed,
         )
+        land_batch(cut, out_dir, bid)
 
-    query = (
-        stream.writeStream.foreachBatch(cut_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
-
-
-def read_latest_cm_sketch(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The current grid: complete mode re-emits every cell each batch,
-    so the max-batch rows are the whole sketch. The landed rows grow
-    with TRIGGER COUNT (one full grid per batch dir), so the latest-
-    batch filter must not be an unpartitioned window (that moves every
-    batch's cells to ONE task); max(__bid) partial-aggregates map-side
-    and attaches as a 1-row broadcast (r17 window audit, guide §2.4)."""
-    all_rows = spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
-    mx = all_rows.agg(F.max("__bid").alias("__mx"))
-    return (
-        all_rows.join(F.broadcast(mx))
-        .filter(F.col("__bid") == F.col("__mx"))
-        .select("j", "bucket", "cell")
-    )
+    return drain(stream.writeStream.foreachBatch(cut_batch), checkpoint_dir)
 
 
 def stream_sessionize(
@@ -1068,16 +1059,12 @@ def stream_sessionize(
             "total_qty",
         )
     )
-    query = (
+    return drain(
         sessions.writeStream.format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
     )
-    query.awaitTermination()
-    return query
 
 
 def stream_binned_profile(
@@ -1122,51 +1109,11 @@ def stream_binned_profile(
         F.count(F.lit(1)).alias("n")
     )
 
-    def _land(df: DataFrame, bid: int) -> None:
-        df.withColumn("__bid", F.lit(bid)).write.mode("overwrite").parquet(
-            f"{out_dir}/batch-{bid}"
-        )
-        # Complete mode re-emits the WHOLE (bounded) state each
-        # trigger, so every older batch-<id> directory is dead the
-        # moment this one commits. Prune them here so a long-lived
-        # cumulative monitor's storage and read-side listing stay
-        # O(state), not O(triggers). Hadoop FS API, so the same prune
-        # works on an object store, not just local paths.
-        jvm = df.sparkSession._jvm
-        root = jvm.org.apache.hadoop.fs.Path(out_dir)
-        fs = root.getFileSystem(
-            df.sparkSession._jsc.hadoopConfiguration()
-        )
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if name.startswith("batch-") and name != f"batch-{bid}":
-                fs.delete(st.getPath(), True)
-
-    query = (
-        prof.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
-
-
-def read_latest_binned_profile(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The current (bin, is_ref, n) profile. The writer prunes
-    superseded batch dirs at commit time, so normally exactly one
-    ``batch-<id>`` dir exists; the max-__bid filter keeps the read
-    correct in the one crash window where the new dir landed before
-    the old one was pruned. Same latest-batch idiom as
-    read_latest_cm_sketch: scalar max + 1-row broadcast, never an
-    unpartitioned window (r17 window audit)."""
-    all_rows = spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
-    mx = all_rows.agg(F.max("__bid").alias("__mx"))
-    return (
-        all_rows.join(F.broadcast(mx))
-        .filter(F.col("__bid") == F.col("__mx"))
-        .select("bin", "is_ref", "n")
+    return drain(
+        prof.writeStream.foreachBatch(
+            lambda df, bid: land_batch(df, out_dir, bid, complete=True)
+        ).outputMode("complete"),
+        checkpoint_dir,
     )
 
 
@@ -1179,7 +1126,6 @@ def stream_ivf_assign(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_files_per_trigger: int | None = 1,
 ) -> StreamingQuery:
     """Streaming IVF coarse assignment (X2 × T5) — the index-serving
     side of ANN at 100 TB: vectors ARRIVE (a parquet/Kafka feed of
@@ -1204,37 +1150,15 @@ def stream_ivf_assign(
         ivf_assign,
     )
 
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(src_glob)
+    stream = read_feed(spark, schema_ddl, src_glob)
 
     def assign_batch(batch_df: DataFrame, bid: int) -> None:
         out, _ = ivf_assign(
             batch_df, 0, id_col=id_col, vec_col=vec_col, centroids=centroids
         )
-        (
-            out.select("vid", "cell", "ccos")
-            .withColumn("__bid", F.lit(bid))
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/batch-{bid}")
-        )
+        land_batch(out.select("vid", "cell", "ccos"), out_dir, bid)
 
-    query = (
-        stream.writeStream.foreachBatch(assign_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
-
-
-def read_stream_assignments(spark: SparkSession, out_dir: str) -> DataFrame:
-    """All landed assignment rows across micro-batches (each vector
-    arrives once, so append-across-batches is the full assignment
-    set)."""
-    return spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
+    return drain(stream.writeStream.foreachBatch(assign_batch), checkpoint_dir)
 
 
 def stream_decontaminate(
@@ -1247,7 +1171,6 @@ def stream_decontaminate(
     min_words: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_files_per_trigger: int | None = 1,
 ) -> StreamingQuery:
     """Decontaminate-on-ingest (X1 x T5) — the deployment form of the
     substring-level benchmark decontamination: TRAINING documents
@@ -1274,31 +1197,16 @@ def stream_decontaminate(
         substring_grams,
     )
 
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(src_glob)
+    stream = read_feed(spark, schema_ddl, src_glob)
 
     def cut_batch(batch_df: DataFrame, bid: int) -> None:
         words = doc_words(batch_df, id_col, text_col)
         bounds = contamination_span_bounds(
             substring_grams(words, min_words), eval_grams, min_words
         )
-        (
-            substring_dedup_rewrite(bounds, words)
-            .withColumn("__bid", F.lit(bid))
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/batch-{bid}")
-        )
+        land_batch(substring_dedup_rewrite(bounds, words), out_dir, bid)
 
-    query = (
-        stream.writeStream.foreachBatch(cut_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return drain(stream.writeStream.foreachBatch(cut_batch), checkpoint_dir)
 
 
 def stream_domain_admit(
@@ -1310,7 +1218,6 @@ def stream_domain_admit(
     cap: int,
     domain_col: str = "source",
     id_col: str = "doc_id",
-    max_files_per_trigger: int | None = 1,
 ) -> StreamingQuery:
     """Streaming ADMISSION QUOTA (X6 × T5) — the ingest-time half of
     URL-level curation: documents ARRIVE as a feed and each is admitted
@@ -1356,10 +1263,7 @@ def stream_domain_admit(
                 }
             )
 
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(src_glob)
+    stream = read_feed(spark, schema_ddl, src_glob)
     admitted = (
         stream.select(id_col, domain_col)
         .groupBy(domain_col)
@@ -1371,19 +1275,12 @@ def stream_domain_admit(
             GroupStateTimeout.NoTimeout,
         )
     )
-    query = (
+    return drain(
         admitted.writeStream.foreachBatch(
-            lambda df, bid: df.withColumn("__bid", F.lit(bid))
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/batch-{bid}")
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+            lambda df, bid: land_batch(df, out_dir, bid)
+        ).outputMode("update"),
+        checkpoint_dir,
     )
-    query.awaitTermination()
-    return query
 
 
 def stream_view_delta_refresh(
@@ -1395,7 +1292,6 @@ def stream_view_delta_refresh(
     delta_agg: Callable[[DataFrame], DataFrame],
     init_state: DataFrame,
     merge: Callable[[DataFrame], DataFrame],
-    max_files_per_trigger: int | None = 1,
 ) -> StreamingQuery:
     """Streaming INCREMENTAL VIEW REFRESH (X15 × T5): delta rows ARRIVE
     as a feed and each micro-batch folds its aggregated delta into the
@@ -1419,10 +1315,7 @@ def stream_view_delta_refresh(
     predecessor), bounding storage at two snapshots regardless of
     stream length; the Hadoop FS API is used throughout so the same
     prune works on an object store."""
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(src_glob)
+    stream = read_feed(spark, schema_ddl, src_glob)
 
     jvm = spark._jvm
     root = jvm.org.apache.hadoop.fs.Path(out_dir)
@@ -1457,14 +1350,7 @@ def stream_view_delta_refresh(
                     True,
                 )
 
-    query = (
-        stream.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return drain(stream.writeStream.foreachBatch(refresh), checkpoint_dir)
 
 
 def read_latest_view_state(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1491,7 +1377,6 @@ def stream_cusum_monitor(
     out_dir: str,
     checkpoint_dir: str,
     consts_milli: dict[str, tuple[int, int]],
-    max_files_per_trigger: int | None = 1,
 ) -> StreamingQuery:
     """Streaming CUSUM change-point monitor (X10 × T5) — the arrival-
     time twin of the batch ``cusum_changepoint`` closed form: daily
@@ -1587,10 +1472,7 @@ def stream_cusum_monitor(
             }
         )
 
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(src_glob)
+    stream = read_feed(spark, schema_ddl, src_glob)
     summary = stream.groupBy("series").applyInPandasWithState(
         advance,
         "series STRING, n_days BIGINT, n_flagged BIGINT, "
@@ -1603,33 +1485,11 @@ def stream_cusum_monitor(
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    query = (
+    return drain(
         summary.writeStream.foreachBatch(
-            lambda df, bid: df.withColumn("__bid", F.lit(bid))
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/batch-{bid}")
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
-
-
-def read_latest_cusum_summary(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Each series' NEWEST cumulative summary across the landed batch
-    dirs (update-mode emits a row per touched series per batch; the
-    monitor's current view is the max-__bid row per series)."""
-    from pyspark.sql import Window
-
-    all_rows = spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
-    w_ = Window.partitionBy("series")
-    return (
-        all_rows.withColumn("__mx", F.max("__bid").over(w_))
-        .filter(F.col("__bid") == F.col("__mx"))
-        .drop("__mx", "__bid")
+            lambda df, bid: land_batch(df, out_dir, bid)
+        ).outputMode("update"),
+        checkpoint_dir,
     )
 
 
@@ -1775,16 +1635,5 @@ def stream_erasure_apply(
                 if k < batch_id - 1:
                     _sh.rmtree(p, ignore_errors=True)
 
-    stream = (
-        spark.readStream.schema(tombstone_schema)
-        .option("maxFilesPerTrigger", "1")
-        .json(tombstones_glob)
-    )
-    query = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    stream = read_feed(spark, tombstone_schema, tombstones_glob, "json")
+    return drain(stream.writeStream.foreachBatch(apply_batch), checkpoint_dir)

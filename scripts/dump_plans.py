@@ -684,7 +684,11 @@ COMMENTARY = {
         "is the batch closed form over the same constants and slice, "
         "so the driver row proves recursion == closed form AND that "
         "the statistic survived the micro-batch/state-store boundary "
-        "— batch==stream in the compared values themselves."
+        "— batch==stream in the compared values themselves. The "
+        "landed summary reads back as each series' newest batch "
+        "(streaming.jobs.read_latest: max(__bid) per series, "
+        "broadcast-joined back) — no window over the landed rows, "
+        "which grow with trigger count."
     ),
     "histogram_quantile_estimate": (
         "The CONSUMER half of the maintained CBO statistic: quantiles "

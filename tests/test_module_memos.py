@@ -10,6 +10,11 @@ dicts (the query ``REGISTRY``) are API, not memos, and are not checked.
 A hand-built thread pool or thread starts its Spark jobs without the
 caller's job group, description and scheduler pool; ``concurrently``
 carries them over. Locks are not fan-outs and stay allowed.
+
+A stream starts and waits only inside ``streaming.jobs.drain``, lands
+``batch-<id>`` dirs only through ``streaming.jobs.land_batch``, and a
+stream query builds its scratch dirs and arrival feed through
+``streaming.jobs.Feed``, the one place file mtimes are pinned.
 """
 
 from __future__ import annotations
@@ -30,6 +35,13 @@ ALLOWED = {
 }
 # names whose construction starts a thread
 THREAD_MAKERS = {"ThreadPoolExecutor", "Thread"}
+# stream start/wait and feed mtime calls -> the one helper allowed each
+STREAM_CALLS = {
+    "trigger": "streaming.jobs.drain",
+    "awaitTermination": "streaming.jobs.drain",
+    "utime": "streaming.jobs.Feed.arrived",
+}
+LANDING = "streaming.jobs.land_batch"
 
 
 def _module_name(path: Path) -> str:
@@ -128,4 +140,76 @@ def test_fan_out_only_through_concurrently():
         f"{len(offenders)} modules fan out by hand; use "
         "artifacts.concurrently(spark, *thunks): "
         + "; ".join(f"{m}: {', '.join(h)}" for m, h in offenders.items())
+    )
+
+
+def _scoped(node: ast.AST, scope: str):
+    """Yield (qualified name of the innermost enclosing def or class,
+    node) for every node under ``node``."""
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            inner = f"{scope}.{child.name}"
+            yield inner, child
+            yield from _scoped(child, inner)
+        else:
+            yield scope, child
+            yield from _scoped(child, scope)
+
+
+def _call_name(node: ast.Call) -> str:
+    f = node.func
+    return f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+
+
+def _mentions(node: ast.AST, name: str) -> bool:
+    return any(
+        isinstance(n, ast.Name) and n.id == name for n in ast.walk(node)
+    )
+
+
+def _stream_mechanics(path: Path) -> list[str]:
+    module = _module_name(path)
+    found = []
+    scratch_tags: dict[str, set[str]] = {}
+    for scope, node in _scoped(ast.parse(path.read_text()), module):
+        where = f"{scope} (line {getattr(node, 'lineno', '?')})"
+        if isinstance(node, ast.Call):
+            name = _call_name(node)
+            if name in STREAM_CALLS and scope != STREAM_CALLS[name]:
+                found.append(f"{where} calls {name}")
+            if module.startswith("queries.") and name in (
+                "md5",
+                "fresh_stream_dir",
+            ):
+                if name == "fresh_stream_dir" or any(
+                    _mentions(a, "sf_dir") for a in node.args
+                ):
+                    scratch_tags.setdefault(scope, set()).add(name)
+        if isinstance(node, ast.JoinedStr) and scope != LANDING:
+            parts = node.values
+            if any(
+                isinstance(p, ast.Constant)
+                and str(p.value).endswith("batch-")
+                and isinstance(q, ast.FormattedValue)
+                for p, q in zip(parts, parts[1:])
+            ):
+                found.append(f"{where} formats a batch-{{...}} dir")
+    found += [
+        f"{scope} derives an md5(sf_dir) scratch tag"
+        for scope, names in scratch_tags.items()
+        if names == {"md5", "fresh_stream_dir"}
+    ]
+    return found
+
+
+def test_streams_drain_land_and_feed_through_the_shared_helpers():
+    offenders = [
+        hit
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for hit in _stream_mechanics(path)
+    ]
+    assert offenders == [], (
+        f"{len(offenders)} hand-written stream mechanics; start a stream "
+        "with streaming.jobs.drain, land a batch with land_batch and "
+        "build a query's feed with Feed: " + "; ".join(offenders)
     )

@@ -452,27 +452,80 @@ def test_stream_gold_cm2_refresh_matches_batch(spark, tmp_path):
     assert again.exceptAll(batch).count() == 0
 
 
-def test_land_micro_batch_replay_is_idempotent(spark, tmp_path):
+def test_land_batch_replay_is_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: a crash between the sink write
     and the checkpoint commit re-delivers the micro-batch with the SAME
     batch_id. The batch_id-keyed overwrite landing must converge — a
     replayed batch leaves the silver store byte-identical, never
     duplicated."""
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        land_micro_batch,
+        land_batch,
+        read_landed,
     )
 
     silver = str(tmp_path / "silver")
     b0 = spark.range(10).withColumn("v", F.col("id") * 2)
-    land_micro_batch(b0, silver, 0)
+    land_batch(b0, silver, 0)
     # simulated mid-batch failure: same batch_id delivered again
-    replay = land_micro_batch(b0, silver, 0)
+    land_batch(b0, silver, 0)
+    replay = read_landed(spark, silver)
     assert replay.count() == 10
     # next batch accumulates on top, still no duplication of batch 0
     b1 = spark.range(10, 15).withColumn("v", F.col("id") * 2)
-    total = land_micro_batch(b1, silver, 1)
+    land_batch(b1, silver, 1)
+    total = read_landed(spark, silver)
     assert total.count() == 15
     assert total.select(F.count_distinct("id")).first()[0] == 15
+
+
+def test_feed_chunk_i_lands_as_batch_i(spark, tmp_path):
+    """A Feed drained with one file per trigger lands chunk i as
+    micro-batch i: each chunk's files are pinned one mtime, after the
+    previous chunk's, so arrival order never rests on file-system
+    timestamp granularity — also for a chunk pushed after a drain."""
+    import os
+
+    from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
+        Feed,
+        drain,
+        land_batch,
+        read_feed,
+        read_landed,
+    )
+
+    feed = Feed("mcdp_feed_test_", str(tmp_path))
+
+    def run():
+        stream = read_feed(spark, "id bigint, chunk int", feed.glob)
+        drain(
+            stream.writeStream.foreachBatch(
+                lambda df, bid: land_batch(df, feed.out, bid)
+            ),
+            feed.ckpt,
+        )
+        return {
+            (r["__bid"], r["chunk"])
+            for r in read_landed(spark, feed.out)
+            .select("__bid", "chunk")
+            .distinct()
+            .collect()
+        }
+
+    def chunk(i, lo, hi):
+        feed.push(spark.range(lo, hi).withColumn("chunk", F.lit(i)))
+        root = f"{feed.src}/b{i}"
+        return {
+            os.stat(os.path.join(root, n)).st_mtime
+            for n in os.listdir(root)
+        }
+
+    t0, t1 = chunk(0, 0, 3), chunk(1, 3, 5)
+    assert len(t0) == len(t1) == 1 and max(t0) < min(t1)
+    assert run() == {(0, 0), (1, 1)}
+    t2 = chunk(2, 5, 6)
+    assert min(t2) > max(t1)
+    assert run() == {(0, 0), (1, 1), (2, 2)}
+    assert read_landed(spark, feed.out).count() == 6
 
 
 def test_compact_landing_reduces_files_preserves_rows(spark, tmp_path):
@@ -666,7 +719,7 @@ def test_streaming_heavy_hitters_bound_and_restart(spark, tmp_path):
     )
     from multichannel_commerce_data_pipeline_spark.pipeline.silver import conform_joor
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_latest_heavy_hitters,
+        read_latest,
         stream_heavy_hitters,
     )
 
@@ -686,9 +739,7 @@ def test_streaming_heavy_hitters_bound_and_restart(spark, tmp_path):
         )
         return {
             (r.bucket, r.key): r.est
-            for r in read_latest_heavy_hitters(
-                spark, str(tmp_path / "hh")
-            ).collect()
+            for r in read_latest(spark, str(tmp_path / "hh"), "bucket").collect()
         }
 
     def exact():
@@ -759,7 +810,7 @@ def test_streaming_cm_sketch_cumulative_and_restart(spark, tmp_path):
     )
     from multichannel_commerce_data_pipeline_spark.pipeline.silver import conform_joor
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_latest_cm_sketch,
+        read_latest,
         stream_cm_sketch,
     )
 
@@ -780,7 +831,7 @@ def test_streaming_cm_sketch_cumulative_and_restart(spark, tmp_path):
         )
         return {
             (r.j, r.bucket): r.cell
-            for r in read_latest_cm_sketch(spark, str(tmp_path / "cm")).collect()
+            for r in read_latest(spark, str(tmp_path / "cm")).collect()
         }
 
     def batch_grid():
@@ -810,7 +861,7 @@ def test_streaming_cm_sketch_cumulative_and_restart(spark, tmp_path):
     )
     docs = conform_joor(flatten_envelope(raw))
     probes = docs.select("buyer_name").distinct().limit(5)
-    grid_df = read_latest_cm_sketch(spark, str(tmp_path / "cm"))
+    grid_df = read_latest(spark, str(tmp_path / "cm"))
     est = cm_estimate(grid_df, probes, "buyer_name", w=w, d=d, seed=seed)
     exact = {
         r.buyer_name: r.n
@@ -832,7 +883,7 @@ def test_stream_line_df_sketch_planted_navbar(spark, tmp_path):
         cm_estimate,
     )
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_latest_cm_sketch,
+        read_latest,
         stream_line_df_sketch,
     )
 
@@ -859,7 +910,7 @@ def test_stream_line_df_sketch_planted_navbar(spark, tmp_path):
         str(tmp_path / "out"),
         str(tmp_path / "ckpt"),
     )
-    grid = read_latest_cm_sketch(spark, str(tmp_path / "out"))
+    grid = read_latest(spark, str(tmp_path / "out"))
     probes = spark.createDataFrame(
         [(hashlib.md5(nav.encode()).hexdigest(), "nav"),
          (hashlib.md5(uniq.encode()).hexdigest(), "uniq")],
@@ -888,7 +939,7 @@ def test_stream_decontaminate_cuts_leaks_per_batch(spark, tmp_path):
     every row (emptied, never dropped)."""
     from multichannel_commerce_data_pipeline_spark.operators import dedup as D
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_stream_assignments,
+        read_landed,
         stream_decontaminate,
     )
 
@@ -923,7 +974,7 @@ def test_stream_decontaminate_cuts_leaks_per_batch(spark, tmp_path):
     )
     got = {
         r.doc: r
-        for r in read_stream_assignments(spark, str(tmp_path / "out")).collect()
+        for r in read_landed(spark, str(tmp_path / "out")).collect()
     }
     assert set(got) == {100, 101, 102}
     assert got[100].clean_text == pre and got[100].n_removed == 9
@@ -940,7 +991,7 @@ def test_stream_decontaminate_cuts_leaks_per_batch(spark, tmp_path):
         eval_grams,
         min_words=8,
     )
-    again = read_stream_assignments(spark, str(tmp_path / "out"))
+    again = read_landed(spark, str(tmp_path / "out"))
     assert again.count() == 3
 
     # a late-arriving leaked doc is cut as its own micro-batch without
@@ -959,7 +1010,7 @@ def test_stream_decontaminate_cuts_leaks_per_batch(spark, tmp_path):
     )
     final = {
         r.doc: r
-        for r in read_stream_assignments(spark, str(tmp_path / "out")).collect()
+        for r in read_landed(spark, str(tmp_path / "out")).collect()
     }
     assert len(final) == 4
     assert final[104].clean_text == "tail0" and final[104].n_removed == 9
@@ -977,7 +1028,7 @@ def test_stream_boilerplate_cut_applies_grid_per_batch(spark, tmp_path):
         _positions,
     )
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_stream_assignments,
+        read_landed,
         stream_boilerplate_cut,
     )
 
@@ -1040,7 +1091,7 @@ def test_stream_boilerplate_cut_applies_grid_per_batch(spark, tmp_path):
     stream_boilerplate_cut(*args, **kw)
     got = {
         r.doc_id: r
-        for r in read_stream_assignments(spark, str(tmp_path / "out")).collect()
+        for r in read_landed(spark, str(tmp_path / "out")).collect()
     }
     assert set(got) == {100, 101, 102}
     assert got[100].clean_text == ua and got[100].n_removed == 1
@@ -1049,7 +1100,7 @@ def test_stream_boilerplate_cut_applies_grid_per_batch(spark, tmp_path):
 
     # exactly-once: re-drain over the same checkpoint adds nothing
     stream_boilerplate_cut(*args, **kw)
-    assert read_stream_assignments(spark, str(tmp_path / "out")).count() == 3
+    assert read_landed(spark, str(tmp_path / "out")).count() == 3
 
     # late arrival: cut as its own micro-batch against the SAME grid,
     # without reprocessing earlier documents
@@ -1059,7 +1110,7 @@ def test_stream_boilerplate_cut_applies_grid_per_batch(spark, tmp_path):
     stream_boilerplate_cut(*args, **kw)
     final = {
         r.doc_id: r
-        for r in read_stream_assignments(spark, str(tmp_path / "out")).collect()
+        for r in read_landed(spark, str(tmp_path / "out")).collect()
     }
     assert len(final) == 4
     assert final[104].clean_text == "" and final[104].n_removed == 2
@@ -1171,7 +1222,7 @@ def test_stream_binned_profile_cumulative_across_restart(spark, tmp_path):
         conform_joor,
     )
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_latest_binned_profile,
+        read_latest,
         stream_binned_profile,
     )
 
@@ -1183,7 +1234,7 @@ def test_stream_binned_profile_cumulative_across_restart(spark, tmp_path):
             spark, "joor", str(bronze), str(tmp_path / "prof"),
             str(tmp_path / "ckpt"),
         )
-        return read_latest_binned_profile(spark, str(tmp_path / "prof"))
+        return read_latest(spark, str(tmp_path / "prof"))
 
     def batch_counts():
         s = conform_joor(
@@ -1233,7 +1284,7 @@ def test_stream_ivf_assign_incremental_and_idempotent(spark, tmp_path):
         ivf_assign,
     )
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_stream_assignments,
+        read_landed,
         stream_ivf_assign,
     )
 
@@ -1252,19 +1303,19 @@ def test_stream_ivf_assign_incremental_and_idempotent(spark, tmp_path):
     )
 
     stream_ivf_assign(spark, f"{src}/b*", schema, str(out), str(ckpt), cents)
-    landed = read_stream_assignments(spark, str(out))
+    landed = read_landed(spark, str(out))
     assert landed.select("__bid").distinct().count() == 2  # one per chunk
     assert landed.count() == 8
 
     # exactly-once: nothing new to drain -> no new rows, no new batches
     stream_ivf_assign(spark, f"{src}/b*", schema, str(out), str(ckpt), cents)
-    again = read_stream_assignments(spark, str(out))
+    again = read_landed(spark, str(out))
     assert again.count() == 8
 
     # late chunk: assigned as its own micro-batch, prior rows untouched
     full.filter(F.col("vec_id") >= 8).coalesce(1).write.parquet(str(src / "b2"))
     stream_ivf_assign(spark, f"{src}/b*", schema, str(out), str(ckpt), cents)
-    final = read_stream_assignments(spark, str(out))
+    final = read_landed(spark, str(out))
     assert final.count() == 12
     assert final.select("__bid").distinct().count() == 3
 
@@ -1284,7 +1335,7 @@ def test_stream_domain_admit_caps_across_restart(spark, tmp_path):
     domain's count: a capped domain admits nothing more, an open one
     continues its admit_seq where it left off."""
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_stream_assignments,
+        read_landed,
         stream_domain_admit,
     )
 
@@ -1306,7 +1357,7 @@ def test_stream_domain_admit_caps_across_restart(spark, tmp_path):
         )
         return {
             (r.doc_id, r.source, r.admit_seq)
-            for r in read_stream_assignments(spark, str(out)).collect()
+            for r in read_landed(spark, str(out)).collect()
         }
 
     # a arrives 3 times (one over cap), b once
@@ -1326,7 +1377,7 @@ def test_stream_domain_admit_replay_is_idempotent(spark, tmp_path):
     with the same checkpoint and no new files rewrites nothing and
     duplicates nothing (each batch lands to its own overwritten dir)."""
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_stream_assignments,
+        read_landed,
         stream_domain_admit,
     )
 
@@ -1343,7 +1394,7 @@ def test_stream_domain_admit_replay_is_idempotent(spark, tmp_path):
             str(ckpt),
             cap=1,
         )
-    rows = read_stream_assignments(spark, str(out)).collect()
+    rows = read_landed(spark, str(out)).collect()
     assert {(r.doc_id, r.source, r.admit_seq) for r in rows} == {
         (0, "a", 1),
         (2, "b", 1),
@@ -1773,7 +1824,7 @@ def test_stream_cusum_detects_planted_shift(spark, tmp_path):
     upward mean shift must first flag shortly AFTER the shift point —
     the accumulate-small-persistent-shift property CUSUM exists for."""
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_latest_cusum_summary,
+        read_latest,
         stream_cusum_monitor,
     )
 
@@ -1806,9 +1857,8 @@ def test_stream_cusum_detects_planted_shift(spark, tmp_path):
         {"flat": (1000, 200), "shift": (1000, 200), "collapse": (1000, 200)},
     )
     got = {
-        r.series: r for r in read_latest_cusum_summary(
-            spark, str(tmp_path / "out")
-        ).collect()
+        r.series: r
+        for r in read_latest(spark, str(tmp_path / "out"), "series").collect()
     }
     assert got["flat"].n_flagged == 0 and got["flat"].first_flag_day == ""
     assert got["flat"].n_flagged_down == 0

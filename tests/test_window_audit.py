@@ -136,28 +136,48 @@ def test_histogram_walk_window_is_state_bounded(spark, sf_dir):
 
 
 def test_streaming_read_latest_has_no_window(spark, tmp_path):
-    """The read-latest helpers' rows grow with trigger count, so the
-    latest-batch filter must be the scalar-max broadcast join, never a
-    single-partition window (r17 rewrite)."""
+    """A landing's rows grow with trigger count, so the latest-batch
+    filter must be a max(__bid) aggregate joined back as a broadcast,
+    never a window: neither the single-partition one (r17 rewrite) nor
+    one partitioned by key. Four landed shapes: the complete-mode
+    grid and profile (no key), the heavy-hitter summary (per bucket)
+    and the CUSUM summary (per series)."""
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_latest_binned_profile,
-        read_latest_cm_sketch,
+        read_latest,
     )
 
-    d = spark.range(4).selectExpr(
-        "id AS j", "id AS bucket", "id AS cell", "id % 2 AS __bid"
-    )
-    d.write.mode("overwrite").parquet(str(tmp_path / "cm" / "batch-0"))
-    got = read_latest_cm_sketch(spark, str(tmp_path / "cm"))
-    assert "Window" not in got._jdf.queryExecution().executedPlan().toString()
-    assert sorted(r.j for r in got.collect()) == [1, 3]
+    def latest(name, cols, *keys):
+        d = spark.range(4).selectExpr(*cols)
+        d.write.mode("overwrite").parquet(str(tmp_path / name / "batch-0"))
+        got = read_latest(spark, str(tmp_path / name), *keys)
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan, plan
+        assert "__bid" not in got.columns
+        return got.collect()
 
-    p = spark.range(4).selectExpr(
-        "id AS bin", "id % 2 AS is_ref", "id AS n", "id % 2 AS __bid"
+    grid = latest("cm", ["id AS j", "id AS bucket", "id AS cell", "id % 2 AS __bid"])
+    assert sorted(r.j for r in grid) == [1, 3]
+
+    prof = latest(
+        "prof", ["id AS bin", "id % 2 AS is_ref", "id AS n", "id % 2 AS __bid"]
     )
-    p.write.mode("overwrite").parquet(str(tmp_path / "prof" / "batch-0"))
-    got2 = read_latest_binned_profile(spark, str(tmp_path / "prof"))
-    assert (
-        "Window" not in got2._jdf.queryExecution().executedPlan().toString()
+    assert sorted(r.bin for r in prof) == [1, 3]
+
+    # bucket 0 last emitted in batch 1, bucket 1 in batch 2: per key,
+    # only its own newest batch survives
+    hh = latest(
+        "hh",
+        ["id % 2 AS bucket", "CAST(id AS STRING) AS key", "id AS est",
+         "id DIV 2 + id % 2 AS __bid"],
+        "bucket",
     )
-    assert sorted(r.bin for r in got2.collect()) == [1, 3]
+    assert sorted((r.bucket, r.key, r.est) for r in hh) == [(0, "2", 2), (1, "3", 3)]
+
+    # series a emits in batches 0 and 1, series b only in batch 0
+    cusum = latest(
+        "cusum",
+        ["IF(id < 3, 'a', 'b') AS series", "id AS n_days",
+         "IF(id = 3, 0, id DIV 2) AS __bid"],
+        "series",
+    )
+    assert sorted((r.series, r.n_days) for r in cusum) == [("a", 2), ("b", 3)]
