@@ -16,7 +16,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from multichannel_commerce_data_pipeline_spark.artifacts import artifact
+from multichannel_commerce_data_pipeline_spark.artifacts import (
+    artifact,
+    layout,
+    parquet_memo,
+)
 from multichannel_commerce_data_pipeline_spark.functions import (
     dround,
     oracle_dround,
@@ -27,7 +31,6 @@ from multichannel_commerce_data_pipeline_spark.queries import query
 from multichannel_commerce_data_pipeline_spark.tables import (
     load,
     parallelize_small_scan,
-    parquet_memo,
 )
 
 _N_QUERIES = 8  # vec_id < 8 as the query set
@@ -1724,96 +1727,86 @@ def _ivf_rows_per_file(spark: SparkSession, sf_dir: str) -> int:
     return max(1, _LIST_TARGET_FILE_BYTES // row_bytes)
 
 
+@layout("embeddings", name="ivf_lists")
+def _ivf_lists(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The merged IVF index as a cell-partitioned list layout
+    (ivf_index_merge's assignment, persisted — the physical form an
+    IVF store serves probes from, one directory per inverted list)."""
+    e = parallelize_small_scan(spark, load(spark, sf_dir, "embeddings"))
+    base = e.filter(F.col("vec_id") % 10 != 7)
+    _, cents = S.ivf_assign(base, _IVF_STRIDE)
+    assign, _ = S.ivf_assign(e, _IVF_STRIDE, centroids=cents)
+    (
+        _pack_list_files(
+            assign.select("vid", "v", "v_n", "ccos", "cell"),
+            "cell",
+            "vid",
+            _ivf_rows_per_file(spark, sf_dir),
+        )
+        .write.mode("overwrite")
+        .partitionBy("cell")
+        .parquet(path)
+    )
+
+
+@layout("embeddings", name="ivf_lists_rebalanced")
+def _ivf_lists_rebalanced(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The list layout's REBALANCED rewrite: the _REB_TOP most occupied
+    lists are split and ONLY their partitions are rewritten
+    (split-source directories removed, sub-list directories written;
+    every untouched list's files are carried over byte-identical — at
+    100 TB the rewrite cost tracks the split lists, never the index).
+    The copy step exists because the shared lists layout must stay
+    immutable for other callers; a production rebalance overwrites the
+    live layout in place under the same delete+append transaction."""
+    import shutil as _sh
+    from pathlib import Path as _P
+
+    lists_dir = _ivf_lists(spark, sf_dir)
+    _sh.copytree(lists_dir, path, dirs_exist_ok=True)
+    lists = spark.read.parquet(lists_dir)
+    occ = lists.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
+    split = [
+        int(r["cell"])
+        for r in occ.orderBy(F.desc("n"), F.asc("cell"))
+        .limit(_REB_TOP)
+        .collect()  # bounded: _REB_TOP rows
+    ]
+    members = lists.filter(F.col("cell").isin(split)).select(
+        F.col("cell").cast("long").alias("cell"),
+        "vid",
+        "v",
+        "v_n",
+        "ccos",
+    )
+    sub = _ivf_split_subassign(members)
+    for c in split:
+        _sh.rmtree(_P(path) / f"cell={c}", ignore_errors=True)
+    (
+        _pack_list_files(
+            sub.select(
+                "vid",
+                "v",
+                "v_n",
+                F.col("sub_cos").alias("ccos"),
+                (F.col("cell") * _REB_SUB_BASE + F.col("sub") + 1).alias("cell"),
+            ),
+            "cell",
+            "vid",
+            _ivf_rows_per_file(spark, sf_dir),
+        )
+        .write.mode("append")
+        .partitionBy("cell")
+        .parquet(path)
+    )
+
+
 def ensure_ivf_list_layouts(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, str]:
-    """Materialize BOTH sides of the rebalance loop once per (session,
-    corpus version): the merged IVF index as a cell-partitioned list
-    layout (ivf_index_merge's assignment, persisted — the physical
-    form an IVF store serves probes from, one directory per inverted
-    list), and its REBALANCED rewrite, where the _REB_TOP most
-    occupied lists are split and ONLY their partitions are rewritten
-    (split-source directories removed, sub-list directories written;
-    every untouched list's files are carried over byte-identical —
-    at 100 TB the rewrite cost tracks the split lists, never the
-    index). The copy step exists because the shared lists artifact
-    must stay immutable for other callers; a production rebalance
-    overwrites the live layout in place under the same
-    delete+append transaction. Source-fingerprinted tags + atomic
-    publish (the ensure_compacted_layouts contract)."""
-    import shutil as _sh
-    import tempfile as _tf
-    from pathlib import Path as _P
-
-    from multichannel_commerce_data_pipeline_spark.queries.warehouse_queries import (
-        _materialize_atomic,
-        _source_fingerprint,
-    )
-
-    tag = _source_fingerprint(sf_dir, "embeddings")
-    root = _P(_tf.gettempdir()) / "mcdp_warehouse" / tag
-
-    def build_lists(path: str) -> None:
-        e = parallelize_small_scan(spark, load(spark, sf_dir, "embeddings"))
-        base = e.filter(F.col("vec_id") % 10 != 7)
-        _, cents = S.ivf_assign(base, _IVF_STRIDE)
-        assign, _ = S.ivf_assign(e, _IVF_STRIDE, centroids=cents)
-        (
-            _pack_list_files(
-                assign.select("vid", "v", "v_n", "ccos", "cell"),
-                "cell",
-                "vid",
-                _ivf_rows_per_file(spark, sf_dir),
-            )
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(path)
-        )
-
-    lists_dir = _materialize_atomic(root / "ivf_lists", build_lists)
-
-    def build_rebalanced(path: str) -> None:
-        _sh.copytree(lists_dir, path, dirs_exist_ok=True)
-        lists = spark.read.parquet(lists_dir)
-        occ = lists.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
-        split = [
-            int(r["cell"])
-            for r in occ.orderBy(F.desc("n"), F.asc("cell"))
-            .limit(_REB_TOP)
-            .collect()  # bounded: _REB_TOP rows
-        ]
-        members = lists.filter(F.col("cell").isin(split)).select(
-            F.col("cell").cast("long").alias("cell"),
-            "vid",
-            "v",
-            "v_n",
-            "ccos",
-        )
-        sub = _ivf_split_subassign(members)
-        for c in split:
-            _sh.rmtree(_P(path) / f"cell={c}", ignore_errors=True)
-        (
-            _pack_list_files(
-                sub.select(
-                    "vid",
-                    "v",
-                    "v_n",
-                    F.col("sub_cos").alias("ccos"),
-                    (
-                        F.col("cell") * _REB_SUB_BASE + F.col("sub") + 1
-                    ).alias("cell"),
-                ),
-                "cell",
-                "vid",
-                _ivf_rows_per_file(spark, sf_dir),
-            )
-            .write.mode("append")
-            .partitionBy("cell")
-            .parquet(path)
-        )
-
-    reb_dir = _materialize_atomic(root / "ivf_lists_rebalanced", build_rebalanced)
-    return lists_dir, reb_dir
+    """Both sides of the rebalance loop, (lists_dir, rebalanced_dir),
+    each a published layout."""
+    return _ivf_lists(spark, sf_dir), _ivf_lists_rebalanced(spark, sf_dir)
 
 
 def _ivf_rebalance_oracle() -> str:

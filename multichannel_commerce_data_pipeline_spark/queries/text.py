@@ -10,7 +10,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from multichannel_commerce_data_pipeline_spark.artifacts import artifact
+from multichannel_commerce_data_pipeline_spark.artifacts import (
+    artifact,
+    layout,
+    parquet_memo,
+)
 from multichannel_commerce_data_pipeline_spark.functions import (
     dround,
     oracle_dround,
@@ -22,7 +26,6 @@ from multichannel_commerce_data_pipeline_spark.queries import query
 from multichannel_commerce_data_pipeline_spark.tables import (
     load,
     parallelize_small_scan,
-    parquet_memo,
 )
 
 _STOP_IN = ", ".join(f"'{w}'" for w in T.STOPWORDS)
@@ -1208,40 +1211,24 @@ def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PDM_TERMS = ("spark", "query", "join")  # probe terms (bm25's set)
 
 
-def ensure_postings_state(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the stored doc-term postings STATE over the base
-    corpus slice (doc_id % 10 != 7 — the ivf_index_merge arriving-
-    batch convention): (doc_id, token, tf), laid out on token like
-    the serving index. Once per source fingerprint, atomically
-    published."""
-    import tempfile
-    from pathlib import Path
-
-    from multichannel_commerce_data_pipeline_spark.queries.warehouse_queries import (
-        _materialize_atomic,
-        _source_fingerprint,
+@layout("documents", name="postings_state")
+def ensure_postings_state(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The stored doc-term postings STATE over the base corpus slice
+    (doc_id % 10 != 7 — the ivf_index_merge arriving-batch
+    convention): (doc_id, token, tf), laid out on token like the
+    serving index."""
+    d = parallelize_small_scan(spark, load(spark, sf_dir, "documents")).filter(
+        F.col("doc_id") % 10 != 7
     )
-
-    tag = _source_fingerprint(sf_dir, "documents")
-    base = Path(tempfile.gettempdir()) / "mcdp_warehouse" / tag / "postings_state"
-
-    def build(path: str) -> None:
-        d = parallelize_small_scan(
-            spark, load(spark, sf_dir, "documents")
-        ).filter(F.col("doc_id") % 10 != 7)
-        tok = d.select(
-            "doc_id", F.explode(T.tokens(F.col("text"))).alias("token")
-        )
-        n_parts = spark.sparkContext.defaultParallelism
-        (
-            tok.groupBy("doc_id", "token")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .repartition(n_parts, "token")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-
-    return _materialize_atomic(base, build)
+    tok = d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("token"))
+    n_parts = spark.sparkContext.defaultParallelism
+    (
+        tok.groupBy("doc_id", "token")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .repartition(n_parts, "token")
+        .write.mode("overwrite")
+        .parquet(path)
+    )
 
 
 def _pdm_oracle() -> str:

@@ -1,19 +1,26 @@
-"""Warehouse-layout query: the bucketed co-located join made
-driver-visible. write_bucketed persists customer and orders bucketed on
-the join key, then the rollup joins them exchange-free (the storage
-investment the silver→gold star schema repays at 100 TB — every
-subsequent equi-join on the bucketed key skips both shuffles).
+"""Warehouse queries: the storage layouts and table-maintenance loops
+of the silver→gold warehouse, each made driver-checkable against a
+DuckDB oracle over the source tables.
 
-tests/test_sources.py asserts the join plan has no Exchange/Sort; this
-query proves the values survive the layout round-trip end-to-end.
+- Layouts: bucketed tables and their exchange-free join, date
+  partitions with static and dynamic pruning, Z-order, file formats,
+  small-file compaction and its proven rewrite.
+- Change capture and versioning: SCD2, MERGE upserts, CDC snapshots,
+  snapshot time travel and diffs, point-in-time joins.
+- Maintained state: aggregate and join MVs, and the CBO statistics
+  (equi-depth histogram, NDV registers) refreshed from deltas, with
+  their streaming twins.
+- Audits: replica reconciliation, referential integrity, erasure
+  propagation, k-anonymity and l-diversity, skew profiles.
+
+A derived layout is a writer decorated with ``artifacts.layout``: it is
+published once per source version under the warehouse root and read
+back through ``artifacts.parquet_memo``.
 """
 
 from __future__ import annotations
 
-import hashlib
-import shutil
 import tempfile
-import threading
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,6 +29,9 @@ from pyspark.sql import functions as F
 from multichannel_commerce_data_pipeline_spark.artifacts import (
     artifact,
     concurrently,
+    layout,
+    parquet_memo,
+    warehouse_root,
 )
 from multichannel_commerce_data_pipeline_spark.functions import (
     dround,
@@ -35,113 +45,7 @@ from multichannel_commerce_data_pipeline_spark.sources.warehouse import (
 from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
     fresh_stream_dir,
 )
-from multichannel_commerce_data_pipeline_spark.tables import (
-    load,
-    parquet_memo,
-)
-
-
-def _source_fingerprint(sf_dir: str, *tables: str) -> str:
-    """Cache tag for sf_dir-derived artifacts that folds the SOURCE
-    DATA's identity into the path digest, not just the path string —
-    a regenerated fixture at the same sf_dir gets a fresh tag instead
-    of silently reusing a stale layout (ADVICE r13). Each file hashes
-    as table/relative-path : size : mtime_ns, so identical-stat part
-    files moved between partition directories (or between two listed
-    tables) still change the tag; missing files hash as their absence,
-    so a fixture swap never aliases."""
-    h = hashlib.md5(sf_dir.encode())
-    for t in tables:
-        p = Path(sf_dir) / f"{t}.parquet"
-        if p.is_dir():
-            files = sorted(f for f in p.rglob("*") if f.is_file())
-        else:
-            files = [p]
-        for f in files:
-            if f.is_file():
-                st = f.stat()
-                rel = f.relative_to(p) if p.is_dir() else f.name
-                h.update(
-                    f"{t}/{rel}:{st.st_size}:{st.st_mtime_ns};".encode()
-                )
-    return h.hexdigest()[:12]
-
-
-# Same-process builds serialize on one lock: two threads racing the
-# same (or different) artifacts must never share or delete each
-# other's in-flight scratch tree. Cross-process safety comes from the
-# atomic rename below.
-_MATERIALIZE_LOCK = threading.Lock()
-
-
-def _materialize_atomic(dest: Path, write) -> str:
-    """Build-once directory artifact with crash and concurrency safety:
-    ``write(scratch_path)`` produces the artifact in a scratch dir next
-    to ``dest``, which is then PUBLISHED with one atomic rename — a
-    half-written tree is never observable at the final path, so a
-    crashed partial build leaves only scratch debris (swept on the
-    next build) and never a serving artifact. Intactness = ``dest``
-    exists AND holds at least one file: a temp-dir cleaner that guts
-    the tree but leaves the directory triggers a rebuild instead of
-    serving an empty path (the ensure_bucketed trust-but-verify rule).
-    Same-process concurrency is serialized by _MATERIALIZE_LOCK;
-    cross-process, the first rename wins and a later builder either
-    returns the published tree (rename lost the race) or keeps its own
-    scratch private until its rename (ADVICE r13 — replaces the 'any
-    parquet file exists' heuristic that accepted partial overwrites).
-    Debris from CRASHED builds is swept, but only scratch whose
-    PID-suffix owner is dead — rmtree'ing a LIVE concurrent process's
-    in-flight scratch between its part-file writes and its rename
-    could hand that builder a partial tree to publish (ADVICE r14)."""
-    import os
-
-    def intact() -> bool:
-        return dest.is_dir() and any(f.is_file() for f in dest.rglob("*"))
-
-    def sweepable(name: str) -> bool:
-        # scratch names end ".tmp-<pid>"; an unparsable suffix is
-        # never swept (can't attribute it). Our OWN pid is always
-        # sweepable: under _MATERIALIZE_LOCK no other thread of this
-        # process is mid-build, so same-pid scratch can only be debris
-        # from our own crashed earlier attempt.
-        try:
-            pid = int(name.rsplit("-", 1)[1])
-        except (IndexError, ValueError):
-            return False
-        if pid == os.getpid():
-            return True
-        try:
-            os.kill(pid, 0)
-        except ProcessLookupError:
-            return True  # owner dead: crashed foreign build
-        except PermissionError:
-            return False  # exists, owned by someone else
-        return False
-
-    if intact():
-        return str(dest)
-    with _MATERIALIZE_LOCK:
-        if intact():
-            return str(dest)
-        if dest.is_dir():  # gutted by an external cleaner: rebuild
-            shutil.rmtree(str(dest))
-        dest.parent.mkdir(parents=True, exist_ok=True)
-        # sweep debris from CRASHED builds (dead-PID scratch would
-        # otherwise accumulate unbounded partial trees under the temp
-        # dir); live-PID scratch belongs to a concurrent in-flight
-        # build and must not be touched (ADVICE r14)
-        for stale in dest.parent.glob(f".{dest.name}.tmp-*"):
-            if sweepable(stale.name):
-                shutil.rmtree(str(stale), ignore_errors=True)
-        scratch = dest.parent / f".{dest.name}.tmp-{os.getpid()}"
-        write(str(scratch))
-        try:
-            scratch.rename(dest)
-        except OSError:
-            if not intact():
-                raise
-            shutil.rmtree(str(scratch), ignore_errors=True)
-    return str(dest)
+from multichannel_commerce_data_pipeline_spark.tables import load
 
 
 def ensure_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -158,9 +62,8 @@ def ensure_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     at missing/partial files. Reuse requires BOTH the catalog entry and
     parquet files on disk; on any mismatch the tables are dropped and
     rewritten."""
-    tag = _source_fingerprint(sf_dir, "customer", "orders")[:8]
-    cust_t, ord_t = f"customer_b_{tag}", f"orders_b_{tag}"
-    base = Path(tempfile.gettempdir()) / "mcdp_warehouse" / tag
+    base = warehouse_root(sf_dir, "customer", "orders")
+    cust_t, ord_t = f"customer_b_{base.name}", f"orders_b_{base.name}"
 
     def intact(table: str, path: Path) -> bool:
         return (
@@ -655,22 +558,14 @@ def file_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back2.withColumn("sum_qty", F.col("sum_qty").cast("double"))
 
 
-def ensure_date_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
-    """Write events date-partitioned (``day=YYYY-MM-DD/`` directories)
-    once per (session, sf_dir), mirroring ensure_bucketed's
-    trust-but-verify reuse, upgraded at r14 to the fingerprinted
-    atomic-publish form shared by the other artifact caches. This is
-    the landing layout the streaming jobs produce continuously; here
-    it is materialized from the batch table so the pruning query is
+@layout("events", name="events_by_day")
+def ensure_date_partitioned_events(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Events date-partitioned (``day=YYYY-MM-DD/`` directories): the
+    landing layout the streaming jobs produce continuously, here
+    written from the batch table so the pruning queries are
     self-contained."""
-    tag = _source_fingerprint(sf_dir, "events")
-    base = Path(tempfile.gettempdir()) / "mcdp_warehouse" / tag / "events_by_day"
-
-    def build(path: str) -> None:
-        ev = load(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
-        ev.write.mode("overwrite").partitionBy("day").parquet(path)
-
-    return _materialize_atomic(base, build)
+    ev = load(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
+    ev.write.mode("overwrite").partitionBy("day").parquet(path)
 
 
 @query(
@@ -879,45 +774,42 @@ def _compaction_plan_frame(landed: DataFrame) -> DataFrame:
     )
 
 
+@layout("events", name="landing_small")
+def _landing_small(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The small-file date-partitioned landing: what continuous
+    streaming ingestion accretes, one file per task per day
+    partition."""
+    load(spark, sf_dir, "events").select(
+        F.to_date("ts").alias("day"),
+        "event_id",
+        "user_id",
+        "event_type",
+        "value",
+    ).write.mode("overwrite").partitionBy("day").parquet(path)
+
+
+@layout("events", name="compacted")
+def _compacted(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The landing's compacted rewrite: planned day bins coalesced into
+    one ~TARGET-row file per job via repartition on the plan's
+    job_id."""
+    landed = spark.read.parquet(_landing_small(spark, sf_dir))
+    plan = _compaction_plan_frame(landed)
+    (
+        landed.join(F.broadcast(plan.select("day", "job_id")), "day")
+        .repartition("job_id")
+        .write.mode("overwrite")
+        .partitionBy("job_id")
+        .parquet(path)
+    )
+
+
 def ensure_compacted_layouts(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, str]:
-    """Materialize BOTH sides of the compaction loop once per (session,
-    sf_dir): the small-file date-partitioned landing (what continuous
-    streaming ingestion accretes — one file per task per day partition)
-    and its compacted rewrite (planned day bins coalesced into one
-    ~TARGET-row file per job via repartition on the plan's job_id).
-    Returns (landing_dir, compacted_dir). The cache tag fingerprints
-    the SOURCE data and each artifact publishes via atomic rename
-    (_materialize_atomic), so regenerated fixtures, crashed partial
-    builds, and concurrent builders are all safe."""
-    tag = _source_fingerprint(sf_dir, "events")
-    root = Path(tempfile.gettempdir()) / "mcdp_warehouse" / tag
-
-    def build_landing(path: str) -> None:
-        load(spark, sf_dir, "events").select(
-            F.to_date("ts").alias("day"),
-            "event_id",
-            "user_id",
-            "event_type",
-            "value",
-        ).write.mode("overwrite").partitionBy("day").parquet(path)
-
-    landing = _materialize_atomic(root / "landing_small", build_landing)
-
-    def build_compacted(path: str) -> None:
-        landed = spark.read.parquet(landing)
-        plan = _compaction_plan_frame(landed)
-        (
-            landed.join(F.broadcast(plan.select("day", "job_id")), "day")
-            .repartition("job_id")
-            .write.mode("overwrite")
-            .partitionBy("job_id")
-            .parquet(path)
-        )
-
-    compacted = _materialize_atomic(root / "compacted", build_compacted)
-    return landing, compacted
+    """Both sides of the compaction loop, (landing_dir,
+    compacted_dir), each a published layout."""
+    return _landing_small(spark, sf_dir), _compacted(spark, sf_dir)
 
 
 def _compaction_apply_oracle() -> str:
@@ -1028,31 +920,24 @@ def compaction_apply_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MV_CUTOVER = "2024-01-25"
 
 
-def ensure_mv_state(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the aggregate STATE table (per event_type algebraic
-    accumulators over days < cutover) once per (session, sf_dir) — the
-    stored MV a warehouse maintains instead of rescanning history.
-    Source-fingerprinted tag + atomic publish, like its siblings
-    (ADVICE r13)."""
-    tag = _source_fingerprint(sf_dir, "events")
-    base = Path(tempfile.gettempdir()) / "mcdp_warehouse" / tag / "mv_state"
-
-    def build(path: str) -> None:
-        # ts-form of the day cutover (equivalent to to_date(ts) <
-        # cutover) so the predicate pushes into the parquet scan
-        ev = load(spark, sf_dir, "events").filter(
-            F.col("ts") < F.lit(f"{_MV_CUTOVER} 00:00:00").cast("timestamp")
-        )
-        ev.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("decimal(38,2)")
-            .alias("val_sum"),
-            F.min("value").alias("val_min"),
-            F.max("value").alias("val_max"),
-        ).write.mode("overwrite").parquet(path)
-
-    return _materialize_atomic(base, build)
+@layout("events", name="mv_state")
+def ensure_mv_state(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The aggregate STATE table (per event_type algebraic accumulators
+    over days < cutover): the stored MV a warehouse maintains instead
+    of rescanning history."""
+    # ts-form of the day cutover (equivalent to to_date(ts) <
+    # cutover) so the predicate pushes into the parquet scan
+    ev = load(spark, sf_dir, "events").filter(
+        F.col("ts") < F.lit(f"{_MV_CUTOVER} 00:00:00").cast("timestamp")
+    )
+    ev.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("cnt"),
+        F.sum(F.col("value").cast("decimal(18,2)"))
+        .cast("decimal(38,2)")
+        .alias("val_sum"),
+        F.min("value").alias("val_min"),
+        F.max("value").alias("val_max"),
+    ).write.mode("overwrite").parquet(path)
 
 
 @query(
@@ -1158,32 +1043,24 @@ def _mvj_month_agg(joined: DataFrame) -> DataFrame:
     )
 
 
-def ensure_mv_join_state(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the JOIN-VIEW aggregate state (month-grain
-    accumulators over old-orders ⋈ old-lineitem) once per (session,
-    sf_dir) — the stored gold view a warehouse maintains instead of
-    re-running the join over all history. Source-fingerprinted tag +
-    atomic publish (ADVICE r13): a regenerated fixture re-derives the
-    state, a partial write is never observable."""
-    tag = _source_fingerprint(sf_dir, "orders", "lineitem")
-    base = Path(tempfile.gettempdir()) / "mcdp_warehouse" / tag / "mvj_state"
-
-    def build(path: str) -> None:
-        o_old = (
-            load(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_orderdate")
-            .filter(F.col("o_orderdate") < F.lit(_MVJ_O_CUT).cast("timestamp"))
-        )
-        l_old = (
-            load(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_extendedprice", "l_discount")
-            .filter(F.col("l_shipdate") < F.lit(_MVJ_L_CUT).cast("timestamp"))
-        )
-        _mvj_month_agg(
-            o_old.join(l_old, o_old.o_orderkey == l_old.l_orderkey)
-        ).write.mode("overwrite").parquet(path)
-
-    return _materialize_atomic(base, build)
+@layout("orders", "lineitem", name="mvj_state")
+def ensure_mv_join_state(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The JOIN-VIEW aggregate state (month-grain accumulators over
+    old-orders ⋈ old-lineitem): the stored gold view a warehouse
+    maintains instead of re-running the join over all history."""
+    o_old = (
+        load(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_orderdate")
+        .filter(F.col("o_orderdate") < F.lit(_MVJ_O_CUT).cast("timestamp"))
+    )
+    l_old = (
+        load(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_extendedprice", "l_discount")
+        .filter(F.col("l_shipdate") < F.lit(_MVJ_L_CUT).cast("timestamp"))
+    )
+    _mvj_month_agg(
+        o_old.join(l_old, o_old.o_orderkey == l_old.l_orderkey)
+    ).write.mode("overwrite").parquet(path)
 
 
 @query(
@@ -1257,26 +1134,20 @@ def mv_join_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ensure_mvj_stream_state(spark: SparkSession, sf_dir: str) -> str:
+@layout("orders", "lineitem", name="mvj_sstate")
+def ensure_mvj_stream_state(spark: SparkSession, sf_dir: str, path: str) -> None:
     """The streaming refresh's initial stored view: month accumulators
     over ALL orders ⋈ pre-cutover lineitem (orders is the dimension-
-    stable side; only lineitem streams). Materialized once per source
-    fingerprint, atomically published (ADVICE r13)."""
-    tag = _source_fingerprint(sf_dir, "orders", "lineitem")
-    base = Path(tempfile.gettempdir()) / "mcdp_warehouse" / tag / "mvj_sstate"
-
-    def build(path: str) -> None:
-        o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-        l_old = (
-            load(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_extendedprice", "l_discount")
-            .filter(F.col("l_shipdate") < F.lit(_MVJ_L_CUT).cast("timestamp"))
-        )
-        _mvj_month_agg(
-            o.join(l_old, o.o_orderkey == l_old.l_orderkey)
-        ).write.mode("overwrite").parquet(path)
-
-    return _materialize_atomic(base, build)
+    stable side; only lineitem streams)."""
+    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    l_old = (
+        load(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_extendedprice", "l_discount")
+        .filter(F.col("l_shipdate") < F.lit(_MVJ_L_CUT).cast("timestamp"))
+    )
+    _mvj_month_agg(
+        o.join(l_old, o.o_orderkey == l_old.l_orderkey)
+    ).write.mode("overwrite").parquet(path)
 
 
 # One drain of the streaming view refresh per (session, sf_dir) — the
@@ -1530,28 +1401,21 @@ def _reconcile_oracle() -> str:
     """
 
 
-def ensure_replica(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the perturbed customer REPLICA once per (session,
-    sf_dir) — the copy living 'in the other system', with deterministic
-    damage: every custkey divisible by 467 lost, every custkey
-    divisible by 331 drifted by +1.00 acctbal. Fingerprinted atomic
-    publish like the other artifact caches (r14)."""
-    tag = _source_fingerprint(sf_dir, "customer")
-    base = Path(tempfile.gettempdir()) / "mcdp_warehouse" / tag / "replica"
-
-    def build(path: str) -> None:
-        c = load(spark, sf_dir, "customer").select(
-            "c_custkey", "c_name", "c_nationkey", "c_acctbal"
-        )
-        c.filter(F.col("c_custkey") % _REC_DROP != 0).withColumn(
-            "c_acctbal",
-            F.when(
-                F.col("c_custkey") % _REC_DRIFT == 0,
-                F.col("c_acctbal") + 1.0,
-            ).otherwise(F.col("c_acctbal")),
-        ).write.mode("overwrite").parquet(path)
-
-    return _materialize_atomic(base, build)
+@layout("customer", name="replica")
+def ensure_replica(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The perturbed customer REPLICA — the copy living 'in the other
+    system', with deterministic damage: every custkey divisible by 467
+    lost, every custkey divisible by 331 drifted by +1.00 acctbal."""
+    c = load(spark, sf_dir, "customer").select(
+        "c_custkey", "c_name", "c_nationkey", "c_acctbal"
+    )
+    c.filter(F.col("c_custkey") % _REC_DROP != 0).withColumn(
+        "c_acctbal",
+        F.when(
+            F.col("c_custkey") % _REC_DRIFT == 0,
+            F.col("c_acctbal") + 1.0,
+        ).otherwise(F.col("c_acctbal")),
+    ).write.mode("overwrite").parquet(path)
 
 
 @query("table_reconcile", oracle=_reconcile_oracle())
@@ -1933,53 +1797,48 @@ def _erase_fp_cols(df: DataFrame, table: str) -> list:
     return [build(df) for _, build in _ERASE_FP[table]]
 
 
-def ensure_erased_tables(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the ERASED warehouse (customer/orders/lineitem with
-    the tombstoned customers and their cascaded orders/lineitems
-    removed) once per source fingerprint, atomically published. Each
-    table is one broadcast-anti-join scan of its source — the erasure
-    pass a compliance job actually runs."""
-    tag = _source_fingerprint(sf_dir, "customer", "orders", "lineitem")
-    base = Path(tempfile.gettempdir()) / "mcdp_warehouse" / tag / "erased"
+@layout("customer", "orders", "lineitem", name="erased")
+def ensure_erased_tables(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The ERASED warehouse: customer/orders/lineitem with the
+    tombstoned customers and their cascaded orders/lineitems removed.
+    Each table is one broadcast-anti-join scan of its source — the
+    erasure pass a compliance job actually runs."""
+    tomb = _erase_tombstones(spark, sf_dir)
+    cust = load(spark, sf_dir, "customer").join(
+        F.broadcast(tomb), "c_custkey", "left_anti"
+    )
+    src_orders = load(spark, sf_dir, "orders")
+    orders = src_orders.join(
+        F.broadcast(tomb),
+        src_orders.o_custkey == tomb.c_custkey,
+        "left_anti",
+    )
+    gone_orders = src_orders.join(
+        F.broadcast(tomb),
+        src_orders.o_custkey == tomb.c_custkey,
+        "left_semi",
+    ).select("o_orderkey")
+    src_li = load(spark, sf_dir, "lineitem")
+    li = src_li.join(
+        F.broadcast(gone_orders),
+        src_li.l_orderkey == gone_orders.o_orderkey,
+        "left_anti",
+    )
 
-    def build(path: str) -> None:
-        tomb = _erase_tombstones(spark, sf_dir)
-        cust = load(spark, sf_dir, "customer").join(
-            F.broadcast(tomb), "c_custkey", "left_anti"
-        )
-        src_orders = load(spark, sf_dir, "orders")
-        orders = src_orders.join(
-            F.broadcast(tomb),
-            src_orders.o_custkey == tomb.c_custkey,
-            "left_anti",
-        )
-        gone_orders = src_orders.join(
-            F.broadcast(tomb),
-            src_orders.o_custkey == tomb.c_custkey,
-            "left_semi",
-        ).select("o_orderkey")
-        src_li = load(spark, sf_dir, "lineitem")
-        li = src_li.join(
-            F.broadcast(gone_orders),
-            src_li.l_orderkey == gone_orders.o_orderkey,
-            "left_anti",
-        )
-        # the three erased-table writes are independent jobs; running
-        # them concurrently lets one write's stage tail back-fill
-        # cores the others leave idle (guide §2.6 — the
-        # join_size_estimate threaded-materialization idiom). One-time
-        # cold-path cost per corpus version.
-        def writer(df: DataFrame, sub: str):
-            return lambda: df.write.mode("overwrite").parquet(f"{path}/{sub}")
+    # the three erased-table writes are independent jobs; running
+    # them concurrently lets one write's stage tail back-fill
+    # cores the others leave idle (guide §2.6 — the
+    # join_size_estimate threaded-materialization idiom). One-time
+    # cold-path cost per corpus version.
+    def writer(df: DataFrame, sub: str):
+        return lambda: df.write.mode("overwrite").parquet(f"{path}/{sub}")
 
-        concurrently(
-            spark,
-            writer(cust, "customer"),
-            writer(orders, "orders"),
-            writer(li, "lineitem"),
-        )
-
-    return _materialize_atomic(base, build)
+    concurrently(
+        spark,
+        writer(cust, "customer"),
+        writer(orders, "orders"),
+        writer(li, "lineitem"),
+    )
 
 
 def _erasure_oracle() -> str:
@@ -2138,62 +1997,54 @@ _HDM_CUT = "2001-03-01 00:00:00"  # lineitem shipdate delta cutover
 _HDM_DRIFT_TOL = 0.03  # re-ANALYZE trigger: share deviation bound
 
 
-def ensure_histogram_state(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the stored equi-depth histogram STATE over the
-    pre-cutover lineitem slice: per bucket (binned against the OLD
-    slice's 7 exact octile boundaries), row count + lo/hi, with the
-    boundary values carried on every row so a refresh can re-bin
-    deltas without touching history. Once per source fingerprint,
-    atomically published."""
+@layout("lineitem", name="hist_state")
+def ensure_histogram_state(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The stored equi-depth histogram STATE over the pre-cutover
+    lineitem slice: per bucket (binned against the OLD slice's 7 exact
+    octile boundaries), row count + lo/hi, with the boundary values
+    carried on every row so a refresh can re-bin deltas without
+    touching history."""
     from multichannel_commerce_data_pipeline_spark.queries.aggregates import (
         _EQD_QS,
     )
 
-    tag = _source_fingerprint(sf_dir, "lineitem")
-    base = Path(tempfile.gettempdir()) / "mcdp_warehouse" / tag / "hist_state"
-
-    def build(path: str) -> None:
-        old = load(spark, sf_dir, "lineitem").filter(
-            F.col("l_shipdate") < F.lit(_HDM_CUT).cast("timestamp")
+    old = load(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") < F.lit(_HDM_CUT).cast("timestamp")
+    )
+    # one array-percentile (sort once) instead of 7 full-column
+    # buffers — the _hqe_exact_fit lesson (values bit-identical)
+    row = (
+        old.agg(
+            F.percentile("l_extendedprice", F.lit(list(_EQD_QS))).alias("__ps")
         )
-        # one array-percentile (sort once) instead of 7 full-column
-        # buffers — the _hqe_exact_fit lesson (values bit-identical)
-        row = (
-            old.agg(
-                F.percentile(
-                    "l_extendedprice", F.lit(list(_EQD_QS))
-                ).alias("__ps")
-            )
-            .select(
-                *[
-                    dround(F.element_at("__ps", i + 1), 2).alias(f"b{i}")
-                    for i in range(len(_EQD_QS))
-                ]
-            )
-            .collect()[0]
+        .select(
+            *[
+                dround(F.element_at("__ps", i + 1), 2).alias(f"b{i}")
+                for i in range(len(_EQD_QS))
+            ]
         )
-        bounds = [float(row[f"b{i}"]) for i in range(len(_EQD_QS))]
-        bucket = sum(
-            F.when(F.col("l_extendedprice") > F.lit(b), 1).otherwise(0)
-            for b in bounds
-        ).cast("long")
-        (
-            old.select(F.col("l_extendedprice").alias("p"), bucket.alias("bucket"))
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.min("p").alias("lo"),
-                F.max("p").alias("hi"),
-            )
-            .select(
-                "*",
-                *[F.lit(b).alias(f"b{i}") for i, b in enumerate(bounds)],
-            )
-            .write.mode("overwrite")
-            .parquet(path)
+        .collect()[0]
+    )
+    bounds = [float(row[f"b{i}"]) for i in range(len(_EQD_QS))]
+    bucket = sum(
+        F.when(F.col("l_extendedprice") > F.lit(b), 1).otherwise(0)
+        for b in bounds
+    ).cast("long")
+    (
+        old.select(F.col("l_extendedprice").alias("p"), bucket.alias("bucket"))
+        .groupBy("bucket")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            F.min("p").alias("lo"),
+            F.max("p").alias("hi"),
         )
-
-    return _materialize_atomic(base, build)
+        .select(
+            "*",
+            *[F.lit(b).alias(f"b{i}") for i, b in enumerate(bounds)],
+        )
+        .write.mode("overwrite")
+        .parquet(path)
+    )
 
 
 def _merged_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2296,10 +2147,20 @@ def histogram_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the old slice and bins ALL rows from scratch: the merge must equal
     the full recompute exactly, bucket by bucket (integer counts;
     boundary and share doubles dround-quantized on both sides)."""
-    merged = _merged_histogram(spark, sf_dir)
-    total = merged.agg(F.sum("n_rows").cast("long").alias("total"))
+    # the total rides on one row with the <= 8 bucket rows it sums, so
+    # the merged histogram is evaluated once (joining a separate
+    # agg(sum) back would execute its scans twice)
+    merged = (
+        _merged_histogram(spark, sf_dir)
+        .agg(
+            F.collect_list(F.struct("bucket", "n_rows", "lo", "hi")).alias("b"),
+            F.sum("n_rows").cast("long").alias("total"),
+        )
+        .select(F.explode("b").alias("b"), "total")
+        .select("b.*", "total")
+    )
     share = dround(F.col("n_rows").cast("double") / F.col("total"), 6)
-    return merged.join(F.broadcast(total)).select(
+    return merged.select(
         "bucket",
         "n_rows",
         "lo",
@@ -2623,9 +2484,10 @@ def histogram_quantile_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile can sit at most one bucket-width from the estimate.
 
     Plan: the merged histogram is the shared _merged_histogram frame
-    (delta scan + broadcast state boundaries); the cumulative walk is a
-    window over the <= 8 bucket rows (single-partition by construction —
-    bounded state, not data); quantile targets explode from a literal
+    (delta scan + broadcast state boundaries); the cumulative walk and
+    the total are two frames of one window over the <= 8 bucket rows
+    (single-partition by construction — bounded state, not data), so
+    the merged frame executes once; quantile targets explode from a literal
     array and join on the INTEGER index (a double join key would
     invite cross-engine representation trouble); the exact
     percentiles are one aggregate over the column, broadcast back.
@@ -2643,21 +2505,22 @@ def histogram_quantile_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: _hqe_exact_fit(spark, sf_dir),
     )
     w = W.orderBy("bucket").rowsBetween(W.unboundedPreceding, W.currentRow)
+    whole = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
     cum = m.select(
-        "bucket", "n_rows", "lo", "hi", F.sum("n_rows").over(w).alias("c")
+        "bucket",
+        "n_rows",
+        "lo",
+        "hi",
+        F.sum("n_rows").over(w).alias("c"),
+        F.sum("n_rows").over(whole).cast("long").alias("total"),
     )
-    tot = m.agg(F.sum("n_rows").cast("long").alias("total"))
     qs = F.array(
         *[
             F.struct(F.lit(qi).alias("qi"), F.lit(float(q)).alias("q"))
             for qi, q in _HQE_QS
         ]
     )
-    fanned = (
-        cum.join(F.broadcast(tot))
-        .select("*", F.explode(qs).alias("s"))
-        .select("*", "s.*")
-    )
+    fanned = cum.select("*", F.explode(qs).alias("s")).select("*", "s.*")
     tgt = F.col("q") * F.col("total")
     cb = F.col("c") - F.col("n_rows")
     pick = fanned.filter((cb < tgt) & (tgt <= F.col("c")))
@@ -2687,12 +2550,12 @@ def histogram_quantile_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the sketch that query computes from scratch.
 
 
-def ensure_ndv_state(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the stored NDV STATE: the m=128 min-hash registers
-    of l_partkey over the pre-cutover lineitem slice (the same
-    cutover the histogram state uses, so the two statistics age
-    together). <= m rows of (bucket, min_h). Once per source
-    fingerprint, atomically published."""
+@layout("lineitem", name="ndv_state")
+def ensure_ndv_state(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The stored NDV STATE: the m=128 min-hash registers of l_partkey
+    over the pre-cutover lineitem slice (the same cutover the
+    histogram state uses, so the two statistics age together). <= m
+    rows of (bucket, min_h)."""
     from multichannel_commerce_data_pipeline_spark.operators.frequency import (
         minhash_distinct_sketch,
     )
@@ -2701,18 +2564,12 @@ def ensure_ndv_state(spark: SparkSession, sf_dir: str) -> str:
         _MH_SEED,
     )
 
-    tag = _source_fingerprint(sf_dir, "lineitem")
-    base = Path(tempfile.gettempdir()) / "mcdp_warehouse" / tag / "ndv_state"
-
-    def build(path: str) -> None:
-        old = load(spark, sf_dir, "lineitem").filter(
-            F.col("l_shipdate") < F.lit(_HDM_CUT).cast("timestamp")
-        )
-        minhash_distinct_sketch(
-            old, F.col("l_partkey"), m=_MH_M, seed=_MH_SEED
-        ).write.mode("overwrite").parquet(path)
-
-    return _materialize_atomic(base, build)
+    old = load(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") < F.lit(_HDM_CUT).cast("timestamp")
+    )
+    minhash_distinct_sketch(
+        old, F.col("l_partkey"), m=_MH_M, seed=_MH_SEED
+    ).write.mode("overwrite").parquet(path)
 
 
 @artifact

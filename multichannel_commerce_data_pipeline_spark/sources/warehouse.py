@@ -25,14 +25,13 @@ def write_bucketed(
     bucket_cols: list[str],
     n_buckets: int = 32,
     sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Persist as an external parquet table bucketed (and optionally
     sorted) on the join key. ``n_buckets`` must match across tables
     meant to co-join; it is the parallelism floor for bucket-wise
     joins, so size it to the cluster, not the current data."""
     writer = (
-        df.write.mode(mode).format("parquet").bucketBy(n_buckets, *bucket_cols)
+        df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, *bucket_cols)
     )
     if sort_cols:
         writer = writer.sortBy(*sort_cols)

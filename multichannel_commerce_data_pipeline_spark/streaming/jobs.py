@@ -1581,7 +1581,7 @@ def stream_erasure_apply(
         # scratch sibling first means the old snapshot stays intact as
         # the read source; the swap is two renames, so a crash leaves
         # either the old or the new tree at the published path — never
-        # neither (the _materialize_atomic rule applied per batch).
+        # neither (the layout store's atomic-publish rule, applied per batch).
         import os as _os
         import shutil as _sh
 

@@ -13,8 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType, TimestampType
 
-from multichannel_commerce_data_pipeline_spark.artifacts import artifact
-
 TABLE_NAMES = (
     "region",
     "nation",
@@ -162,7 +160,6 @@ _FANOUT_KEYS = (
 def parallelize_small_scan(
     spark: SparkSession,
     df: DataFrame,
-    min_parts: int | None = None,
     by: str | None = None,
 ) -> DataFrame:
     """Repartition a scan only if it produced fewer partitions than the
@@ -186,7 +183,7 @@ def parallelize_small_scan(
     only RDD-API touch in the package). Files that can't be stat'ed
     (non-local filesystems) are treated as a large scan — the at-scale
     case, where this helper must be a no-op anyway."""
-    target = min_parts or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     if _estimate_scan_partitions(spark, df) < target:
         if by is None:
             cols = set(df.columns)
@@ -235,26 +232,6 @@ def _estimate_scan_partitions(spark: SparkSession, df: DataFrame) -> int:
     parallelism = spark.sparkContext.defaultParallelism
     split = min(max_bytes, max(open_cost, total // max(parallelism, 1)))
     return max(1, -(-total // max(split, 1)))
-
-
-@artifact
-def parquet_memo(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` memoized per (application, path) for
-    IMMUTABLE-once-published artifact directories (the fingerprinted
-    ``ensure_*`` layouts: their path embeds the source digest and they
-    publish by atomic rename, so path identity == content identity).
-
-    Every fresh ``spark.read.parquet`` call re-lists the directory and
-    re-reads a footer for schema inference — driver-side work a real
-    warehouse does once per table via its catalog/manifest (guide §6:
-    file-listing cost; Iceberg/Delta's strongest practical argument).
-    Reusing the scan node reuses the session's cached FileIndex instead
-    of rebuilding it on every query construction. Only the UNEXECUTED
-    scan plan is cached — every execution still reads the parquet
-    files. Never use this for per-run temp dirs (a fresh path per call
-    would just grow the store) or for dirs rewritten in place (the
-    snapshot would go stale)."""
-    return spark.read.parquet(path)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

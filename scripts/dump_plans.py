@@ -666,9 +666,12 @@ COMMENTARY = {
         "(cnt+cnt, min/max) over <=16 rows. Per-bucket share vs the "
         "equi-depth target 1/8 doubles as the re-ANALYZE trigger: "
         "drifted buckets say when re-fitting boundaries is worth its "
-        "full scan. One keyed exchange (bucket), one broadcast of "
-        "the boundary row and one of the 1-row total (asserted in "
-        "tests/test_plans.py)."
+        "full scan. One keyed exchange (bucket) and one broadcast of "
+        "the boundary row (asserted in tests/test_plans.py); the total "
+        "is summed on the same single row that collects the <= 8 "
+        "merged buckets, which then explode back out, so the merged "
+        "histogram executes once: three scans (state, boundary row, "
+        "delta) instead of a second copy joined back for the total."
     ),
     "stream_cusum_rollup": (
         "The ARRIVAL-TIME twin of cusum_changepoint: per-series "
@@ -705,7 +708,9 @@ COMMENTARY = {
         "step (percentile is the one full-column read); cached, the "
         "warm path is the 8-row walk + delta scan and probes 1.0x; "
         "the stored boundaries enter as a broadcast state row, so a "
-        "warm construction runs no Spark job. "
+        "warm construction runs no Spark job. The running count and "
+        "the total are two frames of one window over the bucket rows, "
+        "so the merged histogram executes once (three scans). "
         "The delta filter stays pushed into the parquet scan "
         "(asserted in tests/test_plans.py)."
     ),

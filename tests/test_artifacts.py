@@ -2,16 +2,21 @@
 
 Three properties the engine's fan-outs rely on: concurrent callers
 of one key share one build, a failed build leaves nothing behind, and
-builds of different keys are not serialized behind each other.
+builds of different keys are not serialized behind each other. A
+``@layout`` publishes once per source version, and its writer may
+build another layout.
 """
 
 from __future__ import annotations
 
+import os
 import sys
+import tempfile
 import threading
+from pathlib import Path
 from types import SimpleNamespace
 
-from multichannel_commerce_data_pipeline_spark.artifacts import artifact
+from multichannel_commerce_data_pipeline_spark.artifacts import artifact, layout
 
 THREADS = 8
 
@@ -105,3 +110,69 @@ def test_builds_of_different_keys_overlap():
     results = _run_threads(2, lambda: fit(spark, keys.pop()))
     assert sorted(results) == ["a", "b"]
     assert saw_other == {"a": True, "b": True}
+
+
+def _write_part(path: str, text: str) -> None:
+    Path(path).mkdir(parents=True)
+    (Path(path) / "part-0.parquet").write_text(text)
+
+
+def test_layout_publishes_once_per_source_version(tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    src = sf / "events.parquet"
+    src.write_bytes(b"v1")
+    writes = []
+
+    @layout("events", name="day_counts")
+    def _day_counts(spark, sf_dir, path):
+        writes.append(path)
+        _write_part(path, sf_dir)
+
+    spark = _session("app-layout")
+    first = _day_counts(spark, str(sf))
+    assert Path(first).name == "day_counts"
+    assert Path(first).parent.parent == tmp_path / "tmp" / "mcdp_warehouse"
+    assert _day_counts(spark, str(sf)) == first  # untouched source: reused
+    assert len(writes) == 1
+
+    st = src.stat()
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    second = _day_counts(spark, str(sf))
+    assert second != first  # a new source version publishes a new dir
+    assert len(writes) == 2
+    assert (Path(second) / "part-0.parquet").read_text() == str(sf)
+    assert _day_counts(spark, str(sf)) == second
+    assert len(writes) == 2
+
+
+def test_layout_writer_may_build_another_layout(tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "events.parquet").write_bytes(b"v1")
+
+    @layout("events", name="landing")
+    def _landing(spark, sf_dir, path):
+        _write_part(path, "landed")
+
+    @layout("events", name="rewrite")
+    def _rewrite(spark, sf_dir, path):
+        landed = Path(_landing(spark, sf_dir)) / "part-0.parquet"
+        _write_part(path, landed.read_text() + "+rewritten")
+
+    spark = _session("app-layout-nested")
+    # the outer build holds the publish lock while the inner one runs;
+    # a daemon thread with a timeout turns a deadlock into a failure
+    done: list[str] = []
+    t = threading.Thread(
+        target=lambda: done.append(_rewrite(spark, str(sf))), daemon=True
+    )
+    t.start()
+    t.join(timeout=30)
+    assert not t.is_alive()
+    (rewritten,) = done
+    part = Path(rewritten) / "part-0.parquet"
+    assert part.read_text() == "landed+rewritten"
+    assert Path(_landing(spark, str(sf))).parent == Path(rewritten).parent

@@ -15,6 +15,10 @@ A stream starts and waits only inside ``streaming.jobs.drain``, lands
 ``batch-<id>`` dirs only through ``streaming.jobs.land_batch``, and a
 stream query builds its scratch dirs and arrival feed through
 ``streaming.jobs.Feed``, the one place file mtimes are pinned.
+
+A derived on-disk layout is keyed, placed and published only by
+``artifacts.layout``: no other module spells the warehouse root or
+touches the store's fingerprint and atomic-publish helpers.
 """
 
 from __future__ import annotations
@@ -42,6 +46,9 @@ STREAM_CALLS = {
     "utime": "streaming.jobs.Feed.arrived",
 }
 LANDING = "streaming.jobs.land_batch"
+# the layout store's root dir and private helpers, spelled only in STORE
+WAREHOUSE_ROOT = "mcdp_warehouse"
+LAYOUT_HELPERS = {"_materialize_atomic", "_source_fingerprint"}
 
 
 def _module_name(path: Path) -> str:
@@ -212,4 +219,39 @@ def test_streams_drain_land_and_feed_through_the_shared_helpers():
         f"{len(offenders)} hand-written stream mechanics; start a stream "
         "with streaming.jobs.drain, land a batch with land_batch and "
         "build a query's feed with Feed: " + "; ".join(offenders)
+    )
+
+
+def _layout_mechanics(path: Path) -> list[str]:
+    found = []
+    for node in ast.walk(ast.parse(path.read_text())):
+        where = f"{_module_name(path)} (line {getattr(node, 'lineno', '?')})"
+        if (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and WAREHOUSE_ROOT in node.value
+        ):
+            found.append(f"{where} spells {WAREHOUSE_ROOT!r}")
+        elif isinstance(node, ast.ImportFrom):
+            found += [
+                f"{where} imports {node.module}.{a.name}"
+                for a in node.names
+                if a.name in LAYOUT_HELPERS
+            ]
+        elif isinstance(node, ast.Call) and _call_name(node) in LAYOUT_HELPERS:
+            found.append(f"{where} calls {_call_name(node)}")
+    return found
+
+
+def test_layouts_publish_only_through_the_store():
+    offenders = [
+        hit
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path != STORE
+        for hit in _layout_mechanics(path)
+    ]
+    assert offenders == [], (
+        f"{len(offenders)} hand-written layout publishes; decorate the "
+        "writer with artifacts.layout (ensure_bucketed: "
+        "artifacts.warehouse_root): " + "; ".join(offenders)
     )

@@ -1034,7 +1034,7 @@ def test_histogram_quantile_serves_from_state_not_history(plans):
     assert any(
         "l_shipdate" in l and "GreaterThanOrEqual" in l for l in pushed
     ), pushed
-    # the 1-row tot broadcast plans as BroadcastNestedLoopJoin; a
+    # the 1-row boundary broadcast plans as BroadcastNestedLoopJoin; a
     # CartesianProduct must never appear (the old disjunction passed
     # whenever any BNLJ was present, guarding nothing — ADVICE r15)
     assert "CartesianProduct" not in p

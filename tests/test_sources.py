@@ -537,7 +537,7 @@ def test_materialize_atomic_crash_and_reuse(spark, tmp_path):
     debris of the crashed attempt is cleaned up by the retry."""
     import pytest as _pt
 
-    from multichannel_commerce_data_pipeline_spark.queries.warehouse_queries import (
+    from multichannel_commerce_data_pipeline_spark.artifacts import (
         _materialize_atomic,
     )
 
@@ -577,7 +577,7 @@ def test_source_fingerprint_tracks_data_identity(tmp_path):
     collide."""
     import os
 
-    from multichannel_commerce_data_pipeline_spark.queries.warehouse_queries import (
+    from multichannel_commerce_data_pipeline_spark.artifacts import (
         _source_fingerprint,
     )
 
@@ -625,7 +625,7 @@ def test_materialize_atomic_gutted_and_foreign_debris(tmp_path):
     before the next build instead of accumulating forever."""
     import shutil as _sh
 
-    from multichannel_commerce_data_pipeline_spark.queries.warehouse_queries import (
+    from multichannel_commerce_data_pipeline_spark.artifacts import (
         _materialize_atomic,
     )
 
@@ -717,7 +717,7 @@ def test_materialize_atomic_thread_race_builds_once(tmp_path):
     get the published tree, no partial state."""
     import threading as _th
 
-    from multichannel_commerce_data_pipeline_spark.queries.warehouse_queries import (
+    from multichannel_commerce_data_pipeline_spark.artifacts import (
         _materialize_atomic,
     )
 
