@@ -9,12 +9,11 @@ stall a 1000-executor job (the same failure mode the shingle-frequency
 cap in ``operators/dedup.py:jaccard_pairs`` guards against on the
 document side).
 
-``cap_basket_size`` bounds every basket to its ``max_basket_size``
-smallest items BEFORE the self-join. The cap is deterministic (ordered
-by the item key), so an oracle can reproduce it exactly with
-``ROW_NUMBER() OVER (PARTITION BY basket ORDER BY item) <= cap``, and
-the row_number window partitions on the SAME key the pair join shuffles
-on, so it rides the exchange the join needs anyway.
+``copurchase_pair_counts`` bounds every basket to its
+``MAX_BASKET_SIZE`` smallest items BEFORE pairing. The cap is
+deterministic (ordered by the item key), so an oracle reproduces it
+exactly with ``ROW_NUMBER() OVER (PARTITION BY basket ORDER BY item)
+<= MAX_BASKET_SIZE``.
 
 Reference parity: the reference has no basket analytics at all — this
 is part of the X10 commerce-analytics extension surface (the
@@ -24,32 +23,15 @@ marts' downstream consumers).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def cap_basket_size(
-    items: DataFrame,
-    basket_col: str,
-    item_col: str,
-    max_basket_size: int,
-) -> DataFrame:
-    """Keep only the ``max_basket_size`` smallest ``item_col`` values
-    per basket (deterministic, oracle-reproducible truncation)."""
-    w = Window.partitionBy(basket_col).orderBy(item_col)
-    return (
-        items.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= max_basket_size)
-        .drop("_rn")
-    )
+# items kept per basket; the oracles' ROW_NUMBER filters read it too
+MAX_BASKET_SIZE = 64
 
 
 def copurchase_pair_counts(
-    items: DataFrame,
-    basket_col: str,
-    item_col: str,
-    min_baskets: int = 2,
-    max_basket_size: int = 64,
+    items: DataFrame, basket_col: str, item_col: str, min_baskets: int = 2
 ) -> DataFrame:
     """Count, for every unordered item pair, the number of baskets
     containing both — the support table of association-rule mining.
@@ -63,7 +45,7 @@ def copurchase_pair_counts(
 
     Scale shape (r16 optimization round, guide §2.3): ONE basket-keyed
     exchange — ``collect_set`` dedups and groups in the same partial
-    aggregate, the sorted array's ``max_basket_size``-item prefix is
+    aggregate, the sorted array's ``MAX_BASKET_SIZE``-item prefix is
     the deterministic cap (identical to the previous
     ``distinct → row_number ≤ cap`` pair of exchanges), and pairs are
     generated MAP-SIDE from the capped array (the array is sorted, so
@@ -72,7 +54,7 @@ def copurchase_pair_counts(
     (item_a, item_b). The previous shape paid a (bk, it)-keyed distinct
     exchange, a bk-keyed window exchange, and read that shuffle TWICE
     through the equi self-join. With the cap, no basket emits more than
-    C(max_basket_size, 2) pairs, exactly as before.
+    C(MAX_BASKET_SIZE, 2) pairs, exactly as before.
     """
     grouped = (
         items.filter(
@@ -81,7 +63,7 @@ def copurchase_pair_counts(
         .groupBy(F.col(basket_col).alias("bk"))
         .agg(
             F.slice(
-                F.sort_array(F.collect_set(item_col)), 1, max_basket_size
+                F.sort_array(F.collect_set(item_col)), 1, MAX_BASKET_SIZE
             ).alias("arr")
         )
     )

@@ -14,11 +14,12 @@ oracle can reproduce the pruned row set bit-for-bit — Spark's built-in
 BloomFilterAggregate hashes with xxhash64 internals an external engine
 cannot replay.
 
-Layout: ``m_bits`` bits stored as ``m_bits/32`` words, each word a
+Layout: ``M_BITS`` bits stored as ``M_BITS/32`` words, each word a
 BIGINT holding 32 bits (position ``word*32 + bit``). 32-bit words keep
 every shift/OR/division below 2^32, so the arithmetic is overflow-free
-and sign-identical in both engines. The ``k`` hash functions are
-``portable_hash32(key, seed+i) % m_bits`` (independent seeds).
+and sign-identical in both engines. The ``K`` probe positions come
+from one md5 seeded with ``SEED`` (see ``_positions``). The build, the
+probe and the DuckDB oracle all read these three constants.
 
 Guarantees: no false negatives (every inserted key passes); false
 positives at the standard ``(1 - e^(-k·n/m))^k`` rate — harmless,
@@ -26,8 +27,8 @@ because the exact join still runs AFTER the prune; the filter only
 reduces what reaches it.
 
 Scale shape: the build is one partial-aggregated ``bit_or`` group-by
-over ≤ m_bits/32 word keys (bounded, collected like a codebook — 2 KB
-at the default sizing); the membership test is pure Column arithmetic
+over ≤ M_BITS/32 word keys (bounded, collected like a codebook — 2 KB
+at this sizing); the membership test is pure Column arithmetic
 against one array literal — zero shuffle, zero UDF, and it rides
 inside the fact scan's whole-stage codegen before any exchange.
 
@@ -49,6 +50,7 @@ from multichannel_commerce_data_pipeline_spark.functions import (
 )
 
 WORD_BITS = 32
+M_BITS, K, SEED = 65536, 4, 97
 
 
 def _positions(key: Column, m_bits: int, k: int, seed: int) -> list[Column]:
@@ -82,20 +84,14 @@ def _oracle_pos(key_expr: str, m_bits: int, i: int, seed: int) -> str:
     return f"({term} % {m_bits})"
 
 
-def bloom_build(
-    keys: DataFrame,
-    key_col: str,
-    m_bits: int = 65536,
-    k: int = 4,
-    seed: int = 97,
-) -> list[int]:
+def bloom_build(keys: DataFrame, key_col: str) -> list[int]:
     """Build the filter over ``keys[key_col]`` (cast to string before
-    hashing) and return it as a dense list of ``m_bits/32`` ints, index
-    = position // 32. Distributed: each key emits its k (word, bitmask)
+    hashing) and return it as a dense list of ``M_BITS/32`` ints, index
+    = position // 32. Distributed: each key emits its K (word, bitmask)
     pairs map-side, a partial-aggregated ``bit_or`` collapses them, and
-    only the ≤ m_bits/32 word rows are collected."""
+    only the ≤ M_BITS/32 word rows are collected."""
     key = F.col(key_col).cast("string")
-    pos = F.explode(F.array(*_positions(key, m_bits, k, seed))).alias("pos")
+    pos = F.explode(F.array(*_positions(key, M_BITS, K, SEED))).alias("pos")
     # dynamic shift via a 32-entry pow2 lookup: the PySpark shiftleft
     # wrapper only accepts a literal shift count.
     pow2 = F.lit([1 << b for b in range(WORD_BITS)])
@@ -111,22 +107,16 @@ def bloom_build(
         .agg(F.bit_or("mask").alias("wval"))
         .collect()
     )
-    filled = [0] * (m_bits // WORD_BITS)
+    filled = [0] * (M_BITS // WORD_BITS)
     for r in words:
         filled[r.word] = r.wval
     return filled
 
 
-def bloom_contains(
-    key: Column,
-    words: list[int],
-    m_bits: int = 65536,
-    k: int = 4,
-    seed: int = 97,
-) -> Column:
-    """Membership predicate against a built filter: true iff all k bits
+def bloom_contains(key: Column, words: list[int]) -> Column:
+    """Membership predicate against a built filter: true iff all K bits
     are set. Pure Column arithmetic over ONE array literal (a single
-    Literal node, not m_bits/32 lit nodes), so the predicate stays
+    Literal node, not M_BITS/32 lit nodes), so the predicate stays
     inside whole-stage codegen on the scan side of the join. The bit
     test is ``floor(word / 2^bit) % 2`` — the PySpark shiftright
     wrapper only takes literal shift amounts, and with word < 2^32 the
@@ -137,7 +127,7 @@ def bloom_contains(
     filter condition re-evaluates every occurrence of a sub-expression,
     so naively inlining the md5 hash into k bit tests costs ~8
     md5+conv evaluations per row (1.76 s vs 0.66 s on the sf0.1 orders
-    scan); (b) every REFERENCE to the m_bits/32-word array literal
+    scan); (b) every REFERENCE to the M_BITS/32-word array literal
     copies the 2048-int node into the expression tree, and k copies
     made per-call plan analysis/codegen the dominant cost (~1.5 s).
     Both are solved by higher-order-function variable binding: the
@@ -164,8 +154,8 @@ def bloom_contains(
         h1 = h % (1 << 30)
         h2 = ((h - h1) / (1 << 30)).cast("long")
         positions = F.transform(
-            F.sequence(F.lit(0), F.lit(k - 1)),
-            lambda i: (h1 + h2 * i.cast("long")) % m_bits,
+            F.sequence(F.lit(0), F.lit(K - 1)),
+            lambda i: (h1 + h2 * i.cast("long")) % M_BITS,
         )
         return F.forall(
             positions,
@@ -180,7 +170,7 @@ def bloom_contains(
         )
 
     return F.exists(
-        F.array(portable_hash64(key.cast("string"), seed)), tests
+        F.array(portable_hash64(key.cast("string"), SEED)), tests
     )
 
 
@@ -190,26 +180,23 @@ def oracle_bloom_ctes(
     fact_sql: str,
     fact_key_expr: str,
     fact_id_expr: str,
-    m_bits: int = 65536,
-    k: int = 4,
-    seed: int = 97,
 ) -> str:
     """DuckDB CTE bodies reproducing build + probe: emits ``bloomw``
     (word → wval, missing word = all bits 0) and ``bloom_pass`` (the
-    ``fact_id_expr`` values whose key has all k bits set; the LEFT JOIN
+    ``fact_id_expr`` values whose key has all K bits set; the LEFT JOIN
     + COALESCE makes a missing word read as 0). Splice into a query's
     WITH list and filter the fact with ``fid IN (SELECT fid FROM
     bloom_pass)``."""
     build = " UNION ALL ".join(
-        f"SELECT {_oracle_pos(key_expr, m_bits, i, seed)} AS pos"
+        f"SELECT {_oracle_pos(key_expr, M_BITS, i, SEED)} AS pos"
         f" FROM ({keys_sql})"
-        for i in range(k)
+        for i in range(K)
     )
     probe = " UNION ALL ".join(
         f"SELECT {fact_id_expr} AS fid,"
-        f" {_oracle_pos(fact_key_expr, m_bits, i, seed)} AS pos"
+        f" {_oracle_pos(fact_key_expr, M_BITS, i, SEED)} AS pos"
         f" FROM ({fact_sql})"
-        for i in range(k)
+        for i in range(K)
     )
     return f"""
     bloom_pos AS ({build}),
@@ -228,5 +215,5 @@ def oracle_bloom_ctes(
       LEFT JOIN bloomw b ON CAST(f.pos // {WORD_BITS} AS INT) = b.word
     ),
     bloom_pass AS (
-      SELECT fid FROM fact_bits GROUP BY fid HAVING SUM(bit) = {k}
+      SELECT fid FROM fact_bits GROUP BY fid HAVING SUM(bit) = {K}
     )"""

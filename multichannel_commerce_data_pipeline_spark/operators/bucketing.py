@@ -61,7 +61,6 @@ def stratified_sample(
     key: Column,
     strata_col: Column,
     fractions: dict[str, float],
-    n_buckets: int = 1000,
 ) -> Column:
     """Deterministic stratified sampling — the data-mixing step of a
     training-data pipeline (up/down-weight sources or languages to hit
@@ -77,10 +76,10 @@ def stratified_sample(
 
     Returns the filter Column; apply with ``df.filter(...)``.
     """
-    bucket = deterministic_bucket(key, n_buckets)
+    bucket = deterministic_bucket(key, 1000)
     keep = F.lit(False)
     for value, frac in fractions.items():
-        threshold = int(round(frac * n_buckets))
+        threshold = int(round(frac * 1000))
         keep = keep | ((strata_col == value) & (bucket < threshold))
     return keep
 
@@ -88,7 +87,6 @@ def stratified_sample(
 def bucketed_choice(
     key: Column,
     choices: Sequence[tuple[str, float]],
-    n_buckets: int = 1000,
 ) -> Column:
     """Map a key to a categorical value with given marginal probabilities.
 
@@ -97,12 +95,12 @@ def bucketed_choice(
     remainder. Replaces the reference's rand() cascades with identical
     intended distribution but stable assignment.
     """
-    bucket = deterministic_bucket(key, n_buckets)
+    bucket = deterministic_bucket(key, 1000)
     expr = None
     cum = 0.0
     for value, p in choices[:-1]:
         cum += p
-        threshold = int(round(cum * n_buckets))
+        threshold = int(round(cum * 1000))
         cond = bucket < threshold
         expr = F.when(cond, value) if expr is None else expr.when(cond, value)
     last_value = choices[-1][0]

@@ -172,8 +172,6 @@ def power_iteration(
     embeddings: DataFrame,
     n_iters: int = 2,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Top principal direction of the (uncentered) embedding corpus by
     power iteration — in-engine linear algebra on the same bounded-
@@ -195,7 +193,7 @@ def power_iteration(
     """
     spark = embeddings.sparkSession
     corpus = embeddings.select(
-        F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v")
+        F.col("vec_id").alias("vid"), _as_double(F.col("embedding")).alias("v")
     )
     vrow = spark.range(1).select(
         F.transform(

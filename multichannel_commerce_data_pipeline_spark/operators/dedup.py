@@ -25,6 +25,13 @@ from multichannel_commerce_data_pipeline_spark.functions import (
 )
 from multichannel_commerce_data_pipeline_spark.operators.text import tokens
 
+# Signature shapes the DuckDB oracles (queries/dedup.py) render too:
+# MinHash keeps 16 slots in 8 bands of 2; SimHash is 16 bits in 4 bands
+# of 4, and a Hamming bound below the band count guarantees (pigeonhole)
+# that every pair within it shares a band.
+MINHASH_K, MINHASH_BANDS = 16, 8
+SIMHASH_BITS, SIMHASH_BANDS, SIMHASH_MAX_HAMMING = 16, 4, 3
+
 
 def exact_dedup(df: DataFrame, keys: list[str], tiebreak: str) -> DataFrame:
     """Keep exactly one row per key combination — the row with the
@@ -51,14 +58,12 @@ def exact_dedup(df: DataFrame, keys: list[str], tiebreak: str) -> DataFrame:
     )
 
 
-def passage_dedup(
-    df: DataFrame, id_col: str, text_col: str, passage_words: int = 10
-) -> DataFrame:
+def passage_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Passage-level exact dedup — the distributable form of
     exact-substring training-data dedup (Lee et al. 2022,
     arXiv:2107.06499, which uses a suffix array; suffix arrays don't
     shard, fixed-width passages do). Each document is cut into
-    non-overlapping ``passage_words``-word passages; only the globally
+    non-overlapping 10-word passages; only the globally
     FIRST occurrence of each distinct passage (min ``id_col``, then min
     position) survives, and every document is rebuilt from its
     surviving passages. Removes the boilerplate/mirror passages that
@@ -89,12 +94,10 @@ def passage_dedup(
     """
     w_words = F.split(F.col(text_col), " ")
     base = df.select(F.col(id_col).alias("doc"), w_words.alias("__ws"))
-    n_passages = F.ceil(F.size("__ws") / F.lit(passage_words)).cast("long")
+    n_passages = F.ceil(F.size("__ws") / F.lit(10)).cast("long")
 
     def passage_at(k):
-        return F.concat_ws(
-            " ", F.slice(F.col("__ws"), k * passage_words + 1, passage_words)
-        )
+        return F.concat_ws(" ", F.slice(F.col("__ws"), k * 10 + 1, 10))
 
     narrow = base.select(
         "doc",
@@ -241,16 +244,14 @@ def boilerplate_cut_with_sketch(
     id_col: str,
     text_col: str,
     cells: list[int],
-    line_words: int = 10,
-    df_threshold: int = 2,
     w: int = 64,
     d: int = 3,
     seed: int = 131,
 ) -> DataFrame:
     """The APPLY half of sketch-backed boilerplate removal: cut every
-    line whose ESTIMATED corpus document-frequency (a Count-Min grid,
-    e.g. the one ``streaming.jobs.stream_line_df_sketch`` maintains)
-    exceeds ``df_threshold`` — the same kill-everywhere semantics as
+    10-word line whose ESTIMATED corpus document-frequency (a Count-Min
+    grid, e.g. the one ``streaming.jobs.stream_line_df_sketch``
+    maintains) exceeds 2 — the same kill-everywhere semantics as
     :func:`boilerplate_lines`, but thresholding the sketch estimate
     instead of an exact df, so the decision needs only the d*w-cell
     grid, never a corpus-wide aggregate. est >= exact always, so the
@@ -284,12 +285,10 @@ def boilerplate_cut_with_sketch(
     base = df.select(
         F.col(id_col).alias("doc"), F.split(F.col(text_col), " ").alias("__ws")
     )
-    n_lines = F.ceil(F.size("__ws") / F.lit(line_words)).cast("long")
+    n_lines = F.ceil(F.size("__ws") / F.lit(10)).cast("long")
 
     def line_at(k):
-        return F.concat_ws(
-            " ", F.slice(F.col("__ws"), k * line_words + 1, line_words)
-        )
+        return F.concat_ws(" ", F.slice(F.col("__ws"), k * 10 + 1, 10))
 
     def est_df(dig):
         pos = _positions(dig, w, d, seed)
@@ -303,8 +302,7 @@ def boilerplate_cut_with_sketch(
     def line_survives(k):
         return F.exists(
             F.array(F.md5(line_at(k))),
-            lambda dig: F.coalesce(est_df(dig), F.lit(0))
-            <= F.lit(df_threshold),
+            lambda dig: F.coalesce(est_df(dig), F.lit(0)) <= F.lit(2),
         )
 
     kept = F.when(
@@ -388,12 +386,11 @@ def jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
     threshold: float = 0.5,
     df_cap: int | None = None,
     shingle_frame: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard near-duplicate pairs above a threshold.
+    """Exact word 3-gram Jaccard near-duplicate pairs above a threshold.
 
     Candidate pairs come from an equi-join on shared shingles, so cost is
     Σ_shingle df(shingle)². ``df_cap`` drops shingles appearing in more
@@ -418,7 +415,7 @@ def jaccard_pairs(
     sh = (
         shingle_frame
         if shingle_frame is not None
-        else _capped_shingles(df, id_col, text_col, n, df_cap)
+        else _capped_shingles(df, id_col, text_col, df_cap)
     )
     left = sh.select(
         F.col("doc").alias("doc_a"), F.col("n_sh").alias("n_a"), "shingle"
@@ -441,9 +438,9 @@ def jaccard_pairs(
 
 
 def _capped_shingles(
-    df: DataFrame, id_col: str, text_col: str, n: int, df_cap: int | None
+    df: DataFrame, id_col: str, text_col: str, df_cap: int | None
 ) -> DataFrame:
-    """Exploded (doc, n_sh, shingle) rows, df-capped, hash-partitioned
+    """Exploded (doc, n_sh, 3-gram shingle) rows, df-capped, hash-partitioned
     on shingle BEFORE any consumer: the tokenize→shingle→explode
     pipeline is the expensive subtree here, and the self-join that
     follows reads it twice (three times with the df-cap aggregate).
@@ -453,7 +450,7 @@ def _capped_shingles(
     it — measured ~2x on the containment/jaccard family at sf0.1 —
     while also satisfying the hash(shingle) distribution the join and
     the cap aggregate both require (no second exchange)."""
-    sh = doc_shingles(df, id_col, text_col, n)
+    sh = doc_shingles(df, id_col, text_col, 3)
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     sh = sh.repartition(n_parts, "shingle")
     if df_cap is not None:
@@ -471,7 +468,6 @@ def containment_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
     threshold: float = 0.5,
     df_cap: int | None = None,
     shingle_frame: DataFrame | None = None,
@@ -497,7 +493,7 @@ def containment_pairs(
     sh = (
         shingle_frame
         if shingle_frame is not None
-        else _capped_shingles(df, id_col, text_col, n, df_cap)
+        else _capped_shingles(df, id_col, text_col, df_cap)
     )
     left = sh.select(
         F.col("doc").alias("doc_a"), F.col("n_sh").alias("n_a"), "shingle"
@@ -584,41 +580,17 @@ def _mh_slot_cols(k: int):
     )
 
 
-def minhash_signature(
-    df: DataFrame, id_col: str, text_col: str, k: int = 8, n: int = 3
-) -> DataFrame:
-    """MinHash signature (k hash functions) per document.
-
-    min-hash_j(doc) = min over shingles of hash_j(shingle); Jaccard(a,b)
-    ≈ fraction of agreeing signature slots (Broder 1997). The k
-    functions come from Kirsch-Mitzenmacher double hashing
-    ``h_j = h1 + j*h2`` — two md5 evaluations per shingle instead of k
-    (the md5s dominated signature cost at k=16), still bit-reproducible
-    in any SQL engine.
-
-    Computed entirely map-side: shingle/hash arrays stay per-row and
-    each slot is ``array_min(zip_with(h1a, h2a, x+j·y))`` — no explode,
-    no group-by shuffle. Measured 7.4s → 0.8s at sf0.1 local[32] vs the
-    explode+groupBy formulation, identical values."""
-    hashed = _km_hash_arrays(doc_shingle_arrays(df, id_col, text_col, n))
-    return hashed.select("doc", *_mh_slot_cols(k))
-
-
 def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 16,
-    bands: int = 8,
-    n: int = 3,
-    threshold: float = 0.5,
-    persist: bool = True,
+    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.5
 ) -> DataFrame:
-    """MinHash + banded LSH near-dup pairs, verified with exact Jaccard.
+    """MinHash + banded LSH near-dup pairs over word 3-gram shingles,
+    verified with exact Jaccard.
 
-    k hashes split into ``bands`` bands of k/bands rows; docs colliding
-    on any full band become candidates (P[collide] = 1-(1-s^r)^b), then
-    candidates are verified with exact shingle Jaccard. Only candidates
+    ``MINHASH_K`` hashes split into ``MINHASH_BANDS`` bands of k/bands
+    rows (Kirsch-Mitzenmacher double hashing ``h_j = h1 + j*h2``: two
+    md5 slices per shingle instead of k); docs colliding on any full
+    band become candidates (P[collide] = 1-(1-s^r)^b), then candidates
+    are verified with exact shingle Jaccard. Only candidates
     are ever paired — no all-pairs stage, scale-safe.
 
     The whole pipeline is two shuffles:
@@ -632,14 +604,10 @@ def minhash_lsh_pairs(
          count as ``size(array_intersect(h1a_a, h1a_b))`` (shuffle #2) —
          no second shingling pass, no explode-join-groupBy.
 
-    The compact per-doc frame (``persist``, default on) is a few longs
-    per shingle plus k slots — orders of magnitude smaller than the
-    corpus; MEMORY_AND_DISK so a 100 TB run degrades to disk instead of
-    recomputing the md5 pass for the verification branch — measured
-    1.5 s persisted vs 5.3 s unpersisted warm at sf0.1 local[32] in a
-    clean JVM. (When A/B-ing this flag, use fresh sessions: a prior
-    persisted run's InMemoryRelation stays in the CacheManager and
-    plan-matches the unpersisted query, hiding the recompute.)
+    The compact per-doc frame is persisted: a few longs per shingle
+    plus k slots — orders of magnitude smaller than the corpus;
+    MEMORY_AND_DISK so a 100 TB run degrades to disk instead of
+    recomputing the md5 pass for the verification branch.
 
     Two distinct shingles colliding on the 60-bit h1 within one doc
     would perturb the intersection count (~2⁻⁶⁰ per pair); the oracle
@@ -648,31 +616,16 @@ def minhash_lsh_pairs(
     """
     from pyspark import StorageLevel
 
-    rows = k // bands
-    hashed = _km_hash_arrays(doc_shingle_arrays(df, id_col, text_col, n))
-    sig = hashed.select("doc", "n_sh", "h1a", *_mh_slot_cols(k))
-    if persist:
-        sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+    hashed = _km_hash_arrays(doc_shingle_arrays(df, id_col, text_col, 3))
+    sig = hashed.select("doc", "n_sh", "h1a", *_mh_slot_cols(MINHASH_K)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     # Band key = the r raw minhash values (array<long>), not a re-hash of
     # them: equality of values is exactly band collision, so the result
     # is oracle-reproducible in any SQL engine. The shuffle key is a few
     # longs instead of one — negligible vs. xxhash64 bucketing, and it
     # removes the (tiny) false-merge probability of 64-bit re-hashing.
-    band_cols = memo_cols(
-        ("mh_band_cols", k, bands),
-        lambda: [
-            F.struct(
-                F.lit(b).alias("band"),
-                F.array(
-                    *[F.col(f"mh_{b * rows + r}") for r in range(rows)]
-                ).alias("bh"),
-            )
-            for b in range(bands)
-        ],
-    )
-    keyed = sig.select(
-        "doc", F.explode(F.array(*band_cols)).alias("bk")
-    ).select("doc", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
+    keyed = _band_keys(sig)
     cand = (
         keyed.alias("x")
         .join(keyed.alias("y"), ["band", "bh"])
@@ -700,35 +653,23 @@ def minhash_lsh_pairs(
     )
 
 
-def minhash_lsh_index(
-    df: DataFrame, id_col: str, text_col: str, k: int = 16, n: int = 3
-) -> DataFrame:
+def minhash_lsh_index(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc, n_sh, h1a, mh_0..mh_{k-1}) — the per-document MinHash
     signature frame an incremental dedup deployment PERSISTS as its
     index table (partitioned/bucketed so each ingest batch's band join
     prunes to the buckets it touches). Entirely map-side to compute;
     identical signature math to :func:`minhash_lsh_pairs`."""
-    hashed = _km_hash_arrays(doc_shingle_arrays(df, id_col, text_col, n))
-    return hashed.select(
-        "doc",
-        "n_sh",
-        "h1a",
-        *[
-            F.array_min(
-                F.zip_with("h1a", "h2a", lambda x, y: x + F.lit(j) * y)
-            ).alias(f"mh_{j}")
-            for j in range(k)
-        ],
-    )
+    hashed = _km_hash_arrays(doc_shingle_arrays(df, id_col, text_col, 3))
+    return hashed.select("doc", "n_sh", "h1a", *_mh_slot_cols(MINHASH_K))
 
 
-def _band_keys(sig: DataFrame, k: int, bands: int) -> DataFrame:
+def _band_keys(sig: DataFrame) -> DataFrame:
     """(doc, band, bh) band keys exploded from a signature frame — the
     LSH join key: bh is the raw r-tuple of minhash values (value
     equality IS band collision, oracle-reproducible)."""
-    rows = k // bands
+    rows = MINHASH_K // MINHASH_BANDS
     band_cols = memo_cols(
-        ("mh_band_cols", k, bands),
+        ("mh_band_cols", MINHASH_K, MINHASH_BANDS),
         lambda: [
             F.struct(
                 F.lit(b).alias("band"),
@@ -736,7 +677,7 @@ def _band_keys(sig: DataFrame, k: int, bands: int) -> DataFrame:
                     *[F.col(f"mh_{b * rows + r}") for r in range(rows)]
                 ).alias("bh"),
             )
-            for b in range(bands)
+            for b in range(MINHASH_BANDS)
         ],
     )
     return sig.select("doc", F.explode(F.array(*band_cols)).alias("bk")).select(
@@ -745,11 +686,7 @@ def _band_keys(sig: DataFrame, k: int, bands: int) -> DataFrame:
 
 
 def minhash_lsh_probe(
-    index_sig: DataFrame,
-    batch_sig: DataFrame,
-    k: int = 16,
-    bands: int = 8,
-    threshold: float = 0.5,
+    index_sig: DataFrame, batch_sig: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
     """Incremental near-dup detection: probe a NEW batch of documents
     against an existing signature index WITHOUT re-pairing the corpus.
@@ -771,8 +708,8 @@ def minhash_lsh_probe(
     ingest step runs :func:`minhash_lsh_pairs` over the (small) batch
     for those, then appends the batch's signatures to the index.
     """
-    bk_new = _band_keys(batch_sig, k, bands).withColumnRenamed("doc", "new_doc")
-    bk_idx = _band_keys(index_sig, k, bands).withColumnRenamed("doc", "idx_doc")
+    bk_new = _band_keys(batch_sig).withColumnRenamed("doc", "new_doc")
+    bk_idx = _band_keys(index_sig).withColumnRenamed("doc", "idx_doc")
     cand = (
         bk_new.join(bk_idx, ["band", "bh"])
         .select("new_doc", "idx_doc")
@@ -912,9 +849,7 @@ def dedup_clusters(
     return labels.select("doc", F.col("lbl").alias("cluster_id"))
 
 
-def star_contract(
-    pairs: DataFrame, max_iter: int = 30, stats: dict | None = None
-) -> DataFrame:
+def star_contract(pairs: DataFrame, stats: dict | None = None) -> DataFrame:
     """Connected components by alternating large-star/small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
     Beyond"): converges in O(log^2 n) ROUNDS INDEPENDENT OF GRAPH
@@ -953,7 +888,7 @@ def star_contract(
         .localCheckpoint(eager=True)
     )
     rounds = 0
-    for _ in range(max_iter):
+    for _ in range(30):
         rounds += 1
         # large-star over the bidirectional neighbor view
         D = E.union(E.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -997,28 +932,20 @@ def star_contract(
     )
 
 
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    bits: int = 16,
-    bands: int = 4,
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """SimHash near-duplicate pairs via banded Hamming search.
 
-    The ``bits``-bit fingerprint is cut into ``bands`` equal bands; two
-    fingerprints within Hamming distance ``max_hamming`` < ``bands``
-    must agree on at least one full band (pigeonhole), so candidates are
+    The ``SIMHASH_BITS``-bit fingerprint is cut into ``SIMHASH_BANDS``
+    equal bands; two fingerprints within Hamming distance
+    ``SIMHASH_MAX_HAMMING`` < ``SIMHASH_BANDS`` must agree on at least one full band (pigeonhole), so candidates are
     exactly the pairs colliding on any (band, band-bits) key — an
     equi-join, never all-pairs — and recall at the distance bound is 1.
     Candidates are then filtered with the exact popcount of the XOR.
     The band join ships only (doc, fingerprint) longs; at corpus scale
     the candidate count tracks band-bucket occupancy, the same
     collision-bounded shape as :func:`minhash_lsh_pairs`."""
-    rows = bits // bands
-    assert max_hamming < bands, "pigeonhole guarantee needs max_hamming < bands"
-    sims = simhash(df, id_col, text_col, bits)
+    rows = SIMHASH_BITS // SIMHASH_BANDS
+    sims = simhash(df, id_col, text_col)
     mask = (1 << rows) - 1
     band_keys = F.array(
         *[
@@ -1028,7 +955,7 @@ def simhash_pairs(
                 .bitwiseAND(F.lit(mask))
                 .alias("bk"),
             )
-            for b in range(bands)
+            for b in range(SIMHASH_BANDS)
         ]
     )
     keyed = sims.select(
@@ -1047,7 +974,7 @@ def simhash_pairs(
         )
         .dropDuplicates(["doc_a", "doc_b"])
         .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
     )
 
 
@@ -1093,8 +1020,9 @@ def blocked_levenshtein_pairs(
     )
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFrame:
-    """SimHash fingerprint (Charikar 2002) from token hashes.
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``SIMHASH_BITS``-bit SimHash fingerprint (Charikar 2002) from
+    token hashes.
 
     Each token votes ±1 per bit of its (portable) hash; the sign of each
     bit-sum becomes the fingerprint bit. Near-duplicates have small
@@ -1117,22 +1045,18 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFr
             lambda acc, h: acc
             + F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
         ).alias(f"v_{b}")
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     ]
     agg = wh.select("doc", *votes)
     fp = None
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         bit = F.when(F.col(f"v_{b}") > 0, F.lit(2**b)).otherwise(F.lit(0))
         fp = bit if fp is None else fp + bit
     return agg.select("doc", fp.cast("long").alias("simhash"))
 
 
 def decontaminate_flags(
-    train: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 6,
+    train: DataFrame, benchmark: DataFrame, n: int = 6
 ) -> DataFrame:
     """Benchmark decontamination — flag every training document sharing
     at least one n-gram with a held-out evaluation set (the hygiene pass
@@ -1148,11 +1072,11 @@ def decontaminate_flags(
     Returns (doc, n_contaminated_ngrams) for flagged docs only.
     """
     bench_grams = (
-        doc_shingles(benchmark, id_col, text_col, n)
+        doc_shingles(benchmark, "doc_id", "text", n)
         .select(F.col("shingle"))
         .distinct()
     )
-    train_grams = doc_shingles(train, id_col, text_col, n)
+    train_grams = doc_shingles(train, "doc_id", "text", n)
     hits = train_grams.join(F.broadcast(bench_grams), "shingle")
     return hits.groupBy("doc").agg(
         F.count(F.lit(1)).alias("n_contaminated_ngrams")

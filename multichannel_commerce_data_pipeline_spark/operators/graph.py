@@ -15,13 +15,10 @@ round, one shuffle of edge contributions, nothing quadratic. At
 rounds; AQE handles hub-node skew on the ``dst`` aggregate the same
 way it does any skewed group-by.
 
-Plan depth: for a handful of rounds the whole computation stays ONE
+Plan depth: PageRank runs ``PAGERANK_ROUNDS`` rounds and label
+propagation a caller-given handful, so the whole computation stays ONE
 lazy plan — Catalyst's ReuseExchange collapses the repeated edge/deg
-subtrees, and no driver-side job runs until the caller acts. Past
-``checkpoint_every`` rounds the rank frame is ``localCheckpoint``-ed
-so the lineage cannot grow superlinearly (the dedup_clusters
-plan-growth lesson) — long-horizon runs trade a per-round
-materialization for bounded planning cost.
+subtrees, and no driver-side job runs until the caller acts.
 
 Determinism: floating-point addition does not commute, so a naive
 ``SUM(double)`` makes ranks partition-order dependent. Every per-edge
@@ -39,38 +36,26 @@ from pyspark.sql import functions as F
 
 from multichannel_commerce_data_pipeline_spark.functions import dround
 
+# rounds of the PageRank update; the DuckDB oracle unrolls as many
+PAGERANK_ROUNDS = 2
 
-def pagerank(
-    edges: DataFrame,
-    n_iters: int = 2,
-    damping: float = 0.85,
-    checkpoint_every: int = 4,
-) -> DataFrame:
+
+def pagerank(edges: DataFrame) -> DataFrame:
     """Weighted PageRank over a directed edge frame ``(src, dst, w)``.
 
     ``rank_{t+1}(v) = (1-d) + d * Σ_{(u,v)} rank_t(u) * w(u,v)/deg(u)``
-    with ``deg(u) = Σ_out w`` — the classic damped update, initialized
-    at 1.0. Returns ``(node, rank)`` for every node that appears as a
-    destination (on a symmetrized graph: every node). Dangling nodes
-    (no out-edges) are assumed absent — symmetrize the graph or drop
-    them upstream.
-
-    Fully lazy for short horizons; every ``checkpoint_every`` rounds
-    the rank lineage is truncated with an eager ``localCheckpoint`` to
-    keep planning cost flat on long runs.
+    with ``deg(u) = Σ_out w`` and d = 0.85 — the classic damped update,
+    initialized at 1.0 and run ``PAGERANK_ROUNDS`` times. Returns
+    ``(node, rank)`` for every node that appears as a destination (on a
+    symmetrized graph: every node). Dangling nodes (no out-edges) are
+    assumed absent — symmetrize the graph or drop them upstream.
     """
     deg = edges.groupBy("src").agg(F.sum("w").cast("double").alias("deg"))
     ed = edges.join(deg, "src")
-    return pagerank_annotated(ed, deg, n_iters, damping, checkpoint_every)
+    return pagerank_annotated(ed, deg)
 
 
-def pagerank_annotated(
-    ed: DataFrame,
-    deg: DataFrame,
-    n_iters: int = 2,
-    damping: float = 0.85,
-    checkpoint_every: int = 4,
-) -> DataFrame:
+def pagerank_annotated(ed: DataFrame, deg: DataFrame) -> DataFrame:
     """:func:`pagerank` over a PRE-ANNOTATED edge frame ``(src, dst,
     w, deg)`` plus its ``(src, deg)`` degree frame. The annotation is
     a pure function of the graph, so repeated ranking queries cache
@@ -79,7 +64,7 @@ def pagerank_annotated(
     optimization round, guide §2.4 — the per-sf_dir cached-frame rule:
     persist partitioned on the downstream join key)."""
     ranks = deg.select(F.col("src").alias("node"), F.lit(1.0).alias("r"))
-    for i in range(n_iters):
+    for _ in range(PAGERANK_ROUNDS):
         contrib = ed.join(ranks, ed["src"] == ranks["node"]).select(
             F.col("dst").alias("node"),
             dround((F.col("r") * F.col("w")) / F.col("deg"), 9)
@@ -88,13 +73,9 @@ def pagerank_annotated(
         )
         ranks = contrib.groupBy("node").agg(
             dround(
-                F.lit(1.0 - damping)
-                + F.lit(damping) * F.sum("c").cast("double"),
-                9,
+                F.lit(1.0 - 0.85) + F.lit(0.85) * F.sum("c").cast("double"), 9
             ).alias("r")
         )
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < n_iters:
-            ranks = ranks.localCheckpoint(eager=True)
     return ranks
 
 
@@ -211,9 +192,7 @@ def oriented_triangle_counts(
     return out
 
 
-def label_propagation(
-    edges: DataFrame, n_iters: int = 2, checkpoint_every: int = 4
-) -> DataFrame:
+def label_propagation(edges: DataFrame, n_iters: int = 2) -> DataFrame:
     """Synchronous label-propagation community detection over a
     symmetrized weighted edge frame ``(src, dst, w)``.
 
@@ -230,15 +209,13 @@ def label_propagation(
     per node — both aggregates partial (map-side) combined, so the
     exchanges carry one row per (node, distinct neighbor label), never
     the raw edge multiplicity. Weights are integral (co-purchase
-    counts): the sums are exact, no float-order concerns. Same
-    ``localCheckpoint`` lineage bound as :func:`pagerank` for long
-    horizons."""
+    counts): the sums are exact, no float-order concerns."""
     nodes = (
         edges.select(F.col("src").alias("node"))
         .distinct()
     )
     labels = nodes.select("node", F.col("node").alias("label"))
-    for i in range(n_iters):
+    for _ in range(n_iters):
         nb = edges.join(
             labels, edges["src"] == labels["node"]
         ).select(F.col("dst").alias("n2"), "label", "w")
@@ -251,6 +228,4 @@ def label_propagation(
             .agg(best)
             .select(F.col("n2").alias("node"), F.col("best.label").alias("label"))
         )
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < n_iters:
-            labels = labels.localCheckpoint(eager=True)
     return labels

@@ -59,22 +59,18 @@ N_BUCKETS = 128
 HASH_SEED = 7
 
 
-def feature_buckets(
-    text: Column, n_buckets: int = N_BUCKETS, seed: int = HASH_SEED
-) -> Column:
+def feature_buckets(text: Column) -> Column:
     """array<bigint> of hashed unigram+bigram bucket ids for a document.
 
     Unigrams and space-joined adjacent bigrams (the DSIR feature space)
-    are hashed with the portable 32-bit md5 hash and folded into
-    ``n_buckets`` buckets. Entirely map-side; duplicates are KEPT (bag
+    are hashed with the portable 32-bit md5 hash (seed ``HASH_SEED``)
+    and folded into ``N_BUCKETS`` buckets. Entirely map-side; duplicates are KEPT (bag
     of words, not set — each occurrence contributes to the profile and
     to the score)."""
-    return feature_buckets_from(tokens(text), n_buckets, seed)
+    return feature_buckets_from(tokens(text))
 
 
-def feature_buckets_from(
-    toks: Column, n_buckets: int = N_BUCKETS, seed: int = HASH_SEED
-) -> Column:
+def feature_buckets_from(toks: Column) -> Column:
     """:func:`feature_buckets` over a MATERIALIZED token-array column —
     for callers that already project ``tokens(text)`` (the curation
     signal mart stages toks for the n-gram multisets anyway), so the
@@ -86,7 +82,7 @@ def feature_buckets_from(
         lambda a, b: F.concat(a, F.lit(" "), b),
     )
     feats = F.concat(toks, bigrams)
-    return F.transform(feats, lambda s: portable_hash32(s, seed) % n_buckets)
+    return F.transform(feats, lambda s: portable_hash32(s, HASH_SEED) % N_BUCKETS)
 
 
 def bucket_class_profile(
@@ -114,9 +110,7 @@ def quantize_logprob(v: float) -> Decimal:
     )
 
 
-def dsir_log_ratios(
-    profile_rows: list, target_cls, n_buckets: int = N_BUCKETS
-) -> dict[int, Decimal]:
+def dsir_log_ratios(profile_rows: list, target_cls) -> dict[int, Decimal]:
     """bucket -> quantized ln(p_target(b) / p_raw(b)) with add-one
     smoothing, from collected (cls, b, cnt) rows. Raw = ALL classes
     (target included), matching DSIR's raw-corpus denominator."""
@@ -131,17 +125,15 @@ def dsir_log_ratios(
     return {
         b: quantize_logprob(
             math.log(
-                ((tgt.get(b, 0) + 1) / (t_tot + n_buckets))
-                / ((raw[b] + 1) / (r_tot + n_buckets))
+                ((tgt.get(b, 0) + 1) / (t_tot + N_BUCKETS))
+                / ((raw[b] + 1) / (r_tot + N_BUCKETS))
             )
         )
         for b in raw
     }
 
 
-def nb_log_model(
-    profile_rows: list, class_sizes: dict, n_buckets: int = N_BUCKETS
-) -> tuple[dict, dict]:
+def nb_log_model(profile_rows: list, class_sizes: dict) -> tuple[dict, dict]:
     """(log_priors, log_likelihoods) for hashed naive Bayes.
 
     log_priors: cls -> quantized ln(n_cls / n_total).
@@ -162,7 +154,7 @@ def nb_log_model(
     }
     lls = {
         (c, b): quantize_logprob(
-            math.log((cnt.get((c, b), 0) + 1) / (totals.get(c, 0) + n_buckets))
+            math.log((cnt.get((c, b), 0) + 1) / (totals.get(c, 0) + N_BUCKETS))
         )
         for c in class_sizes
         for b in buckets

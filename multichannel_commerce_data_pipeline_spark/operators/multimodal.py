@@ -135,11 +135,12 @@ def decode_image_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
         yield pd.DataFrame(out, columns=["media_id", "width", "height"])
 
 
-def decode_features(df: DataFrame, kernel=fake_decode_batches) -> DataFrame:
-    """Run a decode kernel over (media_id, content) with the standard
-    output schema."""
+def decode_features(df: DataFrame) -> DataFrame:
+    """Run the decode kernel (the deterministic ``fake_decode_batches``
+    stand-in; ``decode_image_batches`` has the same contract) over
+    (media_id, content) with the standard output schema."""
     return df.select("media_id", "content").mapInPandas(
-        kernel, "media_id LONG, width INT, height INT"
+        fake_decode_batches, "media_id LONG, width INT, height INT"
     )
 
 

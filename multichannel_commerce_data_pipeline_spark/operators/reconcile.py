@@ -36,17 +36,17 @@ from multichannel_commerce_data_pipeline_spark.functions import (
 _SEED = 1789
 
 
-def row_fingerprint(cols: list[Column], seed: int = _SEED) -> Column:
+def row_fingerprint(cols: list[Column]) -> Column:
     """60-bit portable fingerprint of a row: md5 over the '|'-joined
     canonical string encoding. Callers must pre-encode doubles as
     DECIMAL-derived integers/strings (never raw double→string casts)."""
     joined = F.concat_ws("|", *[c.cast("string") for c in cols])
-    return portable_hash64(joined, seed)
+    return portable_hash64(joined, _SEED)
 
 
-def oracle_row_fingerprint(col_exprs: list[str], seed: int = _SEED) -> str:
+def oracle_row_fingerprint(col_exprs: list[str]) -> str:
     joined = ", ".join(f"CAST(({e}) AS VARCHAR)" for e in col_exprs)
-    return oracle_hash64(f"concat_ws('|', {joined})", seed)
+    return oracle_hash64(f"concat_ws('|', {joined})", _SEED)
 
 
 def bucket_digests(

@@ -18,7 +18,7 @@ independently, so the operator scales with the keyspace.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -27,7 +27,6 @@ def scd2_history(
     key_col: str,
     attr_col: str,
     ts_col: str,
-    tiebreak_col: str | None = None,
     weight_col: str | None = None,
 ) -> DataFrame:
     """Collapse an observation stream into SCD Type 2 history rows.
@@ -36,8 +35,7 @@ def scd2_history(
     comparison) per ``key_col`` form one run; each run becomes a history
     row with a 1-based ``version``, ``effective_from`` = its first
     observation time, ``effective_to`` = the next run's start (NULL for
-    the open run) and ``is_current``. ``tiebreak_col`` makes the
-    observation order total when timestamps can tie. ``weight_col``
+    the open run) and ``is_current``. ``weight_col``
     (default: every observation counts 1) lets a single row stand in
     for several collapsed observations — the hook :func:`scd2_apply`
     uses to seed an incremental rebuild with the open run's
@@ -46,10 +44,7 @@ def scd2_history(
     Returns (key, version, attr, effective_from, effective_to,
     is_current, n_obs).
     """
-    order: list[Column] = [F.col(ts_col)]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col))
-    w_obs = Window.partitionBy(key_col).orderBy(*order)
+    w_obs = Window.partitionBy(key_col).orderBy(ts_col)
     # The first observation always opens run 1 — tested explicitly:
     # comparing a NULL attribute against the (also NULL) lag of the
     # first row is null-safe-EQUAL, which would leave a leading NULL

@@ -53,23 +53,22 @@ def _norm(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def _vectorized(
-    df: DataFrame, id_col: str, vec_col: str, id_alias: str, vec_alias: str
-) -> DataFrame:
-    """(id, v: array<double>, n: double) with the cast array and its
-    norm materialized once per row (two stacked projections so the cast
-    is not inlined into the norm). The expression trees depend only on
-    the column names, so they are memoized per name tuple
+def _vectorized(df: DataFrame, id_alias: str, vec_alias: str) -> DataFrame:
+    """(id, v: array<double>, n: double) from ``vec_id`` and ``embedding``
+    with the cast array and its norm materialized once per row (two
+    stacked projections so the cast is not inlined into the norm). The
+    expression trees depend only on the column names, so they are
+    memoized per name tuple
     (functions.memo_cols — each aggregate/transform costs a ~20 ms
     py4j lambda round trip, and every similarity query rebuilds this
     pair of projections at least twice)."""
     from multichannel_commerce_data_pipeline_spark.functions import memo_cols
 
     proj = memo_cols(
-        ("vectorized", id_col, vec_col, id_alias, vec_alias),
+        ("vectorized", id_alias, vec_alias),
         lambda: [
-            F.col(id_col).alias(id_alias),
-            _as_double(F.col(vec_col)).alias(vec_alias),
+            F.col("vec_id").alias(id_alias),
+            _as_double(F.col("embedding")).alias(vec_alias),
         ],
     )
     ncol = memo_cols(
@@ -82,8 +81,6 @@ def _vectorized(
 def cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
     """Exact brute-force cosine top-k: for each query vector, the k
@@ -91,8 +88,8 @@ def cosine_topk(
     similarity with an id tie-break so results are engine-stable.
     Norms are precomputed per row, so the per-pair work is exactly one
     O(d) dot product."""
-    q = F.broadcast(_vectorized(queries, id_col, vec_col, "query_id", "qv"))
-    c = _vectorized(embeddings, id_col, vec_col, "neighbor_id", "cv")
+    q = F.broadcast(_vectorized(queries, "query_id", "qv"))
+    c = _vectorized(embeddings, "neighbor_id", "cv")
     sim = _dot(F.col("qv"), F.col("cv")) / (F.col("qv_n") * F.col("cv_n"))
     scored = (
         c.join(q)
@@ -150,37 +147,34 @@ def srp_bucket_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 8,
     k: int = 10,
-    multi_probe: bool = True,
 ) -> DataFrame:
     """ANN top-k via SRP-LSH buckets: exact cosine computed only within
-    the query's probed buckets. ``multi_probe`` additionally probes the
-    n_planes buckets at Hamming distance 1 from the query's own bucket
+    the query's probed buckets: its own bucket and the n_planes
+    buckets at Hamming distance 1 from it
     (the classic multi-probe LSH recall fix: the corpus stays
     single-bucket, only the tiny broadcast query side fans out ×(p+1)).
     Recall is measured against cosine_topk in tests."""
-    corpus = _vectorized(embeddings, id_col, vec_col, "neighbor_id", "cv").select(
+    corpus = _vectorized(embeddings, "neighbor_id", "cv").select(
         "neighbor_id",
         "cv",
         "cv_n",
         srp_signature(F.col("cv"), n_planes, dim).alias("bucket"),
     )
-    q = _vectorized(queries, id_col, vec_col, "query_id", "qv").select(
+    q = _vectorized(queries, "query_id", "qv").select(
         "query_id",
         "qv",
         "qv_n",
         srp_signature(F.col("qv"), n_planes, dim).alias("bucket"),
     )
-    if multi_probe:
-        probes = F.array(
-            F.col("bucket"),
-            *[F.col("bucket").bitwiseXOR(F.lit(2**p)) for p in range(n_planes)],
-        )
-        q = q.select("query_id", "qv", "qv_n", F.explode(probes).alias("bucket"))
-    q = F.broadcast(q)
+    probes = F.array(
+        F.col("bucket"),
+        *[F.col("bucket").bitwiseXOR(F.lit(2**p)) for p in range(n_planes)],
+    )
+    q = F.broadcast(
+        q.select("query_id", "qv", "qv_n", F.explode(probes).alias("bucket"))
+    )
     sim = _dot(F.col("qv"), F.col("cv")) / (F.col("qv_n") * F.col("cv_n"))
     scored = (
         corpus.join(q, "bucket")
@@ -198,16 +192,13 @@ def srp_bucket_topk(
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 4,
     threshold: float = 0.45,
-    multi_probe: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate PAIRS (the dedup-by-embedding
-    path): candidates are vector pairs sharing an SRP bucket (plus, with
-    ``multi_probe``, buckets at Hamming distance 1 — probing fans out
-    the bucket keys of ONE side only), then exact cosine filters at the
+    path): candidates are vector pairs sharing an SRP bucket or one at
+    Hamming distance 1 (multi-probe: probing fans out the bucket keys
+    of ONE side only), then exact cosine filters at the
     threshold. Never all-pairs: candidate count scales with bucket
     occupancy, and the buckets are deterministic md5 planes, so the
     whole operator — including which pairs are even considered — is
@@ -226,21 +217,19 @@ def embedding_near_dup_pairs(
     (2.5s vs 1.2s warm at sf0.1), and at corpus scale the second pass is
     cheap map-side work while a corpus-sized cache competes with the
     shuffle for executor memory."""
-    base = _vectorized(embeddings, id_col, vec_col, "vid", "v").select(
+    base = _vectorized(embeddings, "vid", "v").select(
         "vid", "v", "v_n", srp_signature(F.col("v"), n_planes, dim).alias("bucket")
+    )
+    probes = F.array(
+        F.col("bucket"),
+        *[F.col("bucket").bitwiseXOR(F.lit(2**p)) for p in range(n_planes)],
     )
     left = base.select(
         F.col("vid").alias("id_a"),
         F.col("v").alias("va"),
         F.col("v_n").alias("na"),
         "bucket",
-    )
-    if multi_probe:
-        probes = F.array(
-            F.col("bucket"),
-            *[F.col("bucket").bitwiseXOR(F.lit(2**p)) for p in range(n_planes)],
-        )
-        left = left.select("id_a", "va", "na", F.explode(probes).alias("bucket"))
+    ).select("id_a", "va", "na", F.explode(probes).alias("bucket"))
     right = base.select(
         F.col("vid").alias("id_b"),
         F.col("v").alias("vb"),
@@ -259,8 +248,6 @@ def embedding_near_dup_pairs(
 
 def quantize_int8(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Symmetric per-vector int8 quantization of an embedding column —
     the storage path that turns 4 bytes/dim into 1 at 100 TB corpus
@@ -279,8 +266,8 @@ def quantize_int8(
     zero-scale branch pins codes to all-zero and dequant_cos to NULL
     (cosine against a zero vector is undefined) — a 100 TB corpus WILL
     contain zeroed embeddings from upstream failures."""
-    v = _as_double(F.col(vec_col))
-    base = embeddings.select(F.col(id_col).alias("id"), v.alias("v")).select(
+    v = _as_double(F.col("embedding"))
+    base = embeddings.select(F.col("vec_id").alias("id"), v.alias("v")).select(
         "id",
         "v",
         (
@@ -407,8 +394,6 @@ def pq_codebook(
     m: int = 8,
     k: int = 16,
     stride: int = 25,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[list, list]:
     """Public form of the codebook collect, so callers that encode the
     same corpus repeatedly (bench reps, the IVF-PQ searcher, a
@@ -416,7 +401,7 @@ def pq_codebook(
     is training state, like the bucketed warehouse tables, not
     per-query state."""
     base = embeddings.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
+        F.col("vec_id").alias("id"), _as_double(F.col("embedding")).alias("v")
     )
     return _pq_codebook(base, m, k, stride)
 
@@ -426,8 +411,6 @@ def pq_encode(
     m: int = 8,
     k: int = 16,
     stride: int = 25,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebook: tuple[list, list] | None = None,
 ) -> DataFrame:
     """Product quantization (Jégou et al. 2011): the vector is split
@@ -461,7 +444,7 @@ def pq_encode(
     keeps non-cheap duplicated expressions staged, so each of the m·k
     dots evaluates once)."""
     base = embeddings.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
+        F.col("vec_id").alias("id"), _as_double(F.col("embedding")).alias("v")
     )
     csub, cn2 = codebook or _pq_codebook(base, m, k, stride)
     picked = _pq_pick_best(
@@ -494,8 +477,6 @@ def ivfpq_index(
     m: int = 8,
     k_codes: int = 16,
     code_stride: int = 25,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebook: tuple[list, list] | None = None,
 ) -> DataFrame:
     """Build the IVF-PQ inverted-list frame ``(neighbor_id, cell,
@@ -505,10 +486,10 @@ def ivfpq_index(
     storage policy) and serve every search from it; re-encoding the
     corpus per query is the wrong shape at any scale."""
     base = embeddings.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
+        F.col("vec_id").alias("id"), _as_double(F.col("embedding")).alias("v")
     )
     csub, cn2 = codebook or _pq_codebook(base, m, k_codes, code_stride)
-    assign, _cents = ivf_assign(embeddings, centroid_stride, id_col, vec_col)
+    assign, _cents = ivf_assign(embeddings, centroid_stride)
     picked = _pq_pick_best(
         assign.select(F.col("vid"), F.col("cell"), F.col("v")),
         ["vid", "cell"],
@@ -531,8 +512,6 @@ def ivfpq_topk(
     m: int = 8,
     k_codes: int = 16,
     code_stride: int = 25,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     codebook: tuple[list, list] | None = None,
     index: DataFrame | None = None,
@@ -567,7 +546,7 @@ def ivfpq_topk(
     it, so per-query cost excludes the corpus encode entirely (the same
     build-once/probe-many split as minhash_lsh_index/probe)."""
     base = embeddings.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
+        F.col("vec_id").alias("id"), _as_double(F.col("embedding")).alias("v")
     )
     csub, cn2 = codebook or _pq_codebook(base, m, k_codes, code_stride)
     corpus_codes = (
@@ -575,12 +554,12 @@ def ivfpq_topk(
         if index is not None
         else ivfpq_index(
             embeddings, centroid_stride, m, k_codes, code_stride,
-            id_col, vec_col, codebook=(csub, cn2),
+            codebook=(csub, cn2),
         )
     )
     # Probe selection: identical to ivf_topk (cosine to coarse
     # centroids, top n_probe cells per query).
-    qbase = _vectorized(queries, id_col, vec_col, "query_id", "qv")
+    qbase = _vectorized(queries, "query_id", "qv")
     cents = F.broadcast(
         base.filter(F.col("id") % centroid_stride == 0)
         .select(F.col("id").alias("cell"), F.col("v").alias("cv"))
@@ -658,8 +637,6 @@ def ivfpq_topk(
 def ivf_assign(
     embeddings: DataFrame,
     centroid_stride: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer, deterministic flavor: centroids are the
@@ -683,7 +660,7 @@ def ivf_assign(
     Tie-break matches the oracle's ORDER BY ccos DESC, cell ASC via the
     negated-cell struct field; (ccos, -cell) is unique per vector so
     the max is deterministic."""
-    base = _vectorized(embeddings, id_col, vec_col, "vid", "v")
+    base = _vectorized(embeddings, "vid", "v")
     # only HOW cents is built differs between the trained and stride
     # flavors — one shared scored/argmax block keeps the oracle
     # tie-break semantics in exactly one place.
@@ -733,8 +710,6 @@ def ivf_topk(
     queries: DataFrame,
     centroid_stride: int = 50,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
@@ -745,16 +720,14 @@ def ivf_topk(
     shuffle once on cell and the (tiny) probed-query side broadcasts —
     the same plan at 10⁹ vectors with trained ``centroids`` (a ``(cell,
     cv)`` frame, e.g. from ``clustering.kmeans_fit``) swapped in."""
-    assign, cents = ivf_assign(
-        embeddings, centroid_stride, id_col, vec_col, centroids=centroids
-    )
+    assign, cents = ivf_assign(embeddings, centroid_stride, centroids=centroids)
     corpus = assign.select(
         F.col("vid").alias("neighbor_id"),
         F.col("v").alias("cv"),
         F.col("v_n").alias("cv_n"),
         "cell",
     )
-    qbase = _vectorized(queries, id_col, vec_col, "query_id", "qv")
+    qbase = _vectorized(queries, "query_id", "qv")
     qsim = _dot(F.col("qv"), F.col("cv")) / (F.col("qv_n") * F.col("cv_n"))
     qcells = qbase.join(cents).select(
         "query_id", "qv", "qv_n", F.col("cell"), dround(qsim, 6).alias("qcos")
@@ -783,8 +756,6 @@ def semantic_dedup(
     embeddings: DataFrame,
     centroid_stride: int = 50,
     threshold: float = 0.6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-flavored cluster-level dedup (Abbas et al. 2023):
     vectors cluster to their nearest deterministic centroid
@@ -802,7 +773,7 @@ def semantic_dedup(
     comparison.
 
     Returns (id, cell, exemplar_id, cos_to_exemplar, keep)."""
-    assign, _ = ivf_assign(embeddings, centroid_stride, id_col, vec_col)
+    assign, _ = ivf_assign(embeddings, centroid_stride)
     # Both the exemplar election and the comparison consume the
     # assignment, and Spark has no DataFrame-level CSE — without a
     # materialization the corpus x centroid scoring (the dominant cost
@@ -854,8 +825,6 @@ def matryoshka_topk(
     trunc_dim: int = 16,
     shortlist: int = 50,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Coarse-to-fine ANN via dimension truncation (the Matryoshka /
     MRL funnel, Kusupati et al. 2022): stage 1 ranks the corpus by
@@ -878,11 +847,11 @@ def matryoshka_topk(
 
     Returns (query_id, neighbor_id, cosine, rank) — same contract as
     :func:`cosine_topk`, enabling recall@k comparison."""
-    c = _vectorized(embeddings, id_col, vec_col, "neighbor_id", "cv")
+    c = _vectorized(embeddings, "neighbor_id", "cv")
     ct = c.select(
         "neighbor_id", F.slice("cv", 1, trunc_dim).alias("tv")
     ).withColumn("tv_n", _norm(F.col("tv")))
-    q = _vectorized(queries, id_col, vec_col, "query_id", "qv")
+    q = _vectorized(queries, "query_id", "qv")
     qt = F.broadcast(
         q.withColumn("qt", F.slice("qv", 1, trunc_dim))
         .withColumn("qt_n", _norm(F.col("qt")))

@@ -5,7 +5,7 @@ default the silver layer coalesces into) concentrates an entire
 group-by partition on one task. AQE's skew-join splitting handles
 skewed *joins*; for skewed *aggregations* of non-algebraic aggregate
 lists (exact distincts, collect-style states) the standard fix is
-salting: spread each key over ``n_salts`` sub-keys, partially aggregate
+salting: spread each key over ``N_SALTS`` sub-keys, partially aggregate
 per (key, salt), then combine the partials in a second, now-balanced
 group-by.
 
@@ -27,14 +27,11 @@ from multichannel_commerce_data_pipeline_spark.operators.bucketing import (
     deterministic_bucket,
 )
 
+N_SALTS = 16
+
 
 def replicated_salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: list[str],
-    salt_col: Column,
-    n_salts: int = 16,
-    how: str = "inner",
+    fact: DataFrame, dim: DataFrame, on: list[str], salt_col: Column
 ) -> DataFrame:
     """Skew-safe shuffle join: salt the fact side, replicate the dim.
 
@@ -44,21 +41,21 @@ def replicated_salted_join(
     large to broadcast, the classic fix is fact-side salting with
     dim-side replication:
 
-    * every fact row gets a deterministic salt in ``[0, n_salts)``
+    * every fact row gets a deterministic salt in ``[0, N_SALTS)``
       derived from a high-cardinality column (``salt_col`` — e.g. the
-      fact primary key), splitting each hot key across ``n_salts``
+      fact primary key), splitting each hot key across ``N_SALTS``
       tasks;
-    * every dim row is replicated ``n_salts`` times (a narrow
+    * every dim row is replicated ``N_SALTS`` times (a narrow
       ``explode`` of a literal array — no shuffle on the dim side
       beyond the join's own exchange), once per salt value;
     * the join key becomes ``(key…, salt)``, so each fact sub-group
-      still finds its dim row, and the result is row-identical to the
-      unsalted join.
+      still finds its dim row, and the inner join is row-identical to
+      the unsalted join.
 
-    Cost model at 100 TB: the dim shuffle grows ``n_salts``×, the fact
+    Cost model at 100 TB: the dim shuffle grows ``N_SALTS``×, the fact
     shuffle is unchanged, and the hot key's work spreads over
-    ``n_salts`` tasks — the right trade whenever
-    ``|dim| * n_salts << |fact partition of the hot key|``. AQE's
+    ``N_SALTS`` tasks — the right trade whenever
+    ``|dim| * N_SALTS << |fact partition of the hot key|``. AQE's
     skew-join splitting handles the same problem adaptively for
     sort-merge joins; this explicit form works for any join and keeps
     plans deterministic for testing.
@@ -67,17 +64,17 @@ def replicated_salted_join(
     re-runs produce identical partitioning — unlike ``rand()`` salts.
     """
     salted_fact = fact.withColumn(
-        "__salt", deterministic_bucket(salt_col, n_salts)
+        "__salt", deterministic_bucket(salt_col, N_SALTS)
     )
-    # sequence(0, n-1) is one expression node (vs n_salts F.lit py4j
+    # sequence(0, n-1) is one expression node (vs N_SALTS F.lit py4j
     # bridge calls + n literal nodes per construction); same exploded
     # values, same plan after ConstantFolding (r17, verify-gotchas
     # literal-count discipline).
     replicated_dim = dim.withColumn(
         "__salt",
-        F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))),
+        F.explode(F.sequence(F.lit(0), F.lit(N_SALTS - 1))),
     )
-    joined = salted_fact.join(replicated_dim, [*on, "__salt"], how)
+    joined = salted_fact.join(replicated_dim, [*on, "__salt"], "inner")
     return joined.drop("__salt")
 
 
@@ -86,23 +83,22 @@ def salted_sum_count(
     keys: list[str],
     salt_col: Column,
     sums: dict[str, Column],
-    count_alias: str = "n",
-    n_salts: int = 16,
 ) -> DataFrame:
     """Two-phase SUM/COUNT group-by: phase 1 aggregates per
-    (keys, salt), phase 2 combines partials per keys.
+    (keys, salt), phase 2 combines partials per keys into the sums and
+    the row count ``n``.
 
     ``salt_col`` derives the salt deterministically from a high-
     cardinality column (e.g. the row's primary key) so the same row
     always lands in the same sub-group — reproducible, unlike rand().
     ``sums`` maps output alias → input expression.
     """
-    salt = deterministic_bucket(salt_col, n_salts).alias("__salt")
+    salt = deterministic_bucket(salt_col, N_SALTS).alias("__salt")
     phase1 = df.groupBy(*keys, salt).agg(
         *[F.sum(expr).alias(f"__s_{a}") for a, expr in sums.items()],
         F.count(F.lit(1)).alias("__c"),
     )
     return phase1.groupBy(*keys).agg(
         *[F.sum(f"__s_{a}").alias(a) for a in sums],
-        F.sum("__c").alias(count_alias),
+        F.sum("__c").alias("n"),
     )

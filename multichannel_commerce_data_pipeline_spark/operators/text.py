@@ -191,9 +191,9 @@ def lang_guess(text: Column) -> Column:
     )
 
 
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full text-analysis feature set as columns."""
-    text = F.col(text_col)
+def with_text_features(df: DataFrame) -> DataFrame:
+    """Attach the full text-analysis feature set of ``text`` as columns."""
+    text = F.col("text")
     toks = tokens(text)
     return (
         df.withColumn("n_tokens", F.size(toks))

@@ -58,8 +58,6 @@ def assign_packs(
     token_count: Column,
     budget: int = 256,
     n_shards: int = 8,
-    id_col: str = "doc_id",
-    seed: int = 7,
     extra_partition_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """(doc_id, *extra, n_tokens, shard, pack_id, pack_offset): greedy
@@ -77,10 +75,8 @@ def assign_packs(
     contamination guarantee a packed eval set needs)."""
     extra = list(extra_partition_cols)
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        *extra,
-        token_count.cast("long").alias("n_tokens"),
-    ).withColumn("shard", _pmod(portable_hash64(F.col("doc_id").cast("string"), seed), n_shards))
+        "doc_id", *extra, token_count.cast("long").alias("n_tokens")
+    ).withColumn("shard", _pmod(portable_hash64(F.col("doc_id").cast("string"), 7), n_shards))
     w = (
         Window.partitionBy(*extra, "shard")
         .orderBy("doc_id")
@@ -107,8 +103,6 @@ def assign_packs_bfd(
     token_count: Column,
     budget: int = 256,
     n_shards: int = 8,
-    id_col: str = "doc_id",
-    seed: int = 7,
 ) -> DataFrame:
     """(doc_id, n_tokens, shard, pack_id, pack_offset): BEST-FIT-
     DECREASING packing — the standard upgrade over :func:`assign_packs`
@@ -143,11 +137,10 @@ def assign_packs_bfd(
     and the reason assign_packs (a pure window) remains the default
     at extreme scale."""
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        token_count.cast("long").alias("n_tokens"),
+        "doc_id", token_count.cast("long").alias("n_tokens")
     ).withColumn(
         "shard",
-        _pmod(portable_hash64(F.col("doc_id").cast("string"), seed), n_shards),
+        _pmod(portable_hash64(F.col("doc_id").cast("string"), 7), n_shards),
     )
     # decreasing tokens, increasing doc: sort asc on (-tokens, doc)
     per_shard = base.groupBy("shard").agg(
@@ -236,10 +229,10 @@ def assign_packs_bfd(
     )
 
 
-def pack_stats(assignments: DataFrame, budget: int = 256) -> DataFrame:
+def pack_stats(assignments: DataFrame) -> DataFrame:
     """Per-(shard, pack) utilization rollup over :func:`assign_packs`
-    output: doc count, token total, and fill ratio vs the budget. One
-    additional partial-agg shuffle on the (shard, pack_id) key."""
+    output: doc count and token total. One additional partial-agg
+    shuffle on the (shard, pack_id) key."""
     return assignments.groupBy("shard", "pack_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").alias("pack_tokens"),
@@ -250,9 +243,6 @@ def mixture_quota_sample(
     docs: DataFrame,
     class_col: str,
     shares: dict[str, float],
-    id_col: str = "doc_id",
-    seed: int = 29,
-    oversample: int = 8,
 ) -> DataFrame:
     """Target-mixture sampling — the Pile/Dolma-style mixing step:
     given target domain SHARES, keep the largest corpus whose class
@@ -266,55 +256,40 @@ def mixture_quota_sample(
     Entirely in-plan, no driver collect: class counts are a bounded
     aggregate, the share table and the 1-row T aggregate broadcast,
     and the per-class top-``n_target`` uses the hash PREFILTER +
-    bounded window idiom (keep fraction ~oversample*n_target/count
-    before the shuffle), so the per-class sort input is bounded by
+    bounded window idiom (keep fraction ~8*n_target/count before the
+    shuffle), so the per-class sort input is bounded by
     sample size, not corpus size. The oracle applies the identical
     prefilter, so cross-engine equality is exact by construction.
 
-    Returns (id_col, class_col, n_target) for the kept rows."""
+    Returns (doc_id, class_col, n_target) for the kept rows."""
     spark = docs.sparkSession
     share_df = spark.createDataFrame(
         sorted(shares.items()), f"{class_col} string, share double"
     )
-    return _quota_sample(docs, class_col, share_df, id_col, seed, oversample)
+    return _quota_sample(docs, class_col, share_df)
 
 
-def temperature_mix_sample(
-    docs: DataFrame,
-    class_col: str,
-    alpha: float = 0.5,
-    id_col: str = "doc_id",
-    seed: int = 29,
-    oversample: int = 8,
-) -> DataFrame:
+def temperature_mix_sample(docs: DataFrame, class_col: str) -> DataFrame:
     """Temperature-smoothed mixture sampling — the multilingual
     rebalancing rule (XLM-R / mT5 style): target share of each class
-    proportional to count^alpha, alpha in (0, 1), so head classes are
-    downweighted and tail classes upweighted WITHOUT the hard equality
-    of balanced sampling. Shares are derived from the data IN-PLAN (no
+    proportional to sqrt(count) (temperature alpha = 0.5), so head
+    classes are downweighted and tail classes upweighted WITHOUT the
+    hard equality of balanced sampling. Shares are derived from the data IN-PLAN (no
     share spec to maintain), then the same largest-feasible-quota
     machinery as :func:`mixture_quota_sample` applies.
 
-    Cross-engine portability: alpha = 0.5 uses ``sqrt`` (correctly
-    rounded in IEEE 754, bit-identical in Spark and DuckDB); other
-    alphas fall back to ``pow``, which is NOT correctly rounded and may
-    differ in the last ulp across libm builds — quantized here via
-    dround(6) before the share division, and the share itself is
-    dround(6)-quantized, so a 1-ulp pow divergence cannot survive into
-    the quotas. The share denominator sums DECIMAL-quantized addends
+    Cross-engine portability: ``sqrt`` is correctly rounded in IEEE
+    754, bit-identical in Spark and DuckDB; the weight is still
+    dround(6)-quantized before the share division, and the share
+    itself too. The share denominator sums DECIMAL-quantized addends
     (exact, order-independent — the gold-rollup idiom)."""
     from multichannel_commerce_data_pipeline_spark.functions import dround
 
     counts = docs.groupBy(class_col).agg(F.count(F.lit(1)).alias("cnt"))
-    smoothed = (
-        F.sqrt(F.col("cnt"))
-        if alpha == 0.5
-        else F.pow(F.col("cnt"), F.lit(alpha))
-    )
     weighted = counts.select(
         class_col,
         "cnt",
-        dround(smoothed, 6).cast("decimal(28,6)").alias("__w"),
+        dround(F.sqrt(F.col("cnt")), 6).cast("decimal(28,6)").alias("__w"),
     )
     tot = weighted.agg(F.sum("__w").alias("__tot"))
     share_df = weighted.join(F.broadcast(tot)).select(
@@ -326,23 +301,17 @@ def temperature_mix_sample(
     )
     # share_df carries cnt so the quota tail does not re-aggregate the
     # corpus (no DataFrame CSE: a second groupBy would be a second scan)
-    return _quota_sample(docs, class_col, share_df, id_col, seed, oversample)
+    return _quota_sample(docs, class_col, share_df)
 
 
-def _quota_sample(
-    docs: DataFrame,
-    class_col: str,
-    share_df: DataFrame,
-    id_col: str,
-    seed: int,
-    oversample: int,
-) -> DataFrame:
+def _quota_sample(docs: DataFrame, class_col: str, share_df: DataFrame) -> DataFrame:
     """Shared quota-sampling tail: feasible total T = min
     floor(count/share), per-class quota floor(share*T), smallest-hash
     membership behind the prefilter-bounded window (see
     :func:`mixture_quota_sample` for the full scale argument).
     ``share_df`` is (class, share) or (class, cnt, share) — the class
-    counts are joined in when not already supplied."""
+    counts are joined in when not already supplied. Membership hashes
+    ``doc_id`` with seed 29 behind an 8x prefilter."""
     if "cnt" in share_df.columns:
         cs = share_df
     else:
@@ -366,9 +335,9 @@ def _quota_sample(
         "cnt",
         F.floor(F.col("share") * F.col("t_max")).cast("long").alias("n_target"),
     )
-    keyed = docs.select(id_col, class_col).join(F.broadcast(quota), class_col)
-    return smallest_hash_topn(keyed, class_col, id_col, seed, oversample).select(
-        id_col, class_col, "n_target"
+    keyed = docs.select("doc_id", class_col).join(F.broadcast(quota), class_col)
+    return smallest_hash_topn(keyed, class_col, "doc_id", 29, 8).select(
+        "doc_id", class_col, "n_target"
     )
 
 
@@ -412,9 +381,6 @@ def domain_cap_sample(
     docs: DataFrame,
     domain_col: str,
     cap: int,
-    id_col: str = "doc_id",
-    seed: int = 43,
-    oversample: int = 8,
 ) -> DataFrame:
     """Per-domain document cap — the C4/RefinedWeb-style URL-level
     curation pass applied between dedup and mixing: keep at MOST
@@ -430,78 +396,67 @@ def domain_cap_sample(
 
     Scale shape — the hash-prefilter bounded-window idiom: per-domain
     counts are one bounded aggregate (broadcast back), a map-side
-    prefilter keeps fraction ``min(1, oversample*cap/count)`` of each
-    domain BEFORE the shuffle, so the per-domain window sorts an
-    expected ``oversample*cap`` rows regardless of domain size — the
-    million-page mirror never funnels through one sort. The oracle
+    prefilter keeps fraction ``min(1, 8*cap/count)`` of each domain
+    BEFORE the shuffle (``doc_id`` hashed with seed 43), so the
+    per-domain window sorts an expected ``8*cap`` rows regardless of
+    domain size — the million-page mirror never funnels through one
+    sort. The oracle
     applies the identical prefilter, so cross-engine equality is
     exact by construction (the Binomial shortfall tail at 8x
     oversampling is shared, not approximated away).
 
-    Returns (id_col, domain_col, domain_docs) for the kept rows —
+    Returns (doc_id, domain_col, domain_docs) for the kept rows —
     ``domain_docs`` is the domain's pre-cap size, so the caller can
     report how much the cap actually cut."""
     counts = docs.groupBy(domain_col).agg(F.count(F.lit(1)).alias("domain_docs"))
     keyed = (
-        docs.select(id_col, domain_col)
+        docs.select("doc_id", domain_col)
         .join(F.broadcast(counts), domain_col)
         .withColumn("cnt", F.col("domain_docs"))
         .withColumn("n_target", F.lit(cap))
     )
-    return smallest_hash_topn(keyed, domain_col, id_col, seed, oversample).select(
-        id_col, domain_col, "domain_docs"
+    return smallest_hash_topn(keyed, domain_col, "doc_id", 43, 8).select(
+        "doc_id", domain_col, "domain_docs"
     )
 
 
-def split_assign(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    train_pct: int = 80,
-    val_pct: int = 10,
-    seed: int = 13,
-) -> DataFrame:
-    """(doc_id, bucket, split): deterministic dataset split. The hash
-    bucket is uniform in [0,100); labels are train/val/test by
-    percentile cutoffs. Membership is a pure function of (id, seed) —
-    re-running on a grown corpus never reassigns an old doc."""
-    bucket = _pmod(portable_hash64(F.col(id_col).cast("string"), seed), 100)
-    return docs.select(F.col(id_col).alias("doc_id")).select(
+def split_assign(docs: DataFrame) -> DataFrame:
+    """(doc_id, bucket, split): deterministic 80/10/10 dataset split.
+    The hash bucket is uniform in [0,100); labels are train/val/test by
+    percentile cutoffs. Membership is a pure function of (id, seed 13)
+    — re-running on a grown corpus never reassigns an old doc."""
+    bucket = _pmod(portable_hash64(F.col("doc_id").cast("string"), 13), 100)
+    return docs.select("doc_id").select(
         "doc_id",
         bucket.alias("bucket"),
-        F.when(bucket < train_pct, F.lit("train"))
-        .when(bucket < train_pct + val_pct, F.lit("val"))
+        F.when(bucket < 80, F.lit("train"))
+        .when(bucket < 90, F.lit("val"))
         .otherwise(F.lit("test"))
         .alias("split"),
     )
 
 
-def epoch_expand(
-    docs: DataFrame,
-    epochs: dict[str, int],
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    default_epochs: int = 1,
-) -> DataFrame:
+def epoch_expand(docs: DataFrame, epochs: dict[str, int]) -> DataFrame:
     """(doc_id, source, epoch): mixture oversampling — replicate each
-    doc ``epochs[source]`` times (``default_epochs`` for unlisted
-    sources) with a 1-based epoch index. The weights table is a literal
+    doc ``epochs[source]`` times (once for unlisted sources) with a
+    1-based epoch index. The weights table is a literal
     broadcast join and the replication is explode(sequence(..)), so the
     expansion happens map-side inside the scan stage: zero shuffles,
     output rows = sum over sources of n_docs x epochs."""
     spark = docs.sparkSession
     wt = F.broadcast(
         spark.createDataFrame(
-            [(s, int(e)) for s, e in sorted(epochs.items())], f"{source_col} string, __epochs int"
+            [(s, int(e)) for s, e in sorted(epochs.items())], "source string, __epochs int"
         )
     )
     return (
-        docs.select(F.col(id_col).alias("doc_id"), F.col(source_col).alias("source"))
-        .join(wt.withColumnRenamed(source_col, "source"), "source", "left")
+        docs.select("doc_id", "source")
+        .join(wt, "source", "left")
         .select(
             "doc_id",
             "source",
             F.explode(
-                F.sequence(F.lit(1), F.coalesce(F.col("__epochs"), F.lit(default_epochs)))
+                F.sequence(F.lit(1), F.coalesce(F.col("__epochs"), F.lit(1)))
             ).alias("epoch"),
         )
     )
@@ -510,8 +465,6 @@ def epoch_expand(
 def shard_layout(
     docs: DataFrame,
     n_shards: int = 16,
-    id_col: str = "doc_id",
-    seed: int = 29,
 ) -> DataFrame:
     """(doc_id, shard, pos): deterministic training-order shuffle. The
     md5-derived order key scatters ids uniformly; docs land in
@@ -520,8 +473,8 @@ def shard_layout(
     order. One exchange + per-shard sort; no single-reducer global
     window. Trainers read shards round-robin to see a uniform random
     permutation."""
-    key = portable_hash64(F.col(id_col).cast("string"), seed)
-    base = docs.select(F.col(id_col).alias("doc_id"), key.alias("__key")).withColumn(
+    key = portable_hash64(F.col("doc_id").cast("string"), 29)
+    base = docs.select("doc_id", key.alias("__key")).withColumn(
         "shard", _pmod(F.col("__key"), n_shards)
     )
     w = Window.partitionBy("shard").orderBy("__key", "doc_id")
@@ -531,15 +484,10 @@ def shard_layout(
     )
 
 
-def split_long_docs(
-    docs: DataFrame,
-    token_count: Column,
-    budget: int = 256,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(doc_id, seg_id, seg_tokens): documents longer than the pack
-    budget split into ceil(n/budget) segments — every segment but the
-    last carries exactly ``budget`` tokens, the last carries the
+def split_long_docs(docs: DataFrame, token_count: Column) -> DataFrame:
+    """(doc_id, seg_id, seg_tokens): documents longer than the 256-token
+    pack budget split into ceil(n/256) segments — every segment but the
+    last carries exactly 256 tokens, the last carries the
     remainder (zero-token docs keep one empty segment so no document
     silently vanishes). This is the step real pretraining pipelines run
     BEFORE packing: without it a 100k-token document either truncates
@@ -548,26 +496,20 @@ def split_long_docs(
     explode(sequence(...)) generates segments map-side inside the scan
     stage — zero shuffles, and the downstream packer sees only
     bounded-size rows."""
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), token_count.cast("long").alias("n_tokens")
-    )
-    n_segs = F.greatest(F.ceil(F.col("n_tokens") / F.lit(float(budget))), F.lit(1))
+    base = docs.select("doc_id", token_count.cast("long").alias("n_tokens"))
+    n_segs = F.greatest(F.ceil(F.col("n_tokens") / F.lit(256.0)), F.lit(1))
     seg = F.explode(F.sequence(F.lit(0).cast("long"), n_segs - 1)).alias("seg_id")
     return base.select("doc_id", "n_tokens", seg).select(
         "doc_id",
         "seg_id",
         F.least(
-            F.lit(budget).cast("long"),
-            F.col("n_tokens") - F.col("seg_id") * budget,
+            F.lit(256).cast("long"),
+            F.col("n_tokens") - F.col("seg_id") * 256,
         ).alias("seg_tokens"),
     )
 
 
-def write_training_shards(
-    layout: DataFrame,
-    out_dir: str,
-    mode: str = "overwrite",
-) -> None:
+def write_training_shards(layout: DataFrame, out_dir: str) -> None:
     """Materialize a :func:`shard_layout` (or :func:`assign_packs`)
     frame as the directory layout data loaders read: one partition
     directory per shard, rows sorted by their in-shard position within
@@ -590,7 +532,7 @@ def write_training_shards(
     (
         layout.repartition("shard")
         .sortWithinPartitions("shard", sort_col)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("shard")
         .parquet(out_dir)
     )
@@ -688,9 +630,7 @@ def bpe_train(
     return merges
 
 
-def token_budget_select(
-    scored: DataFrame, budget: int, q_col: str = "q", tok_col: str = "n_tokens"
-) -> DataFrame:
+def token_budget_select(scored: DataFrame, budget: int) -> DataFrame:
     """Quality-ranked corpus selection under a token budget — keep the
     highest-quality documents whose cumulative token count fits in
     ``budget`` (the FineWeb-style "train on the best X tokens" gate,
@@ -727,9 +667,7 @@ def token_budget_select(
     ORDER BY q DESC, doc: the boundary window orders by exactly that.
     Returns the kept (doc, q, n_tokens) rows; column names preserved.
     """
-    return token_budget_apply(
-        scored, token_budget_fit(scored, budget, q_col, tok_col), q_col, tok_col
-    )
+    return token_budget_apply(scored, token_budget_fit(scored, budget))
 
 
 _Q_SCALE = 1000  # buckets per fit level; each level refines 1000x
@@ -741,8 +679,6 @@ BudgetFit = tuple[tuple[tuple[int, int], ...], int] | None
 def token_budget_fit(
     scored: DataFrame,
     budget: int,
-    q_col: str = "q",
-    tok_col: str = "n_tokens",
     max_levels: int = 2,
     recurse_min_tokens: int = 1_000_000,
 ) -> BudgetFit:
@@ -770,15 +706,13 @@ def token_budget_fit(
     for _ in range(max_levels):
         hist = (
             frame.select(
-                _q_bucket(q_col, scale).alias("__qb"),
-                F.col(q_col),
-                F.col(tok_col),
+                _q_bucket(scale).alias("__qb"), F.col("q"), F.col("n_tokens")
             )
             .groupBy("__qb")
             .agg(
-                F.sum(tok_col).alias("__toks"),
-                F.min(q_col).alias("__qmin"),
-                F.max(q_col).alias("__qmax"),
+                F.sum("n_tokens").alias("__toks"),
+                F.min("q").alias("__qmin"),
+                F.max("q").alias("__qmax"),
             )
             .collect()
         )
@@ -807,17 +741,12 @@ def token_budget_fit(
             break
         if boundary["__toks"] <= recurse_min_tokens:
             break  # boundary bucket small enough to window directly
-        frame = frame.filter(_q_bucket(q_col, scale) == boundary["__qb"])
+        frame = frame.filter(_q_bucket(scale) == boundary["__qb"])
         scale *= _Q_SCALE
     return tuple(levels), residual
 
 
-def token_budget_apply(
-    scored: DataFrame,
-    fit: BudgetFit,
-    q_col: str = "q",
-    tok_col: str = "n_tokens",
-) -> DataFrame:
+def token_budget_apply(scored: DataFrame, fit: BudgetFit) -> DataFrame:
     """Phase 2: apply a fitted threshold chain in ONE pass — a
     map-side filter drops everything strictly below the chain (the
     corpus majority never shuffles), then a window PARTITIONED BY the
@@ -831,14 +760,14 @@ def token_budget_apply(
     if fit is None:
         return scored  # whole corpus fits: no boundary work
     levels, residual = fit
-    doc_col = [c for c in scored.columns if c not in (q_col, tok_col)][0]
+    doc_col = [c for c in scored.columns if c not in ("q", "n_tokens")][0]
     frame = scored
     bcols: list[str] = []
     prefix_eq = F.lit(True)  # all outer levels sit AT their threshold
     cand = F.lit(True)
     for i, (scale, thr) in enumerate(levels):
         b = f"__qb{i}"
-        frame = frame.withColumn(b, _q_bucket(q_col, scale))
+        frame = frame.withColumn(b, _q_bucket(scale))
         # at each level, rows on the boundary of every outer level must
         # meet this level's threshold; rows above some outer threshold
         # are already decided (kept) and skip the inner conditions
@@ -846,20 +775,20 @@ def token_budget_apply(
         prefix_eq = prefix_eq & (F.col(b) == F.lit(thr))
         bcols.append(b)
     candidates = frame.filter(cand)
-    w = Window.partitionBy(*bcols).orderBy(F.desc(q_col), doc_col)
+    w = Window.partitionBy(*bcols).orderBy(F.desc("q"), doc_col)
     return (
-        candidates.withColumn("__cum", F.sum(tok_col).over(w))
+        candidates.withColumn("__cum", F.sum("n_tokens").over(w))
         .filter(~prefix_eq | (F.col("__cum") <= residual))
         .select(*scored.columns)
     )
 
 
-def _q_bucket(q_col: str, scale: int = _Q_SCALE):
+def _q_bucket(scale: int):
     """floor(q*scale): Spark-internal bucketing — only monotonicity in
     q matters (the oracle never buckets), and the bucket count is
     bounded by the score's codomain times the level's scale, not the
     corpus."""
-    return F.floor(F.col(q_col) * scale).cast("long")
+    return F.floor(F.col("q") * scale).cast("long")
 
 
 def weighted_sample_topn(

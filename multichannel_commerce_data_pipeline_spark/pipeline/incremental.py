@@ -30,14 +30,14 @@ from pyspark.sql import functions as F
 from multichannel_commerce_data_pipeline_spark.queries.flagship import exec_daily_kpi
 
 
-def affected_date_keys(new_orders: DataFrame, date_col: str = "o_orderdate") -> list[str]:
-    """Distinct yyyyMMdd keys touched by a batch of new/late rows —
-    the refresh scope. Distinct of a date column: tiny result, one
-    partial-aggregated pass over the batch only."""
+def affected_date_keys(new_orders: DataFrame) -> list[str]:
+    """Distinct yyyyMMdd keys of ``o_orderdate`` touched by a batch of
+    new/late rows — the refresh scope. Distinct of a date column: tiny
+    result, one partial-aggregated pass over the batch only."""
     return [
         r.date_key
         for r in new_orders.select(
-            F.date_format(date_col, "yyyyMMdd").alias("date_key")
+            F.date_format("o_orderdate", "yyyyMMdd").alias("date_key")
         )
         .distinct()
         .collect()

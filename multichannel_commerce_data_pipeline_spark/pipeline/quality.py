@@ -39,29 +39,26 @@ def observe_batch(
     return df.observe(obs, *_metric_exprs(not_null_cols, ts_col)), obs
 
 
-def observe_stream(
-    df: DataFrame, not_null_cols: list[str], ts_col: str | None = None
-) -> DataFrame:
-    """Attach the same metrics to a streaming frame under the name
-    ``dq``; every micro-batch's progress event then carries them
+def observe_stream(df: DataFrame, not_null_cols: list[str]) -> DataFrame:
+    """Attach the row and null counts (no high-watermark) to a
+    streaming frame under the name ``dq``; every micro-batch's progress event then carries them
     (query.lastProgress["observedMetrics"]["dq"]) — publish that dict
     to a metrics topic to get the reference's declared T7 surface."""
-    return df.observe(METRIC_NAME, *_metric_exprs(not_null_cols, ts_col))
+    return df.observe(METRIC_NAME, *_metric_exprs(not_null_cols, None))
 
 
-def alerts(metrics: dict, max_null_fraction: float = 0.0) -> list[str]:
+def alerts(metrics: dict) -> list[str]:
     """Evaluate a metrics dict into data-quality alert strings — the
     payload the reference's `data-quality-alerts` topic was meant to
-    carry."""
+    carry. Any null in a not-null column alerts."""
     out = []
     rows = metrics.get("rows", 0) or 0
     for key, val in metrics.items():
         if key.startswith("nulls_") and rows:
             frac = (val or 0) / rows
-            if frac > max_null_fraction:
+            if frac > 0.0:
                 out.append(
-                    f"column {key[6:]}: null fraction {frac:.4f} exceeds "
-                    f"{max_null_fraction:.4f}"
+                    f"column {key[6:]}: null fraction {frac:.4f} exceeds 0.0000"
                 )
     if rows == 0:
         out.append("empty batch")

@@ -337,7 +337,6 @@ def salted_skew_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["l_returnflag"],
         F.col("l_orderkey"),
         {"sum_qty": dec("l_quantity"), "sum_price": dec("l_extendedprice")},
-        n_salts=16,
     )
     return out.select(
         "l_returnflag",

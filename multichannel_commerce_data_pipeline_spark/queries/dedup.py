@@ -114,7 +114,7 @@ def _capped_shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
-    sh = D._capped_shingles(d, "doc_id", "text", 3, 400).persist(
+    sh = D._capped_shingles(d, "doc_id", "text", 400).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     sh.count()
@@ -130,7 +130,7 @@ def jaccard_near_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate share ONE tokenization pass."""
     d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
     return D.jaccard_pairs(
-        d, "doc_id", "text", n=3, threshold=_THRESHOLD, df_cap=400,
+        d, "doc_id", "text", threshold=_THRESHOLD, df_cap=400,
         shingle_frame=_capped_shingle_index(spark, sf_dir),
     )
 
@@ -177,15 +177,16 @@ def containment_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-corpus persisted shingle index with jaccard_near_dupes."""
     d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
     return D.containment_pairs(
-        d, "doc_id", "text", n=3, threshold=0.5, df_cap=400,
+        d, "doc_id", "text", threshold=0.5, df_cap=400,
         shingle_frame=_capped_shingle_index(spark, sf_dir),
     )
 
 
-def _mh_keyed_ctes(k: int, bands: int) -> str:
+def _mh_keyed_ctes() -> str:
     """Shared oracle CTE chain: shingle md5s -> KM hash pair -> k
     minhash slots -> exploded (doc, band, band-key) rows. Used by both
     the self-join (corpus) and probe-vs-index (incremental) oracles."""
+    k, bands = D.MINHASH_K, D.MINHASH_BANDS
     rows = k // bands
     mins = ",\n        ".join(
         f"MIN(h1 + {j} * h2) AS mh_{j}" for j in range(k)
@@ -219,9 +220,9 @@ def _mh_keyed_ctes(k: int, bands: int) -> str:
     )"""
 
 
-def _minhash_lsh_oracle(k: int, bands: int, threshold: float) -> str:
+def _minhash_lsh_oracle(threshold: float) -> str:
     return f"""
-    WITH {_mh_keyed_ctes(k, bands)},
+    WITH {_mh_keyed_ctes()},
     cand AS (
       SELECT DISTINCT x.doc AS doc_a, y.doc AS doc_b
       FROM keyed x JOIN keyed y ON x.b = y.b AND x.bh = y.bh
@@ -242,29 +243,20 @@ def _minhash_lsh_oracle(k: int, bands: int, threshold: float) -> str:
     """
 
 
-@query("minhash_lsh_dupes", oracle=_minhash_lsh_oracle(16, 8, _THRESHOLD))
+@query("minhash_lsh_dupes", oracle=_minhash_lsh_oracle(_THRESHOLD))
 def minhash_lsh_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2: MinHash + banded LSH candidate generation (k=16, 8 bands of
     2), exact-Jaccard verified — the sub-quadratic near-dup path. Band
     keys are the raw minhash value pairs, so DuckDB reproduces the
-    candidate set exactly.
-
-    persist stays at the default True: without the cached signature
-    frame the md5 pass recomputes for every plan branch — measured
-    5.3 s vs 1.5 s warm at sf0.1 in a clean JVM. (An earlier profile
-    suggesting the opposite was contaminated: a prior persist=True run
-    in the same session leaves its InMemoryRelation in the
-    CacheManager, which plan-matches the unpersisted query and hides
-    the recompute. A/B persist flags in fresh sessions only.)"""
+    candidate set exactly. The operator persists its signature frame,
+    so the md5 pass runs once for both plan branches."""
     d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
-    return D.minhash_lsh_pairs(
-        d, "doc_id", "text", k=16, bands=8, n=3, threshold=_THRESHOLD
-    )
+    return D.minhash_lsh_pairs(d, "doc_id", "text", threshold=_THRESHOLD)
 
 
-def _incremental_lsh_oracle(k: int, bands: int, threshold: float) -> str:
+def _incremental_lsh_oracle(threshold: float) -> str:
     return f"""
-    WITH {_mh_keyed_ctes(k, bands)},
+    WITH {_mh_keyed_ctes()},
     cand AS (
       SELECT DISTINCT x.doc AS new_doc, y.doc AS dup_of
       FROM keyed x JOIN keyed y ON x.b = y.b AND x.bh = y.bh
@@ -284,7 +276,7 @@ def _incremental_lsh_oracle(k: int, bands: int, threshold: float) -> str:
     """
 
 
-@query("incremental_lsh_dedup", oracle=_incremental_lsh_oracle(16, 8, _THRESHOLD))
+@query("incremental_lsh_dedup", oracle=_incremental_lsh_oracle(_THRESHOLD))
 def incremental_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2: incremental near-dup detection — a NEW ingest batch (odd
     doc_ids) probed against the EXISTING corpus signature index (even
@@ -296,7 +288,7 @@ def incremental_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     here both sides are derived in-plan from the parity split so the
     oracle can re-create the exact same state."""
     idx, new_sig = _lsh_signature_frames(spark, sf_dir)
-    return D.minhash_lsh_probe(idx, new_sig, k=16, bands=8, threshold=_THRESHOLD)
+    return D.minhash_lsh_probe(idx, new_sig, threshold=_THRESHOLD)
 
 
 @artifact
@@ -316,16 +308,16 @@ def _lsh_signature_frames(
     d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
     corpus = d.filter(F.col("doc_id") % 2 == 0)
     batch = d.filter(F.col("doc_id") % 2 == 1)
-    idx = D.minhash_lsh_index(corpus, "doc_id", "text", k=16, n=3).persist(
+    idx = D.minhash_lsh_index(corpus, "doc_id", "text").persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    new_sig = D.minhash_lsh_index(batch, "doc_id", "text", k=16, n=3).persist(
+    new_sig = D.minhash_lsh_index(batch, "doc_id", "text").persist(
         StorageLevel.MEMORY_AND_DISK
     )
     return (idx, new_sig)
 
 
-def _simhash_oracle(bits: int) -> str:
+def _simhash_oracle() -> str:
     return f"""
     WITH tokx AS (
       SELECT doc_id AS doc, unnest(regexp_extract_all(lower(text), '\\S+')) AS token
@@ -335,7 +327,7 @@ def _simhash_oracle(bits: int) -> str:
     votes AS (
       SELECT doc, b,
              SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-      FROM h, (SELECT unnest(range(0, {bits})) AS b) AS bits_
+      FROM h, (SELECT unnest(range(0, {D.SIMHASH_BITS})) AS b) AS bits_
       GROUP BY doc, b
     )
     SELECT doc,
@@ -345,16 +337,17 @@ def _simhash_oracle(bits: int) -> str:
     """
 
 
-@query("simhash_fingerprints", oracle=_simhash_oracle(16))
+@query("simhash_fingerprints", oracle=_simhash_oracle())
 def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2: SimHash fingerprints (16-bit) — near-duplicates land at small
     Hamming distance; one explode + one group-by."""
     d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
-    return D.simhash(d, "doc_id", "text", bits=16)
+    return D.simhash(d, "doc_id", "text")
 
 
-def _simhash_pairs_oracle(bits: int, bands: int, max_hamming: int) -> str:
-    rows = bits // bands
+def _simhash_pairs_oracle() -> str:
+    bands = D.SIMHASH_BANDS
+    rows = D.SIMHASH_BITS // bands
     mask = (1 << rows) - 1
     return f"""
     WITH tokx AS (
@@ -365,7 +358,7 @@ def _simhash_pairs_oracle(bits: int, bands: int, max_hamming: int) -> str:
     votes AS (
       SELECT doc, b,
              SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-      FROM h, (SELECT unnest(range(0, {bits})) AS b) AS bits_
+      FROM h, (SELECT unnest(range(0, {D.SIMHASH_BITS})) AS b) AS bits_
       GROUP BY doc, b
     ),
     sims AS (
@@ -385,24 +378,22 @@ def _simhash_pairs_oracle(bits: int, bands: int, max_hamming: int) -> str:
       WHERE x.doc < y.doc
     )
     SELECT doc_a, doc_b, bit_count(xor(sa, sb)) AS hamming
-    FROM cand WHERE bit_count(xor(sa, sb)) <= {max_hamming}
+    FROM cand WHERE bit_count(xor(sa, sb)) <= {D.SIMHASH_MAX_HAMMING}
     """
 
 
-@query("simhash_near_dupes", oracle=_simhash_pairs_oracle(16, 4, 3))
+@query("simhash_near_dupes", oracle=_simhash_pairs_oracle())
 def simhash_near_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2: SimHash near-dup pairs — banded Hamming search (4 bands of 4
     bits; Hamming ≤ 3 must share a band by pigeonhole, so recall at the
     bound is exactly 1). Candidates from a band equi-join shipping only
     (doc, fingerprint) longs, verified with popcount of the XOR."""
     d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
-    return D.simhash_pairs(
-        d, "doc_id", "text", bits=16, bands=4, max_hamming=3
-    )
+    return D.simhash_pairs(d, "doc_id", "text")
 
 
 def _clusters_oracle() -> str:
-    pair_sql = _minhash_lsh_oracle(16, 8, _THRESHOLD)
+    pair_sql = _minhash_lsh_oracle(_THRESHOLD)
     return f"""
     WITH RECURSIVE
     prs AS (SELECT doc_a, doc_b FROM ({pair_sql})),
@@ -429,9 +420,7 @@ def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     group's min doc id, i.e. the deterministic survivor key for
     keep-one-per-cluster dedup."""
     d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
-    pairs = D.minhash_lsh_pairs(
-        d, "doc_id", "text", k=16, bands=8, n=3, threshold=_THRESHOLD
-    )
+    pairs = D.minhash_lsh_pairs(d, "doc_id", "text", threshold=_THRESHOLD)
     return D.dedup_clusters(pairs)
 
 
@@ -444,9 +433,7 @@ def dedup_clusters_star_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels to min-label propagation, so the oracle is the same
     recursive transitive closure."""
     d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
-    pairs = D.minhash_lsh_pairs(
-        d, "doc_id", "text", k=16, bands=8, n=3, threshold=_THRESHOLD
-    )
+    pairs = D.minhash_lsh_pairs(d, "doc_id", "text", threshold=_THRESHOLD)
     return D.star_contract(pairs)
 
 
@@ -488,7 +475,7 @@ def fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dedup_corpus_oracle() -> str:
     return f"""
     WITH RECURSIVE
-    prs AS (SELECT doc_a, doc_b FROM ({_minhash_lsh_oracle(16, 8, _THRESHOLD)})),
+    prs AS (SELECT doc_a, doc_b FROM ({_minhash_lsh_oracle(_THRESHOLD)})),
     edges AS (
       SELECT doc_a AS u, doc_b AS v FROM prs
       UNION
@@ -515,9 +502,7 @@ def dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join of the (tiny) drop set against the corpus — the full
     keep-list pipeline a training-data run ships."""
     d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
-    pairs = D.minhash_lsh_pairs(
-        d, "doc_id", "text", k=16, bands=8, n=3, threshold=_THRESHOLD
-    )
+    pairs = D.minhash_lsh_pairs(d, "doc_id", "text", threshold=_THRESHOLD)
     clusters = D.dedup_clusters(pairs)
     drops = clusters.filter(F.col("doc") != F.col("cluster_id")).select(
         F.col("doc").alias("doc_id")
@@ -656,7 +641,7 @@ def passage_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact_dedup_docs) cannot. The dedup decision shuffles only
     (doc, pidx, md5) triples; text never leaves the map side."""
     d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
-    return D.passage_dedup(d, "doc_id", "text", passage_words=10)
+    return D.passage_dedup(d, "doc_id", "text")
 
 
 @query(
@@ -1533,8 +1518,6 @@ def _stream_bpcut_run(spark: SparkSession, sf_dir: str) -> str:
         feed.out,
         feed.ckpt,
         cells,
-        line_words=10,
-        df_threshold=2,
         w=_LINEDF_W,
         d=_LINEDF_D,
         seed=_LINEDF_SEED,

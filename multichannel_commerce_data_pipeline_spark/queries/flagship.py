@@ -13,10 +13,10 @@ scan order), then cast to DOUBLE only at the output edge. Ratios divide
 the already-exact decimal sums as doubles, so both engines divide
 bit-identical operands.
 
-Scale shape: one shuffle for the order rollup, one for the freight
-rollup (both keyed on orderkey, so AQE can plan the order-freight join
-shuffle-free), broadcast joins for the ≤25-row dims, and a final
-partial-aggregated group-by on the KPI grain. No collect(), no UDFs.
+Scale shape: one shuffle for the order rollup (revenue and freight in
+one pass, keyed on orderkey), a customer join, broadcast joins for the
+≤25-row dims, and a final partial-aggregated group-by on the KPI
+grain. No collect(), no UDFs.
 """
 
 from __future__ import annotations
@@ -158,24 +158,32 @@ def exec_daily_kpi(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("freight_cost_raw"),
         )
     )
-    geo = (
-        load(spark, sf_dir, "customer")
-        .join(F.broadcast(load(spark, sf_dir, "nation")), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(load(spark, sf_dir, "region")), F.col("n_regionkey") == F.col("r_regionkey"))
-        .select("c_custkey", F.col("n_name").alias("country"), F.col("r_name").alias("region"))
-    )
-
+    # The rollup joins the bare customer scan, and the nation and region
+    # names attach to the joined rows afterwards, so the join's build
+    # side is fixed when the query is planned, not by which stage
+    # finishes first: a scan's size estimate is its file size, so at
+    # test scale the initial plan already broadcasts customer and AQE
+    # keeps that broadcast stage. Customer joined to its dims first
+    # would be sized as the PRODUCT of the three inputs, planned as a
+    # sort-merge join, and AQE would broadcast whichever side finished
+    # first (one more set of generated classes per variant). At 100 TB
+    # customer and the rollup are both far over the broadcast
+    # threshold, so the join stays a sort-merge join on custkey
+    # whichever side finishes first, and the dims still broadcast.
+    cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     freight_cost = F.coalesce(
         F.col("freight_cost_raw"), F.expr("CAST(0 AS DECIMAL(18,2))")
     )
     cm2 = (
-        order_rollup.join(geo, geo.c_custkey == F.col("o_custkey"))
+        order_rollup.join(cust, cust.c_custkey == F.col("o_custkey"))
+        .join(F.broadcast(load(spark, sf_dir, "nation")), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(F.broadcast(load(spark, sf_dir, "region")), F.col("n_regionkey") == F.col("r_regionkey"))
         .select(
             "order_no",
             "o_orderdate",
             "o_orderpriority",
-            "country",
-            "region",
+            F.col("n_name").alias("country"),
+            F.col("r_name").alias("region"),
             "net_revenue",
             F.round(
                 F.col("net_revenue") * F.expr(f"CAST(0.35 AS {_DEC})")
@@ -205,7 +213,7 @@ def exec_daily_kpi(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue_sum = F.sum("net_revenue")
     cm2_sum = F.sum("cm2_amount")
     # COUNT(DISTINCT order_no) in the reference view — but cm2 is one
-    # row per order by construction (orders ⋈ 1:1 rollup ⋈ 1:1 geo, and
+    # row per order by construction (orders ⋈ 1:1 rollup ⋈ 1:1 customer and dims, and
     # the channels partition rows by priority), so the engine exploits
     # the uniqueness constraint and counts rows instead: same values,
     # no two-phase distinct expand on the KPI grain. The oracle keeps

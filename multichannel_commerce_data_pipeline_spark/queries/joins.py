@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from multichannel_commerce_data_pipeline_spark.artifacts import artifact
 from multichannel_commerce_data_pipeline_spark.functions import stage_filter
+from multichannel_commerce_data_pipeline_spark.operators.basket import MAX_BASKET_SIZE
 from multichannel_commerce_data_pipeline_spark.queries import query
 from multichannel_commerce_data_pipeline_spark.tables import (
     load,
@@ -210,7 +211,7 @@ def regional_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "copurchase_pairs",
-    oracle="""
+    oracle=f"""
     WITH items AS (
       SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
     ),
@@ -220,7 +221,7 @@ def regional_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                ROW_NUMBER() OVER (PARTITION BY l_orderkey
                                   ORDER BY l_partkey) AS rn
         FROM items
-      ) WHERE rn <= 64
+      ) WHERE rn <= {MAX_BASKET_SIZE}
     ),
     pairs AS (
       SELECT a.l_partkey AS part_a, b.l_partkey AS part_b
@@ -241,7 +242,7 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-basket quadratic, NEVER corpus-quadratic; at 100 TB the join
     co-partitions on l_orderkey (one shuffle each side) and the pair
     count is a partial-aggregated rollup. A deterministic
-    max_basket_size=64 cap (operators/basket.py, mirrored in the
+    MAX_BASKET_SIZE=64 cap (operators/basket.py, read by the
     oracle's ROW_NUMBER filter) bounds the worst basket to C(64,2)
     pairs so one pathological mega-basket can't go quadratic — a no-op
     at every test SF (max basket 13) but load-bearing at 100 TB;
@@ -262,7 +263,6 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_partkey",
         min_baskets=2,
-        max_basket_size=64,
     ).select(
         F.col("item_a").alias("part_a"),
         F.col("item_b").alias("part_b"),
@@ -356,7 +356,6 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         fees,
         on=["l_returnflag"],
         salt_col=F.col("l_orderkey"),
-        n_salts=16,
     )
     return joined.groupBy("l_returnflag").agg(
         F.round(
@@ -372,12 +371,15 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_oracle(n_iters: int) -> str:
-    """Unrolled n-round weighted PageRank in DuckDB over the symmetrized
-    co-purchase graph — same decimal-quantized contributions as
-    operators/graph.pagerank, so the iterative computation hash-matches
-    round for round."""
+def _pagerank_oracle() -> str:
+    """Unrolled ``PAGERANK_ROUNDS``-round weighted PageRank in DuckDB
+    over the symmetrized co-purchase graph — same decimal-quantized
+    contributions as operators/graph.pagerank, so the iterative
+    computation hash-matches round for round."""
     from multichannel_commerce_data_pipeline_spark.functions import oracle_dround
+    from multichannel_commerce_data_pipeline_spark.operators.graph import (
+        PAGERANK_ROUNDS,
+    )
 
     blocks = [
         """items AS (
@@ -405,7 +407,7 @@ def _pagerank_oracle(n_iters: int) -> str:
     ]
     contrib = oracle_dround("(r.r * e.w) / d.deg", 9)
     update = oracle_dround("0.15 + 0.85 * CAST(s AS DOUBLE)", 9)
-    for i in range(n_iters):
+    for i in range(PAGERANK_ROUNDS):
         blocks.append(
             f"""c{i + 1} AS (
       SELECT e.dst AS node,
@@ -422,7 +424,7 @@ def _pagerank_oracle(n_iters: int) -> str:
     return (
         "WITH "
         + ",\n    ".join(blocks)
-        + f"\n    SELECT node AS part, r AS pagerank FROM r{n_iters}"
+        + f"\n    SELECT node AS part, r AS pagerank FROM r{PAGERANK_ROUNDS}"
     )
 
 
@@ -517,7 +519,7 @@ def _pagerank_graph(
     return (ed, deg)
 
 
-@query("copurchase_pagerank", oracle=_pagerank_oracle(2))
+@query("copurchase_pagerank", oracle=_pagerank_oracle())
 def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph analytics over the market basket: 2 rounds of weighted
     PageRank on the symmetrized co-purchase graph (edges = part pairs
@@ -535,7 +537,7 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ed, deg = _pagerank_graph(spark, sf_dir)
-    return pagerank_annotated(ed, deg, n_iters=2).select(
+    return pagerank_annotated(ed, deg).select(
         F.col("node").alias("part"), F.col("r").alias("pagerank")
     )
 

@@ -77,7 +77,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage (no corpus shuffle); JVM-side zip_with/aggregate dot products."""
     e = parallelize_small_scan(spark, load(spark, sf_dir, "embeddings"))
     q = e.filter(F.col("vec_id") < _N_QUERIES)
-    return S.cosine_topk(e, q, id_col="vec_id", vec_col="embedding", k=_K)
+    return S.cosine_topk(e, q, k=_K)
 
 
 def _plane_sql(p: int, dim: int) -> str:
@@ -148,9 +148,7 @@ def ann_srp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured recall 0.4 on this near-uniform synthetic corpus (real
     # clustered embeddings bucket far better). More planes for bigger
     # corpora.
-    return S.srp_bucket_topk(
-        e, q, dim=64, id_col="vec_id", vec_col="embedding", n_planes=4, k=_K
-    )
+    return S.srp_bucket_topk(e, q, dim=64, n_planes=4, k=_K)
 
 
 # 6 planes = 64 buckets: still recovers 6 of the corpus's 8 threshold
@@ -200,7 +198,6 @@ def embedding_near_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim=_NEARDUP_DIM,
         n_planes=_NEARDUP_PLANES,
         threshold=_NEARDUP_T,
-        multi_probe=True,
     )
 
 
@@ -262,8 +259,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = parallelize_small_scan(spark, load(spark, sf_dir, "embeddings"))
     q = e.filter(F.col("vec_id") < _N_QUERIES)
     return S.ivf_topk(
-        e, q, centroid_stride=_IVF_STRIDE, n_probe=_IVF_PROBE,
-        id_col="vec_id", vec_col="embedding", k=_K,
+        e, q, centroid_stride=_IVF_STRIDE, n_probe=_IVF_PROBE, k=_K
     )
 
 
@@ -295,10 +291,9 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-reproducible."""
     e = parallelize_small_scan(spark, load(spark, sf_dir, "embeddings"))
     q = e.filter(F.col("vec_id") < _N_QUERIES)
-    exact = S.cosine_topk(e, q, id_col="vec_id", vec_col="embedding", k=_K)
+    exact = S.cosine_topk(e, q, k=_K)
     approx = S.ivf_topk(
-        e, q, centroid_stride=_IVF_STRIDE, n_probe=_IVF_PROBE,
-        id_col="vec_id", vec_col="embedding", k=_K,
+        e, q, centroid_stride=_IVF_STRIDE, n_probe=_IVF_PROBE, k=_K
     ).select("query_id", "neighbor_id", F.lit(1).alias("__hit"))
     return (
         exact.select("query_id", "neighbor_id")
@@ -364,7 +359,6 @@ def near_dup_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim=_NEARDUP_DIM,
         n_planes=_NEARDUP_PLANES,
         threshold=_NEARDUP_T,
-        multi_probe=True,
     )
     d = load(spark, sf_dir, "documents")
     # staged tokenize-once form (r16 optimization round, guide §4.2)
@@ -429,7 +423,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole compression step has an exact SQL oracle (arrays stay
     internal — the driver's canonicalizer hashes scalar outputs only)."""
     e = parallelize_small_scan(spark, load(spark, sf_dir, "embeddings"))
-    out = S.quantize_int8(e, id_col="vec_id", vec_col="embedding")
+    out = S.quantize_int8(e)
     return out.select(
         F.col("id").alias("vec_id"),
         "scale",
@@ -493,11 +487,7 @@ def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle."""
     e = parallelize_small_scan(spark, load(spark, sf_dir, "embeddings"))
     return S.semantic_dedup(
-        e,
-        centroid_stride=_IVF_STRIDE,
-        threshold=_SEMDEDUP_T,
-        id_col="vec_id",
-        vec_col="embedding",
+        e, centroid_stride=_IVF_STRIDE, threshold=_SEMDEDUP_T
     )
 
 
@@ -510,9 +500,7 @@ _PQ_M, _PQ_K, _PQ_STRIDE = 8, 16, 25
 @artifact
 def _pq_cb(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
     return S.pq_codebook(
-        load(spark, sf_dir, "embeddings"),
-        m=_PQ_M, k=_PQ_K, stride=_PQ_STRIDE,
-        id_col="vec_id", vec_col="embedding",
+        load(spark, sf_dir, "embeddings"), m=_PQ_M, k=_PQ_K, stride=_PQ_STRIDE
     )
 
 
@@ -530,7 +518,6 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str) -> "DataFrame":
         parallelize_small_scan(spark, load(spark, sf_dir, "embeddings")),
         centroid_stride=_IVF_STRIDE,
         m=_PQ_M, k_codes=_PQ_K, code_stride=_PQ_STRIDE,
-        id_col="vec_id", vec_col="embedding",
         codebook=_pq_cb(spark, sf_dir),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     idx.count()
@@ -605,7 +592,6 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = parallelize_small_scan(spark, load(spark, sf_dir, "embeddings"))
     enc = S.pq_encode(
         e, m=_PQ_M, k=_PQ_K, stride=_PQ_STRIDE,
-        id_col="vec_id", vec_col="embedding",
         codebook=_pq_cb(spark, sf_dir),
     )
     # the operator returns codes as array<int> (the storage layout); the
@@ -733,8 +719,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.ivfpq_topk(
         e, q,
         centroid_stride=_IVF_STRIDE, n_probe=_IVF_PROBE,
-        m=_PQ_M, k_codes=_PQ_K, code_stride=_PQ_STRIDE,
-        id_col="vec_id", vec_col="embedding", k=_K,
+        m=_PQ_M, k_codes=_PQ_K, code_stride=_PQ_STRIDE, k=_K,
         codebook=_pq_cb(spark, sf_dir),
         index=_ivfpq_index(spark, sf_dir),
     )
@@ -808,7 +793,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = parallelize_small_scan(spark, load(spark, sf_dir, "embeddings"))
     q0 = e.filter(F.col("vec_id") == 0)
-    dense = S.cosine_topk(e, q0, id_col="vec_id", vec_col="embedding", k=50).select(
+    dense = S.cosine_topk(e, q0, k=50).select(
         F.col("neighbor_id").alias("id"), F.col("rank").alias("dr")
     )
 
@@ -922,8 +907,7 @@ def ann_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = parallelize_small_scan(spark, load(spark, sf_dir, "embeddings"))
     q = e.filter(F.col("vec_id") < _N_QUERIES)
     return S.matryoshka_topk(
-        e, q, trunc_dim=_MAT_TRUNC, shortlist=_MAT_SHORT, k=_K,
-        id_col="vec_id", vec_col="embedding",
+        e, q, trunc_dim=_MAT_TRUNC, shortlist=_MAT_SHORT, k=_K
     )
 
 
@@ -1211,13 +1195,14 @@ def kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PC_ITERS = 2
 
 
-def _pc_chain(iters: int = _PC_ITERS, dim: int = _KM_DIM) -> str:
+def _pc_chain() -> str:
     """The unrolled power-iteration CTE chain, built once and composed
     by BOTH _top_pc_oracle and _anisotropy_oracle (the _km_chain
     pattern) — never derived by parsing rendered SQL. The start value
     is rendered from the SAME driver-side expression the engine uses
     (operators/clustering.py power_iteration: ``1.0 / dim**0.5``), so
     any dim stays engine/oracle-exact, not just dim=64."""
+    iters, dim = _PC_ITERS, _KM_DIM
     dot = _DOT.format(a="c.v", b="p.pv")
     addend = f"CAST({oracle_dround('v[i] * s', 9)} AS DECIMAL(28,9))"
     norm = (
@@ -1254,10 +1239,10 @@ def _pc_chain(iters: int = _PC_ITERS, dim: int = _KM_DIM) -> str:
     return ",\n    ".join(blocks)
 
 
-def _top_pc_oracle(iters: int = _PC_ITERS, dim: int = _KM_DIM) -> str:
-    return f"""WITH {_pc_chain(iters, dim)}
+def _top_pc_oracle() -> str:
+    return f"""WITH {_pc_chain()}
     SELECT i - 1 AS dim, pv[i] AS loading
-    FROM p{iters} CROSS JOIN sp
+    FROM p{_PC_ITERS} CROSS JOIN sp
     """
 
 

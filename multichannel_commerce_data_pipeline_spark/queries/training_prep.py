@@ -89,7 +89,7 @@ def pack_utilization(spark: SparkSession, sf_dir: str) -> DataFrame:
     under budget waste context length)."""
     d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
     packs = TP.assign_packs(d, F.size(T.tokens(F.col("text"))), budget=256, n_shards=8)
-    return TP.pack_stats(packs, budget=256)
+    return TP.pack_stats(packs)
 
 
 _BFD_ORACLE = rf"""
@@ -192,7 +192,7 @@ def dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket — membership is a pure function of (doc_id, seed), so the
     split is stable as the corpus grows and needs no sampling state."""
     d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
-    return TP.split_assign(d, train_pct=80, val_pct=10)
+    return TP.split_assign(d)
 
 
 # high-value sources repeat; everything unlisted defaults to 1 epoch
@@ -362,9 +362,7 @@ def doc_segment_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceeds the context budget. Zero shuffles; zero-token docs keep one
     empty segment (nothing silently vanishes)."""
     d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
-    return TP.split_long_docs(
-        d, F.size(T.tokens(F.col("text"))), budget=256
-    )
+    return TP.split_long_docs(d, F.size(T.tokens(F.col("text"))))
 
 
 def _corpus_prepare_oracle() -> str:
@@ -1027,7 +1025,7 @@ def domain_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine equality is exact (operators/training_prep.py
     domain_cap_sample)."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "source")
-    return TP.domain_cap_sample(docs, "source", cap=20, seed=43)
+    return TP.domain_cap_sample(docs, "source", cap=20)
 
 
 def _temp_mix_oracle() -> str:
@@ -1089,7 +1087,7 @@ def temperature_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     addends so double addition order cannot diverge
     (operators/training_prep.py temperature_mix_sample)."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang")
-    return TP.temperature_mix_sample(docs, "lang", alpha=0.5)
+    return TP.temperature_mix_sample(docs, "lang")
 
 
 _MIX_SHARES = {"en": 0.4, "zh": 0.2, "es": 0.2, "de": 0.1, "fr": 0.1}
@@ -1214,7 +1212,7 @@ def _cluster_split_oracle() -> str:
         _minhash_lsh_oracle,
     )
 
-    pair_sql = _minhash_lsh_oracle(16, 8, _THRESHOLD)
+    pair_sql = _minhash_lsh_oracle(_THRESHOLD)
     rep_hash = oracle_hash64("CAST(rep AS VARCHAR)", 13)
     return f"""
     WITH RECURSIVE
@@ -1258,9 +1256,7 @@ def _doc_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
-    pairs = D.minhash_lsh_pairs(
-        d, "doc_id", "text", k=16, bands=8, n=3, threshold=_THRESHOLD
-    )
+    pairs = D.minhash_lsh_pairs(d, "doc_id", "text", threshold=_THRESHOLD)
     labels = D.dedup_clusters(pairs).repartition(32, "doc").persist()
     labels.count()
     return labels
@@ -1579,8 +1575,8 @@ def _rec_model(
     # copurchase_pairs shape), replacing the capped equi self-join
     # whose shared `baskets` subtree (window cap + semi-join)
     # Spark re-executed once per join side (no DataFrame-level
-    # CSE). The sorted collect_set prefix IS cap_basket_size's
-    # 64-smallest-items rule, so the pair supports are identical;
+    # CSE). The sorted collect_set prefix IS the MAX_BASKET_SIZE
+    # smallest-items rule, so the pair supports are identical;
     # the directed (pa, pb, w) frame the top-k window consumes is
     # the symmetric closure of the unordered counts (co-occurrence
     # is symmetric: w(pa,pb) = w(pb,pa)).
@@ -1589,10 +1585,7 @@ def _rec_model(
         F.col("l_orderkey") == F.col("o_orderkey"),
         "left_semi",
     )
-    und = copurchase_pair_counts(
-        items, "l_orderkey", "l_partkey", min_baskets=1,
-        max_basket_size=64,
-    )
+    und = copurchase_pair_counts(items, "l_orderkey", "l_partkey", min_baskets=1)
     cp = und.select(
         F.explode(
             F.array(
@@ -1671,6 +1664,9 @@ def _rec_model(
 
 def _rec_eval_oracle() -> str:
     from multichannel_commerce_data_pipeline_spark.functions import oracle_dround
+    from multichannel_commerce_data_pipeline_spark.operators.basket import (
+        MAX_BASKET_SIZE,
+    )
 
     return f"""
     WITH train_orders AS (
@@ -1691,7 +1687,7 @@ def _rec_eval_oracle() -> str:
                ROW_NUMBER() OVER (PARTITION BY o_orderkey
                                   ORDER BY l_partkey) AS rn
         FROM (SELECT DISTINCT o_orderkey, l_partkey FROM train_items)
-      ) WHERE rn <= 64
+      ) WHERE rn <= {MAX_BASKET_SIZE}
     ),
     cp AS (
       SELECT a.l_partkey AS pa, b.l_partkey AS pb,

@@ -2047,28 +2047,53 @@ def ensure_histogram_state(spark: SparkSession, sf_dir: str, path: str) -> None:
     )
 
 
+@artifact
+def _stored_bounds(spark: SparkSession, path: str) -> tuple[float, ...]:
+    """The boundaries b0, b1, ... of a published histogram state, read
+    on the driver from its parquet footers (metadata only, no Spark
+    job). Every state row carries the same boundary values, so each
+    b-column's min statistic IS its boundary. Empty for a state with
+    no rows."""
+    import pyarrow.parquet as pq
+
+    for part in sorted(Path(path).glob("*.parquet")):
+        footer = pq.read_metadata(part)
+        cols = [
+            c
+            for _, c in sorted(
+                (int(n[1:]), c)
+                for c, n in enumerate(footer.schema.names)
+                if n[0] == "b" and n[1:].isdigit()
+            )
+        ]
+        for g in range(footer.num_row_groups):
+            stats = [footer.row_group(g).column(c).statistics for c in cols]
+            if all(st is not None and st.has_min_max for st in stats):
+                return tuple(float(st.min) for st in stats)
+    return ()
+
+
 def _merged_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The maintained equi-depth histogram as a frame: stored
     pre-cutover state + the delta binned against the STORED boundaries,
     accumulators merged (cnt+cnt, min/max) — the shared input of the
     delta-merge report and the quantile-serving consumer. History is
-    never rescanned, and the stored boundaries stay in the plan: every
-    state row carries them, so one row of them is broadcast onto the
-    delta (the customer_rfm cut-point shape) and building the frame
+    never rescanned, and the state is scanned once: the boundaries
+    enter the delta's bucket expression as literals read from the
+    state's parquet footers (_stored_bounds), so building the frame
     runs no Spark job."""
-    state = parquet_memo(spark, ensure_histogram_state(spark, sf_dir))
-    n_b = len(
-        [c for c in state.columns if c[0] == "b" and c[1:].isdigit()]
-    )
-    bounds = state.select(*[f"b{i}" for i in range(n_b)]).limit(1)
+    path = ensure_histogram_state(spark, sf_dir)
+    state = parquet_memo(spark, path).select("bucket", "n_rows", "lo", "hi")
+    bounds = _stored_bounds(spark, path)
+    if not bounds:
+        return state  # no history, no boundaries: nothing to bin against
     bucket = sum(
-        F.when(F.col("l_extendedprice") > F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(n_b)
+        F.when(F.col("l_extendedprice") > F.lit(b), 1).otherwise(0)
+        for b in bounds
     ).cast("long")
     delta = (
         load(spark, sf_dir, "lineitem")
         .filter(F.col("l_shipdate") >= F.lit(_HDM_CUT).cast("timestamp"))
-        .join(F.broadcast(bounds))
         .select(F.col("l_extendedprice").alias("p"), bucket.alias("bucket"))
         .groupBy("bucket")
         .agg(
@@ -2078,8 +2103,7 @@ def _merged_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        state.select("bucket", "n_rows", "lo", "hi")
-        .unionByName(delta)
+        state.unionByName(delta)
         .groupBy("bucket")
         .agg(
             F.sum("n_rows").cast("long").alias("n_rows"),
@@ -2135,8 +2159,8 @@ def histogram_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-bucket accumulators (count, lo, hi) over all pre-cutover rows,
     binned against the old slice's exact octile boundaries, with the
     boundary VALUES carried on the state rows; a refresh bins ONLY the
-    delta slice against those stored boundaries (one state row,
-    broadcast into the plan — no percentile recompute, no history
+    delta slice against those stored boundaries (read from the state's
+    parquet footers into literals — no percentile recompute, no history
     scan) and merges accumulators (cnt+cnt, min(lo), max(hi)) — the
     ``mv_incremental_merge`` idiom applied to statistics. The output
     doubles as the re-ANALYZE trigger: per-bucket share against the
@@ -2484,7 +2508,8 @@ def histogram_quantile_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile can sit at most one bucket-width from the estimate.
 
     Plan: the merged histogram is the shared _merged_histogram frame
-    (delta scan + broadcast state boundaries); the cumulative walk and
+    (one state scan + the delta scan binned against the stored
+    boundaries as literals); the cumulative walk and
     the total are two frames of one window over the <= 8 bucket rows
     (single-partition by construction — bounded state, not data), so
     the merged frame executes once; quantile targets explode from a literal

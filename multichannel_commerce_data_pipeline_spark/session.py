@@ -16,6 +16,13 @@ WINDOW_EXEC_LOGGER = "org.apache.spark.sql.execution.window.WindowExec"
 FILE_STREAM_SINK_LOGGER = (
     "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink"
 )
+# the expected lines every streaming drain logs (Spark 4.1 class names)
+STREAM_DRAIN_LOGGERS = (
+    "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+    "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution",
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "ChecksumCheckpointFileManager",
+)
 
 
 def get_spark(
@@ -108,7 +115,7 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # Two WARNs are noise that buries real warnings; raise only their
+    # These WARNs are noise that buries real warnings; raise only their
     # loggers to ERROR. The seven unpartitioned windows left in the
     # engine are audited bounded (tests/test_window_audit.py pins each
     # one), so WindowExec's "No Partition Defined" is about 20 lines per
@@ -116,9 +123,16 @@ def get_spark(
     # pipeline.schemas.bronze_glob) first asks FileStreamSink whether
     # the path is a streaming sink's output, which logs "Assume no
     # metadata directory" with a full FileNotFoundException stack trace
-    # per read.
+    # per read. Across the oracle sweep the three stream-drain loggers
+    # log nothing but the expected lines: AQE is disabled in streaming
+    # (ResolveWriteToStream, once per drain; MicroBatchExecution, once
+    # per stateful drain) and a restored state snapshot has no checksum
+    # file (ChecksumCheckpointFileManager). HDFSBackedStateStoreProvider's
+    # "state for version N doesn't exist in loadedMaps" stays: its
+    # logger name carries the store id, so only the whole state-store
+    # package logger would reach it.
     jvm = spark._jvm
-    for logger in (WINDOW_EXEC_LOGGER, FILE_STREAM_SINK_LOGGER):
+    for logger in (WINDOW_EXEC_LOGGER, FILE_STREAM_SINK_LOGGER, *STREAM_DRAIN_LOGGERS):
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
             logger, jvm.org.apache.logging.log4j.Level.ERROR
         )

@@ -318,14 +318,13 @@ def stream_bronze_to_silver(
     bronze_root: str,
     silver_dir: str,
     checkpoint_dir: str,
-    watermark: str = "1 day",
     dedup_keys: tuple[str, ...] | None = None,
 ) -> StreamingQuery:
     """One incremental bronze→silver drain (Trigger.AvailableNow):
     restart-idempotent via the checkpoint, deduplicated within the
     watermark, landed as date-partitioned parquet."""
     stream = conform_stream(
-        read_bronze_stream(spark, source, bronze_root), source, watermark, dedup_keys
+        read_bronze_stream(spark, source, bronze_root), source, dedup_keys=dedup_keys
     ).withColumn("p_date", F.to_date("bronze_ts"))
     return drain(
         stream.writeStream.format("parquet")
@@ -342,7 +341,6 @@ def stream_stateful_running_totals(
     bronze_root: str,
     out_dir: str,
     checkpoint_dir: str,
-    watermark: str = "1 day",
 ) -> StreamingQuery:
     """Custom stateful streaming operator (X5 × T5):
     ``applyInPandasWithState`` keeps an explicit per-key running total
@@ -376,7 +374,7 @@ def stream_stateful_running_totals(
         )
 
     conformed = conform_stream(
-        read_bronze_stream(spark, source, bronze_root), source, watermark
+        read_bronze_stream(spark, source, bronze_root), source
     )
     totals = (
         conformed.withColumn("__key", F.lit(source))
@@ -404,8 +402,6 @@ def stream_bronze_to_silver_jdbc(
     jdbc_url: str,
     table: str,
     checkpoint_dir: str,
-    watermark: str = "1 day",
-    dedup_keys: tuple[str, ...] | None = None,
 ) -> StreamingQuery:
     """The reference's exact write path — conformed silver rows appended
     to a relational store (bronze_to_silver_all_sources.py:82-90) — as a
@@ -416,14 +412,14 @@ def stream_bronze_to_silver_jdbc(
     (the replay deletes the dead attempt's rows first). Landed rows
     carry a ``__batch_id`` column; plain at-least-once append is
     available via ``write_jdbc_append`` for sinks where a lineage
-    column is unacceptable. The watermark/dedup semantics are identical
-    to the parquet landing — only the sink differs."""
+    column is unacceptable. The one-day watermark is the parquet
+    landing's; only the sink differs."""
     from multichannel_commerce_data_pipeline_spark.sources.jdbc import (
         write_jdbc_idempotent,
     )
 
     stream = conform_stream(
-        read_bronze_stream(spark, source, bronze_root), source, watermark, dedup_keys
+        read_bronze_stream(spark, source, bronze_root), source
     ).drop("bronze_ts")
     return drain(
         stream.writeStream.foreachBatch(
@@ -438,8 +434,6 @@ def stream_orders_with_freight(
     bronze_root: str,
     out_dir: str,
     checkpoint_dir: str,
-    watermark: str = "2 days",
-    join_window: str = "2 days",
 ) -> StreamingQuery:
     """Stream-stream inner join (the reference's order⟕freight
     enrichment, silver_to_gold.py:512-516, computed in-flight): wholesale
@@ -463,7 +457,7 @@ def stream_orders_with_freight(
             "quantity",
             F.col("bronze_timestamp").try_cast("timestamp").alias("order_bts"),
         )
-        .withWatermark("order_bts", watermark)
+        .withWatermark("order_bts", "2 days")
     )
     freight = (
         CONFORMERS["freight"](
@@ -476,18 +470,18 @@ def stream_orders_with_freight(
             "carrier",
             F.col("bronze_timestamp").try_cast("timestamp").alias("freight_bts"),
         )
-        .withWatermark("freight_bts", watermark)
+        .withWatermark("freight_bts", "2 days")
     )
     joined = orders.join(
         freight,
         (F.col("order_id") == F.col("order_reference"))
         & (
             F.col("freight_bts")
-            >= F.col("order_bts") - F.expr(f"INTERVAL {join_window}")
+            >= F.col("order_bts") - F.expr("INTERVAL 2 days")
         )
         & (
             F.col("freight_bts")
-            <= F.col("order_bts") + F.expr(f"INTERVAL {join_window}")
+            <= F.col("order_bts") + F.expr("INTERVAL 2 days")
         ),
         "inner",
     ).select(
@@ -508,7 +502,6 @@ def stream_windowed_counts(
     bronze_root: str,
     out_dir: str,
     checkpoint_dir: str,
-    window: str = "1 day",
     watermark: str = "1 day",
 ) -> StreamingQuery:
     """T4: streaming tumbling-window aggregate (count + revenue-ish sum
@@ -518,7 +511,7 @@ def stream_windowed_counts(
         read_bronze_stream(spark, source, bronze_root), source, watermark
     )
     agg = (
-        conformed.groupBy(F.window("bronze_ts", window).alias("win"))
+        conformed.groupBy(F.window("bronze_ts", "1 day").alias("win"))
         .agg(F.count(F.lit(1)).alias("n_rows"))
         .select(
             F.col("win.start").alias("window_start"),
@@ -540,7 +533,6 @@ def stream_gold_cm2_refresh(
     silver_dir: str,
     gold_dir: str,
     checkpoint_dir: str,
-    watermark: str = "1 day",
 ) -> StreamingQuery:
     """The reference's gold cadence loop (silver_to_gold.py re-run every
     300 s against the whole silver store) as a checkpointed stream:
@@ -564,7 +556,7 @@ def stream_gold_cm2_refresh(
     from multichannel_commerce_data_pipeline_spark.pipeline import gold
 
     conformed = conform_stream(
-        read_bronze_stream(spark, "joor", bronze_root), "joor", watermark
+        read_bronze_stream(spark, "joor", bronze_root), "joor"
     ).drop("bronze_ts")
     freight = CONFORMERS["freight"](
         flatten_envelope(
@@ -604,8 +596,6 @@ def compact_landing(
     spark: SparkSession,
     in_dir: str,
     out_dir: str,
-    partition_col: str = "p_date",
-    target_bytes: int = 128 * 1024 * 1024,
 ) -> None:
     """Small-file compaction for a date-partitioned streaming landing —
     the maintenance job every file-sink stream eventually needs: each
@@ -616,18 +606,18 @@ def compact_landing(
     One declarative pass: repartition on the partition column (all of a
     date's rows converge on one task) and cap physical file size with
     ``maxRecordsPerFile`` derived from the observed bytes-per-row, so a
-    hot date still splits into ~target_bytes files instead of one
-    giant one. Output keeps the same partition layout, so readers and
+    hot date still splits into ~128 MB files instead of one giant
+    one. Output keeps the same partition layout, so readers and
     partition pruning are unaffected."""
     df = spark.read.parquet(in_dir)
     total = max(dir_bytes(spark, in_dir), 1)
     n_rows = max(df.count(), 1)
-    rows_per_file = max(int(target_bytes / max(total / n_rows, 1)), 1)
+    rows_per_file = max(int(128 * 1024 * 1024 / max(total / n_rows, 1)), 1)
     (
-        df.repartition(F.col(partition_col))
+        df.repartition(F.col("p_date"))
         .write.mode("overwrite")
         .option("maxRecordsPerFile", rows_per_file)
-        .partitionBy(partition_col)
+        .partitionBy("p_date")
         .parquet(out_dir)
     )
 
@@ -716,8 +706,8 @@ def read_merge_snapshot_as_of(
     return spark.read.parquet(str(path))
 
 
-def vacuum_merge_snapshots(snapshot_dir: str, keep: int = 2) -> list[str]:
-    """Drop all but the newest ``keep`` snapshots of a
+def vacuum_merge_snapshots(snapshot_dir: str) -> list[str]:
+    """Drop all but the newest two snapshots of a
     :func:`stream_merge_snapshot` chain (never the one ``_LATEST``
     points at). Copy-on-write merge leaves one directory per batch as
     its rollback surface; this is the retention step that bounds that
@@ -731,7 +721,7 @@ def vacuum_merge_snapshots(snapshot_dir: str, keep: int = 2) -> list[str]:
         (p.name for p in root.iterdir() if p.name.startswith("snap-")),
         key=lambda n: int(n.split("-")[1]),
     )
-    keep_set = set(snaps[-keep:]) | {latest}
+    keep_set = set(snaps[-2:]) | {latest}
     removed = [n for n in snaps if n not in keep_set]
     for n in removed:
         shutil.rmtree(root / n)
@@ -744,10 +734,8 @@ def stream_heavy_hitters(
     bronze_root: str,
     out_dir: str,
     checkpoint_dir: str,
-    key_col: str = "buyer_name",
     k: int = 6,
     n_buckets: int = 2,
-    watermark: str = "1 day",
 ) -> StreamingQuery:
     """Streaming Misra-Gries heavy hitters (X12 × T5): maintain a
     bounded-state frequent-key summary ACROSS micro-batches and
@@ -777,7 +765,7 @@ def stream_heavy_hitters(
             ks, cs = state.get
             counters = dict(zip(ks, cs))
         for pdf in pdfs:
-            vc = pdf[key_col].dropna().astype(str).value_counts()
+            vc = pdf["buyer_name"].dropna().astype(str).value_counts()
             for kk, c in vc.items():
                 counters[kk] = counters.get(kk, 0) + int(c)
             if len(counters) > k:
@@ -798,12 +786,12 @@ def stream_heavy_hitters(
         ).astype({"bucket": "int32", "key": str, "est": "int64"})
 
     conformed = conform_stream(
-        read_bronze_stream(spark, source, bronze_root), source, watermark
+        read_bronze_stream(spark, source, bronze_root), source
     )
     summary = (
         conformed.withColumn(
             "__bucket",
-            F.pmod(F.xxhash64(F.col(key_col).cast("string")), n_buckets).cast(
+            F.pmod(F.xxhash64(F.col("buyer_name").cast("string")), n_buckets).cast(
                 "int"
             ),
         )
@@ -830,11 +818,9 @@ def stream_cm_sketch(
     bronze_root: str,
     out_dir: str,
     checkpoint_dir: str,
-    key_col: str = "buyer_name",
     w: int = 64,
     d: int = 3,
     seed: int = 131,
-    watermark: str = "1 day",
 ) -> StreamingQuery:
     """Streaming Count-Min sketch (X12 × T5): because sketch cells merge
     by ADDITION, Structured Streaming's own stateful aggregation IS the
@@ -855,9 +841,9 @@ def stream_cm_sketch(
     )
 
     conformed = conform_stream(
-        read_bronze_stream(spark, source, bronze_root), source, watermark
+        read_bronze_stream(spark, source, bronze_root), source
     )
-    pos = _positions(F.col(key_col).cast("string"), w, d, seed)
+    pos = _positions(F.col("buyer_name").cast("string"), w, d, seed)
     inc = conformed.select(
         F.explode(
             F.array(
@@ -888,8 +874,6 @@ def stream_line_df_sketch(
     schema_ddl: str,
     out_dir: str,
     checkpoint_dir: str,
-    text_col: str = "text",
-    line_words: int = 10,
     w: int = 64,
     d: int = 3,
     seed: int = 131,
@@ -918,14 +902,12 @@ def stream_line_df_sketch(
 
     stream = read_feed(spark, schema_ddl, src_glob)
 
-    ws = F.split(F.col(text_col), " ")
-    n_lines = F.ceil(F.size(ws) / F.lit(line_words)).cast("int")
+    ws = F.split(F.col("text"), " ")
+    n_lines = F.ceil(F.size(ws) / F.lit(10)).cast("int")
     digs = F.array_distinct(
         F.transform(
             F.sequence(F.lit(0), n_lines - 1),
-            lambda k: F.md5(
-                F.concat_ws(" ", F.slice(ws, k * line_words + 1, line_words))
-            ),
+            lambda k: F.md5(F.concat_ws(" ", F.slice(ws, k * 10 + 1, 10))),
         )
     )
     exploded = stream.select(F.explode_outer(digs).alias("ldigest")).filter(
@@ -963,19 +945,15 @@ def stream_boilerplate_cut(
     out_dir: str,
     checkpoint_dir: str,
     cells: list[int],
-    line_words: int = 10,
-    df_threshold: int = 2,
     w: int = 64,
     d: int = 3,
     seed: int = 131,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> StreamingQuery:
     """Boilerplate-cut-on-ingest (X1 x T5 x X12) — the APPLY side
     composing with ``stream_line_df_sketch``'s MAINTAIN side, closing
     the maintain -> threshold -> cut streaming story: arriving
-    documents have every line whose sketch-estimated corpus df exceeds
-    ``df_threshold`` removed BEFORE landing. This is the two-pass
+    documents have every line whose sketch-estimated corpus df exceeds 2
+    removed BEFORE landing. This is the two-pass
     shape every published boilerplate recipe uses at scale (C4/CCNet
     compute line stats over the crawl, then strip in a second pass) —
     here the stats pass is the streaming sketch and the strip pass is
@@ -1000,15 +978,7 @@ def stream_boilerplate_cut(
 
     def cut_batch(batch_df: DataFrame, bid: int) -> None:
         cut = boilerplate_cut_with_sketch(
-            batch_df,
-            id_col,
-            text_col,
-            cells,
-            line_words=line_words,
-            df_threshold=df_threshold,
-            w=w,
-            d=d,
-            seed=seed,
+            batch_df, "doc_id", "text", cells, w=w, d=d, seed=seed
         )
         land_batch(cut, out_dir, bid)
 
@@ -1021,10 +991,6 @@ def stream_sessionize(
     bronze_root: str,
     out_dir: str,
     checkpoint_dir: str,
-    key_col: str = "buyer_name",
-    ts_col: str = "order_ts",
-    gap: str = "30 minutes",
-    watermark: str = "1 day",
 ) -> StreamingQuery:
     """Streaming SESSION WINDOWS (T4 × T5): Spark's native
     ``session_window`` as a stateful streaming aggregation — open
@@ -1032,8 +998,8 @@ def stream_sessionize(
     micro-batches when a new event lands within the gap of an existing
     session (the semantics a batch-twin recompute gets for free and a
     naive incremental append cannot), then emit EXACTLY ONCE (append
-    mode) when the watermark passes gap + delay beyond their last
-    event. The watermark rides the EVENT-time column, not arrival time
+    mode) when the one-day watermark passes the 30-minute gap beyond
+    their last event. The watermark rides the EVENT-time column, not arrival time
     (contrast ``conform_stream``'s bronze_ts watermark — late events
     within the delay still extend their session). Landing is plain
     parquet append: each closed session is final by construction, so
@@ -1042,10 +1008,10 @@ def stream_sessionize(
         flatten_envelope(read_bronze_stream(spark, source, bronze_root))
     )
     sessions = (
-        conformed.withWatermark(ts_col, watermark)
+        conformed.withWatermark("order_ts", "1 day")
         .groupBy(
-            F.session_window(F.col(ts_col), gap).alias("w"),
-            F.col(key_col).alias("key"),
+            F.session_window(F.col("order_ts"), "30 minutes").alias("w"),
+            F.col("buyer_name").alias("key"),
         )
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
@@ -1073,34 +1039,28 @@ def stream_binned_profile(
     bronze_root: str,
     out_dir: str,
     checkpoint_dir: str,
-    value_col: str = "unit_price",
-    ref_before: str = "2025-06-02",
-    bin_w: float = 25.0,
-    n_bins: int = 10,
-    watermark: str = "1 day",
 ) -> StreamingQuery:
     """Streaming distribution profile (DQ × T5): cumulative per-(bin,
-    window) counts of a conformed value column, the state a streaming
+    window) counts of the conformed ``unit_price`` in 25-wide bins, the state a streaming
     DRIFT MONITOR reads. Like ``stream_cm_sketch``, the profile merges
     by addition, so native stateful aggregation IS the streaming form:
-    state is bounded by 2·n_bins rows regardless of stream length,
+    state is bounded by 2·10 rows regardless of stream length,
     restored from the checkpoint across restarts (cumulative over the
     whole feed), re-emitted in full each trigger (complete mode over a
-    ≤2·n_bins frame) and landed idempotently per batch_id. Rows before
-    ``ref_before`` (event time) accumulate into the reference window,
+    ≤20-row frame) and landed idempotently per batch_id. Rows before
+    2025-06-02 (event time) accumulate into the reference window,
     the rest into the current window; the PSI arithmetic itself runs at
     read time over the landed profile — the monitor stays pure
     aggregation in-flight."""
     conformed = conform_stream(
-        read_bronze_stream(spark, source, bronze_root), source, watermark
+        read_bronze_stream(spark, source, bronze_root), source
     )
     binned = conformed.select(
         F.least(
-            F.floor(F.col(value_col) / F.lit(bin_w)).cast("int"),
-            F.lit(n_bins - 1),
+            F.floor(F.col("unit_price") / F.lit(25.0)).cast("int"), F.lit(9)
         ).alias("bin"),
         F.when(
-            F.col("order_ts") < F.lit(ref_before).cast("timestamp"), F.lit(1)
+            F.col("order_ts") < F.lit("2025-06-02").cast("timestamp"), F.lit(1)
         )
         .otherwise(F.lit(0))
         .alias("is_ref"),
@@ -1124,8 +1084,6 @@ def stream_ivf_assign(
     out_dir: str,
     checkpoint_dir: str,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> StreamingQuery:
     """Streaming IVF coarse assignment (X2 × T5) — the index-serving
     side of ANN at 100 TB: vectors ARRIVE (a parquet/Kafka feed of
@@ -1153,9 +1111,7 @@ def stream_ivf_assign(
     stream = read_feed(spark, schema_ddl, src_glob)
 
     def assign_batch(batch_df: DataFrame, bid: int) -> None:
-        out, _ = ivf_assign(
-            batch_df, 0, id_col=id_col, vec_col=vec_col, centroids=centroids
-        )
+        out, _ = ivf_assign(batch_df, 0, centroids=centroids)
         land_batch(out.select("vid", "cell", "ccos"), out_dir, bid)
 
     return drain(stream.writeStream.foreachBatch(assign_batch), checkpoint_dir)
@@ -1169,8 +1125,6 @@ def stream_decontaminate(
     checkpoint_dir: str,
     eval_grams: DataFrame,
     min_words: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> StreamingQuery:
     """Decontaminate-on-ingest (X1 x T5) — the deployment form of the
     substring-level benchmark decontamination: TRAINING documents
@@ -1200,7 +1154,7 @@ def stream_decontaminate(
     stream = read_feed(spark, schema_ddl, src_glob)
 
     def cut_batch(batch_df: DataFrame, bid: int) -> None:
-        words = doc_words(batch_df, id_col, text_col)
+        words = doc_words(batch_df, "doc_id", "text")
         bounds = contamination_span_bounds(
             substring_grams(words, min_words), eval_grams, min_words
         )
@@ -1216,8 +1170,6 @@ def stream_domain_admit(
     out_dir: str,
     checkpoint_dir: str,
     cap: int,
-    domain_col: str = "source",
-    id_col: str = "doc_id",
 ) -> StreamingQuery:
     """Streaming ADMISSION QUOTA (X6 × T5) — the ingest-time half of
     URL-level curation: documents ARRIVE as a feed and each is admitted
@@ -1234,7 +1186,7 @@ def stream_domain_admit(
     length), held in the checkpoint's state store so admission is
     CUMULATIVE across restarts: a domain capped in yesterday's run
     stays capped when the stream resumes. Within a micro-batch a
-    domain's arrivals are ordered by ``id_col`` (deterministic where a
+    domain's arrivals are ordered by ``doc_id`` (deterministic where a
     wall-clock feed would be arrival-ordered); ``admit_seq`` is the
     doc's 1-based all-time admission index, so the output itself
     proves the cross-batch state. Landing is idempotent per batch
@@ -1248,7 +1200,7 @@ def stream_domain_admit(
         import pandas as pd
 
         batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values(id_col, kind="mergesort").reset_index(
+        batch = batch.sort_values("doc_id", kind="mergesort").reset_index(
             drop=True
         )
         prior = state.get[0] if state.exists else 0
@@ -1257,19 +1209,19 @@ def stream_domain_admit(
         if len(adm):
             yield pd.DataFrame(
                 {
-                    id_col: adm[id_col].to_numpy(),
-                    domain_col: [key[0]] * len(adm),
+                    "doc_id": adm["doc_id"].to_numpy(),
+                    "source": [key[0]] * len(adm),
                     "admit_seq": range(prior + 1, prior + len(adm) + 1),
                 }
             )
 
     stream = read_feed(spark, schema_ddl, src_glob)
     admitted = (
-        stream.select(id_col, domain_col)
-        .groupBy(domain_col)
+        stream.select("doc_id", "source")
+        .groupBy("source")
         .applyInPandasWithState(
             admit,
-            f"{id_col} BIGINT, {domain_col} STRING, admit_seq BIGINT",
+            "doc_id BIGINT, source STRING, admit_seq BIGINT",
             "admitted BIGINT",
             "update",
             GroupStateTimeout.NoTimeout,

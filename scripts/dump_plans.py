@@ -23,11 +23,14 @@ COMMENTARY = {
         "orders join runs BEFORE the rollup, so excluded orders' lineitems "
         "never reach the decimal aggregation; the keyed fan-out exchange on "
         "l_orderkey doubles as the groupBy's distribution — one shuffle of "
-        "the fact rows total, with map-side partial aggregation. Geo dims "
-        "are BroadcastHashJoins; the rollup⋈customer join is statically a "
-        "shuffle join (both sides fact-sized at 100 TB) that AQE converts "
-        "to a broadcast at runtime when small (tests/test_plans.py asserts "
-        "the final adaptive plan). No cartesian stage, no second fact-table "
+        "the fact rows total, with map-side partial aggregation. The rollup "
+        "joins the bare customer scan, whose file-size estimate makes the "
+        "initial plan broadcast customer at this scale, so the build side "
+        "does not depend on which stage finishes first; at 100 TB both "
+        "sides are over the broadcast threshold and the join stays a "
+        "sort-merge join on custkey. Nation and region names attach to the "
+        "joined rows by BroadcastHashJoins (tests/test_plans.py asserts the "
+        "final adaptive plan). No cartesian stage, no second fact-table "
         "exchange."
     ),
     "pricing_summary": (
@@ -659,19 +662,19 @@ COMMENTARY = {
         "(per-bucket count/lo/hi binned against the old slice's "
         "octile boundaries, boundary VALUES carried on the <=8 state "
         "rows) absorbs a delta by binning ONLY the post-cutover rows "
-        "against the stored boundaries, one state row broadcast onto "
-        "the delta (no collect at construction) — the l_shipdate cutover is "
+        "against the stored boundaries, read from the state's parquet "
+        "footers into literals (no Spark job at construction) — the "
+        "l_shipdate cutover is "
         "pushed into the parquet scan, history is never rescanned, "
         "and the merge is the mv_incremental_merge accumulator fold "
         "(cnt+cnt, min/max) over <=16 rows. Per-bucket share vs the "
         "equi-depth target 1/8 doubles as the re-ANALYZE trigger: "
         "drifted buckets say when re-fitting boundaries is worth its "
-        "full scan. One keyed exchange (bucket) and one broadcast of "
-        "the boundary row (asserted in tests/test_plans.py); the total "
-        "is summed on the same single row that collects the <= 8 "
-        "merged buckets, which then explode back out, so the merged "
-        "histogram executes once: three scans (state, boundary row, "
-        "delta) instead of a second copy joined back for the total."
+        "full scan. One keyed exchange (bucket) and no join (asserted in "
+        "tests/test_plans.py); the total is summed on the same single row "
+        "that collects the <= 8 merged buckets, which then explode back "
+        "out, so the merged histogram executes once: two scans (state, "
+        "delta)."
     ),
     "stream_cusum_rollup": (
         "The ARRIVAL-TIME twin of cusum_changepoint: per-series "
@@ -707,10 +710,11 @@ COMMENTARY = {
         "shape): with it inline the probe grew 7.1x across the 10x "
         "step (percentile is the one full-column read); cached, the "
         "warm path is the 8-row walk + delta scan and probes 1.0x; "
-        "the stored boundaries enter as a broadcast state row, so a "
-        "warm construction runs no Spark job. The running count and "
-        "the total are two frames of one window over the bucket rows, "
-        "so the merged histogram executes once (three scans). "
+        "the stored boundaries enter as literals read from the state's "
+        "parquet footers, so a warm construction runs no Spark job. The "
+        "running count and the total are two frames of one window over "
+        "the bucket rows, so the merged histogram executes once (two "
+        "scans: state and delta). "
         "The delta filter stays pushed into the parquet scan "
         "(asserted in tests/test_plans.py)."
     ),

@@ -11,8 +11,9 @@ effect: once warm, every query runs without compiling.
 A warm call may still compile a class the first time AQE picks another
 physical plan for it: which side of a join gets broadcast, or how the
 codegen stages are numbered, can depend on the order in which
-concurrent stages finish (``exec_daily_kpi`` broadcasts either side of
-its orders-customer join at small scale). Each such plan compiles once
+concurrent stages finish (``exec_daily_kpi`` plans its customer
+join's build side up front, but stage numbering still varies). Each
+such plan compiles once
 and then hits the cache, so each query must reach a compile-free call
 within three calls after two warm-up passes; with an undersized cache
 no call ever does.

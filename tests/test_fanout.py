@@ -83,9 +83,10 @@ def test_fanned_out_jobs_count_in_the_callers_job_group(spark, sf_dir):
     "name", ["histogram_quantile_estimate", "histogram_delta_merge"]
 )
 def test_warm_histogram_construction_runs_no_job(spark, sf_dir, name):
-    """The stored histogram boundaries stay in the plan (a broadcast
-    state row, not a collect), and the fits are served from the store,
-    so a warm construction starts no Spark job on any thread."""
+    """The stored histogram boundaries come from the state's parquet
+    footers (metadata read on the driver, not a collect), and the fits
+    are served from the store, so a warm construction starts no Spark
+    job on any thread."""
     build = _query(name)
     build(spark, sf_dir)  # warm-up: builds the state and the fit
     jobs = _jobs_in_group(spark, f"warm-{name}", lambda: build(spark, sf_dir))

@@ -19,16 +19,20 @@ stream query builds its scratch dirs and arrival feed through
 A derived on-disk layout is keyed, placed and published only by
 ``artifacts.layout``: no other module spells the warehouse root or
 touches the store's fingerprint and atomic-publish helpers.
+
+Every defaulted parameter of a package function has a caller that
+passes it a value other than its default, or an entry with a reason
+in ``OPTIONS_ALLOWED``: an option nobody sets is a constant.
 """
 
 from __future__ import annotations
 
 import ast
+import fnmatch
 from pathlib import Path
 
-PACKAGE = Path(__file__).resolve().parent.parent / (
-    "multichannel_commerce_data_pipeline_spark"
-)
+ROOT = Path(__file__).resolve().parent.parent
+PACKAGE = ROOT / "multichannel_commerce_data_pipeline_spark"
 STORE = PACKAGE / "artifacts.py"
 
 ALLOWED = {
@@ -254,4 +258,245 @@ def test_layouts_publish_only_through_the_store():
         f"{len(offenders)} hand-written layout publishes; decorate the "
         "writer with artifacts.layout (ensure_bucketed: "
         "artifacts.warehouse_root): " + "; ".join(offenders)
+    )
+
+
+
+# every file whose calls count as callers of a package function
+CALLERS = sorted(
+    [
+        *PACKAGE.rglob("*.py"),
+        *ROOT.glob("scripts/*.py"),
+        ROOT / "bench.py",
+        ROOT / "__spark_entry__.py",
+        *ROOT.glob("perfbench/*.py"),
+        *ROOT.glob("tests/*.py"),
+    ]
+)
+# "module.function.parameter" fnmatch patterns that stay options
+# although no caller in the repo sets them
+OPTIONS_ALLOWED = {
+    "sources.jdbc.*": "deployment settings of the JDBC edge (driver, "
+    "connection properties, fetch and batch sizes, table options) differ "
+    "per database",
+    "streaming.kafka.kafka_reader.starting_offsets": "deployment setting: "
+    "where a new consumer group starts reading",
+    "pipeline.silver.oracle_conform_*.root": "oracle bronze root, for "
+    "running an oracle over a drop other than the fixtures",
+    "pipeline.schemas.oracle_bronze_from.root": "oracle bronze root, as "
+    "for the silver oracles",
+}
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, ast.expr, int | None]]:
+    """(name, default, positional index or None) per defaulted parameter."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    return [
+        (pos[first + j].arg, d, first + j) for j, d in enumerate(a.defaults)
+    ] + [
+        (arg.arg, d, None)
+        for arg, d in zip(a.kwonlyargs, a.kw_defaults)
+        if d is not None
+    ]
+
+
+def _walk_defs(tree: ast.Module, module: str):
+    """Yield (qualname, node, stack) for every node, where stack lists
+    the enclosing defs innermost first and qualname names the innermost
+    enclosing def or class (``module.Class.method``)."""
+
+    def walk(node, names, stack):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (*_FUNCS, ast.ClassDef)):
+                inner_names = [*names, child.name]
+                inner_stack = [child, *stack] if isinstance(child, _FUNCS) else stack
+                yield ".".join([module, *inner_names]), child, stack
+                yield from walk(child, inner_names, inner_stack)
+            else:
+                yield ".".join([module, *names]), child, stack
+                yield from walk(child, names, stack)
+
+    yield from walk(tree, [], [])
+
+
+def _package_defs() -> dict[str, list[tuple[str, ast.FunctionDef, bool]]]:
+    """simple name -> [(module.qualname, def, is_method)]; a class's
+    ``__init__`` is listed under the class name, the name its callers
+    call."""
+    defs: dict[str, list] = {}
+    for path in sorted(PACKAGE.rglob("*.py")):
+        nodes = list(_walk_defs(ast.parse(path.read_text()), _module_name(path)))
+        methods = {
+            id(b)
+            for _, node, _ in nodes
+            if isinstance(node, ast.ClassDef)
+            for b in node.body
+            if isinstance(b, _FUNCS)
+        }
+        for qual, node, _ in nodes:
+            if isinstance(node, _FUNCS):
+                name = qual.split(".")[-2] if node.name == "__init__" else node.name
+                defs.setdefault(name, []).append((qual, node, id(node) in methods))
+    return defs
+
+
+def _bound_literal(name: str, scopes: list[ast.AST], kinds) -> ast.expr | None:
+    """The literal a local name is bound to (``kw = dict(...)``,
+    ``args = (...)``) in the innermost scope that binds it."""
+    for scope in scopes:
+        for node in ast.walk(scope):
+            if (
+                isinstance(node, ast.Assign)
+                and any(isinstance(t, ast.Name) and t.id == name for t in node.targets)
+                and isinstance(node.value, kinds)
+            ):
+                return node.value
+    return None
+
+
+def _call_args(call: ast.Call, scopes: list[ast.AST]):
+    """(keywords as {name: value}, positionals or None when a ``*args``
+    cannot be resolved, True when a ``**kw`` cannot be resolved);
+    ``*args``/``**kw`` bound to a literal tuple, ``dict(...)`` or
+    ``{...}`` in an enclosing scope are expanded."""
+    kws: dict[str, ast.expr] = {}
+    open_kw = False
+    for k in call.keywords:
+        if k.arg:
+            kws[k.arg] = k.value
+            continue
+        lit = k.value
+        if isinstance(lit, ast.Name):
+            lit = _bound_literal(lit.id, scopes, (ast.Dict, ast.Call))
+        if isinstance(lit, ast.Dict) and all(
+            isinstance(key, ast.Constant) for key in lit.keys
+        ):
+            kws.update({key.value: v for key, v in zip(lit.keys, lit.values)})
+        elif (
+            isinstance(lit, ast.Call)
+            and getattr(lit.func, "id", None) == "dict"
+            and not lit.args
+            and all(kw.arg for kw in lit.keywords)
+        ):
+            kws.update({kw.arg: kw.value for kw in lit.keywords})
+        else:
+            open_kw = True
+    pos: list[ast.expr] | None = []
+    for a in call.args:
+        if not isinstance(a, ast.Starred):
+            pos.append(a)
+            continue
+        lit = a.value
+        if isinstance(lit, ast.Name):
+            lit = _bound_literal(lit.id, scopes, (ast.Tuple, ast.List))
+        if not isinstance(lit, (ast.Tuple, ast.List)) or any(
+            isinstance(e, ast.Starred) for e in lit.elts
+        ):
+            return kws, None, open_kw
+        pos.extend(lit.elts)
+    return kws, pos, open_kw
+
+
+def _passed_values(defs) -> dict[tuple[str, str], list]:
+    """(qual, parameter) -> one entry per call that passes it:
+    "default", "other", or ("fwd", caller qual, caller parameter,
+    caller default, default) when the value is the calling function's
+    own defaulted parameter."""
+    passed: dict[tuple[str, str], list] = {}
+    for path in CALLERS:
+        tree = ast.parse(path.read_text())
+        in_package = path.is_relative_to(PACKAGE)
+        module = _module_name(path) if in_package else path.stem
+        for scope, call, stack in _walk_defs(tree, module):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name not in defs:
+                continue
+            kws, pos, open_kw = _call_args(call, [*stack, tree])
+            caller_params = (
+                {p: d for p, d, _ in _defaulted(stack[0])}
+                if in_package and stack
+                else {}
+            )
+            for qual, fn, is_method in defs[name]:
+                args = fn.args.posonlyargs + fn.args.args
+                shift = int(
+                    is_method
+                    and (isinstance(f, ast.Attribute) or fn.name == "__init__")
+                    and bool(args)
+                    and args[0].arg in ("self", "cls")
+                )
+                for param, default, index in _defaulted(fn):
+                    if param in kws:
+                        value = kws[param]
+                    elif index is not None and pos is None:
+                        value = None
+                    elif index is not None and 0 <= index - shift < len(pos):
+                        value = pos[index - shift]
+                    elif open_kw:
+                        value = None
+                    else:
+                        continue
+                    if value is None:
+                        kind = "other"
+                    elif ast.dump(value) == ast.dump(default):
+                        kind = "default"
+                    elif isinstance(value, ast.Name) and value.id in caller_params:
+                        kind = (
+                            "fwd", scope, value.id, caller_params[value.id], default
+                        )
+                    else:
+                        kind = "other"
+                    passed.setdefault((qual, param), []).append(kind)
+    return passed
+
+
+def _unused_options() -> list[str]:
+    """module.function.parameter for every defaulted parameter that no
+    call passes a value other than its default. A value forwarded from
+    the caller's own defaulted parameter counts as that parameter's
+    default once no call sets the caller's parameter either."""
+    defs = _package_defs()
+    passed = _passed_values(defs)
+    changed = True
+    while changed:
+        changed = False
+        for values in passed.values():
+            for i, kind in enumerate(values):
+                if isinstance(kind, str):
+                    continue
+                _, caller, param, caller_default, default = kind
+                upstream = passed.get((caller, param), [])
+                if "other" in upstream:
+                    values[i] = "other"
+                elif all(u == "default" for u in upstream):
+                    same = ast.dump(caller_default) == ast.dump(default)
+                    values[i] = "default" if same else "other"
+                else:
+                    continue
+                changed = True
+    return sorted(
+        f"{qual}.{param}"
+        for entries in defs.values()
+        for qual, fn, _ in entries
+        for param, _, _ in _defaulted(fn)
+        if all(v == "default" for v in passed.get((qual, param), []))
+    )
+
+
+def test_every_defaulted_parameter_has_a_caller():
+    unused = [
+        option
+        for option in _unused_options()
+        if not any(fnmatch.fnmatchcase(option, p) for p in OPTIONS_ALLOWED)
+    ]
+    assert unused == [], (
+        f"{len(unused)} defaulted parameters that no call sets to another "
+        "value; make each a constant at its use, or add it to "
+        "OPTIONS_ALLOWED with a reason: " + ", ".join(unused)
     )

@@ -104,9 +104,7 @@ def test_minhash_lsh_finds_exact_jaccard_pairs(spark, sf_dir):
     }
     lsh = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in D.minhash_lsh_pairs(
-            d, "doc_id", "text", k=16, bands=8, threshold=0.14
-        ).collect()
+        for r in D.minhash_lsh_pairs(d, "doc_id", "text", threshold=0.14).collect()
     }
     assert set(lsh) <= set(exact)
     for pair, j in lsh.items():
@@ -139,7 +137,7 @@ def test_simhash_near_dupes_have_small_hamming_distance(spark):
         (3, "completely unrelated financial quarterly report revenue figures"),
     ]
     df = spark.createDataFrame(rows, "doc_id INT, text STRING")
-    fp = {r.doc: r.simhash for r in D.simhash(df, "doc_id", "text", bits=16).collect()}
+    fp = {r.doc: r.simhash for r in D.simhash(df, "doc_id", "text").collect()}
 
     def ham(a, b):
         return bin(a ^ b).count("1")
@@ -330,7 +328,7 @@ def test_salted_sum_count_is_identical_to_direct_groupby(spark):
     salted = {
         (r.g,): (r.s, r.n)
         for r in salted_sum_count(
-            df, ["g"], F.col("pk"), {"s": F.col("amt")}, count_alias="n"
+            df, ["g"], F.col("pk"), {"s": F.col("amt")}
         ).collect()
     }
     assert salted == direct  # decimal combine is associative: bit-identical
@@ -686,7 +684,7 @@ def test_passage_dedup_planted_boilerplate(spark):
     )
     out = {
         r.doc_id: r
-        for r in D.passage_dedup(df, "doc_id", "text", 10).collect()
+        for r in D.passage_dedup(df, "doc_id", "text").collect()
     }
     assert out[0].clean_text == boiler + " " + uniq_a
     assert out[0].n_kept == 2 and out[0].n_dropped == 0
@@ -835,7 +833,7 @@ def test_passage_dedup_within_document_repeat(spark):
     # the SAME doc repeating a passage keeps only the first occurrence
     p = " ".join(f"w{i}" for i in range(10))
     df = spark.createDataFrame([(7, p + " " + p)], "doc_id long, text string")
-    row = D.passage_dedup(df, "doc_id", "text", 10).first()
+    row = D.passage_dedup(df, "doc_id", "text").first()
     assert row.n_passages == 2 and row.n_kept == 1
     assert row.clean_text == p
 
@@ -980,7 +978,7 @@ def test_passage_dedup_hot_boilerplate_passage(spark):
     out = {
         r.doc_id: r
         for r in D.passage_dedup(
-            spark.createDataFrame(docs, "doc_id long, text string"), "doc_id", "text", 10
+            spark.createDataFrame(docs, "doc_id long, text string"), "doc_id", "text"
         ).collect()
     }
     assert len(out) == 200
@@ -1098,9 +1096,9 @@ def test_incremental_lsh_probe_flags_only_batch_vs_index(spark):
     batch = [(101, base + " tail"), (103, "q " + other.replace("x", "y")),
              (105, "q " + other.replace("x", "y"))]
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")  # noqa: E731
-    idx = D.minhash_lsh_index(mk(corpus), "doc_id", "text", k=16, n=3)
-    sig = D.minhash_lsh_index(mk(batch), "doc_id", "text", k=16, n=3)
-    out = D.minhash_lsh_probe(idx, sig, k=16, bands=8, threshold=0.5).collect()
+    idx = D.minhash_lsh_index(mk(corpus), "doc_id", "text")
+    sig = D.minhash_lsh_index(mk(batch), "doc_id", "text")
+    out = D.minhash_lsh_probe(idx, sig, threshold=0.5).collect()
     assert {(r.new_doc, r.dup_of) for r in out} == {(101, 0)}
     assert all(r.jaccard >= 0.5 for r in out)
 
@@ -1240,7 +1238,7 @@ def test_pagerank_matches_hand_computed_star(spark):
         [("a", "b", 1), ("b", "a", 1), ("a", "c", 1), ("c", "a", 1)],
         "src string, dst string, w long",
     )
-    got = {r.node: r.r for r in pagerank(edges, n_iters=2).collect()}
+    got = {r.node: r.r for r in pagerank(edges).collect()}
     # r1: a = .15+.85*(1+1) = 1.85 ; b = c = .15+.85*.5 = .575
     # r2: a = .15+.85*(.575+.575) = 1.1275 ; b = c = .15+.85*.925 = .93625
     assert got == {"a": 1.1275, "b": 0.93625, "c": 0.93625}
@@ -1288,9 +1286,7 @@ def test_copurchase_mega_basket_is_capped(spark):
         ("small", 0), ("small", 1), ("dup", 0), ("dup", 1), ("dup", 0)
     ]
     items = spark.createDataFrame(rows, "bk string, it int")
-    pairs = copurchase_pair_counts(
-        items, "bk", "it", min_baskets=1, max_basket_size=64
-    ).collect()
+    pairs = copurchase_pair_counts(items, "bk", "it", min_baskets=1).collect()
     # mega contributes C(64,2) pairs over items 0..63; small+dup both
     # contain {0,1} so (0,1) has n_baskets=2 (duplicates collapsed)
     n_mega_side = 64 * 63 // 2
@@ -1856,9 +1852,7 @@ def test_cluster_safe_split_never_separates_near_dups(spark, sf_dir):
     from multichannel_commerce_data_pipeline_spark.tables import load
 
     docs = load(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_pairs(
-        docs, "doc_id", "text", k=16, bands=8, n=3, threshold=_THRESHOLD
-    )
+    pairs = D.minhash_lsh_pairs(docs, "doc_id", "text", threshold=_THRESHOLD)
     clusters = D.dedup_clusters(pairs).cache()
     rep = (
         docs.select("doc_id")
@@ -1885,7 +1879,7 @@ def test_cluster_safe_split_never_separates_near_dups(spark, sf_dir):
     assert pairs.count() > 0  # the guard is exercised, not vacuous
     assert crossing.count() == 0
 
-    plain = split_assign(docs, "doc_id", seed=13).select(
+    plain = split_assign(docs).select(
         F.col("doc_id"), F.col("split").alias("plain_split")
     )
     unclustered = labeled.filter(F.col("rep") == F.col("doc_id")).join(
@@ -2147,13 +2141,11 @@ def test_containment_catches_what_jaccard_misses(spark):
     )
     cont = {
         (r.doc, r.container): r.containment
-        for r in D.containment_pairs(
-            df, "doc_id", "text", n=3, threshold=0.9
-        ).collect()
+        for r in D.containment_pairs(df, "doc_id", "text", threshold=0.9).collect()
     }
     assert cont[(1, 2)] == 1.0
     assert (2, 1) not in cont  # asymmetric: the long doc is not contained
-    jac = D.jaccard_pairs(df, "doc_id", "text", n=3, threshold=0.5).collect()
+    jac = D.jaccard_pairs(df, "doc_id", "text", threshold=0.5).collect()
     assert not any(r.doc_a == 1 and r.doc_b == 2 for r in jac)
 
 

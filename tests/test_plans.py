@@ -394,7 +394,7 @@ def test_salted_skew_join_shuffles_on_salted_key(plans):
     """salted_skew_join must plan the shape the technique exists for:
     a ShuffledHashJoin (not broadcast — broadcast would make salting
     moot) whose join keys include the deterministic __salt column, so
-    each hot l_returnflag spreads over n_salts tasks."""
+    each hot l_returnflag spreads over N_SALTS tasks."""
     p = plans("salted_skew_join")
     assert "ShuffledHashJoin" in p, p
     assert "BroadcastHashJoin" not in p, p
@@ -882,14 +882,16 @@ def test_histogram_delta_merge_scans_only_the_delta(plans):
     """The refresh must never rescan history: the lineitem scan
     carries the pushed delta cutover (l_shipdate >=), the stored
     state enters as a parquet source, and the merge group-by is the
-    only keyed exchange (<= 8 bucket rows)."""
+    only keyed exchange (<= 8 bucket rows). The state is scanned once:
+    its boundaries enter as literals from its parquet footers."""
+    import re
+
     p = plans("histogram_delta_merge")
-    assert "hist_state" in p
+    assert len(re.findall(r"Location: .*/hist_state\]", p)) == 1, p
     pushed = [l for l in p.splitlines() if "PushedFilters" in l]
     assert any(
         "l_shipdate" in l and "GreaterThanOrEqual" in l for l in pushed
     ), pushed
-    import re
 
     owned = re.findall(r"hashpartitioning\((\w+)", p)
     assert owned and all(k.startswith("bucket") for k in owned), owned
@@ -1028,17 +1030,19 @@ def test_histogram_quantile_serves_from_state_not_history(plans):
     full-column read, and it drops at 100 TB), the stored state
     enters as a parquet source, and the cumulative walk windows over
     <= 8 bucket rows."""
+    import re
+
     p = plans("histogram_quantile_estimate")
     assert "hist_state" in p
     pushed = [l for l in p.splitlines() if "PushedFilters" in l]
     assert any(
         "l_shipdate" in l and "GreaterThanOrEqual" in l for l in pushed
     ), pushed
-    # the 1-row boundary broadcast plans as BroadcastNestedLoopJoin; a
-    # CartesianProduct must never appear (the old disjunction passed
-    # whenever any BNLJ was present, guarding nothing — ADVICE r15)
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" in p
+    # the stored boundaries enter the delta's bucket expression as
+    # literals read from the state's parquet footers: the state is
+    # scanned once and nothing joins it back
+    assert len(re.findall(r"Location: .*/hist_state\]", p)) == 1, p
+    assert "Join" not in p and "CartesianProduct" not in p
 
 
 def test_ndv_merge_serves_from_state_not_history(plans):

@@ -117,9 +117,7 @@ def test_containment_matches_brute_force(spark, docs):
     )
     got = {
         (r.doc, r.container): r.containment
-        for r in containment_pairs(
-            df, "doc_id", "text", n=3, threshold=0.3
-        ).collect()
+        for r in containment_pairs(df, "doc_id", "text", threshold=0.3).collect()
     }
     assert set(got) == set(want)
     for k in want:  # dround is HALF_UP at 4 dp; compare to tolerance

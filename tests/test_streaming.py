@@ -653,7 +653,7 @@ def test_vacuum_merge_snapshots_keeps_latest(spark, tmp_path):
         spark, str(updates), "k long, v string, seq long, del boolean",
         snap, ckpt, ["k"], "seq", delete_col="del",
     )
-    removed = vacuum_merge_snapshots(snap, keep=2)
+    removed = vacuum_merge_snapshots(snap)
     assert removed == ["snap-0", "snap-1"]
     left = sorted(p.name for p in (tmp_path / "snap").iterdir())
     assert left == ["_LATEST", "snap-2", "snap-3"]
@@ -698,7 +698,7 @@ def test_snapshot_time_travel_versions_and_vacuum_guard(spark, tmp_path):
     assert v1 == {(1, "a"), (2, "B"), (3, "c")}
     assert v2 == {(1, "a"), (2, "B"), (3, "c"), (4, "d")}
 
-    removed = vacuum_merge_snapshots(snap, keep=2)
+    removed = vacuum_merge_snapshots(snap)
     assert removed == ["snap-0"]
     with pytest.raises(FileNotFoundError, match="snap-0"):
         read_merge_snapshot_as_of(spark, snap, 0)
@@ -1087,7 +1087,7 @@ def test_stream_boilerplate_cut_applies_grid_per_batch(spark, tmp_path):
         str(tmp_path / "ckpt"),
         cells,
     )
-    kw = dict(line_words=10, df_threshold=2, w=w, d=d_, seed=seed)
+    kw = dict(w=w, d=d_, seed=seed)
     stream_boilerplate_cut(*args, **kw)
     got = {
         r.doc_id: r
@@ -1613,7 +1613,7 @@ def test_stream_binned_profile_state_bounded_by_bins(spark, tmp_path):
     try:
         stream_binned_profile(
             spark, "joor", str(bronze), str(tmp_path / "prof"),
-            str(tmp_path / "ckpt"), n_bins=10,
+            str(tmp_path / "ckpt"),
         )
         for _ in range(50):
             if (mdir / "progress.jsonl").exists():

@@ -195,15 +195,13 @@ def test_mixture_quota_sample_matches_target_shares(spark):
     rows += [(900, "junk")]  # no share: dropped entirely
     df = spark.createDataFrame(rows, "doc_id long, cls string")
     # b is scarce: T = min(100/0.8, 10/0.2) = 50 -> a: 40, b: 10
-    out = mixture_quota_sample(df, "cls", {"a": 0.8, "b": 0.2}, id_col="doc_id")
+    out = mixture_quota_sample(df, "cls", {"a": 0.8, "b": 0.2})
     got = out.groupBy("cls").count().collect()
     assert {r.cls: r["count"] for r in got} == {"a": 40, "b": 10}
     ids1 = sorted(r.doc_id for r in out.collect())
     ids2 = sorted(
         r.doc_id
-        for r in mixture_quota_sample(
-            df, "cls", {"a": 0.8, "b": 0.2}, id_col="doc_id"
-        ).collect()
+        for r in mixture_quota_sample(df, "cls", {"a": 0.8, "b": 0.2}).collect()
     )
     assert ids1 == ids2  # deterministic membership
     assert all(i < 900 for i in ids1)  # junk class never sampled
@@ -224,7 +222,7 @@ def test_temperature_mix_upweights_tail_classes(spark):
         (i + 1000, "tail") for i in range(25)
     ]
     df = spark.createDataFrame(rows, "doc_id long, cls string")
-    out = temperature_mix_sample(df, "cls", alpha=0.5)
+    out = temperature_mix_sample(df, "cls")
     got = {r.cls: r["count"] for r in out.groupBy("cls").count().collect()}
     # shares: sqrt(400)=20, sqrt(25)=5 -> 0.8 / 0.2; T = min(400/.8,
     # 25/.2) = 125 -> head 100, tail 25
