@@ -262,12 +262,3 @@ def oracle_fs_em_chain(
         )
     return ",\n    ".join(blocks)
 
-
-def oracle_fs_score(agreements: list[tuple[str, float, float]]) -> str:
-    """DuckDB twin of :func:`fs_score`: same weights (Python-formatted
-    double literals), same left-to-right fold order."""
-    terms = ["0.0"]
-    for agree_sql, m, u in agreements:
-        w_a, w_d = fs_weights(m, u)
-        terms.append(f"CASE WHEN {agree_sql} THEN {w_a!r} ELSE {w_d!r} END")
-    return "(" + " + ".join(terms) + ")"

@@ -37,15 +37,6 @@ def bucketize(col: Column, lo: float, hi: float, bits: int) -> Column:
     return F.least(F.greatest(raw, F.lit(0)), F.lit(n - 1))
 
 
-def oracle_bucketize(expr: str, lo: float, hi: float, bits: int) -> str:
-    n = 1 << bits
-    step = (hi - lo) / n
-    return (
-        f"LEAST(GREATEST(CAST(floor((CAST({expr} AS DOUBLE) - {lo!r}) /"
-        f" {step!r}) AS BIGINT), 0), {n - 1})"
-    )
-
-
 def morton_key(x: Column, y: Column, bits: int) -> Column:
     """Interleave the low ``bits`` bits of two bucket ranks:
     bit b of x lands at position 2b, bit b of y at 2b+1. Expressed as

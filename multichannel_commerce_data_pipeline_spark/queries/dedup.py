@@ -1440,7 +1440,7 @@ def stream_boilerplate_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     line digests needs no state), df merges by addition, so Structured
     Streaming's stateful aggregation IS the maintenance (two
     checkpointed micro-batches here, cumulative complete-mode grid,
-    idempotent per-batch landing). The driver oracle rebuilds the grid
+    published as a per-batch snapshot). The driver oracle rebuilds the grid
     and the probe estimates in batch SQL: stream output must equal the
     from-scratch batch sketch cell-for-cell, and est_df >= exact df
     always (thresholding the estimate gives a conservative cut — never
@@ -1450,11 +1450,10 @@ def stream_boilerplate_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         cm_estimate,
     )
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_latest,
+        read_snapshot,
     )
 
-    out = _stream_linedf_run(spark, sf_dir)
-    grid = read_latest(spark, out)
+    grid = read_snapshot(spark, _stream_linedf_run(spark, sf_dir))
     docs = parallelize_small_scan(spark, load(spark, sf_dir, "documents"))
     ws = F.split(F.col("text"), " ")
     n_lines = F.ceil(F.size(ws) / F.lit(10)).cast("int")
@@ -1496,19 +1495,19 @@ def stream_boilerplate_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stream_bpcut_run(spark: SparkSession, sf_dir: str) -> str:
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
         Feed,
-        read_latest,
+        read_snapshot,
         stream_boilerplate_cut,
     )
 
-    # maintain half: the landed cumulative grid (memoized drain)
-    grid_rows = read_latest(spark, _stream_linedf_run(spark, sf_dir)).collect()
+    # maintain half: the published cumulative grid (memoized drain)
+    grid_rows = read_snapshot(spark, _stream_linedf_run(spark, sf_dir)).collect()
     cells = [0] * (_LINEDF_D * _LINEDF_W)
     for r in grid_rows:
         cells[r.j * _LINEDF_W + r.bucket] = int(r.cell)
     feed = Feed("mcdp_bpcut_", sf_dir)
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     # two arrival chunks -> two micro-batches: the cut must come
-    # out right per-micro-batch against the fixed landed grid
+    # out right per-micro-batch against the fixed published grid
     feed.push(d.filter(F.col("doc_id") % 2 == 0))
     feed.push(d.filter(F.col("doc_id") % 2 == 1))
     stream_boilerplate_cut(
@@ -1595,7 +1594,7 @@ def stream_boilerplate_cut_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
     every line whose sketch-ESTIMATED corpus df exceeds 2 is removed
     before landing — the two-pass C4/CCNet recipe with the stats pass
     replaced by the bounded streaming Count-Min grid. Each micro-batch
-    runs the batch operator (boilerplate_cut_with_sketch: the landed
+    runs the batch operator (boilerplate_cut_with_sketch: the published
     grid enters as one foldable literal, so a micro-batch pays ZERO
     shuffles) inside foreachBatch; the driver oracle rebuilds the
     sketch AND the cut in batch SQL, so stream ≡ batch is driver

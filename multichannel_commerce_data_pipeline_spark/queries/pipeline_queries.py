@@ -599,8 +599,8 @@ def stream_psi_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative (bin, window) price profile maintained as native
     stateful aggregation in checkpointed state (streaming/jobs.py
     stream_binned_profile; state bounded at 2·n_bins rows, additive
-    like the CM sketch, cumulative across restarts), landed per
-    batch_id and PSI-scored at read time with exactly
+    like the CM sketch, cumulative across restarts), published as a
+    per-batch snapshot and PSI-scored at read time with exactly
     psi_drift_monitor's smoothed, DECIMAL-quantized arithmetic (the
     10-bin smoothing constant 0.5·n_bins = 5.0). The oracle recomputes
     bins and PSI in batch SQL over the same conformed bronze, so the
@@ -612,7 +612,7 @@ def stream_psi_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
         fresh_stream_dir,
-        read_latest,
+        read_snapshot,
         stream_binned_profile,
     )
 
@@ -620,7 +620,7 @@ def stream_psi_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_binned_profile(
         spark, "joor", BRONZE_ROOT, f"{tmp}/prof", f"{tmp}/ckpt"
     )
-    prof = read_latest(spark, f"{tmp}/prof")
+    prof = read_snapshot(spark, f"{tmp}/prof")
     cells = prof.groupBy("bin").agg(
         F.sum(F.when(F.col("is_ref") == 1, F.col("n")).otherwise(F.lit(0)))
         .cast("double")

@@ -475,11 +475,14 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     Monday-start weeks, so offsets are exact multiples of 7 days.
 
     Plan: distinct (user, week) is one partial-aggregated shuffle; the
-    per-user cohort week is a second keyed aggregate on the SAME
-    user_id distribution (no re-exchange); the cohort⋈activity join is
-    keyed on user_id too, so at 100 TB the whole triangle is one
-    logical repartition by user plus the final small (cohort, offset)
-    rollup. Weeks per user are bounded, never the event count."""
+    per-user cohort week is a window min partitioned by user_id over
+    that SAME distribution (no re-exchange), so each active week meets
+    its cohort without a join: there is no build side for AQE to pick
+    by which stage finishes first, and the plan is one plan in every
+    run. At 100 TB the whole triangle is one logical repartition by
+    user plus the final small (cohort, offset) rollup; a window
+    partition holds one user's weeks, which are bounded, never the
+    event count."""
     ev = load(spark, sf_dir, "events")
     wk = (
         ev.select(
@@ -490,9 +493,10 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    cohort = wk.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
     return (
-        wk.join(cohort, "user_id")
+        wk.withColumn(
+            "cohort_week", F.min("week").over(Window.partitionBy("user_id"))
+        )
         .groupBy(
             "cohort_week",
             (F.datediff(F.col("week"), F.col("cohort_week")) / 7)
@@ -795,7 +799,10 @@ def psi_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 9 dp and summed as DECIMAL so the <=20-addend total is
     order-independent and hash-matches the oracle. Two keyed shuffles
     total — (event_type, bin) counts, then the per-type rollup — both
-    partial-aggregated; the raw stream is touched once."""
+    partial-aggregated; the raw stream is touched once. The per-type
+    totals join back as an explicit broadcast: one row per event type
+    at any scale, so the build side never depends on which stage
+    finishes first."""
     ev = load(spark, sf_dir, "events")
     binned = ev.select(
         "event_type",
@@ -819,7 +826,7 @@ def psi_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     smooth = F.lit(0.5 * _PSI_N_BINS)
     p_ref = (F.col("cr") + 0.5) / (F.col("tr") + smooth)
     p_cur = (F.col("cc") + 0.5) / (F.col("tc") + smooth)
-    terms = cells.join(tot, "event_type").select(
+    terms = cells.join(F.broadcast(tot), "event_type").select(
         "event_type",
         dround((p_cur - p_ref) * F.log(p_cur / p_ref), 9)
         .cast("decimal(28,9)")

@@ -44,6 +44,7 @@ from multichannel_commerce_data_pipeline_spark.sources.warehouse import (
 )
 from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
     fresh_stream_dir,
+    snapshot_path,
 )
 from multichannel_commerce_data_pipeline_spark.tables import load
 
@@ -403,7 +404,7 @@ _MERGE_ORACLE = r"""
 def _merge_snapshot_chain(spark: SparkSession, sf_dir: str) -> str:
     """Run the two-batch streaming MERGE chain (customer base, then
     latest-order updates with deletes) and return the snapshot dir
-    containing snap-0, snap-1, and _LATEST."""
+    holding versions 0 and 1."""
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
         Feed,
         stream_merge_snapshot,
@@ -459,17 +460,17 @@ def stream_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrives as micro-batch 1 and the latest-order update batch (with
     deletes) as micro-batch 2 of streaming/jobs.stream_merge_snapshot —
     two checkpointed AvailableNow drains, so batch order is by
-    construction, with the latest-wins snapshot re-landed
-    copy-on-write per batch under a _LATEST pointer. The oracle is the
+    construction, with the latest-wins snapshot republished
+    copy-on-write per batch from the one before it. The oracle is the
     BATCH merge SQL (merge_upsert_customers'), promoting the streaming
     upsert's equivalence to driver evidence."""
     from multichannel_commerce_data_pipeline_spark.functions import dround
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_merge_snapshot,
+        read_snapshot,
     )
 
     snap = _merge_snapshot_chain(spark, sf_dir)
-    return read_merge_snapshot(spark, snap).select(
+    return read_snapshot(spark, snap).select(
         "c_custkey", "c_mktsegment", dround(F.col("c_acctbal"), 2).alias("c_acctbal")
     )
 
@@ -486,20 +487,20 @@ def stream_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X9: versioned reads over the copy-on-write MERGE chain — read
     the snapshot AS OF batch 0 (the customer base before the update
-    batch applied its upserts and deletes) AFTER batch 1 has moved the
-    _LATEST pointer. Copy-on-write leaves every batch's full snapshot
-    directory behind (until vacuum_merge_snapshots reclaims it), so
+    batch applied its upserts and deletes) AFTER batch 1 has published
+    the newer version. Copy-on-write leaves every batch's full snapshot
+    directory behind (until vacuum_snapshots reclaims it), so
     any historical version is one parquet read away — Delta-style time
     travel with no extra machinery. The oracle is the raw customer
     table: green means the old version is byte-faithful, i.e. later
     merges never mutate committed snapshots."""
     from multichannel_commerce_data_pipeline_spark.functions import dround
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_merge_snapshot_as_of,
+        read_snapshot,
     )
 
     snap = _merge_snapshot_chain(spark, sf_dir)
-    return read_merge_snapshot_as_of(spark, snap, 0).select(
+    return read_snapshot(spark, snap, as_of=0).select(
         "c_custkey", "c_mktsegment", dround(F.col("c_acctbal"), 2).alias("c_acctbal")
     )
 
@@ -1170,7 +1171,7 @@ def _stream_mvj_run(spark: SparkSession, sf_dir: str) -> str:
     )
     # two arrival chunks (orderkey parity → two micro-batches): the
     # fold must come out right INCREMENTALLY (the merge is algebraic,
-    # so arrival order only fixes which state-<bid> dir holds what)
+    # so arrival order only fixes which snapshot holds what)
     for rem in (0, 1):
         feed.push(l_new.filter(F.col("l_orderkey") % 2 == rem))
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
@@ -1219,8 +1220,8 @@ def stream_mv_join_refresh_rollup(
     style lineitem deltas ARRIVE as two checkpointed micro-batches and
     each folds into the stored month-revenue join view in-flight
     (streaming/jobs.stream_view_delta_refresh: state(bid) =
-    merge(state(bid-1) ∪ agg(orders ⋈ broadcast(batch))), snapshots
-    landed idempotently with a one-predecessor replay window), so the
+    merge(state(bid-1) ∪ agg(orders ⋈ broadcast(batch))), each state
+    a snapshot built from the one before it), so the
     gold view is always one micro-batch behind the feed and history is
     never rescanned — the operator that replaces the reference's
     rerun-everything-every-300 s gold loop (silver_to_gold.py:499-517
@@ -1233,11 +1234,10 @@ def stream_mv_join_refresh_rollup(
     Restart cumulativity and replay idempotency are asserted in
     tests/test_streaming.py."""
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_latest_view_state,
+        read_snapshot,
     )
 
-    out = _stream_mvj_run(spark, sf_dir)
-    state = read_latest_view_state(spark, out)
+    state = read_snapshot(spark, _stream_mvj_run(spark, sf_dir))
     return state.select(
         "order_month",
         F.col("cnt").alias("n_items"),
@@ -2934,11 +2934,12 @@ def stream_erasure_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     live warehouse actually runs deletion requests through. GDPR
     tombstones arrive as two CDC delete micro-batches; each batch
     applies the full broadcast anti-join cascade against the CURRENT
-    snapshot and publishes copy-on-write with a _LATEST pointer and a
+    snapshot and publishes the next snapshot copy-on-write with a
     per-batch XOR-digest audit riding along
-    (streaming/jobs.stream_erasure_apply — the stream_merge_snapshot
-    idempotent-publish idiom, so replayed batches and checkpointed
-    restarts converge; pinned in tests/test_streaming.py). Because
+    (streaming/jobs.stream_erasure_apply on the snapshot chain: each
+    batch builds on the snapshot before it, so replayed batches and
+    checkpointed restarts converge; pinned in tests/test_streaming.py).
+    Because
     tombstone application is commutative and idempotent, the final
     snapshot must equal batch erasure_propagation over the cumulative
     tombstone set — and that is precisely what the oracle computes
@@ -2958,7 +2959,7 @@ def stream_erasure_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     snap = _stream_erasure_run(spark, sf_dir)
-    latest = (Path(snap) / "_LATEST").read_text().strip()
+    latest = snapshot_path(snap, None)
     n_batches = len(
         [p for p in Path(snap).iterdir() if p.name.startswith("audit-")]
     )
@@ -2996,7 +2997,7 @@ def stream_erasure_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("e_digest"),
         )
         written = parallelize_small_scan(
-            spark, spark.read.parquet(f"{snap}/{latest}/{table}")
+            spark, spark.read.parquet(f"{latest}/{table}")
         )
         w = written.agg(
             F.count(F.lit(1)).cast("long").alias("rows_after"),
@@ -3129,18 +3130,16 @@ def stream_ndv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch/state boundary is register-for-register identical to
     the batch rebuild (MIN's commutativity/associativity made
     physical). Restart/replay safety comes from the shared
-    stream_view_delta_refresh contract (idempotent per-batch state
-    snapshots with a one-predecessor replay window, pinned in
-    tests/test_streaming.py)."""
+    stream_view_delta_refresh contract (each state snapshot is built
+    from the one before it, pinned in tests/test_streaming.py)."""
     from multichannel_commerce_data_pipeline_spark.operators.reconcile import (
         row_fingerprint,
     )
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_latest_view_state,
+        read_snapshot,
     )
 
-    out = _stream_ndv_run(spark, sf_dir)
-    state = read_latest_view_state(spark, out)
+    state = read_snapshot(spark, _stream_ndv_run(spark, sf_dir))
     fp = row_fingerprint([F.col("bucket"), F.col("min_h")])
     return state.agg(
         F.count(F.lit(1)).cast("long").alias("n_registers"),

@@ -25,10 +25,17 @@ per watermark window — not by stream length.
 
 Every job here is built from the same shared pieces: a feed reader
 (:func:`read_bronze_stream` for the bronze drop, :func:`read_feed` for a
-chunked file feed), :func:`land_batch` for an idempotent per-batch
-landing, :func:`drain` to run the writer, and :func:`read_latest` /
-:func:`read_landed` to read a landing back. A driver-checkable stream
-query builds its scratch dirs and arrival feed with :class:`Feed`.
+chunked file feed), :func:`drain` to run the writer, and one of two
+sinks. A job whose batches each emit new rows lands them with
+:func:`land_batch` (idempotent per-batch dirs, read back with
+:func:`read_landed` or :func:`read_latest`). A job that republishes its
+whole state every micro-batch — a complete-mode aggregate, a folded
+view, a merged or erased snapshot — uses the one snapshot chain:
+:func:`publish_snapshot` builds ``snap-<bid>`` from the snapshot before
+it, :func:`read_snapshot` reads the newest (or a named) version and
+:func:`vacuum_snapshots` keeps the newest two. A driver-checkable
+stream query builds its scratch dirs and arrival feed with
+:class:`Feed`.
 """
 
 from __future__ import annotations
@@ -37,8 +44,8 @@ import hashlib
 import os
 import time
 from collections.abc import Callable
-from pathlib import Path
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
@@ -237,34 +244,19 @@ def drain(writer: DataStreamWriter, checkpoint_dir: str) -> StreamingQuery:
     return query
 
 
-def land_batch(
-    batch_df: DataFrame, out_dir: str, batch_id: int, complete: bool = False
-) -> None:
+def land_batch(batch_df: DataFrame, out_dir: str, batch_id: int) -> None:
     """Idempotent foreachBatch landing. foreachBatch is at-least-once:
     a crash after the sink write but before the checkpoint commit
     replays the whole micro-batch with the SAME batch_id. Appending
     would duplicate those rows forever; writing each micro-batch with
     a ``__bid`` column to its own ``batch-<id>`` subdirectory with
     overwrite makes the replay converge to the same files instead.
-
-    A ``complete``-mode sink re-emits the WHOLE (bounded) state each
-    trigger, so every older ``batch-<id>`` directory is dead the moment
-    this one commits: they are pruned here, keeping a long-lived
-    cumulative sink's storage and read-side listing O(state), not
-    O(triggers). Hadoop FS API, so the same prune works on an object
-    store. Read the landing back with :func:`read_landed` or
-    :func:`read_latest`."""
+    Read the landing back with :func:`read_landed` or
+    :func:`read_latest`; a sink that re-emits its whole state each
+    trigger publishes a snapshot instead (:func:`publish_snapshot`)."""
     batch_df.withColumn("__bid", F.lit(batch_id)).write.mode("overwrite").parquet(
         f"{out_dir}/batch-{batch_id}"
     )
-    if complete:
-        sess = batch_df.sparkSession
-        root = sess._jvm.org.apache.hadoop.fs.Path(out_dir)
-        fs = root.getFileSystem(sess._jsc.hadoopConfiguration())
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if name.startswith("batch-") and name != f"batch-{batch_id}":
-                fs.delete(st.getPath(), True)
 
 
 def read_landed(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -274,12 +266,12 @@ def read_landed(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
 
 
-def read_latest(spark: SparkSession, out_dir: str, *keys: str) -> DataFrame:
-    """The current state of a landing: per (non-null) key, the rows of
-    the newest batch that emitted the key, ``__bid`` dropped. An
-    update-mode stream re-emits a key only in batches that bring it
-    data, so the newest batch dir alone can miss quiet keys; with no
-    keys (complete mode re-emits everything) it is the newest batch.
+def read_latest(spark: SparkSession, out_dir: str, key: str) -> DataFrame:
+    """The current state of an update-mode landing: per (non-null)
+    ``key``, the rows of the newest batch that emitted the key,
+    ``__bid`` dropped. An update-mode stream re-emits a key only in
+    batches that bring it data, so the newest batch dir alone can miss
+    quiet keys.
 
     The landed rows grow with TRIGGER COUNT, so the latest-batch filter
     is never a window (an unpartitioned one moves every batch's rows to
@@ -287,8 +279,105 @@ def read_latest(spark: SparkSession, out_dir: str, *keys: str) -> DataFrame:
     a broadcast of one row per key, which the stream's bounded state
     keeps small (r17 window audit, guide §2.4)."""
     rows = read_landed(spark, out_dir)
-    newest = rows.groupBy(*keys).agg(F.max("__bid").alias("__bid"))
-    return rows.join(F.broadcast(newest), [*keys, "__bid"]).drop("__bid")
+    newest = rows.groupBy(key).agg(F.max("__bid").alias("__bid"))
+    return rows.join(F.broadcast(newest), [key, "__bid"]).drop("__bid")
+
+
+# The snapshot chain. A stream that republishes its whole state each
+# micro-batch keeps one immutable ``snap-<bid>`` dir per batch under
+# its out dir; these helpers are the only code that names, publishes,
+# locates or prunes one.
+
+
+def _hadoop(path: str):
+    """(FileSystem, Path) for ``path`` through the Hadoop FS API, so
+    the chain works alike on local disk, HDFS and an object store."""
+    sc = SparkContext.getOrCreate()
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(sc._jsc.hadoopConfiguration()), hpath
+
+
+def _snapshot_ids(out_dir: str) -> list[int]:
+    """The published snapshot batch ids under ``out_dir``, ascending,
+    from one directory listing (no Spark job)."""
+    fs, root = _hadoop(out_dir)
+    if not fs.exists(root):
+        return []
+    names = [st.getPath().getName() for st in fs.listStatus(root)]
+    return sorted(int(n[len("snap-"):]) for n in names if n.startswith("snap-"))
+
+
+def snapshot_path(out_dir: str, as_of: int | None) -> str:
+    """The dir of the newest published snapshot under ``out_dir``, or
+    of version ``as_of``. Raises FileNotFoundError naming a version
+    that was vacuumed or never committed."""
+    ids = _snapshot_ids(out_dir)
+    bid = ids[-1] if as_of is None and ids else as_of
+    if bid not in ids:
+        raise FileNotFoundError(
+            f"snapshot snap-{bid} not present under {out_dir} "
+            "(vacuumed or never committed)"
+        )
+    return f"{out_dir}/snap-{bid}"
+
+
+def read_snapshot(
+    spark: SparkSession, out_dir: str, as_of: int | None = None
+) -> DataFrame:
+    """The newest published snapshot under ``out_dir``, or version
+    ``as_of`` (time travel: every retained ``snap-<bid>`` is immutable
+    until :func:`vacuum_snapshots` removes it, so a historical read is a
+    plain parquet scan of the named version, no log replay)."""
+    return spark.read.parquet(snapshot_path(out_dir, as_of))
+
+
+def publish_snapshot(
+    out_dir: str, bid: int, write: Callable[[str | None, str], None]
+) -> None:
+    """Publish micro-batch ``bid``'s whole state as ``snap-<bid>``.
+
+    ``write(base, path)`` writes the new state into ``path``, a scratch
+    sibling, computing it from ``base``: the dir of the largest
+    published ``snap-<k>`` with k < bid, or None when there is none
+    (the writer then starts from its own initial state). The base is
+    never the batch's own dir, so a replayed batch — foreachBatch is
+    at-least-once, and a lost checkpoint replays the whole feed —
+    recomputes exactly the snapshot it built the first time, and never
+    reads the files it is replacing. The scratch dir then replaces any
+    earlier ``snap-<bid>`` by rename. Snapshots above ``bid`` belong to
+    a run whose checkpoint is gone and are dropped with it, so the
+    newest snapshot is always the head of the chain being built."""
+    ids = _snapshot_ids(out_dir)
+    prior = [k for k in ids if k < bid]
+    scratch = f"{out_dir}/_inflight-{bid}"
+    fs, tmp = _hadoop(scratch)
+    fs.delete(tmp, True)
+    write(f"{out_dir}/snap-{prior[-1]}" if prior else None, scratch)
+    for k in ids:
+        if k >= bid:
+            fs.delete(_hadoop(f"{out_dir}/snap-{k}")[1], True)
+    if not fs.rename(tmp, _hadoop(f"{out_dir}/snap-{bid}")[1]):
+        raise OSError(f"could not publish snap-{bid} under {out_dir}")
+
+
+def vacuum_snapshots(out_dir: str) -> list[str]:
+    """Remove all but the newest two snapshots under ``out_dir`` (the
+    head and its predecessor, the base a replay of the head reads) and
+    return the removed names, oldest first. A stream whose snapshots
+    are its rollback surface (:func:`stream_merge_snapshot`) leaves
+    this to its caller, so older versions stay readable until then."""
+    removed = [f"snap-{k}" for k in _snapshot_ids(out_dir)[:-2]]
+    for name in removed:
+        fs, path = _hadoop(f"{out_dir}/{name}")
+        fs.delete(path, True)
+    return removed
+
+
+def _publish_whole(batch_df: DataFrame, out_dir: str, bid: int) -> None:
+    """foreachBatch sink of a complete-mode aggregate: the batch IS the
+    whole (bounded) state, so it needs no base; keep the newest two."""
+    publish_snapshot(out_dir, bid, lambda _base, path: batch_df.write.parquet(path))
+    vacuum_snapshots(out_dir)
 
 
 def conform_stream(
@@ -638,18 +727,17 @@ def stream_merge_snapshot(
 
     Each micro-batch is reduced to one row per key (newest ``seq_col``
     wins — foreachBatch hands a bounded DataFrame, so the keyed window
-    is batch-sized), then merged into the previous snapshot with
-    operators/merge.py merge_upsert. The result lands in a
-    ``snap-<batch_id>`` directory with overwrite + a _LATEST pointer
-    written AFTER the snapshot: a replayed batch (foreachBatch is
-    at-least-once) rewrites the same directory and re-points the same
-    pointer — convergent, so the chain is restart-idempotent. Old
-    snapshots are the rollback/vacuum surface.
+    is batch-sized), then merged into the snapshot before it with
+    operators/merge.py merge_upsert and published as ``snap-<batch_id>``
+    (:func:`publish_snapshot`): a replayed batch recomputes the same
+    version from the same predecessor, so the chain is
+    restart-idempotent. Old snapshots are the rollback and time-travel
+    surface; retention is the caller's :func:`vacuum_snapshots`.
 
     At scale each merge shuffles snapshot+batch once on the key; with
     the snapshot bucketed on the key the exchange drops to the batch
     side only. Returns the finished query; read the result with
-    :func:`read_merge_snapshot`.
+    :func:`read_snapshot`.
     """
     from pyspark.sql import Window
 
@@ -665,67 +753,22 @@ def stream_merge_snapshot(
             .drop("__rn")
         )
         sess = batch_df.sparkSession
-        latest = Path(snapshot_dir) / "_LATEST"
-        if latest.exists():
-            base = sess.read.parquet(
-                str(Path(snapshot_dir) / latest.read_text().strip())
+
+        def write(base: str | None, path: str) -> None:
+            if base:
+                prior = sess.read.parquet(base)
+            else:
+                prior = sess.createDataFrame(
+                    [], newest.drop(delete_col).schema if delete_col else newest.schema
+                )
+            merge_upsert(prior, newest, keys, delete_col=delete_col).write.parquet(
+                path
             )
-        else:
-            base = sess.createDataFrame([], newest.drop(delete_col).schema
-                                        if delete_col else newest.schema)
-        merged = merge_upsert(base, newest, keys, delete_col=delete_col)
-        merged.write.mode("overwrite").parquet(
-            f"{snapshot_dir}/snap-{batch_id}"
-        )
-        latest.parent.mkdir(parents=True, exist_ok=True)
-        latest.write_text(f"snap-{batch_id}")
+
+        publish_snapshot(snapshot_dir, batch_id, write)
 
     stream = read_feed(spark, update_schema, updates_dir, "json")
     return drain(stream.writeStream.foreachBatch(apply_batch), checkpoint_dir)
-
-
-def read_merge_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame:
-    """Read the snapshot the _LATEST pointer names."""
-    latest = (Path(snapshot_dir) / "_LATEST").read_text().strip()
-    return spark.read.parquet(str(Path(snapshot_dir) / latest))
-
-
-def read_merge_snapshot_as_of(
-    spark: SparkSession, snapshot_dir: str, batch_id: int
-) -> DataFrame:
-    """Time travel: read the snapshot AS OF a specific batch, ignoring
-    _LATEST. Copy-on-write keeps each batch's full ``snap-<id>``
-    directory immutable until vacuum reclaims it, so historical reads
-    are plain parquet scans of the named version — no log replay."""
-    path = Path(snapshot_dir) / f"snap-{batch_id}"
-    if not path.is_dir():
-        raise FileNotFoundError(
-            f"snapshot snap-{batch_id} not present under {snapshot_dir} "
-            "(vacuumed or never committed)"
-        )
-    return spark.read.parquet(str(path))
-
-
-def vacuum_merge_snapshots(snapshot_dir: str) -> list[str]:
-    """Drop all but the newest two snapshots of a
-    :func:`stream_merge_snapshot` chain (never the one ``_LATEST``
-    points at). Copy-on-write merge leaves one directory per batch as
-    its rollback surface; this is the retention step that bounds that
-    surface, the same job Delta's VACUUM does for its file graveyard.
-    Returns the removed snapshot names (for the audit log)."""
-    import shutil
-
-    root = Path(snapshot_dir)
-    latest = (root / "_LATEST").read_text().strip()
-    snaps = sorted(
-        (p.name for p in root.iterdir() if p.name.startswith("snap-")),
-        key=lambda n: int(n.split("-")[1]),
-    )
-    keep_set = set(snaps[-2:]) | {latest}
-    removed = [n for n in snaps if n not in keep_set]
-    for n in removed:
-        shutil.rmtree(root / n)
-    return removed
 
 
 def stream_heavy_hitters(
@@ -830,10 +873,11 @@ def stream_cm_sketch(
     bounded regardless of stream length or key cardinality, restored
     from the checkpoint across restarts, so estimates are CUMULATIVE
     over the whole feed. Each trigger emits the full current grid
-    (complete mode — at most d·w rows, so re-emission is free) landed
-    per batch_id, idempotent under foreachBatch replay, older grids
-    pruned (:func:`land_batch`); probe the
-    landed grid with the batch ``operators.frequency.cm_estimate``.
+    (complete mode — at most d·w rows, so re-emission is free),
+    published as that batch's snapshot with the newest two kept
+    (:func:`publish_snapshot`); probe the grid
+    :func:`read_snapshot` returns with the batch
+    ``operators.frequency.cm_estimate``.
     The per-row work is the same map-side d-increment explode as the
     batch build — one md5, k Kirsch-Mitzenmacher positions."""
     from multichannel_commerce_data_pipeline_spark.operators.bloom import (
@@ -862,7 +906,7 @@ def stream_cm_sketch(
     ).agg(F.count(F.lit(1)).alias("cell"))
     return drain(
         grid.writeStream.foreachBatch(
-            lambda df, bid: land_batch(df, out_dir, bid, complete=True)
+            lambda df, bid: _publish_whole(df, out_dir, bid)
         ).outputMode("complete"),
         checkpoint_dir,
     )
@@ -893,9 +937,9 @@ def stream_line_df_sketch(
     bounded regardless of how many distinct lines the crawl contains).
     est_df >= true df always — thresholding the estimate yields a
     conservative boilerplate cut (may remove a few extra lines, never
-    misses a hot one at the same threshold). Same idempotent per-batch
-    complete-mode landing as ``stream_cm_sketch``; probe the landed
-    grid with the batch ``operators.frequency.cm_estimate``."""
+    misses a hot one at the same threshold). Same per-batch snapshot
+    publish as ``stream_cm_sketch``; probe the published grid with the
+    batch ``operators.frequency.cm_estimate``."""
     from multichannel_commerce_data_pipeline_spark.operators.bloom import (
         _positions,
     )
@@ -932,7 +976,7 @@ def stream_line_df_sketch(
     ).agg(F.count(F.lit(1)).alias("cell"))
     return drain(
         grid.writeStream.foreachBatch(
-            lambda df, bid: land_batch(df, out_dir, bid, complete=True)
+            lambda df, bid: _publish_whole(df, out_dir, bid)
         ).outputMode("complete"),
         checkpoint_dir,
     )
@@ -959,7 +1003,7 @@ def stream_boilerplate_cut(
     here the stats pass is the streaming sketch and the strip pass is
     this job, so neither ever holds per-distinct-line state.
 
-    ``cells`` is the LANDED grid (:func:`read_latest`, flattened
+    ``cells`` is the PUBLISHED grid (:func:`read_snapshot`, flattened
     j*w+bucket — a fixed, d*w-bounded reference exactly like
     ``stream_decontaminate``'s eval digest set). Each micro-batch runs
     the batch operator ``operators.dedup.boilerplate_cut_with_sketch``
@@ -1003,7 +1047,7 @@ def stream_sessionize(
     (contrast ``conform_stream``'s bronze_ts watermark — late events
     within the delay still extend their session). Landing is plain
     parquet append: each closed session is final by construction, so
-    no per-batch overwrite or latest-pointer dance is needed."""
+    no per-batch overwrite or snapshot chain is needed."""
     conformed = CONFORMERS[source](
         flatten_envelope(read_bronze_stream(spark, source, bronze_root))
     )
@@ -1047,10 +1091,11 @@ def stream_binned_profile(
     state is bounded by 2·10 rows regardless of stream length,
     restored from the checkpoint across restarts (cumulative over the
     whole feed), re-emitted in full each trigger (complete mode over a
-    ≤20-row frame) and landed idempotently per batch_id. Rows before
+    ≤20-row frame) and published as that batch's snapshot
+    (:func:`publish_snapshot`). Rows before
     2025-06-02 (event time) accumulate into the reference window,
     the rest into the current window; the PSI arithmetic itself runs at
-    read time over the landed profile — the monitor stays pure
+    read time over the published profile — the monitor stays pure
     aggregation in-flight."""
     conformed = conform_stream(
         read_bronze_stream(spark, source, bronze_root), source
@@ -1071,7 +1116,7 @@ def stream_binned_profile(
 
     return drain(
         prof.writeStream.foreachBatch(
-            lambda df, bid: land_batch(df, out_dir, bid, complete=True)
+            lambda df, bid: _publish_whole(df, out_dir, bid)
         ).outputMode("complete"),
         checkpoint_dir,
     )
@@ -1101,7 +1146,7 @@ def stream_ivf_assign(
     Checkpointed and idempotent: each micro-batch lands to its own
     ``batch-{id}`` dir with mode=overwrite, so a replayed batch after
     a crash overwrites its own output instead of duplicating rows
-    (same contract as ``stream_cm_sketch``). ``maxFilesPerTrigger=1``
+    (:func:`land_batch`). ``maxFilesPerTrigger=1``
     makes each landed chunk its own micro-batch, proving the
     incremental path rather than draining everything in one gulp."""
     from multichannel_commerce_data_pipeline_spark.operators.similarity import (
@@ -1258,68 +1303,24 @@ def stream_view_delta_refresh(
     makes the fold order-independent and the state bounded by GROUP
     cardinality, not stream length.
 
-    Restart/replay contract: each batch lands the FULL merged state
-    snapshot idempotently to ``state-{bid}`` (mode=overwrite) and reads
-    its predecessor as the largest ``state-{k}`` with k < bid — never
-    its own possibly-half-written dir — so a replayed batch recomputes
-    from exactly the state it saw the first time. Snapshots older than
-    bid-1 are pruned at commit (the replay window needs only the
-    predecessor), bounding storage at two snapshots regardless of
-    stream length; the Hadoop FS API is used throughout so the same
-    prune works on an object store."""
+    Restart/replay contract: each batch publishes the FULL merged state
+    as its snapshot (:func:`publish_snapshot`), computed from the
+    snapshot before it — never its own possibly-half-written dir — so a
+    replayed batch recomputes from exactly the state it saw the first
+    time. The newest two snapshots are kept (the replay window needs
+    only the predecessor), bounding storage regardless of stream
+    length. Read the view with :func:`read_snapshot`."""
     stream = read_feed(spark, schema_ddl, src_glob)
 
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(out_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def _state_ids() -> list[int]:
-        if not fs.exists(root):
-            return []
-        return sorted(
-            int(st.getPath().getName().split("-")[1])
-            for st in fs.listStatus(root)
-            if st.getPath().getName().startswith("state-")
-        )
-
     def refresh(batch_df: DataFrame, bid: int) -> None:
-        prior_ids = [k for k in _state_ids() if k < bid]
-        prior = (
-            spark.read.parquet(f"{out_dir}/state-{prior_ids[-1]}").drop(
-                "__bid"
-            )
-            if prior_ids
-            else init_state
-        )
-        merged = merge(prior.unionByName(delta_agg(batch_df)))
-        merged.withColumn("__bid", F.lit(bid)).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/state-{bid}")
-        for k in _state_ids():
-            if k < bid - 1:
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(f"{out_dir}/state-{k}"),
-                    True,
-                )
+        def write(base: str | None, path: str) -> None:
+            prior = spark.read.parquet(base) if base else init_state
+            merge(prior.unionByName(delta_agg(batch_df))).write.parquet(path)
+
+        publish_snapshot(out_dir, bid, write)
+        vacuum_snapshots(out_dir)
 
     return drain(stream.writeStream.foreachBatch(refresh), checkpoint_dir)
-
-
-def read_latest_view_state(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The current maintained view: the snapshot with the largest
-    batch id, located from the directory LISTING (the same Hadoop FS
-    walk the writer uses) so only that one snapshot is read — the
-    replay-window predecessor never costs a scan, and no
-    single-partition max-window runs over view rows."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(out_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    latest = max(
-        int(st.getPath().getName().split("-")[1])
-        for st in fs.listStatus(root)
-        if st.getPath().getName().startswith("state-")
-    )
-    return spark.read.parquet(f"{out_dir}/state-{latest}").drop("__bid")
 
 
 def stream_cusum_monitor(
@@ -1466,21 +1467,23 @@ def stream_erasure_apply(
     arrival order converges to the batch result over the cumulative
     tombstone set.
 
-    Publish is the stream_merge_snapshot idiom: each batch writes a
-    complete ``snap-<batch_id>`` tree (copy-on-write: the three
-    erased tables) with OVERWRITE and re-points ``_LATEST`` after the
-    write — a replayed batch (foreachBatch is at-least-once) rewrites
-    the same directory and converges, so the chain is
-    restart-idempotent. The per-batch erasure PROOF rides along: an
-    ``audit-<batch_id>`` table (also overwrite-idempotent) lands per
-    erased table the tombstone count applied, surviving row count,
-    and the order-independent XOR of portable row fingerprints of
-    what was WRITTEN — the table_reconcile digest a downstream
-    verifier compares against its own complement computation, per
-    batch rather than per nightly sweep. At scale each batch costs
-    one broadcast anti-join scan per table (the tombstone batch is
-    small by nature) plus the digest fold, which partial-aggregates
-    to one row per table."""
+    Publish is the snapshot chain (:func:`publish_snapshot`): each
+    batch builds a complete ``snap-<batch_id>`` tree (copy-on-write: the
+    three erased tables) from the snapshot before it, or from the
+    source tables for the first batch, so a replayed batch
+    (foreachBatch is at-least-once) recomputes the same tree and the
+    chain is restart-idempotent. The newest two trees are kept: each is
+    a full warehouse copy, and a replay reads at most one back. The
+    per-batch erasure PROOF rides along: an ``audit-<batch_id>`` table
+    (overwrite-idempotent, kept forever as the deletion-provenance
+    ledger) lands per erased table the tombstone count applied,
+    surviving row count, and the order-independent XOR of portable row
+    fingerprints of what was PUBLISHED — the table_reconcile digest a
+    downstream verifier compares against its own complement
+    computation, per batch rather than per nightly sweep. At scale each
+    batch costs one broadcast anti-join scan per table (the tombstone
+    batch is small by nature) plus the digest fold, which
+    partial-aggregates to one row per table."""
     from multichannel_commerce_data_pipeline_spark.operators.reconcile import (
         row_fingerprint,
     )
@@ -1489,64 +1492,49 @@ def stream_erasure_apply(
     )
     from multichannel_commerce_data_pipeline_spark.tables import load
 
+    tables = ("customer", "orders", "lineitem")
+
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
         tomb = batch_df.filter(F.col("op") == "delete").select(
             "c_custkey"
         ).distinct()
-        latest = Path(snapshot_dir) / "_LATEST"
-        if latest.exists():
-            base = str(Path(snapshot_dir) / latest.read_text().strip())
+
+        def write(base: str | None, path: str) -> None:
             cur = {
-                t: sess.read.parquet(f"{base}/{t}")
-                for t in ("customer", "orders", "lineitem")
+                t: sess.read.parquet(f"{base}/{t}") if base else load(sess, sf_dir, t)
+                for t in tables
             }
-        else:
-            cur = {
-                t: load(sess, sf_dir, t)
-                for t in ("customer", "orders", "lineitem")
-            }
-        cust = cur["customer"].join(F.broadcast(tomb), "c_custkey", "left_anti")
-        gone = (
-            cur["orders"]
-            .join(
+            cust = cur["customer"].join(F.broadcast(tomb), "c_custkey", "left_anti")
+            gone = (
+                cur["orders"]
+                .join(
+                    F.broadcast(tomb),
+                    cur["orders"].o_custkey == tomb.c_custkey,
+                    "left_semi",
+                )
+                .select("o_orderkey")
+            )
+            orders = cur["orders"].join(
                 F.broadcast(tomb),
                 cur["orders"].o_custkey == tomb.c_custkey,
-                "left_semi",
+                "left_anti",
             )
-            .select("o_orderkey")
-        )
-        orders = cur["orders"].join(
-            F.broadcast(tomb),
-            cur["orders"].o_custkey == tomb.c_custkey,
-            "left_anti",
-        )
-        li = cur["lineitem"].join(
-            F.broadcast(gone),
-            cur["lineitem"].l_orderkey == gone.o_orderkey,
-            "left_anti",
-        )
-        # scratch-then-swap publish: a REPLAYED batch's read side is
-        # the very snapshot directory it republishes (_LATEST already
-        # points at snap-<batch_id>), and Spark's lazy overwrite would
-        # delete the input files mid-read. Writing the new tree to a
-        # scratch sibling first means the old snapshot stays intact as
-        # the read source; the swap is two renames, so a crash leaves
-        # either the old or the new tree at the published path — never
-        # neither (the layout store's atomic-publish rule, applied per batch).
-        import os as _os
-        import shutil as _sh
+            li = cur["lineitem"].join(
+                F.broadcast(gone),
+                cur["lineitem"].l_orderkey == gone.o_orderkey,
+                "left_anti",
+            )
+            erased = {"customer": cust, "orders": orders, "lineitem": li}
+            for t, df in erased.items():
+                df.write.parquet(f"{path}/{t}")
 
-        out = f"{snapshot_dir}/snap-{batch_id}"
-        scratch = f"{snapshot_dir}/.snap-{batch_id}.inflight"
-        _sh.rmtree(scratch, ignore_errors=True)
-        erased = {"customer": cust, "orders": orders, "lineitem": li}
-        for t, df in erased.items():
-            df.write.mode("overwrite").parquet(f"{scratch}/{t}")
+        publish_snapshot(snapshot_dir, batch_id, write)
+        snap = snapshot_path(snapshot_dir, batch_id)
         n_tomb = tomb.count()
         audits = []
-        for t in ("customer", "orders", "lineitem"):
-            written = sess.read.parquet(f"{scratch}/{t}")
+        for t in tables:
+            written = sess.read.parquet(f"{snap}/{t}")
             audits.append(
                 written.agg(
                     F.lit(int(batch_id)).cast("long").alias("batch_id"),
@@ -1563,29 +1551,7 @@ def stream_erasure_apply(
         audit.write.mode("overwrite").parquet(
             f"{snapshot_dir}/audit-{batch_id}"
         )
-        trash = f"{out}.old"
-        _sh.rmtree(trash, ignore_errors=True)
-        if _os.path.isdir(out):
-            _os.rename(out, trash)
-        _os.rename(scratch, out)
-        _sh.rmtree(trash, ignore_errors=True)
-        latest.parent.mkdir(parents=True, exist_ok=True)
-        latest.write_text(f"snap-{batch_id}")
-        # retention: each snapshot is a full copy-on-write warehouse
-        # tree, so an unbounded request stream would otherwise
-        # accumulate one warehouse copy per batch. Keep the latest +
-        # its predecessor (the replay window — a replayed batch reads
-        # at most one snapshot back), pruned AFTER the pointer moves;
-        # the per-batch audit-<id> tables are three rows each and
-        # stay forever as the deletion-provenance ledger.
-        for p in Path(snapshot_dir).iterdir():
-            if p.name.startswith("snap-"):
-                try:
-                    k = int(p.name.split("-")[1])
-                except ValueError:
-                    continue
-                if k < batch_id - 1:
-                    _sh.rmtree(p, ignore_errors=True)
+        vacuum_snapshots(snapshot_dir)
 
     stream = read_feed(spark, tombstone_schema, tombstones_glob, "json")
     return drain(stream.writeStream.foreachBatch(apply_batch), checkpoint_dir)

@@ -588,10 +588,13 @@ COMMENTARY = {
         "agg(orders JOIN broadcast(batch))) — the batch is the "
         "broadcast side by construction, so the orders scan streams "
         "map-side per trigger and the only exchange is the bounded "
-        "month-grain merge. Snapshots land idempotently per batch id "
-        "with a one-predecessor replay window (a replayed batch "
-        "re-reads exactly the state it saw first), so storage holds "
-        "at two snapshots regardless of stream length. History is "
+        "month-grain merge. Each batch's state is a snapshot built "
+        "from the one before it (a replayed batch re-reads exactly "
+        "the state it saw first), and the newest two are kept, so "
+        "storage holds at two snapshots regardless of stream length. "
+        "The report reads the newest snapshot, located from the "
+        "directory listing: one parquet scan and a projection, no "
+        "job to find it. History is "
         "never rescanned in EITHER dimension: not across data (delta "
         "terms, not full joins) and not across time (per-arrival "
         "folds, not the reference's 300 s polling rerun)."
@@ -863,7 +866,8 @@ COMMENTARY = {
         "published — both partial-aggregate to a single row, so the "
         "proof shuffles three digest rows. The cascade itself ran "
         "in foreachBatch micro-batches (broadcast anti-joins per "
-        "batch, scratch-then-swap copy-on-write publish); "
+        "batch against the snapshot before it, copy-on-write "
+        "publish through the snapshot chain); "
         "driver-green means the cross-batch cascade converged to "
         "the batch erasure over the cumulative tombstone set."
     ),

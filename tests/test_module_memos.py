@@ -16,9 +16,20 @@ A stream starts and waits only inside ``streaming.jobs.drain``, lands
 stream query builds its scratch dirs and arrival feed through
 ``streaming.jobs.Feed``, the one place file mtimes are pinned.
 
+A stream that republishes its whole state per micro-batch does so
+only through the snapshot chain in ``streaming.jobs``: no other code
+under ``streaming/`` or ``queries/`` names a ``snap-<id>`` or
+``state-<id>`` dir, keeps a ``_LATEST`` pointer, lists a directory
+through the Hadoop FS API or renames a file with ``os``.
+
 A derived on-disk layout is keyed, placed and published only by
 ``artifacts.layout``: no other module spells the warehouse root or
 touches the store's fingerprint and atomic-publish helpers.
+
+Every undecorated top-level package function or class is named
+somewhere outside its own definition (a call, an import, or the prose
+that documents it); a decorated one is registered by its decorator.
+A name nothing mentions is dead code.
 
 Every defaulted parameter of a package function has a caller that
 passes it a value other than its default, or an entry with a reason
@@ -29,6 +40,7 @@ from __future__ import annotations
 
 import ast
 import fnmatch
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -50,6 +62,19 @@ STREAM_CALLS = {
     "utime": "streaming.jobs.Feed.arrived",
 }
 LANDING = "streaming.jobs.land_batch"
+# the snapshot chain: the only code that names, publishes, locates or
+# prunes a per-batch snapshot dir
+CHAIN = {
+    f"streaming.jobs.{name}"
+    for name in (
+        "_hadoop",
+        "_snapshot_ids",
+        "snapshot_path",
+        "read_snapshot",
+        "publish_snapshot",
+        "vacuum_snapshots",
+    )
+}
 # the layout store's root dir and private helpers, spelled only in STORE
 WAREHOUSE_ROOT = "mcdp_warehouse"
 LAYOUT_HELPERS = {"_materialize_atomic", "_source_fingerprint"}
@@ -223,6 +248,63 @@ def test_streams_drain_land_and_feed_through_the_shared_helpers():
         f"{len(offenders)} hand-written stream mechanics; start a stream "
         "with streaming.jobs.drain, land a batch with land_batch and "
         "build a query's feed with Feed: " + "; ".join(offenders)
+    )
+
+
+def _snapshot_mechanics(path: Path) -> list[str]:
+    module = _module_name(path)
+    depth = len(module.split(".")) + 1
+    tree = ast.parse(path.read_text())
+    os_names = {
+        a.asname or a.name
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Import)
+        for a in n.names
+        if a.name == "os"
+    }
+    found = []
+    for scope, node in _scoped(tree, module):
+        if ".".join(scope.split(".")[:depth]) in CHAIN:
+            continue
+        where = f"{scope} (line {getattr(node, 'lineno', '?')})"
+        if (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and "_LATEST" in node.value
+        ):
+            found.append(f"{where} spells '_LATEST'")
+        elif isinstance(node, ast.JoinedStr):
+            parts = node.values
+            found += [
+                f"{where} formats a {str(p.value).split('/')[-1].split()[-1]}{{...}} dir"
+                for p, q in zip(parts, parts[1:])
+                if isinstance(p, ast.Constant)
+                and str(p.value).endswith(("snap-", "state-"))
+                and isinstance(q, ast.FormattedValue)
+            ]
+        elif isinstance(node, ast.Attribute) and (
+            node.attr == "listStatus"
+            or (
+                node.attr == "rename"
+                and isinstance(node.value, ast.Name)
+                and node.value.id in os_names
+            )
+        ):
+            found.append(f"{where} calls {node.attr}")
+    return found
+
+
+def test_snapshots_publish_only_through_the_chain():
+    offenders = [
+        hit
+        for sub in ("streaming", "queries")
+        for path in sorted((PACKAGE / sub).rglob("*.py"))
+        for hit in _snapshot_mechanics(path)
+    ]
+    assert offenders == [], (
+        f"{len(offenders)} hand-written snapshot mechanics; publish with "
+        "streaming.jobs.publish_snapshot, read with read_snapshot and "
+        "prune with vacuum_snapshots: " + "; ".join(offenders)
     )
 
 
@@ -499,4 +581,33 @@ def test_every_defaulted_parameter_has_a_caller():
         f"{len(unused)} defaulted parameters that no call sets to another "
         "value; make each a constant at its use, or add it to "
         "OPTIONS_ALLOWED with a reason: " + ", ".join(unused)
+    )
+
+
+def _unreferenced_names() -> list[str]:
+    # every (file, line) each word appears on, across the callers
+    seen: dict[str, list[tuple[Path, int]]] = {}
+    for path in CALLERS:
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            for word in set(re.findall(r"\w+", line)):
+                seen.setdefault(word, []).append((path, i))
+    found = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if not isinstance(node, (*_FUNCS, ast.ClassDef)) or node.decorator_list:
+                continue
+            if all(
+                other == path and node.lineno <= i <= node.end_lineno
+                for other, i in seen.get(node.name, [])
+            ):
+                found.append(f"{_module_name(path)}.{node.name}")
+    return found
+
+
+def test_every_package_name_is_referenced():
+    unreferenced = _unreferenced_names()
+    assert unreferenced == [], (
+        f"{len(unreferenced)} top-level package names that nothing "
+        "outside their own definition mentions; delete them: "
+        + ", ".join(unreferenced)
     )

@@ -9,6 +9,7 @@ import json
 import shutil
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 REPO = Path(__file__).resolve().parents[1]
@@ -584,7 +585,7 @@ def test_stream_merge_snapshot_maintains_latest_wins_view(spark, tmp_path):
     import json as _json
 
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_merge_snapshot,
+        read_snapshot,
         stream_merge_snapshot,
     )
 
@@ -617,19 +618,19 @@ def test_stream_merge_snapshot_maintains_latest_wins_view(spark, tmp_path):
     stream_merge_snapshot(
         spark, str(updates), schema, snap, ckpt, ["k"], "seq", delete_col="del"
     )
-    out = {r.k: r for r in read_merge_snapshot(spark, snap).collect()}
+    out = {r.k: r for r in read_snapshot(spark, snap).collect()}
     # NOTE: file order between b1/b2 is lexicographic in the file
     # source, so b1 precedes b2; k=1 updated, k=2 deleted, k=3 inserted
     assert set(out) == {1, 3}
     assert out[1].v == "a2" and out[1].seq == 20
     assert out[3].v == "c"
     # restart with same checkpoint: no new data, snapshot unchanged
-    before = (tmp_path / "snap" / "_LATEST").read_text()
+    before = sorted(p.name for p in (tmp_path / "snap").iterdir())
     stream_merge_snapshot(
         spark, str(updates), schema, snap, ckpt, ["k"], "seq", delete_col="del"
     )
-    assert (tmp_path / "snap" / "_LATEST").read_text() == before
-    out2 = {r.k: (r.v, r.seq) for r in read_merge_snapshot(spark, snap).collect()}
+    assert sorted(p.name for p in (tmp_path / "snap").iterdir()) == before
+    out2 = {r.k: (r.v, r.seq) for r in read_snapshot(spark, snap).collect()}
     assert out2 == {k: (r.v, r.seq) for k, r in out.items()}
 
 
@@ -637,9 +638,9 @@ def test_vacuum_merge_snapshots_keeps_latest(spark, tmp_path):
     import json as _json
 
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_merge_snapshot,
+        read_snapshot,
         stream_merge_snapshot,
-        vacuum_merge_snapshots,
+        vacuum_snapshots,
     )
 
     updates = tmp_path / "updates"
@@ -653,23 +654,23 @@ def test_vacuum_merge_snapshots_keeps_latest(spark, tmp_path):
         spark, str(updates), "k long, v string, seq long, del boolean",
         snap, ckpt, ["k"], "seq", delete_col="del",
     )
-    removed = vacuum_merge_snapshots(snap)
+    removed = vacuum_snapshots(snap)
     assert removed == ["snap-0", "snap-1"]
     left = sorted(p.name for p in (tmp_path / "snap").iterdir())
-    assert left == ["_LATEST", "snap-2", "snap-3"]
-    assert read_merge_snapshot(spark, snap).count() == 4  # view intact
+    assert left == ["snap-2", "snap-3"]
+    assert read_snapshot(spark, snap).count() == 4  # view intact
 
 
 def test_snapshot_time_travel_versions_and_vacuum_guard(spark, tmp_path):
     """Each committed snap-<id> stays readable and immutable after later
     batches; reading a vacuumed (or never-committed) version raises a
-    clear error instead of silently serving _LATEST."""
+    clear error instead of silently serving the newest version."""
     import pytest
 
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_merge_snapshot_as_of,
+        read_snapshot,
         stream_merge_snapshot,
-        vacuum_merge_snapshots,
+        vacuum_snapshots,
     )
 
     upd, snap, ckpt = (
@@ -691,18 +692,18 @@ def test_snapshot_time_travel_versions_and_vacuum_guard(spark, tmp_path):
     )
     stream_merge_snapshot(spark, f"{upd}/*", schema, snap, ckpt, ["k"], "k")
 
-    v0 = {(r.k, r.v) for r in read_merge_snapshot_as_of(spark, snap, 0).collect()}
-    v1 = {(r.k, r.v) for r in read_merge_snapshot_as_of(spark, snap, 1).collect()}
-    v2 = {(r.k, r.v) for r in read_merge_snapshot_as_of(spark, snap, 2).collect()}
+    v0 = {(r.k, r.v) for r in read_snapshot(spark, snap, 0).collect()}
+    v1 = {(r.k, r.v) for r in read_snapshot(spark, snap, 1).collect()}
+    v2 = {(r.k, r.v) for r in read_snapshot(spark, snap, 2).collect()}
     assert v0 == {(1, "a"), (2, "b")}
     assert v1 == {(1, "a"), (2, "B"), (3, "c")}
     assert v2 == {(1, "a"), (2, "B"), (3, "c"), (4, "d")}
 
-    removed = vacuum_merge_snapshots(snap)
+    removed = vacuum_snapshots(snap)
     assert removed == ["snap-0"]
     with pytest.raises(FileNotFoundError, match="snap-0"):
-        read_merge_snapshot_as_of(spark, snap, 0)
-    assert {(r.k, r.v) for r in read_merge_snapshot_as_of(spark, snap, 1).collect()} == v1
+        read_snapshot(spark, snap, 0)
+    assert {(r.k, r.v) for r in read_snapshot(spark, snap, 1).collect()} == v1
 
 
 def test_streaming_heavy_hitters_bound_and_restart(spark, tmp_path):
@@ -810,7 +811,7 @@ def test_streaming_cm_sketch_cumulative_and_restart(spark, tmp_path):
     )
     from multichannel_commerce_data_pipeline_spark.pipeline.silver import conform_joor
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_latest,
+        read_snapshot,
         stream_cm_sketch,
     )
 
@@ -831,7 +832,7 @@ def test_streaming_cm_sketch_cumulative_and_restart(spark, tmp_path):
         )
         return {
             (r.j, r.bucket): r.cell
-            for r in read_latest(spark, str(tmp_path / "cm")).collect()
+            for r in read_snapshot(spark, str(tmp_path / "cm")).collect()
         }
 
     def batch_grid():
@@ -861,7 +862,7 @@ def test_streaming_cm_sketch_cumulative_and_restart(spark, tmp_path):
     )
     docs = conform_joor(flatten_envelope(raw))
     probes = docs.select("buyer_name").distinct().limit(5)
-    grid_df = read_latest(spark, str(tmp_path / "cm"))
+    grid_df = read_snapshot(spark, str(tmp_path / "cm"))
     est = cm_estimate(grid_df, probes, "buyer_name", w=w, d=d, seed=seed)
     exact = {
         r.buyer_name: r.n
@@ -883,7 +884,7 @@ def test_stream_line_df_sketch_planted_navbar(spark, tmp_path):
         cm_estimate,
     )
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_latest,
+        read_snapshot,
         stream_line_df_sketch,
     )
 
@@ -910,7 +911,7 @@ def test_stream_line_df_sketch_planted_navbar(spark, tmp_path):
         str(tmp_path / "out"),
         str(tmp_path / "ckpt"),
     )
-    grid = read_latest(spark, str(tmp_path / "out"))
+    grid = read_snapshot(spark, str(tmp_path / "out"))
     probes = spark.createDataFrame(
         [(hashlib.md5(nav.encode()).hexdigest(), "nav"),
          (hashlib.md5(uniq.encode()).hexdigest(), "uniq")],
@@ -1222,7 +1223,7 @@ def test_stream_binned_profile_cumulative_across_restart(spark, tmp_path):
         conform_joor,
     )
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_latest,
+        read_snapshot,
         stream_binned_profile,
     )
 
@@ -1234,7 +1235,7 @@ def test_stream_binned_profile_cumulative_across_restart(spark, tmp_path):
             spark, "joor", str(bronze), str(tmp_path / "prof"),
             str(tmp_path / "ckpt"),
         )
-        return read_latest(spark, str(tmp_path / "prof"))
+        return read_snapshot(spark, str(tmp_path / "prof"))
 
     def batch_counts():
         s = conform_joor(
@@ -1409,7 +1410,7 @@ def test_stream_view_delta_refresh_restart_and_replay(spark, tmp_path):
     nothing, and the snapshot retention holds at the replay window
     (latest + predecessor)."""
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_latest_view_state,
+        read_snapshot,
         stream_view_delta_refresh,
     )
 
@@ -1441,7 +1442,7 @@ def test_stream_view_delta_refresh_restart_and_replay(spark, tmp_path):
         )
         return {
             r.k: (r.cnt, r.s)
-            for r in read_latest_view_state(spark, str(out)).collect()
+            for r in read_snapshot(spark, str(out)).collect()
         }
 
     def land(name, rows):
@@ -1456,7 +1457,7 @@ def test_stream_view_delta_refresh_restart_and_replay(spark, tmp_path):
     assert drain() == {"a": (2, 15), "b": (2, 10)}  # folded into restored state
 
     assert drain() == {"a": (2, 15), "b": (2, 10)}  # nothing new: unchanged
-    snaps = [p.name for p in out.iterdir() if p.name.startswith("state-")]
+    snaps = [p.name for p in out.iterdir() if p.name.startswith("snap-")]
     assert len(snaps) <= 2  # retention: latest + replay-window predecessor
 
 
@@ -1882,6 +1883,7 @@ def test_stream_erasure_cascade_converges_and_restart(spark, sf_dir, tmp_path):
     import json as _json
 
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
+        snapshot_path,
         stream_erasure_apply,
     )
     from multichannel_commerce_data_pipeline_spark.tables import load
@@ -1904,7 +1906,7 @@ def test_stream_erasure_cascade_converges_and_restart(spark, sf_dir, tmp_path):
     )
     from pathlib import Path as _P
 
-    latest = (_P(snap) / "_LATEST").read_text().strip()
+    latest = snapshot_path(snap, None)
     tomb = spark.createDataFrame([(k,) for k in keys], "c_custkey bigint")
     want_c = cust.join(tomb, "c_custkey", "left_anti")
     orders = load(spark, sf_dir, "orders")
@@ -1921,7 +1923,7 @@ def test_stream_erasure_cascade_converges_and_restart(spark, sf_dir, tmp_path):
         ("orders", want_o, "o_orderkey"),
         ("lineitem", want_l, "l_orderkey"),
     ):
-        got = spark.read.parquet(f"{snap}/{latest}/{t}")
+        got = spark.read.parquet(f"{latest}/{t}")
         assert got.count() == want.count()
         assert (
             got.select(key)
@@ -1944,7 +1946,7 @@ def test_stream_erasure_cascade_converges_and_restart(spark, sf_dir, tmp_path):
         spark, f"{src}/b*.json", "c_custkey bigint, op string",
         sf_dir, snap, ckpt,
     )
-    assert (_P(snap) / "_LATEST").read_text().strip() == latest
+    assert snapshot_path(snap, None) == latest
     assert {
         r.table_name: (r.rows_after, r.digest)
         for r in spark.read.parquet(f"{snap}/audit-1").collect()
@@ -1960,10 +1962,10 @@ def test_stream_erasure_replay_from_scratch_converges(spark, sf_dir, tmp_path):
     import json as _json
 
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
+        snapshot_path,
         stream_erasure_apply,
     )
     from multichannel_commerce_data_pipeline_spark.tables import load
-    from pathlib import Path as _P
 
     keys = [
         r.c_custkey
@@ -1984,7 +1986,7 @@ def test_stream_erasure_replay_from_scratch_converges(spark, sf_dir, tmp_path):
         spark, f"{src}/b*.json", "c_custkey bigint, op string",
         sf_dir, snap, str(tmp_path / "ckpt1"),
     )
-    latest = (_P(snap) / "_LATEST").read_text().strip()
+    latest = snapshot_path(snap, None)
     d1 = {
         r.table_name: (r.rows_after, r.digest)
         for r in spark.read.parquet(f"{snap}/audit-0").collect()
@@ -1993,7 +1995,7 @@ def test_stream_erasure_replay_from_scratch_converges(spark, sf_dir, tmp_path):
         spark, f"{src}/b*.json", "c_custkey bigint, op string",
         sf_dir, snap, str(tmp_path / "ckpt2"),
     )
-    assert (_P(snap) / "_LATEST").read_text().strip() == latest
+    assert snapshot_path(snap, None) == latest
     assert {
         r.table_name: (r.rows_after, r.digest)
         for r in spark.read.parquet(f"{snap}/audit-0").collect()
@@ -2011,6 +2013,7 @@ def test_stream_erasure_snapshot_retention_bounded(spark, sf_dir, tmp_path):
     from pathlib import Path as _P
 
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
+        snapshot_path,
         stream_erasure_apply,
     )
     from multichannel_commerce_data_pipeline_spark.tables import load
@@ -2038,7 +2041,7 @@ def test_stream_erasure_snapshot_retention_bounded(spark, sf_dir, tmp_path):
     names = {p.name for p in _P(snap).iterdir()}
     assert {"snap-1", "snap-2", "audit-0", "audit-1", "audit-2"} <= names
     assert "snap-0" not in names  # pruned past the replay window
-    assert (_P(snap) / "_LATEST").read_text().strip() == "snap-2"
+    assert snapshot_path(snap, None) == f"{snap}/snap-2"
     tomb = spark.createDataFrame([(k,) for k in keys], "c_custkey bigint")
     want = (
         load(spark, sf_dir, "customer")
@@ -2072,18 +2075,18 @@ def test_stream_ndv_state_bounded_and_equals_batch_fold(spark, sf_dir):
         ensure_ndv_state,
     )
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
-        read_latest_view_state,
+        read_snapshot,
     )
     from multichannel_commerce_data_pipeline_spark.tables import load
 
     out = _stream_ndv_run(spark, sf_dir)
-    states = sorted(d for d in os.listdir(out) if d.startswith("state-"))
-    assert len(states) >= 1 and "state-1" in states  # two batches drained
+    states = sorted(d for d in os.listdir(out) if d.startswith("snap-"))
+    assert len(states) >= 1 and "snap-1" in states  # two batches drained
     for d in states:
         assert spark.read.parquet(f"{out}/{d}").count() <= _MH_M
     got = {
         (r.bucket, r.min_h)
-        for r in read_latest_view_state(spark, out).collect()
+        for r in read_snapshot(spark, out).collect()
     }
     base = spark.read.parquet(ensure_ndv_state(spark, sf_dir))
     delta = minhash_distinct_sketch(
@@ -2102,3 +2105,256 @@ def test_stream_ndv_state_bounded_and_equals_batch_fold(spark, sf_dir):
         .collect()
     }
     assert got == want and len(got) > 0
+
+
+def test_read_snapshot_serves_newest_from_the_listing(spark, tmp_path):
+    """The snapshot chain's reader: the newest published version is
+    found from the directory listing (no Spark job), read as a plain
+    scan (no window, no join, no ``__bid``), and a named version is
+    served or refused by name. Two complete-mode shapes: the Count-Min
+    grid and the binned profile. Each publish is handed the snapshot
+    before it as its base, never its own dir."""
+    import pytest
+
+    from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
+        publish_snapshot,
+        read_snapshot,
+        snapshot_path,
+        vacuum_snapshots,
+    )
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def chain(name, cols):
+        out = str(tmp_path / name)
+        bases = []
+        for bid in range(3):
+            d = spark.range(4).selectExpr(*cols).filter(f"id_ >= {bid}")
+
+            def write(base, path, d=d):
+                bases.append(base)
+                d.drop("id_").write.parquet(path)
+
+            publish_snapshot(out, bid, write)
+        assert bases == [None, f"{out}/snap-0", f"{out}/snap-1"]
+        assert vacuum_snapshots(out) == ["snap-0"]
+        jobs = len(tracker.getJobIdsForGroup())
+        assert snapshot_path(out, None) == f"{out}/snap-2"
+        assert len(tracker.getJobIdsForGroup()) == jobs  # listing only
+        got = read_snapshot(spark, out)
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan and "Join" not in plan, plan
+        assert "__bid" not in got.columns
+        with pytest.raises(FileNotFoundError, match="snap-0"):
+            read_snapshot(spark, out, 0)
+        return got.collect(), read_snapshot(spark, out, 1).collect()
+
+    grid, grid_v1 = chain(
+        "cm", ["id AS id_", "id AS j", "id AS bucket", "id AS cell"]
+    )
+    assert sorted(r.j for r in grid) == [2, 3]
+    assert sorted(r.j for r in grid_v1) == [1, 2, 3]
+
+    prof, _ = chain("prof", ["id AS id_", "id AS bin", "id % 2 AS is_ref", "id AS n"])
+    assert sorted(r.bin for r in prof) == [2, 3]
+
+
+# --- replay coverage for every snapshot writer ------------------------
+# Each writer republishes its whole state per micro-batch through the
+# snapshot chain. Two replays must leave the chain as the first run
+# left it: (a) the crash window — the sink published batch N but the
+# checkpoint never committed it, so the next drain re-runs batch N
+# against the same checkpoint; (b) a lost checkpoint — the same feed
+# drains again from a fresh checkpoint into the same out dir.
+
+
+def _merge_writer(spark, sf_dir, tmp_path):
+    from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
+        Feed,
+        read_snapshot,
+        stream_merge_snapshot,
+    )
+
+    schema = "k long, v string, seq long, del boolean"
+    feed = Feed("mcdp_merge_test_", str(tmp_path))
+    feed.push(spark.createDataFrame([(1, "a", 10, False), (2, "b", 11, False)], schema), "json")
+    feed.push(
+        spark.createDataFrame(
+            [(1, "a2", 20, False), (2, "b", 21, True), (3, "c", 22, False)], schema
+        ),
+        "json",
+    )
+    out = str(tmp_path / "snap")
+
+    def run(ckpt):
+        stream_merge_snapshot(
+            spark, feed.glob, schema, out, str(tmp_path / ckpt),
+            ["k"], "seq", delete_col="del",
+        )
+
+    def rows(v):
+        return sorted(tuple(r) for r in read_snapshot(spark, out, v).collect())
+
+    return run, out, rows
+
+
+def _view_fold_writer(spark, sf_dir, tmp_path):
+    from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
+        Feed,
+        read_snapshot,
+        stream_view_delta_refresh,
+    )
+
+    feed = Feed("mcdp_fold_test_", str(tmp_path))
+    for batch in ([("a", 5), ("b", 7)], [("b", 3)], [("c", 1)]):
+        feed.push(spark.createDataFrame(batch, "k string, v long"))
+    out = str(tmp_path / "out")
+    init = spark.createDataFrame([("a", 1, 10)], "k string, cnt long, s long")
+
+    def run(ckpt):
+        stream_view_delta_refresh(
+            spark,
+            feed.glob,
+            "k string, v long",
+            out,
+            str(tmp_path / ckpt),
+            lambda b: b.groupBy("k").agg(
+                F.count(F.lit(1)).cast("long").alias("cnt"),
+                F.sum("v").cast("long").alias("s"),
+            ),
+            init,
+            lambda f: f.groupBy("k").agg(
+                F.sum("cnt").cast("long").alias("cnt"),
+                F.sum("s").cast("long").alias("s"),
+            ),
+        )
+
+    def rows(v):
+        return sorted(tuple(r) for r in read_snapshot(spark, out, v).collect())
+
+    return run, out, rows
+
+
+def _erasure_writer(spark, sf_dir, tmp_path):
+    from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
+        Feed,
+        snapshot_path,
+        stream_erasure_apply,
+    )
+
+    feed = Feed("mcdp_erase_test_", str(tmp_path))
+    for keys in ([1, 2], [3, 4]):
+        feed.push(
+            spark.createDataFrame([(k, "delete") for k in keys], "c_custkey long, op string"),
+            "json",
+        )
+    out = str(tmp_path / "snap")
+
+    def run(ckpt):
+        stream_erasure_apply(
+            spark, feed.glob, "c_custkey bigint, op string",
+            sf_dir, out, str(tmp_path / ckpt),
+        )
+
+    def rows(v):
+        snap = snapshot_path(out, v)
+        return [
+            (t, spark.read.parquet(f"{snap}/{t}").count())
+            for t in ("customer", "orders", "lineitem")
+        ] + sorted(
+            tuple(r) for r in spark.read.parquet(f"{out}/audit-{v}").collect()
+        )
+
+    return run, out, rows
+
+
+def _complete_writer(spark, sf_dir, tmp_path):
+    from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
+        Feed,
+        read_snapshot,
+        stream_line_df_sketch,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{(i * j) % 7}" for j in range(25))) for i in range(6)],
+        "doc_id long, text string",
+    )
+    feed = Feed("mcdp_sketch_test_", str(tmp_path))
+    for rem in (0, 1):
+        feed.push(docs.filter(F.col("doc_id") % 2 == rem))
+    out = str(tmp_path / "out")
+
+    def run(ckpt):
+        stream_line_df_sketch(
+            spark,
+            feed.glob,
+            "doc_id bigint, text string",
+            out,
+            str(tmp_path / ckpt),
+        )
+
+    def rows(v):
+        return sorted(tuple(r) for r in read_snapshot(spark, out, v).collect())
+
+    return run, out, rows
+
+
+SNAPSHOT_WRITERS = {
+    "merge": _merge_writer,
+    "view_fold": _view_fold_writer,
+    "erasure": _erasure_writer,
+    "complete": _complete_writer,
+}
+
+
+def _versions(out):
+    return sorted(
+        int(p.name[len("snap-"):])
+        for p in Path(out).iterdir()
+        if p.name.startswith("snap-")
+    )
+
+
+def _uncommit_last(ckpt: Path) -> int:
+    """Drop the newest ``commits/<bid>`` entry (and its checksum) from a
+    checkpoint: the state a crash between the sink write and the commit
+    leaves behind."""
+    commits = ckpt / "commits"
+    last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    for p in commits.iterdir():
+        if p.name in (str(last), f".{last}.crc"):
+            p.unlink()
+    return last
+
+
+@pytest.mark.parametrize("writer", sorted(SNAPSHOT_WRITERS))
+def test_snapshot_writer_crash_window_replay(spark, sf_dir, tmp_path, writer):
+    """(a) The sink published batch N, the checkpoint did not commit it:
+    the next drain re-runs batch N, republishes its snapshot from the
+    one before it, and the newest snapshot's rows are unchanged."""
+    import os
+
+    run, out, rows = SNAPSHOT_WRITERS[writer](spark, sf_dir, tmp_path)
+    run("ckpt")
+    newest = _versions(out)[-1]
+    first = rows(newest)
+    inode = os.stat(f"{out}/snap-{newest}").st_ino
+    assert _uncommit_last(tmp_path / "ckpt") == newest
+    run("ckpt")
+    assert _versions(out)[-1] == newest
+    assert os.stat(f"{out}/snap-{newest}").st_ino != inode  # republished
+    assert rows(newest) == first
+
+
+@pytest.mark.parametrize("writer", sorted(SNAPSHOT_WRITERS))
+def test_snapshot_writer_lost_checkpoint_replay(spark, sf_dir, tmp_path, writer):
+    """(b) The same feed drains again from a fresh checkpoint into the
+    same out dir: batch 0 starts over from the writer's initial state,
+    each later batch builds on the version before it, and every
+    retained version equals the first run's."""
+    run, out, rows = SNAPSHOT_WRITERS[writer](spark, sf_dir, tmp_path)
+    run("ckpt1")
+    first = {v: rows(v) for v in _versions(out)}
+    assert len(first) >= 2
+    run("ckpt2")
+    assert {v: rows(v) for v in _versions(out)} == first

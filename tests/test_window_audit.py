@@ -139,29 +139,23 @@ def test_streaming_read_latest_has_no_window(spark, tmp_path):
     """A landing's rows grow with trigger count, so the latest-batch
     filter must be a max(__bid) aggregate joined back as a broadcast,
     never a window: neither the single-partition one (r17 rewrite) nor
-    one partitioned by key. Four landed shapes: the complete-mode
-    grid and profile (no key), the heavy-hitter summary (per bucket)
-    and the CUSUM summary (per series)."""
+    one partitioned by key. Two landed shapes: the heavy-hitter
+    summary (per bucket) and the CUSUM summary (per series). A
+    complete-mode sink publishes snapshots instead, read without any
+    filter (tests/test_streaming.py
+    test_read_snapshot_serves_newest_from_the_listing)."""
     from multichannel_commerce_data_pipeline_spark.streaming.jobs import (
         read_latest,
     )
 
-    def latest(name, cols, *keys):
+    def latest(name, cols, key):
         d = spark.range(4).selectExpr(*cols)
         d.write.mode("overwrite").parquet(str(tmp_path / name / "batch-0"))
-        got = read_latest(spark, str(tmp_path / name), *keys)
+        got = read_latest(spark, str(tmp_path / name), key)
         plan = got._jdf.queryExecution().executedPlan().toString()
         assert "Window" not in plan, plan
         assert "__bid" not in got.columns
         return got.collect()
-
-    grid = latest("cm", ["id AS j", "id AS bucket", "id AS cell", "id % 2 AS __bid"])
-    assert sorted(r.j for r in grid) == [1, 3]
-
-    prof = latest(
-        "prof", ["id AS bin", "id % 2 AS is_ref", "id AS n", "id % 2 AS __bid"]
-    )
-    assert sorted(r.bin for r in prof) == [1, 3]
 
     # bucket 0 last emitted in batch 1, bucket 1 in batch 2: per key,
     # only its own newest batch survives
